@@ -173,36 +173,35 @@ object LakeLayout {
     }
   }
 
-  /** One data file of a committed version: path RELATIVE to the table
-    * root, plus optional min/max stats of the table's merge key. The
-    * stats are what make upserts FILE-GRANULAR: a batch can only touch
-    * files whose [minKey, maxKey] intersects its keys (a base row with
-    * key k lives in a file whose range contains k by definition), so
-    * everything else is carried into the next version by reference.
-    * None = stats unknown → the file is conservatively always
-    * rewritten. */
-  /** One data file of a committed version. `minKey`/`maxKey` bound the
-    * table's primary (clustering/merge) key; `minTs`/`maxTs` optionally
-    * bound a SECOND dimension (typically event time) read from the same
-    * footer pass — zero extra I/O — so range reads prune on either
-    * axis. A Z-ordered layout makes both bounds tight per file; files
-    * without second-dimension stats are simply never ts-pruned. */
-  /** One data file of a committed version. `dv` is an optional
-    * DELETION-VECTOR reference (a dir under `data/` holding the DELETED
-    * KEYS for this file as a tiny parquet whose single column is named
-    * after the table key) — the merge-on-read delete shape: a delete
-    * writes O(deleted keys) sidecar bytes and re-points manifest
-    * entries instead of rewriting every touched file. Readers apply
-    * `dv` as a broadcast anti-join; compaction/rewrites materialize it
-    * away (new files always carry `dv = None`). */
-  /** `axes` — NAMED per-axis min/max bounds for Z-order dimensions
-    * BEYOND the two the positional (minKey/maxKey, minTs/maxTs) fields
-    * cover. Recorded at OPTIMIZE-ZORDER time from the same footer pass
-    * as the other stats (zero extra I/O); [[readLakeAxisRange]]
-    * consults them so a predicate on axis 3+ prunes whole files
-    * instead of relying on row-group stats inside every file. Files
-    * written by later non-OPTIMIZE commits simply carry no axis
-    * bounds and stay conservative candidates. */
+  /** One data file of a committed version: `path` is RELATIVE to the
+    * table root.
+    *  - `minKey`/`maxKey` bound the table's primary (clustering/merge)
+    *    key. They make upserts FILE-GRANULAR: a batch can only touch
+    *    files whose [minKey, maxKey] intersects its keys (a base row
+    *    with key k lives in a file whose range contains k by
+    *    definition), so everything else is carried into the next
+    *    version by reference. None = stats unknown → the file is
+    *    conservatively always rewritten.
+    *  - `minTs`/`maxTs` optionally bound a SECOND dimension (typically
+    *    event time), read from the same footer pass — zero extra I/O —
+    *    so range reads prune on either axis. A Z-ordered layout makes
+    *    both bounds tight per file; files without second-dimension
+    *    stats are simply never ts-pruned.
+    *  - `dv` is an optional DELETION-VECTOR reference (a dir under
+    *    `data/` holding the DELETED KEYS for this file as a tiny parquet
+    *    whose single column is named after the table key) — the
+    *    merge-on-read delete shape: a delete writes O(deleted keys)
+    *    sidecar bytes and re-points manifest entries instead of
+    *    rewriting every touched file. Readers apply `dv` as a broadcast
+    *    anti-join; compaction/rewrites materialize it away (new files
+    *    always carry `dv = None`).
+    *  - `axes` are NAMED per-axis min/max bounds for Z-order dimensions
+    *    BEYOND the two the positional fields cover. Recorded at
+    *    OPTIMIZE-ZORDER time from the same footer pass as the other
+    *    stats; [[readLakeAxisRange]] consults them so a predicate on
+    *    axis 3+ prunes whole files instead of relying on row-group
+    *    stats inside every file. Files written by later non-OPTIMIZE
+    *    commits carry no axis bounds and stay conservative candidates. */
   final case class LakeFile(path: String, minKey: Option[KeyBound],
       maxKey: Option[KeyBound], minTs: Option[KeyBound] = None,
       maxTs: Option[KeyBound] = None, dv: Option[String] = None,
@@ -308,9 +307,12 @@ object LakeLayout {
     *    orphan data dir no manifest references; the retry recomputes the
     *    same next version number and overwrites it — safe because
     *    unreferenced.
-    * Writers: the streaming sink is single-writer per table (a lost
-    * race fails loudly); concurrent writers use [[upsertIntoLakeOcc]],
-    * which layers optimistic retry over the same atomic claim.
+    * Writers: every commit goes through one claim-and-retry loop
+    * ([[commitLoop]]). An OCC verb (`...Occ`, with a `writerId`) writes
+    * writer-tagged data dirs and retries a lost claim against the new
+    * snapshot; the single-writer verbs (the streaming sinks, the
+    * registry drives) run the same loop with one attempt, so a lost
+    * race fails loudly.
     *
     * Manifest wire format (one file per version):
     * {{{
@@ -537,21 +539,6 @@ object LakeLayout {
           d.tsClusterCol, d.instantMs)
     }
 
-  /** Atomically publish a version: tmp write + rename (the commit
-    * point). Single-writer form — a lost race fails loudly. Concurrent
-    * writers go through [[tryPublishManifest]] (the OCC commit point). */
-  private def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, v: Long, dataRel: String,
-      checkpoint: String, batchId: Long, files: Seq[LakeFile],
-      schemaJson: Option[String] = None, op: String = "data",
-      parentFiles: Seq[LakeFile] = Seq.empty,
-      tsClusterCol: Option[String] = None): Unit =
-    require(tryPublishManifest(fs, table, v, dataRel, checkpoint, batchId,
-        files, schemaJson = schemaJson, op = op, parentFiles = parentFiles,
-        tsClusterCol = tsClusterCol),
-      s"manifest commit lost a race: ${manifestPath(table, v)} " +
-        "(single-writer caller; use the OCC path for concurrent writers)")
-
   /** The one wire encoder for a file entry (manifests AND checkpoints —
     * a checkpoint that dropped later fields would resurrect dv-deleted
     * rows and lose the metadata row/byte counts on resolution). Later
@@ -605,9 +592,8 @@ object LakeLayout {
   private def tryPublishManifest(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path, v: Long, dataRel: String,
       checkpoint: String, batchId: Long, files: Seq[LakeFile],
-      tmpTag: String = "", schemaJson: Option[String] = None,
-      op: String = "data", parentFiles: Seq[LakeFile] = Seq.empty,
-      tsClusterCol: Option[String] = None): Boolean = {
+      tmpTag: String, schemaJson: Option[String], op: String,
+      parentFiles: Seq[LakeFile], tsClusterCol: Option[String]): Boolean = {
     fs.mkdirs(commitsDir(table))
     // the commit's DURABLE instant, read from the store's own clock
     // (one probe per publish): AS-OF resolution reads this line, so a
@@ -719,20 +705,14 @@ object LakeLayout {
       if (!fs.rename(tmp, dst) && fs.exists(tmp)) fs.delete(tmp, false)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** The files of a just-written data dir, with per-file min/max of
-    * `statsKey`, TYPED by the key column's dataType: StringType keys
-    * record [[StrKey]] bounds (Spark's `min`/`max` on strings is
-    * unsigned-UTF-8 binary order — the [[KeyBound.strLeq]] contract);
-    * everything else casts to long → [[LongKey]] (non-castable or
-    * absent key → stats unknown). One column-pruned scan of ONLY the
-    * new files — the key column of the bytes just written, never the
-    * table. */
-  /** Per-file key bounds for a freshly-written data dir, read from the
-    * PARQUET FOOTERS driver-side — no Spark job, no second pass over
-    * the bytes just written (the previous groupBy(input_file_name)
-    * implementation re-read every commit's fresh data in full; at
-    * 100 TB that doubles the write path's I/O). Footer chunk statistics
-    * are exact when present (parquet-mr drops, never truncates,
+  /** The files of a just-written data dir with per-file bounds of
+    * `statsKey` (plus `tsKey` and `extraAxes`), read from the PARQUET
+    * FOOTERS driver-side — no Spark job, no second pass over the bytes
+    * just written. Bounds are TYPED by the column: UTF-8 strings record
+    * [[StrKey]] bounds, signed integers and UTC timestamps (as epoch
+    * seconds, cast-to-long semantics) record [[LongKey]]; any other
+    * type, or an absent column, leaves the stats unknown. Footer chunk
+    * statistics are exact when present (parquet-mr drops, never truncates,
     * chunk-level min/max — truncation applies only to column indexes),
     * and their sort orders match the pruning comparators: signed for
     * int64 = [[LongKey]], unsigned lexicographic for UTF-8 binary =
@@ -900,9 +880,6 @@ object LakeLayout {
     }
   }
 
-  /** The DataFrame of a commit: explicit file paths (so a pinned reader
-    * keeps its exact version even as newer commits land), or the data
-    * dir for legacy manifests. */
   /** A reader honoring the commit's recorded table schema (format:3):
     * applied to every file, so files written before a column was added
     * null-fill it — no footer merging, no inference. */
@@ -956,6 +933,9 @@ object LakeLayout {
     cur.tsClusterCol.filter(c =>
       commitSchema(cur).forall(_.fieldNames.contains(c)))
 
+  /** The DataFrame of a commit: explicit file paths (so a pinned reader
+    * keeps its exact version even as newer commits land), or the data
+    * dir for legacy manifests. */
   private def commitFrame(spark: SparkSession, tablePath: String,
       c: LakeCommit): DataFrame =
     if (c.files.isEmpty) schemaReader(spark, c).parquet(s"$tablePath/${c.dataDir}")
@@ -985,8 +965,6 @@ object LakeLayout {
       .sortBy(_._1)
   }
 
-  /** The committed table, resolved through the latest manifest; None
-    * before the first commit. */
   /** COUNT(*) from MANIFEST METADATA — zero data files opened when the
     * stats cover the table (the Delta-log trick: the footer pass that
     * records key bounds gets each file's exact row count for free, so
@@ -1010,8 +988,91 @@ object LakeLayout {
       }
     }
 
+  /** The committed table, resolved through the latest manifest; None
+    * before the first commit. */
   def readLake(spark: SparkSession, tablePath: String): Option[DataFrame] =
     latestLakeCommit(spark, tablePath).map(commitFrame(spark, tablePath, _))
+
+  // ------------------------------------------------------ commit loop
+  /** One commit attempt as [[commitLoop]] hands it to a verb's body:
+    * the snapshot it resolved (None = no commit yet), the version `v`
+    * it will claim, its 1-based number `n`, and its own data dir
+    * `dataRel` (`data/v<padded><tag><suffix>`), which a lost claim
+    * deletes. */
+  private final case class Attempt(cur: Option[LakeCommit], v: Long, n: Int,
+      dataRel: String)
+
+  /** A body's answer: [[Done]] ends the loop without a commit (a no-op
+    * verb); [[Publish]] asks it to claim [[Attempt.v]]. */
+  private sealed trait Step[+R]
+  private final case class Done[R](result: R) extends Step[R]
+  /** Claim the attempt's version with `files`. `dataRel` is the dir the
+    * manifest records (the attempt's own, except for a restore);
+    * `result` runs after a won claim. `rebase` runs after a lost one,
+    * before the attempt counts as lost: Some = it committed the
+    * attempt's files another way. */
+  private final case class Publish[R](dataRel: String, checkpoint: String,
+      files: Seq[LakeFile], schemaJson: Option[String], op: String,
+      tsClusterCol: Option[String], result: () => R,
+      rebase: () => Option[R] = () => None) extends Step[R]
+
+  /** THE commit loop — every lake commit publishes through here. Each
+    * attempt resolves the latest snapshot, runs `body` against it, and
+    * claims the next version ([[tryPublishManifest]]). A lost claim
+    * means another writer committed first: unless the body's rebase
+    * lands, the attempt's own data dir (unreferenced by construction)
+    * is deleted and, after a jittered backoff, the body recomputes
+    * against the new snapshot. The backoff breaks the livelock two
+    * writers with equal-length attempts otherwise fall into (observed:
+    * the loser's recompute finishing just after each winner's claim, 8
+    * straight losses); it is seeded per (writer, batch) so racing
+    * writers desynchronize deterministically.
+    *
+    * `writer` = Some(writerId) is an OCC writer: its id tags the data
+    * dirs (`data/v<N>-<id><dirSuffix>`) and tmp files so racing writers
+    * never interleave bytes before the claim decides the winner. None
+    * is a single writer: untagged names (`data/v<N><dirSuffix>`,
+    * `.tmp-v<N>`) and, by contract, `maxAttempts = 1`, so a lost race
+    * fails loudly. Either way the loop gives up with an
+    * IllegalStateException after `maxAttempts` lost claims. */
+  private def commitLoop[R](spark: SparkSession, tablePath: String,
+      verb: String, writer: Option[String], batchId: Long,
+      maxAttempts: Int, dirSuffix: String = "")(body: Attempt => Step[R]): R = {
+    writer.foreach(w => require(w.nonEmpty && !w.contains("/"),
+      "writerId must be a non-empty path-safe token"))
+    val tag = writer.map(w => s"-$w").getOrElse("")
+    val tmpTag = if (writer.isEmpty) "" else tag + dirSuffix
+    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val rnd = new scala.util.Random(writer.getOrElse("").hashCode * 31 + batchId)
+    var attempt = 0
+    while (attempt < maxAttempts) {
+      if (attempt > 0) Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+      attempt += 1
+      val cur = latestLakeCommit(spark, tablePath)
+      val v = cur.map(_.version + 1).getOrElse(0L)
+      val dataRel = s"data/${versionName(v)}$tag$dirSuffix"
+      body(Attempt(cur, v, attempt, dataRel)) match {
+        case Done(r) => return r
+        case p: Publish[R] =>
+          if (tryPublishManifest(fs, table, v, p.dataRel, p.checkpoint,
+              batchId, p.files, tmpTag, p.schemaJson, p.op,
+              cur.map(_.files).getOrElse(Seq.empty), p.tsClusterCol))
+            return p.result()
+          val rebased = p.rebase()
+          if (rebased.isDefined) return rebased.get
+          // a restore names its target's dir and wrote none of its own
+          if (p.dataRel == dataRel)
+            fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
+      }
+    }
+    throw new IllegalStateException(writer match {
+      case None => s"$verb lost a commit race on $tablePath (single-writer " +
+        "contract); concurrent writers must use its OCC form"
+      case Some(_) => s"$verb: $maxAttempts consecutive commit conflicts " +
+        s"on $tablePath — raise maxAttempts or reduce writer fan-in"
+    })
+  }
 
   /** Write `df` in FULL as the next table version and atomically
     * publish it. Pass `statsKey` to record per-file min/max key stats
@@ -1038,45 +1099,39 @@ object LakeLayout {
       tsStatsKey: Option[String], bloomBits: Int,
       validate: Boolean): Long = {
     val s = df.sparkSession
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(s.sessionState.newHadoopConf())
-    val cur = latestLakeCommit(s, tablePath)
-    val v = cur.map(_.version + 1).getOrElse(0L)
-    val dataRel = s"data/${versionName(v)}"
-    // the table's persisted cluster axis: set it when the caller
-    // declares one, else carry the table property forward so every
-    // rewrite keeps recording second-axis bounds (wide bounds beat no
-    // bounds — a stat-less file is ALWAYS a band candidate). An
-    // EXPLICITLY declared key must exist (exact case) — silently
-    // dropping a typo here would also erase a valid carried axis via
-    // the orElse; the CARRIED axis filters quietly instead (a full
-    // rewrite may legally drop the column — that clears the property)
-    tsStatsKey.foreach(k => require(df.schema.fieldNames.contains(k),
-      s"tsStatsKey '$k' is not a column of the committed frame " +
-        s"(columns: ${df.schema.fieldNames.mkString(", ")})"))
-    val effTs = tsStatsKey.orElse(cur.flatMap(carriedTsCluster)
-      .filter(df.schema.fieldNames.contains))
-    if (validate) enforceLakeConstraints(s, tablePath, df)
-    // overwrite: an orphan dir from a crashed previous attempt at this
-    // same version is unreferenced by construction
-    df.write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-    // a full rewrite's delta is adds+removes ≥ the full list, so the
-    // publisher self-selects the full form; passing the parent is
-    // still correct and keeps the decision in one place. A persisted
-    // bloom index implies per-file stats on its key even when the
-    // caller passed none (the footer pass records the row counts the
-    // auto-sizing needs, and key bounds beat no bounds).
-    val effStats = statsKey.orElse(lakeBloomIndex(s, tablePath).map(_._1)
-      .filter(df.schema.fieldNames.contains))
-    val stats0 = fileStats(s, tablePath, dataRel, effStats, effTs)
-    val stats = withKeyBlooms(s, tablePath, dataRel, stats0,
-      df.schema.fieldNames.toSeq,
-      explicitKey = statsKey, explicitBits = bloomBits)
-    publishManifest(fs, table, v, dataRel, checkpoint, batchId,
-      stats, Some(df.schema.json), op,
-      parentFiles = cur.map(_.files).getOrElse(Seq.empty),
-      tsClusterCol = effTs)
-    v
+    commitLoop(s, tablePath, "commitLakeVersion", None, batchId, 1) { at =>
+      // the table's persisted cluster axis: set it when the caller
+      // declares one, else carry the table property forward so every
+      // rewrite keeps recording second-axis bounds (wide bounds beat no
+      // bounds — a stat-less file is ALWAYS a band candidate). An
+      // EXPLICITLY declared key must exist (exact case) — silently
+      // dropping a typo here would also erase a valid carried axis via
+      // the orElse; the CARRIED axis filters quietly instead (a full
+      // rewrite may legally drop the column — that clears the property)
+      tsStatsKey.foreach(k => require(df.schema.fieldNames.contains(k),
+        s"tsStatsKey '$k' is not a column of the committed frame " +
+          s"(columns: ${df.schema.fieldNames.mkString(", ")})"))
+      val effTs = tsStatsKey.orElse(at.cur.flatMap(carriedTsCluster)
+        .filter(df.schema.fieldNames.contains))
+      if (validate) enforceLakeConstraints(s, tablePath, df)
+      // overwrite: an orphan dir from a crashed previous attempt at this
+      // same version is unreferenced by construction
+      df.write.mode("overwrite").parquet(s"$tablePath/${at.dataRel}")
+      // a full rewrite's delta is adds+removes ≥ the full list, so the
+      // publisher self-selects the full form; passing the parent is
+      // still correct and keeps the decision in one place. A persisted
+      // bloom index implies per-file stats on its key even when the
+      // caller passed none (the footer pass records the row counts the
+      // auto-sizing needs, and key bounds beat no bounds).
+      val effStats = statsKey.orElse(lakeBloomIndex(s, tablePath).map(_._1)
+        .filter(df.schema.fieldNames.contains))
+      val stats = withKeyBlooms(s, tablePath, at.dataRel,
+        fileStats(s, tablePath, at.dataRel, effStats, effTs),
+        df.schema.fieldNames.toSeq,
+        explicitKey = statsKey, explicitBits = bloomBits)
+      Publish(at.dataRel, checkpoint, stats, Some(df.schema.json), op,
+        effTs, () => at.v)
+    }
   }
 
   /** Per-upsert accounting, returned so callers (and the endurance
@@ -1176,37 +1231,37 @@ object LakeLayout {
       bloomBits: Int = 0): LakeUpsertResult = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = latestLakeCommit(spark, tablePath)
-    cur.flatMap(_.schemaJson).foreach { j =>
-      val old = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .map(f => (f.name, f.dataType))
-      val nw = rows.schema.map(f => (f.name, f.dataType))
-      require(old == nw,
-        s"appendToLake: batch schema $nw must match the table's $old")
+    commitLoop(spark, tablePath, "appendToLake", None, batchId, 1,
+        dirSuffix = "-app") { at =>
+      at.cur.flatMap(_.schemaJson).foreach { j =>
+        val old = org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+          .map(f => (f.name, f.dataType))
+        val nw = rows.schema.map(f => (f.name, f.dataType))
+        require(old == nw,
+          s"appendToLake: batch schema $nw must match the table's $old")
+      }
+      val carried = at.cur.map(c => resolveFiles(fs, table, c))
+        .getOrElse(Seq.empty)
+      val effTs = at.cur.flatMap(carriedTsCluster)
+        .filter(rows.schema.fieldNames.contains)
+      enforceLakeConstraints(spark, tablePath, rows)
+      rows.write.mode("overwrite").parquet(s"$tablePath/${at.dataRel}")
+      // a persisted bloom index implies per-file stats on its key even
+      // when the caller passed none (row counts drive the auto-sizing)
+      val effStats = statsKey.orElse(lakeBloomIndex(spark, tablePath)
+        .map(_._1).filter(rows.schema.fieldNames.contains))
+      val newFiles = withKeyBlooms(spark, tablePath, at.dataRel,
+        fileStats(spark, tablePath, at.dataRel, effStats, effTs),
+        rows.schema.fieldNames.toSeq,
+        explicitKey = statsKey, explicitBits = bloomBits)
+      Publish(at.dataRel, checkpoint, carried ++ newFiles,
+        Some(rows.schema.json), "data", effTs, () => {
+          val bytes = bytesOf(fs, table, newFiles)
+          LakeUpsertResult(at.v, carried.size, 0, newFiles.size, bytes,
+            bytes + bytesOf(fs, table, carried))
+        })
     }
-    val v = cur.map(_.version + 1).getOrElse(0L)
-    val carried = cur.map(c => resolveFiles(fs, table, c)).getOrElse(Seq.empty)
-    val dataRel = s"data/${versionName(v)}-app"
-    val effTs = cur.flatMap(carriedTsCluster)
-      .filter(rows.schema.fieldNames.contains)
-    enforceLakeConstraints(spark, tablePath, rows)
-    rows.write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-    // a persisted bloom index implies per-file stats on its key even
-    // when the caller passed none (row counts drive the auto-sizing)
-    val effStats = statsKey.orElse(lakeBloomIndex(spark, tablePath)
-      .map(_._1).filter(rows.schema.fieldNames.contains))
-    val newFiles0 = fileStats(spark, tablePath, dataRel, effStats, effTs)
-    val newFiles = withKeyBlooms(spark, tablePath, dataRel, newFiles0,
-      rows.schema.fieldNames.toSeq,
-      explicitKey = statsKey, explicitBits = bloomBits)
-    publishManifest(fs, table, v, dataRel, checkpoint, batchId,
-      carried ++ newFiles, Some(rows.schema.json),
-      parentFiles = cur.map(_.files).getOrElse(Seq.empty),
-      tsClusterCol = effTs)
-    val bytes = bytesOf(fs, table, newFiles)
-    LakeUpsertResult(v, carried.size, 0, newFiles.size, bytes,
-      bytes + bytesOf(fs, table, carried))
   }
 
   /** A commit's file list, with legacy dir-pointer manifests resolved
@@ -1220,10 +1275,6 @@ object LakeLayout {
       .map(st => LakeFile(s"${cur.dataDir}/${st.getPath.getName}",
         None, None, bytes = Some(st.getLen))).toSeq
 
-  /** The subset of `files` some key in `keys` can live in: range
-    * semi-join of the (small, broadcastable) file-range list against
-    * the distinct keys; stat-less files are conservatively touched.
-    * ≤ one row per file reaches the driver. */
   /** Materialize a rewrite's merged rows ONCE before the
     * range-partitioned write. `repartitionByRange` SAMPLES its child
     * to pick split points, so an unmaterialized child — a touched-file
@@ -1233,19 +1284,15 @@ object LakeLayout {
     * shuffle-free broadcast shapes). The checkpoint bounds storage by
     * the COMMIT's bytes (touched rows + batch — the same bytes the
     * write is about to emit), never the table. Trade-off mirrors the
-    * CC loop's materialization switch: locally-checkpointed blocks die
-    * with their executor, turning an executor loss mid-commit into a
-    * failed (retryable) commit instead of a recompute;
-    * `graft.lake.rewriteMaterialize=recompute` restores the
-    * sample-twice plan for fleets that prefer that trade. */
+    * CC loop's: locally-checkpointed blocks die with their executor,
+    * turning an executor loss mid-commit into a failed (retryable)
+    * commit instead of a recompute. */
   private def materializedRewrite(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.lake.rewriteMaterialize")
-        .contains("recompute")) df
-    else df.localCheckpoint(true)
+    df.localCheckpoint(true)
 
   /** Release a [[materializedRewrite]] frame's blocks eagerly (a
     * commit loop must not accumulate pinned storage; ContextCleaner
-    * would only reclaim at some later GC). No-op in recompute mode. */
+    * would only reclaim at some later GC). */
   private def releaseRewrite(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -1253,6 +1300,10 @@ object LakeLayout {
       case _ =>
     }
 
+  /** The subset of `files` some key in `keys` can live in: range
+    * semi-join of the (small, broadcastable) file-range list against
+    * the distinct keys; stat-less files are conservatively touched.
+    * ≤ one row per file reaches the driver. */
   private def touchedFilePaths(spark: SparkSession, files: Seq[LakeFile],
       keys: DataFrame, key: String): Set[String] = {
     import spark.implicits._
@@ -1314,191 +1365,18 @@ object LakeLayout {
     * caller to assert/record. */
   def upsertIntoLake(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String, checkpoint: String,
-      batchId: Long, evolveSchema: Boolean = false): LakeUpsertResult = {
-    enforceLakeConstraints(spark, tablePath, updates)
-    upsertAttempt(spark, tablePath, updates, key, checkpoint, batchId, "",
-        evolveSchema)
-      .getOrElse(throw new IllegalStateException(
-        s"upsertIntoLake lost a commit race on $tablePath (single-writer " +
-          "contract); concurrent writers must use upsertIntoLakeOcc"))
-  }
-
-  /** What a failed claim leaves behind when the caller asked to keep
-    * the attempt's files for a possible rebase: everything needed to
-    * re-point them at a newer version without recomputing the merge. */
-  private final case class UpsertConflict(dataRel: String,
-      newFiles: Seq[LakeFile], rewrittenPaths: Set[String],
-      basePaths: Set[String], bytesWritten: Long,
-      schemaJson: Option[String],
-      // dv reference of each file the attempt READ, as of its base
-      // snapshot: the rebase is only sound if none changed under us
-      baseDv: Map[String, Option[String]] = Map.empty)
-
-  /** One upsert attempt against the CURRENT snapshot. Returns None iff
-    * another writer claimed the target version number first; the
-    * attempt's own data dir is deleted on that path (it is referenced
-    * by nothing). `dirTag` makes racing writers' data dirs disjoint —
-    * without it two writers racing version N would interleave bytes in
-    * the same `data/vN` before the claim decides the winner. */
-  private def upsertAttempt(spark: SparkSession, tablePath: String,
-      updates: DataFrame, key: String, checkpoint: String,
-      batchId: Long, dirTag: String,
-      evolveSchema: Boolean = false,
-      deleteWhen: Option[Column] = None): Option[LakeUpsertResult] =
-    upsertAttemptEx(spark, tablePath, updates, key, checkpoint, batchId,
-      dirTag, evolveSchema, deleteWhen, keepOnConflict = false).toOption
-
-  private def upsertAttemptEx(spark: SparkSession, tablePath: String,
-      updates: DataFrame, key: String, checkpoint: String,
-      batchId: Long, dirTag: String,
-      evolveSchema: Boolean = false,
-      deleteWhen: Option[Column] = None,
-      keepOnConflict: Boolean = false)
-      : Either[Option[UpsertConflict], LakeUpsertResult] = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    // rows the merge KEEPS from the source side: delete-marked source
-    // rows remove their matched base row and are never inserted (a
-    // delete-marked key absent from the table is a no-op)
-    def keepRows(df: DataFrame): DataFrame =
-      deleteWhen.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
-    latestLakeCommit(spark, tablePath) match {
-      case None =>
-        val v = 0L
-        val dataRel = s"data/${versionName(v)}$dirTag"
-        val keep = keepRows(updates)
-        keep.write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-        val newFiles = withKeyBlooms(spark, tablePath, dataRel,
-          fileStats(spark, tablePath, dataRel, Some(key)),
-          keep.schema.fieldNames.toSeq)
-        if (tryPublishManifest(fs, table, v, dataRel, checkpoint, batchId,
-            newFiles, dirTag, Some(keep.schema.json))) {
-          val bytes = bytesOf(fs, table, newFiles)
-          Right(LakeUpsertResult(v, 0, 0, newFiles.size, bytes, bytes))
-        } else if (keepOnConflict)
-          // a raced first commit is a pure-insert attempt: rebasable if
-          // the winner's keys are disjoint (empty base/rewritten sets)
-          Left(Some(UpsertConflict(dataRel, newFiles, Set.empty, Set.empty,
-            bytesOf(fs, table, newFiles), Some(keep.schema.json), Map.empty)))
-        else {
-          fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-          Left(None)
-        }
-      case Some(cur) =>
-        val base = commitFrame(spark, tablePath, cur)
-        // schema evolution (opt-in): the committed schema grows by the
-        // update batch's NEW columns; shared columns must keep their
-        // type; either side's missing columns null-fill. Off = the
-        // strict identical-column-set contract.
-        val extra = updates.schema.fields
-          .filterNot(f => base.columns.contains(f.name))
-        if (!evolveSchema) {
-          if (deleteWhen.isDefined)
-            // merge sources may carry SOURCE-ONLY columns (a delete
-            // marker the table must not evolve to carry): they are
-            // visible to `deleteWhen` and never written — the batch
-            // must still supply every table column
-            require(base.columns.forall(updates.columns.contains),
-              "mergeIntoLake requires the source to carry every table " +
-                s"column; missing: ${base.columns
-                  .filterNot(updates.columns.contains).mkString(", ")}")
-          else require(extra.isEmpty &&
-              base.columns.sorted.sameElements(updates.columns.sorted),
-            "upsertIntoLake requires identical column sets " +
-              "(pass evolveSchema=true to add columns)")
-        }
-        updates.schema.fields.filter(f => base.columns.contains(f.name))
-          .foreach { f =>
-            val committed = base.schema(f.name).dataType
-            require(f.dataType == committed,
-              s"column ${f.name}: batch type ${f.dataType} conflicts " +
-                s"with committed type $committed")
-          }
-        val evolved = org.apache.spark.sql.types.StructType(
-          base.schema.fields ++ (if (evolveSchema) extra
-          else Array.empty[org.apache.spark.sql.types.StructField]))
-        // delete-marked rows participate in the touch set and the
-        // anti-join (their base rows must go) but not in the union;
-        // the keep-filter runs BEFORE the table-schema projection so
-        // `deleteWhen` can reference source-only marker columns
-        val upKeep = keepRows(updates).select(evolved.fields.map(f =>
-          if (updates.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        val files = resolveFiles(fs, table, cur)
-        val touched = touchedFilePaths(spark, files, updates, key)
-        val (rewritten, carried) = files.partition(f => touched(f.path))
-        val v = cur.version + 1
-        val dataRel = s"data/${versionName(v)}$dirTag"
-        val merged =
-          if (rewritten.isEmpty) upKeep
-          else
-            // read the subset under the EVOLVED table schema (fixes
-            // column order, null-fills columns the files predate) WITH
-            // deletion vectors applied — a raw read here would
-            // resurrect dv-deleted rows into the rewrite
-            filesFrame(spark, tablePath, rewritten, Some(evolved))
-              .join(updates.select(col(key)).distinct(), Seq(key), "left_anti")
-              .unionByName(upKeep)
-        // OPTIMIZED WRITE: without this the merged rows land in the
-        // join's HASH partitioning — up to shuffle-partition files per
-        // commit, each spanning nearly the whole key domain. A few such
-        // commits and every file's range overlaps everything: batch
-        // touch-sets balloon, stats-pruned reads stop pruning, and OCC
-        // rebases (which need key-disjoint writers to stay disjoint at
-        // the FILE level) become impossible. Range-partitioning the
-        // merged output keeps each new file's key range tight and
-        // disjoint at the cost of one O(batch + touched rows) shuffle.
-        // SIZED BY VOLUME, not by touched-file count: a pure-insert
-        // commit touches zero files but may carry terabytes — counting
-        // files would funnel it through one task into one oversized
-        // file. Rewritten bytes are exact (manifest-listed files); the
-        // insert side is the optimizer's size estimate of the batch
-        // (file-backed sources report real bytes; statless plans fall
-        // back to a row-width estimate — see insertBytesEstimate).
-        val outParts = sizeParts(spark,
-          BigInt(bytesOf(fs, table, rewritten)) +
-            insertBytesEstimate(upKeep))
-        // one computation of the merged rows (see materializedRewrite)
-        val mat = materializedRewrite(merged)
-        try mat.repartitionByRange(outParts, col(key))
-          .sortWithinPartitions(col(key))
-          .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-        finally releaseRewrite(mat)
-        // the persisted cluster axis rides into the rewrite's stats:
-        // a mid-ingest upsert on a Z-ordered table keeps its rewritten
-        // files ts-band prunable (wide bounds beat no bounds) instead
-        // of decaying them to always-candidates until the next
-        // clustered maintenance pass
-        val effTs = carriedTsCluster(cur).filter(evolved.fieldNames.contains)
-        val newFiles = withKeyBlooms(spark, tablePath, dataRel,
-          fileStats(spark, tablePath, dataRel, Some(key), effTs),
-          evolved.fieldNames.toSeq)
-        if (tryPublishManifest(fs, table, v, dataRel, checkpoint, batchId,
-            carried ++ newFiles, dirTag, Some(evolved.json),
-            parentFiles = cur.files, tsClusterCol = effTs)) {
-          val bytesWritten = bytesOf(fs, table, newFiles)
-          Right(LakeUpsertResult(v, carried.size, rewritten.size,
-            newFiles.size, bytesWritten,
-            bytesWritten + bytesOf(fs, table, carried)))
-        } else if (keepOnConflict)
-          Left(Some(UpsertConflict(dataRel, newFiles,
-            rewritten.map(_.path).toSet, files.map(_.path).toSet,
-            bytesOf(fs, table, newFiles), Some(evolved.json),
-            rewritten.map(f => f.path -> f.dv).toMap)))
-        else {
-          fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-          Left(None)
-        }
-    }
-  }
+      batchId: Long, evolveSchema: Boolean = false): LakeUpsertResult =
+    upsertWith(spark, tablePath, updates, key, checkpoint, None, batchId,
+      maxAttempts = 1, evolveSchema, deleteWhen = None)
 
   /** OPTIMISTIC-CONCURRENCY upsert — the multi-writer commit protocol
     * (Delta/Iceberg's optimistic transaction core). Each attempt merges
     * against the latest snapshot, writes its rows to a WRITER-UNIQUE
-    * data dir, and tries to claim the next version number via the
-    * atomic manifest claim ([[tryPublishManifest]]). Losing the claim
-    * means another writer committed first: the loser deletes its
-    * unreferenced attempt dir and recomputes against the new snapshot.
+    * data dir, and tries to claim the next version number through
+    * [[commitLoop]]. Losing the claim means another writer committed
+    * first: unless the attempt REBASES onto the winner (below), the
+    * loser deletes its unreferenced attempt dir and recomputes against
+    * the new snapshot.
     *
     * The schedule is SERIALIZABLE by construction — every published
     * version's merge was computed against exactly its predecessor
@@ -1513,46 +1391,75 @@ object LakeLayout {
     * Replay detection under concurrency must scan all live versions
     * (another writer's commit may be the latest) — see
     * [[lakeHasCommit]]. `writerId` doubles as the commit's checkpoint
-    * provenance. */
+    * provenance.
+    *
+    * Fast REBASE on conflict (the Delta conflict-resolution core): our
+    * merge's result files stay valid against the winner's newer
+    * snapshot iff (a) the winner did not rewrite any file our merge
+    * read (else both touched the same rows) and (b) no file the winner
+    * ADDED can hold one of our batch's keys (range check — else
+    * last-writer-wins would be violated). Then the new manifest is the
+    * winner's file list minus our rewritten files plus our new files:
+    * pure manifest surgery, zero recompute, zero new bytes. Condition
+    * (a) plus the original touch-set stats argument guarantee every row
+    * of one of our batch keys lives either in a file we rewrote or in
+    * one of our new files. Schema must match the winner's (a
+    * concurrent evolution falls back to recompute). A rebased commit
+    * counts as the attempt that computed it. */
   def upsertIntoLakeOcc(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String, writerId: String,
       batchId: Long, maxAttempts: Int = 8,
       evolveSchema: Boolean = false,
-      deleteWhen: Option[Column] = None): LakeUpsertResult = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
+      deleteWhen: Option[Column] = None): LakeUpsertResult =
+    upsertWith(spark, tablePath, updates, key, writerId, Some(writerId),
+      batchId, maxAttempts, evolveSchema, deleteWhen)
+
+  /** What a lost upsert claim leaves for a rebase: everything needed to
+    * re-point the attempt's files at a newer version without
+    * recomputing the merge. */
+  private final case class UpsertConflict(dataRel: String,
+      newFiles: Seq[LakeFile], rewrittenPaths: Set[String],
+      basePaths: Set[String], schemaJson: Option[String],
+      // dv reference of each file the attempt READ, as of its base
+      // snapshot: the rebase is only sound if none changed under us
+      baseDv: Map[String, Option[String]])
+
+  /** The one upsert/merge path behind [[upsertIntoLake]],
+    * [[mergeIntoLake]] and their OCC forms. `provenance` is the
+    * manifest's checkpoint field; `writer` the OCC writer id, or None
+    * for a single writer (one attempt, no rebase: a lost claim fails
+    * loudly — see [[commitLoop]]). */
+  private def upsertWith(spark: SparkSession, tablePath: String,
+      updates: DataFrame, key: String, provenance: String,
+      writer: Option[String], batchId: Long, maxAttempts: Int,
+      evolveSchema: Boolean,
+      deleteWhen: Option[Column]): LakeUpsertResult = {
+    val verb = (if (deleteWhen.isDefined) "mergeIntoLake" else "upsertIntoLake") +
+      writer.fold("")(_ => "Occ")
+    // rows the merge KEEPS from the source side: delete-marked source
+    // rows remove their matched base row and are never inserted (a
+    // delete-marked key absent from the table is a no-op)
+    def keepRows(df: DataFrame): DataFrame =
+      deleteWhen.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
     // once per batch, not per attempt: constraints gate the ROWS, and
     // the rows don't change across OCC retries (delete-marked rows are
     // removals, not stored rows — exempt)
-    enforceLakeConstraints(spark, tablePath,
-      deleteWhen.map(c => updates.filter(!coalesce(c, lit(false))))
-        .getOrElse(updates))
+    enforceLakeConstraints(spark, tablePath, keepRows(updates))
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    // jittered backoff before a recompute breaks the livelock two
-    // writers with equal-length merges otherwise fall into (observed:
-    // the loser's recompute finishing just after each winner's claim,
-    // 8 straight losses); seeded per (writer, batch) so racing writers
-    // desynchronize deterministically
-    val rnd = new scala.util.Random(writerId.hashCode * 31 + batchId)
-    /** Fast REBASE on conflict (the Delta conflict-resolution core):
-      * our merge's result files stay valid against the winner's newer
-      * snapshot iff (a) the winner did not rewrite any file our merge
-      * read (else both touched the same rows) and (b) no file the
-      * winner ADDED can hold one of our batch's keys (range check —
-      * else last-writer-wins would be violated). Then the new manifest
-      * is the winner's file list minus our rewritten files plus our
-      * new files: pure manifest surgery, zero recompute, zero new
-      * bytes. Condition (a) plus the original touch-set stats argument
-      * guarantee every row of one of our batch keys lives either in a
-      * file we rewrote or in one of our new files. Schema must match
-      * the winner's (a concurrent evolution falls back to recompute). */
-    def occLog(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_OCC_DEBUG"))
-        System.err.println(s"[occ $writerId/$batchId] $msg")
-    def tryRebase(c: UpsertConflict, rebaseTries: Int): Option[LakeUpsertResult] = {
+    def result(v: Long, carried: Seq[LakeFile], rewritten: Int,
+        newFiles: Seq[LakeFile], attempt: Int): LakeUpsertResult = {
+      val bytesWritten = bytesOf(fs, table, newFiles)
+      LakeUpsertResult(v, carried.size, rewritten, newFiles.size,
+        bytesWritten, bytesWritten + bytesOf(fs, table, carried), attempt)
+    }
+    // the rebase fast path (see [[upsertIntoLakeOcc]]); a fallback to
+    // recompute is a None
+    def rebase(c: UpsertConflict, attempt: Int): Option[LakeUpsertResult] = {
+      // a single writer's lost claim breaks its contract: fail loudly
+      if (writer.isEmpty) return None
       var i = 0
-      while (i < rebaseTries) {
+      while (i < 4 * maxAttempts) {
         val latest = latestLakeCommit(spark, tablePath).get
         val latestByPath = latest.files.map(f => f.path -> f).toMap
         // (a) extends to deletion vectors: a winner that ATTACHED or
@@ -1563,56 +1470,134 @@ object LakeLayout {
         val aOk = latest.files.nonEmpty &&
           c.rewrittenPaths.forall(p => latestByPath.get(p)
             .exists(_.dv == c.baseDv.getOrElse(p, None)))
+        if (!aOk || latest.schemaJson != c.schemaJson) return None
         val winnerNew = latest.files.filterNot(f => c.basePaths(f.path))
-        val schemaOk = latest.schemaJson == c.schemaJson
-        if (!aOk || !schemaOk) {
-          occLog(s"rebase fallback: aOk=$aOk schemaOk=$schemaOk " +
-            s"rewritten=${c.rewrittenPaths.size} latest=v${latest.version}")
+        if (touchedFilePaths(spark, winnerNew, updates, key).nonEmpty)
           return None
-        }
-        val bOk = touchedFilePaths(spark, winnerNew, updates, key).isEmpty
-        if (!bOk) {
-          occLog(s"rebase fallback: winner files overlap batch keys " +
-            s"(winnerNew=${winnerNew.size}, latest=v${latest.version})")
-          return None
-        }
         val newList = latest.files.filterNot(f => c.rewrittenPaths(f.path)) ++
           c.newFiles
         if (tryPublishManifest(fs, table, latest.version + 1, c.dataRel,
-            writerId, batchId, newList, s"-$writerId-rb", c.schemaJson,
-            parentFiles = latest.files,
-            tsClusterCol = carriedTsCluster(latest)))
-          return Some(LakeUpsertResult(latest.version + 1,
-            newList.size - c.newFiles.size, c.rewrittenPaths.size,
-            c.newFiles.size, c.bytesWritten,
-            c.bytesWritten + bytesOf(fs, table,
-              newList.filterNot(c.newFiles.contains))))
+            provenance, batchId, newList, s"-${writer.get}-rb", c.schemaJson,
+            "data", latest.files, carriedTsCluster(latest)))
+          return Some(result(latest.version + 1,
+            newList.filterNot(c.newFiles.contains), c.rewrittenPaths.size,
+            c.newFiles, attempt))
         // claim raced again — re-read the even newer snapshot and retry
         i += 1
       }
       None
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      upsertAttemptEx(spark, tablePath, updates, key, writerId, batchId,
-          s"-$writerId", evolveSchema, deleteWhen,
-          keepOnConflict = true) match {
-        case Right(r) => return r.copy(attempts = attempt)
-        case Left(Some(c)) =>
-          tryRebase(c, rebaseTries = 4 * maxAttempts) match {
-            case Some(r) => return r.copy(attempts = attempt)
-            case None =>
-              fs.delete(new org.apache.hadoop.fs.Path(table, c.dataRel), true)
-              Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+    commitLoop(spark, tablePath, verb, writer, batchId, maxAttempts) { at =>
+      val dataRel = at.dataRel
+      at.cur match {
+        case None =>
+          val keep = keepRows(updates)
+          keep.write.mode("overwrite").parquet(s"$tablePath/$dataRel")
+          val newFiles = withKeyBlooms(spark, tablePath, dataRel,
+            fileStats(spark, tablePath, dataRel, Some(key)),
+            keep.schema.fieldNames.toSeq)
+          Publish(dataRel, provenance, newFiles, Some(keep.schema.json),
+            "data", None, () => result(at.v, Seq.empty, 0, newFiles, at.n),
+            // a raced first commit is a pure-insert attempt: rebasable
+            // if the winner's keys are disjoint (empty base/rewritten sets)
+            () => rebase(UpsertConflict(dataRel, newFiles, Set.empty,
+              Set.empty, Some(keep.schema.json), Map.empty), at.n))
+        case Some(cur) =>
+          val base = commitFrame(spark, tablePath, cur)
+          // schema evolution (opt-in): the committed schema grows by the
+          // update batch's NEW columns; shared columns must keep their
+          // type; either side's missing columns null-fill. Off = the
+          // strict identical-column-set contract.
+          val extra = updates.schema.fields
+            .filterNot(f => base.columns.contains(f.name))
+          if (!evolveSchema) {
+            if (deleteWhen.isDefined)
+              // merge sources may carry SOURCE-ONLY columns (a delete
+              // marker the table must not evolve to carry): they are
+              // visible to `deleteWhen` and never written — the batch
+              // must still supply every table column
+              require(base.columns.forall(updates.columns.contains),
+                "mergeIntoLake requires the source to carry every table " +
+                  s"column; missing: ${base.columns
+                    .filterNot(updates.columns.contains).mkString(", ")}")
+            else require(extra.isEmpty &&
+                base.columns.sorted.sameElements(updates.columns.sorted),
+              "upsertIntoLake requires identical column sets " +
+                "(pass evolveSchema=true to add columns)")
           }
-        case Left(None) =>
-          Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+          updates.schema.fields.filter(f => base.columns.contains(f.name))
+            .foreach { f =>
+              val committed = base.schema(f.name).dataType
+              require(f.dataType == committed,
+                s"column ${f.name}: batch type ${f.dataType} conflicts " +
+                  s"with committed type $committed")
+            }
+          val evolved = org.apache.spark.sql.types.StructType(
+            base.schema.fields ++ (if (evolveSchema) extra
+            else Array.empty[org.apache.spark.sql.types.StructField]))
+          // delete-marked rows participate in the touch set and the
+          // anti-join (their base rows must go) but not in the union;
+          // the keep-filter runs BEFORE the table-schema projection so
+          // `deleteWhen` can reference source-only marker columns
+          val upKeep = keepRows(updates).select(evolved.fields.map(f =>
+            if (updates.columns.contains(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+          val files = resolveFiles(fs, table, cur)
+          val touched = touchedFilePaths(spark, files, updates, key)
+          val (rewritten, carried) = files.partition(f => touched(f.path))
+          val merged =
+            if (rewritten.isEmpty) upKeep
+            else
+              // read the subset under the EVOLVED table schema (fixes
+              // column order, null-fills columns the files predate) WITH
+              // deletion vectors applied — a raw read here would
+              // resurrect dv-deleted rows into the rewrite
+              filesFrame(spark, tablePath, rewritten, Some(evolved))
+                .join(updates.select(col(key)).distinct(), Seq(key), "left_anti")
+                .unionByName(upKeep)
+          // OPTIMIZED WRITE: without this the merged rows land in the
+          // join's HASH partitioning — up to shuffle-partition files per
+          // commit, each spanning nearly the whole key domain. A few such
+          // commits and every file's range overlaps everything: batch
+          // touch-sets balloon, stats-pruned reads stop pruning, and OCC
+          // rebases (which need key-disjoint writers to stay disjoint at
+          // the FILE level) become impossible. Range-partitioning the
+          // merged output keeps each new file's key range tight and
+          // disjoint at the cost of one O(batch + touched rows) shuffle.
+          // SIZED BY VOLUME, not by touched-file count: a pure-insert
+          // commit touches zero files but may carry terabytes — counting
+          // files would funnel it through one task into one oversized
+          // file. Rewritten bytes are exact (manifest-listed files); the
+          // insert side is the optimizer's size estimate of the batch
+          // (file-backed sources report real bytes; statless plans fall
+          // back to a row-width estimate — see insertBytesEstimate).
+          val outParts = sizeParts(spark,
+            BigInt(bytesOf(fs, table, rewritten)) +
+              insertBytesEstimate(upKeep))
+          // one computation of the merged rows (see materializedRewrite)
+          val mat = materializedRewrite(merged)
+          try mat.repartitionByRange(outParts, col(key))
+            .sortWithinPartitions(col(key))
+            .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
+          finally releaseRewrite(mat)
+          // the persisted cluster axis rides into the rewrite's stats:
+          // a mid-ingest upsert on a Z-ordered table keeps its rewritten
+          // files ts-band prunable (wide bounds beat no bounds) instead
+          // of decaying them to always-candidates until the next
+          // clustered maintenance pass
+          val effTs = carriedTsCluster(cur).filter(evolved.fieldNames.contains)
+          val newFiles = withKeyBlooms(spark, tablePath, dataRel,
+            fileStats(spark, tablePath, dataRel, Some(key), effTs),
+            evolved.fieldNames.toSeq)
+          Publish(dataRel, provenance, carried ++ newFiles,
+            Some(evolved.json), "data", effTs,
+            () => result(at.v, carried, rewritten.size, newFiles, at.n),
+            () => rebase(UpsertConflict(dataRel, newFiles,
+              rewritten.map(_.path).toSet, files.map(_.path).toSet,
+              Some(evolved.json), rewritten.map(f => f.path -> f.dv).toMap),
+              at.n))
       }
     }
-    throw new IllegalStateException(
-      s"upsertIntoLakeOcc: $maxAttempts consecutive commit conflicts on " +
-        s"$tablePath — raise maxAttempts or reduce writer fan-in")
   }
 
   /** UPDATE ... SET ... WHERE as ONE scan of the touched files — the
@@ -1639,17 +1624,12 @@ object LakeLayout {
       tablePath: String, key: String, pred: Column,
       assigns: Seq[(String, String)], writerId: String, batchId: Long,
       maxAttempts: Int = 8): LakeUpsertResult = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val rnd = new scala.util.Random(writerId.hashCode * 31 + batchId)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = latestLakeCommit(spark, tablePath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"updateLakeWhereOcc: $tablePath has no committed version"))
+    commitLoop(spark, tablePath, "updateLakeWhereOcc", Some(writerId),
+        batchId, maxAttempts) { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
+        s"updateLakeWhereOcc: $tablePath has no committed version"))
       require(cur.files.nonEmpty,
         "updateLakeWhereOcc needs file-granular manifests")
       val schema = commitSchema(cur)
@@ -1678,8 +1658,7 @@ object LakeLayout {
       }
       val (rewritten, carried) = files.partition(f =>
         touchedUris.contains(uriOf(f)))
-      val v = cur.version + 1
-      val dataRel = s"data/${versionName(v)}-$writerId"
+      val dataRel = at.dataRel
       val merged =
         if (rewritten.isEmpty)
           spark.createDataFrame(
@@ -1706,20 +1685,14 @@ object LakeLayout {
       val newFiles = withKeyBlooms(spark, tablePath, dataRel,
         fileStats(spark, tablePath, dataRel, Some(key), effTs),
         schema.map(_.fieldNames.toSeq).getOrElse(Seq(key)))
-      if (tryPublishManifest(fs, table, v, dataRel, writerId, batchId,
-          carried ++ newFiles, s"-$writerId-upd", cur.schemaJson,
-          parentFiles = cur.files, tsClusterCol = effTs)) {
-        val bytesWritten = bytesOf(fs, table, newFiles)
-        return LakeUpsertResult(v, carried.size, rewritten.size,
-          newFiles.size, bytesWritten,
-          bytesWritten + bytesOf(fs, table, carried), attempts = attempt)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-      Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+      Publish(dataRel, writerId, carried ++ newFiles, cur.schemaJson,
+        "data", effTs, () => {
+          val bytesWritten = bytesOf(fs, table, newFiles)
+          LakeUpsertResult(at.v, carried.size, rewritten.size,
+            newFiles.size, bytesWritten,
+            bytesWritten + bytesOf(fs, table, carried), at.n)
+        })
     }
-    throw new IllegalStateException(
-      s"updateLakeWhereOcc: $maxAttempts consecutive commit conflicts on " +
-        s"$tablePath — raise maxAttempts or reduce writer fan-in")
   }
 
   /** MERGE INTO in ONE atomic file-granular commit — the three-clause
@@ -1738,15 +1711,9 @@ object LakeLayout {
   def mergeIntoLake(spark: SparkSession, tablePath: String,
       source: DataFrame, key: String, deleteWhen: Column,
       checkpoint: String, batchId: Long,
-      evolveSchema: Boolean = false): LakeUpsertResult = {
-    enforceLakeConstraints(spark, tablePath,
-      source.filter(!coalesce(deleteWhen, lit(false))))
-    upsertAttempt(spark, tablePath, source, key, checkpoint, batchId, "",
-        evolveSchema, Some(deleteWhen))
-      .getOrElse(throw new IllegalStateException(
-        s"mergeIntoLake lost a commit race on $tablePath (single-writer " +
-          "contract)"))
-  }
+      evolveSchema: Boolean = false): LakeUpsertResult =
+    upsertWith(spark, tablePath, source, key, checkpoint, None, batchId,
+      maxAttempts = 1, evolveSchema, Some(deleteWhen))
 
   /** [[mergeIntoLake]] under the OCC multi-writer protocol: the same
     * three-clause merge (update / insert / `deleteWhen` removal), each
@@ -2397,42 +2364,42 @@ object LakeLayout {
       batchId: Long): LakeUpsertResult = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = latestLakeCommit(spark, tablePath)
-      .getOrElse(throw new IllegalArgumentException(
+    commitLoop(spark, tablePath, "deleteFromLake", None, batchId, 1) { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"deleteFromLake: $tablePath has no committed version"))
-    val files = resolveFiles(fs, table, cur)
-    val touched = touchedFilePaths(spark, files, deletes, key)
-    val (rewritten, carried) = files.partition(f => touched(f.path))
-    val v = cur.version + 1
-    val dataRel = s"data/${versionName(v)}"
-    val newFiles =
-      if (rewritten.isEmpty) Seq.empty
-      else {
-        // same optimized write as the upsert path: keep the surviving
-        // rows' files tight and key-disjoint; survivors are bounded
-        // by the rewritten files' exact bytes. Materialized once —
-        // the range sampler would otherwise re-run the anti-join.
-        val mat = materializedRewrite(
-          filesFrame(spark, tablePath, rewritten, commitSchema(cur))
-            .join(deletes.select(col(key)).distinct(), Seq(key),
-              "left_anti"))
-        try mat.repartitionByRange(
-            sizeParts(spark, BigInt(bytesOf(fs, table, rewritten))),
-            col(key))
-          .sortWithinPartitions(col(key))
-          .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-        finally releaseRewrite(mat)
-        withKeyBlooms(spark, tablePath, dataRel,
-          fileStats(spark, tablePath, dataRel, Some(key),
-            carriedTsCluster(cur)),
-          commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key)))
-      }
-    publishManifest(fs, table, v, dataRel, checkpoint, batchId,
-      carried ++ newFiles, cur.schemaJson, op = "delete",
-      parentFiles = cur.files, tsClusterCol = carriedTsCluster(cur))
-    val bytesWritten = bytesOf(fs, table, newFiles)
-    LakeUpsertResult(v, carried.size, rewritten.size, newFiles.size,
-      bytesWritten, bytesWritten + bytesOf(fs, table, carried))
+      val files = resolveFiles(fs, table, cur)
+      val touched = touchedFilePaths(spark, files, deletes, key)
+      val (rewritten, carried) = files.partition(f => touched(f.path))
+      val newFiles =
+        if (rewritten.isEmpty) Seq.empty
+        else {
+          // same optimized write as the upsert path: keep the surviving
+          // rows' files tight and key-disjoint; survivors are bounded
+          // by the rewritten files' exact bytes. Materialized once —
+          // the range sampler would otherwise re-run the anti-join.
+          val mat = materializedRewrite(
+            filesFrame(spark, tablePath, rewritten, commitSchema(cur))
+              .join(deletes.select(col(key)).distinct(), Seq(key),
+                "left_anti"))
+          try mat.repartitionByRange(
+              sizeParts(spark, BigInt(bytesOf(fs, table, rewritten))),
+              col(key))
+            .sortWithinPartitions(col(key))
+            .write.mode("overwrite").parquet(s"$tablePath/${at.dataRel}")
+          finally releaseRewrite(mat)
+          withKeyBlooms(spark, tablePath, at.dataRel,
+            fileStats(spark, tablePath, at.dataRel, Some(key),
+              carriedTsCluster(cur)),
+            commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key)))
+        }
+      Publish(at.dataRel, checkpoint, carried ++ newFiles, cur.schemaJson,
+        "delete", carriedTsCluster(cur), () => {
+          val bytesWritten = bytesOf(fs, table, newFiles)
+          LakeUpsertResult(at.v, carried.size, rewritten.size,
+            newFiles.size, bytesWritten,
+            bytesWritten + bytesOf(fs, table, carried))
+        })
+    }
   }
 
   /** MERGE-ON-READ delete — the DELETION-VECTOR twin of
@@ -2461,27 +2428,9 @@ object LakeLayout {
     * delete key. */
   def deleteFromLakeDv(spark: SparkSession, tablePath: String,
       deletes: DataFrame, key: String, checkpoint: String,
-      batchId: Long): Long = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = latestLakeCommit(spark, tablePath)
-      .getOrElse(throw new IllegalArgumentException(
-        s"deleteFromLakeDv: $tablePath has no committed version"))
-    require(cur.files.nonEmpty,
-      "deleteFromLakeDv needs file-granular manifests (run a full " +
-        "compaction once to convert a legacy dir-pointer table)")
-    val affected = touchedFilePaths(spark, cur.files, deletes, key)
-    if (affected.isEmpty) return cur.version
-    val v = cur.version + 1
-    val dvRel = s"data/${versionName(v)}-dv"
-    writeDvSidecar(spark, tablePath, cur, affected, deletes, key, dvRel)
-    val newList = cur.files.map(f =>
-      if (affected(f.path)) f.copy(dv = Some(dvRel)) else f)
-    publishManifest(fs, table, v, dvRel, checkpoint, batchId, newList,
-      cur.schemaJson, op = "dvdelete", parentFiles = cur.files,
-      tsClusterCol = carriedTsCluster(cur))
-    v
-  }
+      batchId: Long): Long =
+    deleteDvWith(spark, tablePath, deletes, key, checkpoint, None, batchId,
+      maxAttempts = 1)
 
   /** [[deleteFromLakeDv]] under the OCC multi-writer protocol: each
     * attempt writes a writer-tagged sidecar against the latest
@@ -2489,41 +2438,36 @@ object LakeLayout {
     * affected set and the merged key union both depend on the
     * snapshot, so nothing can be rebased — but an attempt is
     * O(deleted keys), so retries are near-free, unlike rewrite
-    * retries). Lost attempts' sidecar dirs are unreferenced orphans
-    * for [[vacuumLake]]'s sweep. */
+    * retries). */
   def deleteFromLakeDvOcc(spark: SparkSession, tablePath: String,
       deletes: DataFrame, key: String, writerId: String, batchId: Long,
-      maxAttempts: Int = 8): Long = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val rnd = new scala.util.Random(writerId.hashCode * 31 + batchId)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = latestLakeCommit(spark, tablePath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"deleteFromLakeDvOcc: $tablePath has no committed version"))
+      maxAttempts: Int = 8): Long =
+    deleteDvWith(spark, tablePath, deletes, key, writerId, Some(writerId),
+      batchId, maxAttempts)
+
+  /** The one dv-delete path behind [[deleteFromLakeDv]] and its OCC
+    * form (`provenance`/`writer` as in [[upsertWith]]). */
+  private def deleteDvWith(spark: SparkSession, tablePath: String,
+      deletes: DataFrame, key: String, provenance: String,
+      writer: Option[String], batchId: Long, maxAttempts: Int): Long = {
+    val verb = "deleteFromLakeDv" + writer.fold("")(_ => "Occ")
+    commitLoop(spark, tablePath, verb, writer, batchId, maxAttempts,
+        dirSuffix = "-dv") { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
+        s"$verb: $tablePath has no committed version"))
       require(cur.files.nonEmpty,
-        "deleteFromLakeDvOcc needs file-granular manifests")
+        s"$verb needs file-granular manifests (run a full compaction " +
+          "once to convert a legacy dir-pointer table)")
       val affected = touchedFilePaths(spark, cur.files, deletes, key)
-      if (affected.isEmpty) return cur.version
-      val v = cur.version + 1
-      val dvRel = s"data/${versionName(v)}-$writerId-dv"
-      writeDvSidecar(spark, tablePath, cur, affected, deletes, key, dvRel)
-      val newList = cur.files.map(f =>
-        if (affected(f.path)) f.copy(dv = Some(dvRel)) else f)
-      if (tryPublishManifest(fs, table, v, dvRel, writerId, batchId,
-          newList, s"-$writerId-dv", cur.schemaJson, op = "dvdelete",
-          parentFiles = cur.files, tsClusterCol = carriedTsCluster(cur)))
-        return v
-      fs.delete(new org.apache.hadoop.fs.Path(table, dvRel), true)
-      Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+      if (affected.isEmpty) Done(cur.version)
+      else {
+        writeDvSidecar(spark, tablePath, cur, affected, deletes, key,
+          at.dataRel)
+        Publish(at.dataRel, provenance, cur.files.map(f =>
+            if (affected(f.path)) f.copy(dv = Some(at.dataRel)) else f),
+          cur.schemaJson, "dvdelete", carriedTsCluster(cur), () => at.v)
+      }
     }
-    throw new IllegalStateException(
-      s"deleteFromLakeDvOcc: $maxAttempts consecutive commit conflicts " +
-        s"on $tablePath")
   }
 
   /** The merged sidecar for one dv-delete commit: the batch's distinct
@@ -2739,12 +2683,10 @@ object LakeLayout {
     * see the restore as a row-changing commit — the op is typed
     * `restore`, not one of the provably-byte-moving types, so an
     * incremental reader replays the rollback instead of skipping it.
-    * Single-writer like every non-OCC commit: a lost race fails
-    * loudly. Returns the NEW version number. */
+    * Commits through [[commitLoop]] as a single writer (one attempt: a
+    * lost race fails loudly). Returns the NEW version number. */
   def restoreLake(spark: SparkSession, tablePath: String,
       version: Long): Long = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val target = lakeCommitAt(spark, tablePath, version)
     // a restore target may PREDATE the current constraints — its rows
     // were never validated against them, so publishing it unchecked
@@ -2762,17 +2704,13 @@ object LakeLayout {
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", ") +
           "; drop the constraint first to restore deliberately")
     }
-    val cur = latestLakeCommit(spark, tablePath).get
-    val v = cur.version + 1
     // dataDir carries the TARGET's dir so a legacy dir-pointer target
     // (empty file list = "read the dir") restores with the same
     // semantics it was committed under
-    publishManifest(fs, table, v, target.dataDir,
-      checkpoint = "restore", batchId = version,
-      files = target.files, schemaJson = target.schemaJson,
-      op = "restore", parentFiles = cur.files,
-      tsClusterCol = target.tsClusterCol)
-    v
+    commitLoop(spark, tablePath, "restoreLake", None, version, 1) { at =>
+      Publish(target.dataDir, "restore", target.files, target.schemaJson,
+        "restore", target.tsClusterCol, () => at.v)
+    }
   }
 
   /** DESCRIBE HISTORY — one row per live version, newest first: the
@@ -2958,22 +2896,6 @@ object LakeLayout {
       op = "compact", tsStatsKey = None, bloomBits = 0, validate = false)
   }
 
-  /** PARTIAL compaction: consolidate only the files under
-    * `smallFileMB` into ~`targetFileMB` key-clustered files; files
-    * already at size are carried by reference, byte-untouched. This is
-    * the compaction a 100 TB table actually runs: [[compactLake]]
-    * rewrites the WHOLE table — O(table) bytes, the same scale-killer
-    * the file-granular upsert removed, one level up — while this costs
-    * O(recently-written small bytes) per invocation. Streaming upserts
-    * add a few small files per batch; running this periodically keeps
-    * the steady state at "a few large files + the most recent batches'
-    * small files" with bounded work per cycle. The consolidated files'
-    * key ranges may overlap the carried large files' ranges (no global
-    * re-sort) — upsert touch-sets and range reads handle overlap
-    * correctly, exactly as Delta/Iceberg live with overlapping file
-    * ranges between compactions. No-op (current version returned) when
-    * fewer than two small files exist. Published through the same
-    * atomic manifest rename; [[lakeDiff]] across it is empty. */
   /** The maintenance rewrite layout: key-clustered by default; with
     * `tsCluster` set, Z-ordered on (key, ts) WITH the rewritten files'
     * ts bounds re-recorded. On an OPTIMIZE'd two-axis table, plain
@@ -3012,42 +2934,27 @@ object LakeLayout {
         .write.mode("overwrite").parquet(dest)
   }
 
+  /** PARTIAL compaction: consolidate only the files under
+    * `smallFileMB` into ~`targetFileMB` key-clustered files; files
+    * already at size are carried by reference, byte-untouched. This is
+    * the compaction a 100 TB table actually runs: [[compactLake]]
+    * rewrites the WHOLE table — O(table) bytes, the same scale-killer
+    * the file-granular upsert removed, one level up — while this costs
+    * O(recently-written small bytes) per invocation. Streaming upserts
+    * add a few small files per batch; running this periodically keeps
+    * the steady state at "a few large files + the most recent batches'
+    * small files" with bounded work per cycle. The consolidated files'
+    * key ranges may overlap the carried large files' ranges (no global
+    * re-sort) — upsert touch-sets and range reads handle overlap
+    * correctly, exactly as Delta/Iceberg live with overlapping file
+    * ranges between compactions. No-op (current version returned) when
+    * fewer than two small files exist. Published through the same
+    * atomic manifest claim; [[lakeDiff]] across it is empty. */
   def compactLakeSmallFiles(spark: SparkSession, tablePath: String,
       key: String, smallFileMB: Int = 32, targetFileMB: Int = 128,
-      tsCluster: Option[String] = None, minFiles: Int = 1): Long = {
-    val cur = latestLakeCommit(spark, tablePath)
-      .getOrElse(throw new IllegalArgumentException(
-        s"compactLakeSmallFiles: $tablePath has no committed version"))
-    // legacy dir-pointer manifests: full compaction converts to listed
-    // form first
-    if (cur.files.isEmpty) return compactLake(spark, tablePath, key, targetFileMB)
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    // the persisted cluster axis kicks in when the caller passes none —
-    // an OPTIMIZE'd table keeps its two-axis layout through plain
-    // maintenance without every scheduler knowing the table's history
-    val effTs = tsCluster.orElse(carriedTsCluster(cur))
-    val sized = cur.files.map(f => f -> fileLen(fs, table, f))
-    val (small, big) = sized.partition(_._2 < smallFileMB * 1024L * 1024L)
-    if (small.size < 2) return cur.version
-    val bytes = small.map(_._2).sum
-    val nFiles = math.max(math.max(1, minFiles),
-      (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-    val v = cur.version + 1
-    val dataRel = s"data/${versionName(v)}"
-    maintenanceWrite(
-      filesFrame(spark, tablePath, small.map(_._1), commitSchema(cur)),
-      nFiles, key, effTs, s"$tablePath/$dataRel")
-    publishManifest(fs, table, v, dataRel,
-      s"compaction-small:${cur.version}", -1L,
-      big.map(_._1) ++
-        withKeyBlooms(spark, tablePath, dataRel,
-          fileStats(spark, tablePath, dataRel, Some(key), effTs),
-          commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key))),
-      cur.schemaJson, op = "compact", parentFiles = cur.files,
-      tsClusterCol = effTs)
-    v
-  }
+      tsCluster: Option[String] = None, minFiles: Int = 1): Long =
+    compactSmallWith(spark, tablePath, key, None, 1, smallFileMB,
+      targetFileMB, tsCluster, minFiles)
 
   /** [[compactLakeSmallFiles]] under the OCC multi-writer protocol —
     * the maintenance job a 100 TB table runs CONCURRENTLY with ingest
@@ -3058,8 +2965,9 @@ object LakeLayout {
     * retry is always sound — unlike upserts there is nothing to
     * rebase: the winner may have rewritten the very files we
     * consolidated). Lost attempts' data dirs are unreferenced by
-    * construction and reclaimed by [[vacuumLake]]'s orphan sweep —
-    * which must itself wait for a write quiescence window: the sweep
+    * construction and deleted by the loser; a crashed attempt's dir is
+    * reclaimed by [[vacuumLake]]'s orphan sweep — which must itself
+    * wait for a write quiescence window (or a grace window): the sweep
     * cannot tell a crashed attempt's orphan from a LIVE attempt's dir
     * about to be published, so vacuum during an active OCC storm would
     * delete data a manifest references moments later.
@@ -3068,51 +2976,60 @@ object LakeLayout {
   def compactLakeOcc(spark: SparkSession, tablePath: String, key: String,
       writerId: String, maxAttempts: Int = 8,
       smallFileMB: Int = 32, targetFileMB: Int = 128,
-      tsCluster: Option[String] = None, minFiles: Int = 1): Long = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
+      tsCluster: Option[String] = None, minFiles: Int = 1): Long =
+    compactSmallWith(spark, tablePath, key, Some(writerId), maxAttempts,
+      smallFileMB, targetFileMB, tsCluster, minFiles)
+
+  /** The one partial-compaction path behind [[compactLakeSmallFiles]]
+    * and [[compactLakeOcc]] (`writer` as in [[commitLoop]]). A legacy
+    * dir-pointer table converts through a single-writer full
+    * compaction. */
+  private def compactSmallWith(spark: SparkSession, tablePath: String,
+      key: String, writer: Option[String], maxAttempts: Int,
+      smallFileMB: Int, targetFileMB: Int, tsCluster: Option[String],
+      minFiles: Int): Long = {
+    val verb = writer.fold("compactLakeSmallFiles")(_ => "compactLakeOcc")
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val rnd = new scala.util.Random(writerId.hashCode)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = latestLakeCommit(spark, tablePath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"compactLakeOcc: $tablePath has no committed version"))
-      require(cur.files.nonEmpty,
-        "compactLakeOcc needs file-granular manifests (run a single-writer " +
-          "full compaction once to convert a legacy dir-pointer table)")
-      val effTs = tsCluster.orElse(carriedTsCluster(cur))
-      val sized = cur.files.map(f => f -> fileLen(fs, table, f))
-      val (small, big) = sized.partition(_._2 < smallFileMB * 1024L * 1024L)
-      if (small.size < 2) return cur.version
-      val bytes = small.map(_._2).sum
-      val nFiles = math.max(math.max(1, minFiles),
-        (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-      val v = cur.version + 1
-      val dataRel = s"data/${versionName(v)}-$writerId-cmp"
-      maintenanceWrite(
-        filesFrame(spark, tablePath, small.map(_._1), commitSchema(cur)),
-        nFiles, key, effTs, s"$tablePath/$dataRel")
-      if (tryPublishManifest(fs, table, v, dataRel,
-          s"compaction-occ:$writerId", -1L,
-          big.map(_._1) ++
-            withKeyBlooms(spark, tablePath, dataRel,
-              fileStats(spark, tablePath, dataRel, Some(key), effTs),
-              commitSchema(cur).map(_.fieldNames.toSeq)
-                .getOrElse(Seq(key))),
-          s"-$writerId-cmp", cur.schemaJson, op = "compact",
-          parentFiles = cur.files, tsClusterCol = effTs))
-        return v
-      // claim raced: our consolidated files may include rows the winner
-      // just rewrote — drop the orphan and recompute from the new tip
-      fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-      Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+    // an OCC compaction's dirs are `data/v<N>-<writer>-cmp`; a single
+    // writer's keep the plain `data/v<N>`
+    commitLoop(spark, tablePath, verb, writer, -1L, maxAttempts,
+        dirSuffix = writer.fold("")(_ => "-cmp")) { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
+        s"$verb: $tablePath has no committed version"))
+      if (cur.files.isEmpty) {
+        require(writer.isEmpty, s"$verb needs file-granular manifests (run " +
+          "a single-writer full compaction once to convert a legacy " +
+          "dir-pointer table)")
+        Done(compactLake(spark, tablePath, key, targetFileMB))
+      } else {
+        // the persisted cluster axis kicks in when the caller passes
+        // none — an OPTIMIZE'd table keeps its two-axis layout through
+        // plain maintenance without every scheduler knowing the table's
+        // history
+        val effTs = tsCluster.orElse(carriedTsCluster(cur))
+        val sized = cur.files.map(f => f -> fileLen(fs, table, f))
+        val (small, big) = sized.partition(_._2 < smallFileMB * 1024L * 1024L)
+        if (small.size < 2) Done(cur.version)
+        else {
+          val bytes = small.map(_._2).sum
+          val nFiles = math.max(math.max(1, minFiles),
+            (bytes / (targetFileMB * 1024L * 1024L)).toInt)
+          maintenanceWrite(
+            filesFrame(spark, tablePath, small.map(_._1), commitSchema(cur)),
+            nFiles, key, effTs, s"$tablePath/${at.dataRel}")
+          Publish(at.dataRel,
+            writer.fold(s"compaction-small:${cur.version}")(w =>
+              s"compaction-occ:$w"),
+            big.map(_._1) ++
+              withKeyBlooms(spark, tablePath, at.dataRel,
+                fileStats(spark, tablePath, at.dataRel, Some(key), effTs),
+                commitSchema(cur).map(_.fieldNames.toSeq)
+                  .getOrElse(Seq(key))),
+            cur.schemaJson, "compact", effTs, () => at.v)
+        }
+      }
     }
-    throw new IllegalStateException(
-      s"compactLakeOcc: $maxAttempts consecutive commit conflicts on " +
-        s"$tablePath — raise maxAttempts or run compaction less often")
   }
 
   /** Rewrite ONLY the deletion-vector-bearing files (dv-applied →
@@ -3129,46 +3046,33 @@ object LakeLayout {
       writerId: String, maxAttempts: Int = 8,
       targetFileMB: Int = 128, tsCluster: Option[String] = None,
       minFiles: Int = 1): Long = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val rnd = new scala.util.Random(writerId.hashCode)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = latestLakeCommit(spark, tablePath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"materializeDvOcc: $tablePath has no committed version"))
+    commitLoop(spark, tablePath, "materializeDvOcc", Some(writerId), -1L,
+        maxAttempts, dirSuffix = "-dvm") { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
+        s"materializeDvOcc: $tablePath has no committed version"))
       require(cur.files.nonEmpty,
         "materializeDvOcc needs file-granular manifests")
       val (vectored, clean) = cur.files.partition(_.dv.isDefined)
-      if (vectored.isEmpty) return cur.version
-      val effTs = tsCluster.orElse(carriedTsCluster(cur))
-      val bytes = bytesOf(fs, table, vectored)
-      val nFiles = math.max(math.max(1, minFiles),
-        (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-      val v = cur.version + 1
-      val dataRel = s"data/${versionName(v)}-$writerId-dvm"
-      maintenanceWrite(
-        filesFrame(spark, tablePath, vectored, commitSchema(cur)),
-        nFiles, key, effTs, s"$tablePath/$dataRel")
-      if (tryPublishManifest(fs, table, v, dataRel,
-          s"dv-materialize:$writerId", -1L,
+      if (vectored.isEmpty) Done(cur.version)
+      else {
+        val effTs = tsCluster.orElse(carriedTsCluster(cur))
+        val bytes = bytesOf(fs, table, vectored)
+        val nFiles = math.max(math.max(1, minFiles),
+          (bytes / (targetFileMB * 1024L * 1024L)).toInt)
+        maintenanceWrite(
+          filesFrame(spark, tablePath, vectored, commitSchema(cur)),
+          nFiles, key, effTs, s"$tablePath/${at.dataRel}")
+        Publish(at.dataRel, s"dv-materialize:$writerId",
           clean ++
-            withKeyBlooms(spark, tablePath, dataRel,
-              fileStats(spark, tablePath, dataRel, Some(key), effTs),
+            withKeyBlooms(spark, tablePath, at.dataRel,
+              fileStats(spark, tablePath, at.dataRel, Some(key), effTs),
               commitSchema(cur).map(_.fieldNames.toSeq)
                 .getOrElse(Seq(key))),
-          s"-$writerId-dvm", cur.schemaJson, op = "compact",
-          parentFiles = cur.files, tsClusterCol = effTs))
-        return v
-      fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-      Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+          cur.schemaJson, "compact", effTs, () => at.v)
+      }
     }
-    throw new IllegalStateException(
-      s"materializeDvOcc: $maxAttempts consecutive commit conflicts on " +
-        s"$tablePath")
   }
 
   /** What one [[maintainLake]] pass did, for observability/tests. */
@@ -3343,20 +3247,15 @@ object LakeLayout {
   def optimizeLakeZOrderOcc(spark: SparkSession, tablePath: String,
       dims: Seq[String], writerId: String, maxAttempts: Int,
       targetFileMB: Int, minFiles: Int): Long = {
-    require(writerId.nonEmpty && !writerId.contains("/"),
-      "writerId must be a non-empty path-safe token")
     require(dims.size >= 2 && dims.distinct.size == dims.size,
       s"z-order needs >=2 distinct dimensions, got ${dims.mkString(", ")}")
     val key = dims.head
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val rnd = new scala.util.Random(writerId.hashCode)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = latestLakeCommit(spark, tablePath)
-        .getOrElse(throw new IllegalArgumentException(
-          s"optimizeLakeZOrderOcc: $tablePath has no committed version"))
+    commitLoop(spark, tablePath, "optimizeLakeZOrderOcc", Some(writerId),
+        -1L, maxAttempts, dirSuffix = "-zord") { at =>
+      val cur = at.cur.getOrElse(throw new IllegalArgumentException(
+        s"optimizeLakeZOrderOcc: $tablePath has no committed version"))
       require(cur.files.nonEmpty,
         "optimizeLakeZOrderOcc needs file-granular manifests (run a " +
           "single-writer full compaction once to convert a legacy table)")
@@ -3379,32 +3278,20 @@ object LakeLayout {
       // size target
       val nFiles = math.max(math.max(1, minFiles),
         (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-      val v = cur.version + 1
-      val dataRel = s"data/${versionName(v)}-$writerId-zord"
       zorderFrame(df, dims)
         .repartitionByRange(nFiles, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .drop("zkey")
-        .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
+        .write.mode("overwrite").parquet(s"$tablePath/${at.dataRel}")
       // OPTIMIZE declares the table's cluster axis: from here on every
       // writer carries it and keeps recording second-axis bounds
-      if (tryPublishManifest(fs, table, v, dataRel,
-          s"zorder-occ:$writerId", -1L,
-          withKeyBlooms(spark, tablePath, dataRel,
-            fileStats(spark, tablePath, dataRel, Some(key), dims.lift(1),
-              extraAxes = dims.drop(2)),
-            commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key))),
-          s"-$writerId-zord", cur.schemaJson, op = "compact",
-          parentFiles = cur.files, tsClusterCol = dims.lift(1)))
-        return v
-      // claim raced: the winner may have rewritten rows we just
-      // re-ordered — drop the orphan and recompute from the new tip
-      fs.delete(new org.apache.hadoop.fs.Path(table, dataRel), true)
-      Thread.sleep(rnd.nextInt(40 * attempt) + 5L)
+      Publish(at.dataRel, s"zorder-occ:$writerId",
+        withKeyBlooms(spark, tablePath, at.dataRel,
+          fileStats(spark, tablePath, at.dataRel, Some(key), dims.lift(1),
+            extraAxes = dims.drop(2)),
+          commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key))),
+        cur.schemaJson, "compact", dims.lift(1), () => at.v)
     }
-    throw new IllegalStateException(
-      s"optimizeLakeZOrderOcc: $maxAttempts consecutive commit conflicts " +
-        s"on $tablePath — schedule OPTIMIZE in a quieter window")
   }
 
   /** Drop all but the newest `keep` versions — manifests first (so no
@@ -3919,12 +3806,12 @@ object LakeLayout {
       f.copy(path = qualify(f.path), dv = f.dv.map(qualify),
         bloom = f.bloom.map(b =>
           if (b.startsWith("@")) "@" + qualify(b.drop(1)) else b)))
-    val dst = new org.apache.hadoop.fs.Path(dstPath)
-    val dstFs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    publishManifest(dstFs, dst, 0L, s"data/${versionName(0L)}-shallow",
-      s"clone:$srcPath", -1L, absFiles, cur.schemaJson,
-      tsClusterCol = carriedTsCluster(cur))
-    0L
+    commitLoop(spark, dstPath, "cloneLakeShallow", None, -1L, 1,
+        dirSuffix = "-shallow") { at =>
+      require(at.cur.isEmpty, s"cloneLakeShallow: $dstPath already has commits")
+      Publish(at.dataRel, s"clone:$srcPath", absFiles, cur.schemaJson,
+        "data", carriedTsCluster(cur), () => at.v)
+    }
   }
 
   /** Clone a staged base into a fresh UUID root for a mutating bench
