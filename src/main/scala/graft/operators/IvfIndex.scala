@@ -80,6 +80,94 @@ object IvfIndex {
   private def fsOf(s: SparkSession, path: String) =
     hp(path).getFileSystem(s.sessionState.newHadoopConf())
 
+  /** Immutable per-version model state on the driver: a generation's
+    * centroids, a PQ sidecar version's codebooks and a tombstone
+    * version's events, so repeated probes of an unchanged version skip
+    * re-reading them. One slot per (index, kind) holds the version
+    * served last: its dir, that dir's listing fingerprint
+    * ([[Tables.listingFingerprint]]) and the state. Every probe checks
+    * both against what resolution (claim log, markers) names: a
+    * rebuild, refresh or publish names a new dir, and a dir re-written
+    * at the same path lists new part files, so either replaces the
+    * slot. Superseded versions are never kept. */
+  private[graft] val versionMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (String, Long, AnyRef)]()
+
+  private def memoized[T <: AnyRef](s: SparkSession, root: String,
+      kind: String, dir: String)(load: => T): T = {
+    val fp = Tables.listingFingerprint(fsOf(s, dir), hp(dir))
+    // a generation dir `g<N>[-tag]` shares its index's slot
+    val index = hp(root).getName match {
+      case GenName(_) | TaggedGenName(_) => hp(root).getParent.toString
+      case _ => root
+    }
+    versionMemo.get((index, kind)) match {
+      case (`dir`, `fp`, v) => v.asInstanceOf[T]
+      case _ =>
+        val v = load
+        versionMemo.put((index, kind), (dir, fp, v))
+        v
+    }
+  }
+
+  /** A generation's centroids, (cell, centroid) per cell. */
+  private def centroids(s: SparkSession,
+      root: String): Array[(Int, Array[Double])] =
+    memoized(s, root, "centroids", s"$root/centroids") {
+      s.read.parquet(s"$root/centroids").collect().map(r =>
+        r.getAs[Int]("cell") ->
+          r.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+    }
+
+  /** The `nprobe` cells whose centroids are nearest `probeU` (a unit
+    * probe): max dot, ties to the lower cell. */
+  private def nearestCells(s: SparkSession, root: String,
+      probeU: Array[Double], nprobe: Int): Seq[Int] =
+    centroids(s, root).toSeq
+      .map { case (i, c) => (c.zip(probeU).map { case (a, b) => a * b }.sum, i) }
+      .sortBy { case (sim, i) => (-sim, i) }.take(nprobe).map(_._2)
+
+  private def unit(probe: Array[Double]): Array[Double] = {
+    val n = math.sqrt(probe.map(x => x * x).sum)
+    if (n > 0) probe.map(_ / n) else probe
+  }
+
+  /** A PQ sidecar version's codebooks, `cb(sub)(code)`. */
+  private def codebooks(s: SparkSession, root: String,
+      booksDir: String): Array[Array[Array[Double]]] =
+    memoized(s, root, "pqbooks", booksDir) {
+      val books = s.read.parquet(booksDir).collect()
+      val m = books.map(_.getAs[Int]("sub")).max + 1
+      val ks = books.map(_.getAs[Int]("code")).max + 1
+      val cb = Array.ofDim[Array[Double]](m, ks)
+      books.foreach { r =>
+        cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
+          r.getAs[scala.collection.Seq[Double]]("cvec").toArray
+      }
+      cb
+    }
+
+  /** A tombstone version's (vec_id, tomb_v) events, normalized. A
+    * takedown frame's `vec_id` keeps its caller's type, so it is cast
+    * here; a null id hides nothing and is dropped. */
+  private def tombEvents(s: SparkSession, root: String,
+      dir: String): Array[(Long, Long)] =
+    memoized(s, root, "tombs", dir) {
+      readTombstones(s, dir)
+        .select(col("vec_id").cast("long"), col("tomb_v").cast("long"))
+        .collect().collect { case r if !r.isNullAt(0) =>
+          (r.getLong(0), r.getLong(1)) }
+    }
+
+  /** The rows of `vectors` (a read of a whole vectors dir) held in
+    * `files` (listed paths): a filter on `_metadata.file_path`, which
+    * Spark applies to the file listing before any file is opened. The
+    * column holds URI-encoded paths (a space reads `%20`), so each
+    * listed path is encoded the same way. */
+  private def inFiles(vectors: DataFrame, files: Set[String]): DataFrame =
+    vectors.filter(col("_metadata.file_path")
+      .isin(files.toSeq.sorted.map(f => hp(f).toUri.toString): _*))
+
   private val GenName = "g(\\d+)".r
   private val TaggedGenName = "g(\\d+)-[0-9a-f]+".r
   private val StageName = "\\.g(\\d+)-stage-.*".r
@@ -314,37 +402,17 @@ object IvfIndex {
 
   /** Every data file currently under a vectors dir (qualified path
     * strings, `_`/`.`-prefixed bookkeeping skipped) — the snapshot
-    * unit the rebuild/append race detection diffs on. */
-  private def listVectorFiles(fs: org.apache.hadoop.fs.FileSystem,
+    * unit the rebuild/append race detection diffs on. An in-flight
+    * Spark write's `_temporary` attempt dirs hold files already named
+    * `part-*`; the walk never descends into them, so a snapshot/diff
+    * never admits a half-written footer or counts a wave twice. Walks
+    * `listStatus`, not `listFiles`, which starts a shell process per
+    * file on a local file system ([[Tables.dataFiles]]). */
+  private[graft] def listVectorFiles(fs: org.apache.hadoop.fs.FileSystem,
       vecDir: String): Set[String] = {
     val p = hp(vecDir)
     if (!fs.exists(p)) Set.empty
-    else {
-      val base = fs.makeQualified(p)
-      val it = fs.listFiles(p, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-          // the recursive listing also descends into bookkeeping trees
-          // (an in-flight Spark write's _temporary/attempt dirs hold
-          // files already named part-*) — a snapshot/diff that admits
-          // them reads half-written footers or double-counts a wave
-          // whose files reappear under their committed path, so only
-          // files with no hidden ANCESTOR dir count
-          var anc = st.getPath.getParent
-          var hidden = false
-          while (anc != null && anc != base && !hidden) {
-            val an = anc.getName
-            hidden = an.startsWith("_") || an.startsWith(".")
-            anc = anc.getParent
-          }
-          if (!hidden) b += st.getPath.toString
-        }
-      }
-      b.result()
-    }
+    else Tables.dataFiles(fs, p).map(_.getPath.toString).toSet
   }
 
   /** Read EXACTLY the given files of a cell-partitioned vectors dir
@@ -662,14 +730,10 @@ object IvfIndex {
       val centsDf = s.read.parquet(s"$root/centroids")
       val vecsDir = hp(s"$root/vectors")
       // crash recovery: an UNMARKED partial wave is swept before redo
-      if (fs.exists(vecsDir)) {
-        val it = fs.listFiles(vecsDir, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.startsWith(prefix))
-            fs.delete(st.getPath, false)
-        }
-      }
+      if (fs.exists(vecsDir))
+        Tables.dataFiles(fs, vecsDir)
+          .filter(_.getPath.getName.startsWith(prefix))
+          .foreach(st => fs.delete(st.getPath, false))
       val ch = graft.streaming.CdfStream
         .changesForVersion(s, lakePath, v, "vec_id")
       // DELETE and UPDATE changes fold into the tombstone sidecar as
@@ -706,7 +770,10 @@ object IvfIndex {
         unionPublishTombstones(s, root, tombs)
       val stage = hp(s"$indexPath/.lsync-stage-$srcTag-v$v")
       fs.delete(stage, true)
+      // one file per cell: every wave file is a tail file each
+      // compressed probe opens until the next sidecar refresh
       assignCells(wave, centsDf)
+        .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(stage.toString)
       // move wave files into the live cell dirs under tagged names —
@@ -873,15 +940,8 @@ object IvfIndex {
       case Some((_, booksDir, snapFiles)) =>
         val (fit, sampled) = vecsOpt match {
           case Some(vecs) if nVec > 0 =>
-            val books = s.read.parquet(booksDir).collect()
-            val m = books.map(_.getAs[Int]("sub")).max + 1
-            val ks = books.map(_.getAs[Int]("code")).max + 1
-            val cb = Array.ofDim[Array[Double]](m, ks)
-            books.foreach { r =>
-              cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
-                r.getAs[scala.collection.Seq[Double]]("cvec").toArray
-            }
-            val d = cb(0)(0).length
+            val cb = codebooks(s, root, booksDir)
+            val (m, d) = (cb.length, cb(0)(0).length)
             val recon = flatten(transform(
               ProductQuant.codesCol(m, d), (c, j) =>
                 element_at(element_at(col("books"), j + lit(1)),
@@ -901,8 +961,7 @@ object IvfIndex {
         val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
         val tailRows =
           if (tailFiles.isEmpty) 0L
-          else s.read.option("basePath", s"$root/vectors")
-            .parquet(tailFiles.toSeq.sorted: _*).count()
+          else vecsOpt.fold(0L)(inFiles(_, tailFiles).count())
         (fit, if (nVec > 0) tailRows.toDouble / nVec else 0.0, sampled)
     }
     // SQ8 tail: rows appended after the int8 sidecar's snapshot
@@ -915,8 +974,7 @@ object IvfIndex {
       case Some((_, snapFiles)) =>
         val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
         if (tailFiles.isEmpty || nVec == 0L) 0.0
-        else s.read.option("basePath", s"$root/vectors")
-          .parquet(tailFiles.toSeq.sorted: _*).count().toDouble / nVec
+        else vecsOpt.fold(0L)(inFiles(_, tailFiles).count()).toDouble / nVec
     }
     // tombstone fraction: committed deletes still physically resident
     // (served-around by the anti-join) as a share of the corpus — the
@@ -1601,16 +1659,7 @@ object IvfIndex {
     // one resolution pins the generation for BOTH the model collect
     // and the cell scan — a rebuild landing mid-probe cannot mix them
     val root = layoutRoot(s, indexPath)
-    val cents = s.read.parquet(s"$root/centroids")
-      .collect()
-      .map(r => r.getAs[Int]("cell") ->
-        r.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toMap
-    val n = math.sqrt(probe.map(x => x * x).sum)
-    val probeU = if (n > 0) probe.map(_ / n) else probe
-    val probeCells = cents.toSeq
-      .map { case (i, c) => (c.zip(probeU).map { case (a, b) => a * b }.sum, i) }
-      .sortBy { case (sim, i) => (-sim, i) }.take(nprobe).map(_._2)
+    val probeCells = nearestCells(s, root, unit(probe), nprobe)
     val pc = array(probe.map(lit): _*)
     val scanned = s.read.parquet(s"$root/vectors")
       .filter($"cell".isin(probeCells: _*))
@@ -1655,8 +1704,8 @@ object IvfIndex {
   private def rankProbeCells(s: SparkSession, root: String,
       probes: DataFrame, nprobe: Int): DataFrame = {
     import s.implicits._
-    val packed = broadcast(s.read.parquet(s"$root/centroids").agg(
-      collect_list(struct(col("cell"), col("centroid"))).as("cents")))
+    val packed = broadcast(centroids(s, root).toSeq.toDF("cell", "centroid")
+      .agg(collect_list(struct(col("cell"), col("centroid"))).as("cents")))
     probes
       .select($"probe_id", $"embedding".as("probe_emb"))
       .crossJoin(packed)
@@ -1756,21 +1805,11 @@ object IvfIndex {
       throw new IllegalStateException(
         s"probeTopKBatchAdc: no committed PQ sidecar under $root — run " +
           "buildPqSidecar first"))
-    // codebook shape (m, ks, d) from the books' own rows — bounded
-    // model state, same read the single-probe ADC path pays
-    val booksDf = s.read.parquet(booksDir)
-    val shape = booksDf.agg(
-      (max($"sub") + 1).cast("int"), (max($"code") + 1).cast("int"),
-      max(size($"cvec")).cast("int")).head()
-    val (m, ks, d) = (shape.getInt(0), shape.getInt(1), shape.getInt(2))
-    val packedBooks = broadcast(booksDf
-      .withColumn("half", lit(0.0)) // unused by the LUT; keeps the
-      // packed shape shared with the encoder
-      .groupBy($"sub")
-      .agg(array_sort(collect_list(struct($"code", $"cvec", $"half")))
-        .as("entries"))
-      .agg(transform(array_sort(collect_list(struct($"sub", $"entries"))),
-        x => x.getField("entries")).as("books")))
+    // codebooks: bounded model state, the same memoized read the
+    // single-probe ADC path pays, packed as the encoder packs them
+    val cb = codebooks(s, root, booksDir)
+    val (m, ks, d) = (cb.length, cb(0).length, cb(0)(0).length)
+    val packedBooks = broadcast(ProductQuant.packedBooks(s, cb))
     // per-probe LUT as data: raw-probe dots against the broadcast
     // books folded into a flat m·ks column (unnormalized BY DESIGN —
     // see ProductQuant.lutCol: scaling by the probe's norm cannot
@@ -1812,13 +1851,13 @@ object IvfIndex {
       .select($"probe_id", $"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
     // for every probe whose probed cells they landed in
+    val vectors = s.read.parquet(s"$root/vectors")
+      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
     val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapshot
     val cand =
       if (tailFiles.isEmpty) shortlisted
       else shortlisted.union(
-        s.read.option("basePath", s"$root/vectors")
-          .parquet(tailFiles.toSeq.sorted: _*)
-          .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
+        inFiles(vectors, tailFiles)
           .select($"cell", $"vec_id")
           .join(broadcast(ranked.select($"probe_id", $"pcell")),
             $"cell" === $"pcell")
@@ -1826,8 +1865,7 @@ object IvfIndex {
     // exact re-rank of shortlist ∪ tail only: the float read is
     // O(probes × shortlist), never the corpus. The metadata predicate
     // applies HERE — the one stage whose scan carries those columns
-    val rerankBase = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
+    val rerankBase = vectors
     val hits = antiTombstones(s, root,
         where.fold(rerankBase)(rerankBase.filter))
       .select($"vec_id", $"label", $"embedding")
@@ -2032,25 +2070,11 @@ object IvfIndex {
       throw new IllegalStateException(
         s"probeTopKAdc: no committed PQ sidecar under $root — run " +
           "buildPqSidecar first"))
-    val cents = s.read.parquet(s"$root/centroids")
-      .collect()
-      .map(r => r.getAs[Int]("cell") ->
-        r.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toMap
-    val n = math.sqrt(probe.map(x => x * x).sum)
-    val probeU = if (n > 0) probe.map(_ / n) else probe
-    val probeCells = cents.toSeq
-      .map { case (i, c) => (c.zip(probeU).map { case (a, b) => a * b }.sum, i) }
-      .sortBy { case (sim, i) => (-sim, i) }.take(nprobe).map(_._2)
-    val books = s.read.parquet(booksDir).collect()
-    val m = books.map(_.getAs[Int]("sub")).max + 1
-    val ks = books.map(_.getAs[Int]("code")).max + 1
-    val cb = Array.ofDim[Array[Double]](m, ks)
-    books.foreach { r =>
-      cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
-        r.getAs[scala.collection.Seq[Double]]("cvec").toArray
-    }
-    val lut = ProductQuant.lutFor(cb.map(_.toArray), probeU)
+    val probeU = unit(probe)
+    val probeCells = nearestCells(s, root, probeU, nprobe)
+    val cb = codebooks(s, root, booksDir)
+    val (m, ks) = (cb.length, cb(0).length)
+    val lut = ProductQuant.lutFor(cb, probeU)
     // measured widening: a predicate thins the exact re-rank's input,
     // so the unfiltered ADC cut is widened by the measured survivor
     // rate (capped at exhaustive) — recall no longer rides a
@@ -2065,17 +2089,14 @@ object IvfIndex {
       .orderBy($"adc".desc, $"vec_id").limit(effShortlist)
       .select($"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
+    val vectors = s.read.parquet(s"$root/vectors")
+      .filter($"cell".isin(probeCells: _*))
     val tail = listVectorFiles(fs, s"$root/vectors") -- snapshot
     val cand =
       if (tail.isEmpty) adcCand
-      else adcCand.union(
-        s.read.option("basePath", s"$root/vectors")
-          .parquet(tail.toSeq.sorted: _*)
-          .filter($"cell".isin(probeCells: _*))
-          .select($"vec_id"))
+      else adcCand.union(inFiles(vectors, tail).select($"vec_id"))
     val pc = array(probe.map(lit): _*)
-    val scanned0 = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(probeCells: _*))
+    val scanned0 = vectors
       .join(broadcast(cand.distinct()), Seq("vec_id"), "left_semi")
     // metadata predicate + tombstone anti-join at the exact re-rank —
     // the one stage whose scan carries the metadata columns (codes
@@ -2575,8 +2596,9 @@ object IvfIndex {
   private def antiTombstones(s: SparkSession, root: String,
       df: DataFrame): DataFrame =
     readTombstoneDir(fsOf(s, root), root).fold(df) { dir =>
-      val t = broadcast(readTombstones(s, dir)
-        .select(col("vec_id").as("__t_id"), col("tomb_v").as("__t_v")))
+      import s.implicits._
+      val t = broadcast(
+        tombEvents(s, root, dir).toSeq.toDF("__t_id", "__t_v"))
       val wv =
         if (df.columns.contains("wave_v"))
           coalesce(df("wave_v"), lit(-1L))
@@ -2595,8 +2617,8 @@ object IvfIndex {
     * the common case) restores the caller's width as a GUARANTEE, not
     * an expectation: at most that many slots can be lost. */
   private def tombstoneSlack(s: SparkSession, root: String): Int =
-    readTombstoneDir(fsOf(s, root), root).fold(0)(dir =>
-      s.read.parquet(dir).count().toInt)
+    readTombstoneDir(fsOf(s, root), root).fold(0)(
+      tombEvents(s, root, _).length)
 
   /** Direct takedown: fold `ids` (a frame carrying `vec_id`) into the
     * live generation's tombstone set — the serving-surface twin of
@@ -2643,16 +2665,8 @@ object IvfIndex {
       throw new IllegalStateException(
         s"probeTopKSq8: no committed SQ8 sidecar under $root — run " +
           "buildSq8Sidecar first"))
-    val cents = s.read.parquet(s"$root/centroids")
-      .collect()
-      .map(r => r.getAs[Int]("cell") ->
-        r.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toMap
-    val nrm = math.sqrt(probe.map(x => x * x).sum)
-    val probeU = if (nrm > 0) probe.map(_ / nrm) else probe
-    val probeCells = cents.toSeq
-      .map { case (i, c) => (c.zip(probeU).map { case (a, b) => a * b }.sum, i) }
-      .sortBy { case (sim, i) => (-sim, i) }.take(nprobe).map(_._2)
+    val probeU = unit(probe)
+    val probeCells = nearestCells(s, root, probeU, nprobe)
     val pu = array(probeU.map(lit): _*)
     // measured widening — same survivor-rate lever as the ADC tier
     val effShortlist = where.fold(shortlist)(p =>
@@ -2668,17 +2682,14 @@ object IvfIndex {
       .orderBy($"approx".desc, $"vec_id").limit(effShortlist)
       .select($"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
+    val vectors = s.read.parquet(s"$root/vectors")
+      .filter($"cell".isin(probeCells: _*))
     val tail = listVectorFiles(fs, s"$root/vectors") -- snapshot
     val cand =
       if (tail.isEmpty) sqCand
-      else sqCand.union(
-        s.read.option("basePath", s"$root/vectors")
-          .parquet(tail.toSeq.sorted: _*)
-          .filter($"cell".isin(probeCells: _*))
-          .select($"vec_id"))
+      else sqCand.union(inFiles(vectors, tail).select($"vec_id"))
     val pc = array(probe.map(lit): _*)
-    val scanned0 = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(probeCells: _*))
+    val scanned0 = vectors
       .join(broadcast(cand.distinct()), Seq("vec_id"), "left_semi")
     val scanned = antiTombstones(s, root,
       where.fold(scanned0)(scanned0.filter))
@@ -2745,21 +2756,20 @@ object IvfIndex {
       .filter($"arank" <= effShortlist)
       .select($"probe_id", $"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
+    val vectors = s.read.parquet(s"$root/vectors")
+      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
     val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapshot
     val cand =
       if (tailFiles.isEmpty) shortlisted
       else shortlisted.union(
-        s.read.option("basePath", s"$root/vectors")
-          .parquet(tailFiles.toSeq.sorted: _*)
-          .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
+        inFiles(vectors, tailFiles)
           .select($"cell", $"vec_id")
           .join(broadcast(ranked.select($"probe_id", $"pcell")),
             $"cell" === $"pcell")
           .select($"probe_id", $"vec_id"))
     // exact re-rank of shortlist ∪ tail only; the metadata predicate
     // applies HERE — the one stage whose scan carries those columns
-    val rerankBase = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
+    val rerankBase = vectors
     val hits = antiTombstones(s, root,
         where.fold(rerankBase)(rerankBase.filter))
       .select($"vec_id", $"label", $"embedding")

@@ -375,14 +375,8 @@ object Similarity {
     * mtime). Metadata-only — no data is scanned. */
   private[graft] def corpusFingerprint(s: SparkSession, dir: String): Long = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(path)
-    val files = if (st.isDirectory) fs.listStatus(path) else Array(st)
-    files.foldLeft(17L) { (acc, f) =>
-      // XOR-fold per-file hashes so listing order can't matter
-      acc ^ (f.getPath.getName.hashCode.toLong * 31L +
-        f.getLen * 1000003L + f.getModificationTime)
-    }
+    Tables.listingFingerprint(
+      path.getFileSystem(s.sparkContext.hadoopConfiguration), path)
   }
 
   /** Drop all memoized centroid models. With fingerprint-keyed entries

@@ -99,6 +99,41 @@ object Tables {
     "lineitem" -> lineitem, "events" -> events,
     "documents" -> documents, "embeddings" -> embeddings)
 
+  /** The data files under `path` (or `path` itself when it is a file),
+    * walked with `listStatus` and never descending into an entry whose
+    * name starts with `_` or `.` (`_SUCCESS`, `.crc`, an in-flight
+    * write's `_temporary` tree). Not `FileSystem.listFiles`: its
+    * located statuses read each file's permissions, which the local
+    * file system does by starting a shell process per file when no
+    * native Hadoop library is loaded. Throws `FileNotFoundException`
+    * for an absent path. */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(path).iterator.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Iterator.single(st)
+    }
+
+  /** A metadata-only version stamp of `path`: an order-independent hash
+    * of the (name, length, mtime) of every entry directly under it (or
+    * of `path` itself when it is a file). One `listStatus`, no data
+    * read. A re-written dir lists new part-file names, lengths or
+    * mtimes; on an object store, where a dir has no meaningful mtime of
+    * its own, its files still do. Throws `FileNotFoundException` for an
+    * absent path. */
+  private[graft] def listingFingerprint(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): Long = {
+    val st = fs.getFileStatus(path)
+    val files = if (st.isDirectory) fs.listStatus(path) else Array(st)
+    files.foldLeft(17L) { (acc, f) =>
+      // XOR-fold per-file hashes so listing order can't matter
+      acc ^ (f.getPath.getName.hashCode.toLong * 31L +
+        f.getLen * 1000003L + f.getModificationTime)
+    }
+  }
+
   /** Whether a parquet events file/dir stores `ts` as TIMESTAMP(MICROS)
     * (Spark infers TimestampType) rather than TIMESTAMP(NANOS) (no ns
     * TimestampType exists, so Spark infers LongType). The testdata
@@ -119,22 +154,18 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true) // throws FileNotFoundException: fail loudly
+    val it = dataFiles(fs, p) // throws FileNotFoundException: fail loudly
     // past 4096 files the fingerprint keeps only an aggregate tail
     // (count + total bytes + max mtime) — a re-generated directory that
     // differs only beyond the cap still changes length/bytes/mtime, so
     // the cache cannot serve a stale unit for a path it half-hashed
     var (tailN, tailBytes, tailMtime) = (0L, 0L, 0L)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        if (files.size < 4096)
-          files += s"$n:${f.getLen}:${f.getModificationTime}"
-        else {
-          tailN += 1; tailBytes += f.getLen
-          tailMtime = math.max(tailMtime, f.getModificationTime)
-        }
+    it.foreach { f =>
+      if (files.size < 4096)
+        files += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
+      else {
+        tailN += 1; tailBytes += f.getLen
+        tailMtime = math.max(tailMtime, f.getModificationTime)
       }
     }
     require(files.nonEmpty,
