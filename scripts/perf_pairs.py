@@ -18,8 +18,13 @@ side's median and quartiles, the IQR as a share of the median, the
 change's wins (ties count for neither side) and a verdict: `gain` when the
 change wins at least nine tenths of the pairs and the medians differ by
 more than the parent's IQR, `worse` when the change's median is worse
-than the parent's by more than the metric's bound, otherwise `-`. Every
-run's JSON result goes to `--out`.
+than the parent's by more than the metric's bound, otherwise `-`. It also
+prints each side's failed share per workload (failed over attempted
+operations, summed over the side's runs). Every run's JSON result goes to
+`--out`.
+
+Exits 1 when any run failed or was incorrect, or when the change's failed
+share on some workload is higher than the parent's.
 """
 import argparse
 import json
@@ -94,6 +99,31 @@ def summarize(bench, runs, workloads):
     return rows
 
 
+def failed_shares(runs, workloads):
+    """Per workload, each side's (failed, attempted) summed over its runs
+    that reported a result."""
+    shares = []
+    for w in workloads:
+        side = {"parent": [0, 0], "change": [0, 0]}
+        for wl, _, p, c in runs:
+            if wl != w:
+                continue
+            for name, run in (("parent", p), ("change", c)):
+                r = run["result"] or {}
+                side[name][0] += int(r.get("failed", 0))
+                side[name][1] += int(r.get("attempted", 0))
+        shares.append({"workload": w,
+                       "parent_failed": side["parent"][0],
+                       "parent_attempted": side["parent"][1],
+                       "change_failed": side["change"][0],
+                       "change_attempted": side["change"][1]})
+    return shares
+
+
+def share(failed, attempted):
+    return failed / attempted if attempted else 0.0
+
+
 def print_table(rows):
     hdr = ("workload", "metric", "parent med [q1, q3]", "iqr/med",
            "change med [q1, q3]", "iqr/med", "delta", "wins", "verdict")
@@ -160,16 +190,29 @@ def main():
             shutil.rmtree(tmp, ignore_errors=True)
     rows = summarize(bench, runs, workloads)
     print_table(rows)
+    fails = failed_shares(runs, workloads)
+    worse = []
+    for f in fails:
+        ps = share(f["parent_failed"], f["parent_attempted"])
+        cs = share(f["change_failed"], f["change_attempted"])
+        print(f"{f['workload']} failed share: parent {f['parent_failed']}/"
+              f"{f['parent_attempted']} ({ps:.4f}), change "
+              f"{f['change_failed']}/{f['change_attempted']} ({cs:.4f})")
+        if cs > ps:
+            worse.append(f["workload"])
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"runs": [{"workload": wl, "seed": s, "parent": p,
                                  "change": c} for wl, s, p, c in runs],
-                       "summary": rows}, f, indent=1)
+                       "summary": rows, "failed": fails}, f, indent=1)
     bad = sum(1 for _, _, p, c in runs for x in (p, c)
               if x["exit"] != 0 or not (x["result"] or {}).get("correct"))
     if bad:
         print(f"{bad} run(s) failed or were incorrect", file=sys.stderr)
-    return 1 if bad else 0
+    if worse:
+        print(f"the change fails a larger share of operations on: "
+              f"{', '.join(worse)}", file=sys.stderr)
+    return 1 if bad or worse else 0
 
 
 if __name__ == "__main__":

@@ -80,34 +80,61 @@ object IvfIndex {
   private def fsOf(s: SparkSession, path: String) =
     hp(path).getFileSystem(s.sessionState.newHadoopConf())
 
-  /** Immutable per-version model state on the driver: a generation's
-    * centroids, a PQ sidecar version's codebooks and a tombstone
-    * version's events, so repeated probes of an unchanged version skip
-    * re-reading them. One slot per (index, kind) holds the version
-    * served last: its dir, that dir's listing fingerprint
-    * ([[Tables.listingFingerprint]]) and the state. Every probe checks
-    * both against what resolution (claim log, markers) names: a
-    * rebuild, refresh or publish names a new dir, and a dir re-written
-    * at the same path lists new part files, so either replaces the
-    * slot. Superseded versions are never kept. */
+  /** Immutable per-version state on the driver: a generation's
+    * centroids, a PQ sidecar version's codebooks, a tombstone version's
+    * events and a label-stats version's counts, so repeated probes of
+    * an unchanged version skip re-reading them, plus the read of each
+    * served cell-partitioned dir (`vectors`, `pqcodes-<n>`,
+    * `sq8codes-<n>`, see [[scanOf]]). One slot per (index, kind) holds
+    * the version served last: its dir, that dir's listing fingerprint
+    * ([[Tables.listingFingerprint]], or the leaf listing's for a read)
+    * and the state. Every probe checks both against what resolution
+    * (claim log, markers) names: a rebuild, refresh or publish names a
+    * new dir, and a dir re-written at the same path lists new part
+    * files, so either replaces the slot. Superseded versions are never
+    * kept. A read belongs to the session that made it; a probe from
+    * another session replaces the slot. */
   private[graft] val versionMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (String, Long, AnyRef)]()
 
   private def memoized[T <: AnyRef](s: SparkSession, root: String,
-      kind: String, dir: String)(load: => T): T = {
-    val fp = Tables.listingFingerprint(fsOf(s, dir), hp(dir))
+      kind: String, dir: String)(load: => T): T =
+    memoizedAt(s, root, kind, dir,
+      Tables.listingFingerprint(fsOf(s, dir), hp(dir)))(load)
+
+  private def memoizedAt[T <: AnyRef](s: SparkSession, root: String,
+      kind: String, dir: String, fp: Long)(load: => T): T = {
     // a generation dir `g<N>[-tag]` shares its index's slot
     val index = hp(root).getName match {
       case GenName(_) | TaggedGenName(_) => hp(root).getParent.toString
       case _ => root
     }
+    def ours(v: AnyRef) = v match {
+      case df: org.apache.spark.sql.Dataset[_] => df.sparkSession eq s
+      case _ => true
+    }
     versionMemo.get((index, kind)) match {
-      case (`dir`, `fp`, v) => v.asInstanceOf[T]
+      case (`dir`, `fp`, v) if ours(v) => v.asInstanceOf[T]
       case _ =>
         val v = load
         versionMemo.put((index, kind), (dir, fp, v))
         v
     }
+  }
+
+  /** The read of a cell-partitioned dir under `root` and the data files
+    * it lists now ([[listVectorFiles]]'s form). The read is a memo
+    * slot keyed by the fingerprint of that leaf listing, so a probe of
+    * an unchanged dir pays neither Spark's re-listing nor its
+    * schema-inference job, while a synced wave, an append or a dir
+    * re-written at its path lists other files and gets a new read. */
+  private def scanOf(s: SparkSession, root: String, kind: String,
+      dir: String): (DataFrame, Set[String]) = {
+    val fs = fsOf(s, dir)
+    val leaves =
+      if (fs.exists(hp(dir))) Tables.dataFiles(fs, hp(dir)).toSeq else Nil
+    (memoizedAt(s, root, kind, dir, Tables.fingerprint(leaves))(
+      s.read.parquet(dir)), leaves.map(_.getPath.toString).toSet)
   }
 
   /** A generation's centroids, (cell, centroid) per cell. */
@@ -159,14 +186,14 @@ object IvfIndex {
           (r.getLong(0), r.getLong(1)) }
     }
 
-  /** The rows of `vectors` (a read of a whole vectors dir) held in
-    * `files` (listed paths): a filter on `_metadata.file_path`, which
-    * Spark applies to the file listing before any file is opened. The
-    * column holds URI-encoded paths (a space reads `%20`), so each
-    * listed path is encoded the same way. */
-  private def inFiles(vectors: DataFrame, files: Set[String]): DataFrame =
-    vectors.filter(col("_metadata.file_path")
-      .isin(files.toSeq.sorted.map(f => hp(f).toUri.toString): _*))
+  /** Whether a row of a read of a whole vectors dir is held in `files`
+    * (listed paths): a predicate on `_metadata.file_path`, which Spark
+    * applies to the file listing before any file is opened when it
+    * stands alone. The column holds URI-encoded paths (a space reads
+    * `%20`), so each listed path is encoded the same way. */
+  private def inFiles(files: Set[String]): org.apache.spark.sql.Column =
+    col("_metadata.file_path")
+      .isin(files.toSeq.sorted.map(f => hp(f).toUri.toString): _*)
 
   private val GenName = "g(\\d+)".r
   private val TaggedGenName = "g(\\d+)-[0-9a-f]+".r
@@ -961,7 +988,7 @@ object IvfIndex {
         val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
         val tailRows =
           if (tailFiles.isEmpty) 0L
-          else vecsOpt.fold(0L)(inFiles(_, tailFiles).count())
+          else vecsOpt.fold(0L)(_.filter(inFiles(tailFiles)).count())
         (fit, if (nVec > 0) tailRows.toDouble / nVec else 0.0, sampled)
     }
     // SQ8 tail: rows appended after the int8 sidecar's snapshot
@@ -974,7 +1001,8 @@ object IvfIndex {
       case Some((_, snapFiles)) =>
         val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
         if (tailFiles.isEmpty || nVec == 0L) 0.0
-        else vecsOpt.fold(0L)(inFiles(_, tailFiles).count()).toDouble / nVec
+        else vecsOpt.fold(0L)(_.filter(inFiles(tailFiles)).count())
+          .toDouble / nVec
     }
     // tombstone fraction: committed deletes still physically resident
     // (served-around by the anti-join) as a share of the corpus — the
@@ -1248,7 +1276,7 @@ object IvfIndex {
   /** COMPACT tombstoned rows physically WITHOUT a retrain — the cheap
     * middle ground between serving-with-anti-join and a full
     * [[rebuild]]. A tombstoned index pays an anti-join broadcast plus
-    * (on compressed tiers) [[tombstoneSlack]] shortlist slots on EVERY
+    * (on compressed tiers) tombstone-slack shortlist slots on EVERY
     * probe until something makes the hidden rows physical; rebuild does
     * that but at the price of k-means retraining (iters × corpus
     * passes) and a full re-encode of every sidecar. Compaction keeps
@@ -1660,12 +1688,13 @@ object IvfIndex {
     // and the cell scan — a rebuild landing mid-probe cannot mix them
     val root = layoutRoot(s, indexPath)
     val probeCells = nearestCells(s, root, unit(probe), nprobe)
-    val pc = array(probe.map(lit): _*)
-    val scanned = s.read.parquet(s"$root/vectors")
+    val scanned = scanOf(s, root, "vectors", s"$root/vectors")._1
       .filter($"cell".isin(probeCells: _*))
     val kept0 = excludeId.fold(scanned)(id => scanned.filter($"vec_id" =!= id))
-    antiTombstones(s, root, where.fold(kept0)(kept0.filter))
-      .withColumn("sim", round(VectorFunctions.cosine($"embedding", pc), 3))
+    antiTombstones(s, liveTombstones(s, root),
+        where.fold(kept0)(kept0.filter))
+      .withColumn("sim",
+        round(VectorFunctions.cosine($"embedding", typedLit(probe)), 3))
       .filter(!isnan($"sim") && $"sim".isNotNull)
       .select($"vec_id", $"label", $"sim")
       .orderBy($"sim".desc, $"vec_id")
@@ -1737,9 +1766,10 @@ object IvfIndex {
     // carries a LITERAL partition filter (file pruning at the index)
     val cellsNeeded = ranked.select($"pcell").distinct()
       .collect().map(_.getInt(0)).sorted
-    val cand0 = s.read.parquet(s"$root/vectors")
+    val cand0 = scanOf(s, root, "vectors", s"$root/vectors")._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val cand = antiTombstones(s, root, where.fold(cand0)(cand0.filter))
+    val cand = antiTombstones(s, liveTombstones(s, root),
+      where.fold(cand0)(cand0.filter))
     val hits = cand
       .join(broadcast(ranked), $"cell" === $"pcell")
       .withColumn("sim",
@@ -1823,15 +1853,18 @@ object IvfIndex {
       .drop("books")
     val cellsNeeded = ranked.select($"pcell").distinct()
       .collect().map(_.getInt(0)).sorted
+    val scan = scanOf(s, root, "vectors", s"$root/vectors")
+    // one tombstone resolution for the slack and the anti-join
+    val tombs = liveTombstones(s, root)
     // measured widening over the probed-cell UNION (shared across the
     // batch — one narrow scan, not one per probe)
     val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, cellsNeeded.toSeq, shortlist, p)) +
-      tombstoneSlack(s, root)
+      widenedShortlist(s, root, scan, cellsNeeded.toSeq, shortlist, p)) +
+      tombs.length
     // ADC stage: codes-only scan of the probed-cell union, each hit
     // scored against its probe's LUT — per-probe top-`shortlist` with
     // the single-probe path's exact ordering (adc desc, vec_id)
-    val codes = s.read.parquet(codesDir)
+    val codes = scanOf(s, root, "pqcodes", codesDir)._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
     val adcHits = codes
       .join(broadcast(ranked), $"cell" === $"pcell")
@@ -1851,13 +1884,13 @@ object IvfIndex {
       .select($"probe_id", $"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
     // for every probe whose probed cells they landed in
-    val vectors = s.read.parquet(s"$root/vectors")
+    val vectors = scan._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapshot
+    val tailFiles = scan._2 -- snapshot
     val cand =
       if (tailFiles.isEmpty) shortlisted
       else shortlisted.union(
-        inFiles(vectors, tailFiles)
+        vectors.filter(inFiles(tailFiles))
           .select($"cell", $"vec_id")
           .join(broadcast(ranked.select($"probe_id", $"pcell")),
             $"cell" === $"pcell")
@@ -1865,9 +1898,7 @@ object IvfIndex {
     // exact re-rank of shortlist ∪ tail only: the float read is
     // O(probes × shortlist), never the corpus. The metadata predicate
     // applies HERE — the one stage whose scan carries those columns
-    val rerankBase = vectors
-    val hits = antiTombstones(s, root,
-        where.fold(rerankBase)(rerankBase.filter))
+    val hits = antiTombstones(s, tombs, where.fold(vectors)(vectors.filter))
       .select($"vec_id", $"label", $"embedding")
       .join(broadcast(cand.distinct()), Seq("vec_id"))
       .join(broadcast(probes.select($"probe_id", $"embedding"
@@ -2041,14 +2072,18 @@ object IvfIndex {
     * bytes/vector that read is ~25× smaller than the float scan
     * [[probeTopK]] pays, on top of the same nprobe/cells partition
     * pruning (spec asserts the executed plan's pqcodes scan reads no
-    * embedding column). Exact cosine then re-ranks ONLY the ADC
-    * shortlist plus the uncompacted tail (files appended after the
-    * sidecar snapshot — read raw, always candidates), so the result
+    * embedding column) — and its top-`shortlist` ids are collected to
+    * the driver (one job, no shuffle, at most `shortlist` ids plus the
+    * tombstone slack). Exact cosine then re-ranks one scan of the
+    * probed cells keeping the shortlisted ids plus every row of the
+    * uncompacted tail (files appended after the sidecar snapshot —
+    * read raw, always candidates; [[rerankShortlist]]), so the result
     * matches [[probeTopK]] whenever the true top-k survives the
     * shortlist cut (the same spec-gated margin contract as
     * [[ProductQuant.sPqRerank]]). Fails loudly if no committed
-    * sidecar exists. */
-  /** `where` is the FILTERED compressed form: codes carry no metadata,
+    * sidecar exists.
+    *
+    * `where` is the FILTERED compressed form: codes carry no metadata,
     * so the predicate applies at the exact re-rank (whose float scan
     * holds the metadata columns) and the ADC shortlist WIDENS ITSELF
     * by the measured survivor rate ([[widenedShortlist]]), capped at
@@ -2075,39 +2110,54 @@ object IvfIndex {
     val cb = codebooks(s, root, booksDir)
     val (m, ks) = (cb.length, cb(0).length)
     val lut = ProductQuant.lutFor(cb, probeU)
+    val vectors = scanOf(s, root, "vectors", s"$root/vectors")
+    val tombs = liveTombstones(s, root)
     // measured widening: a predicate thins the exact re-rank's input,
     // so the unfiltered ADC cut is widened by the measured survivor
     // rate (capped at exhaustive) — recall no longer rides a
     // caller-managed width
     val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, probeCells, shortlist, p)) +
-      tombstoneSlack(s, root)
-    val adcBase = s.read.parquet(codesDir)
+      widenedShortlist(s, root, vectors, probeCells, shortlist, p)) +
+      tombs.length
+    val adcBase = scanOf(s, root, "pqcodes", codesDir)._1
       .filter($"cell".isin(probeCells: _*))
-    val adcCand = excludeId.fold(adcBase)(id => adcBase.filter($"vec_id" =!= id))
+    val ids = excludeId.fold(adcBase)(id => adcBase.filter($"vec_id" =!= id))
       .withColumn("adc", ProductQuant.adcScore(lut, m, ks))
       .orderBy($"adc".desc, $"vec_id").limit(effShortlist)
-      .select($"vec_id")
-    // uncompacted tail: appended after the sidecar — always candidates
-    val vectors = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(probeCells: _*))
-    val tail = listVectorFiles(fs, s"$root/vectors") -- snapshot
-    val cand =
-      if (tail.isEmpty) adcCand
-      else adcCand.union(inFiles(vectors, tail).select($"vec_id"))
-    val pc = array(probe.map(lit): _*)
-    val scanned0 = vectors
-      .join(broadcast(cand.distinct()), Seq("vec_id"), "left_semi")
-    // metadata predicate + tombstone anti-join at the exact re-rank —
-    // the one stage whose scan carries the metadata columns (codes
-    // don't)
-    val scanned = antiTombstones(s, root,
+      .select($"vec_id").collect().map(_.get(0))
+    rerankShortlist(vectors, snapshot, probeCells, ids, tombs, probe, k,
+      excludeId, where)
+  }
+
+  /** The exact re-rank of a single compressed probe: one scan of the
+    * probed `cells` keeping the rows whose id the shortlist named
+    * (`ids`, collected on the driver) and every row of the tail files
+    * (`vectors`' listed files not in the sidecar's `snapshot`), then
+    * the `where` predicate, the tombstone anti-join — the one stage
+    * whose scan carries the metadata columns (codes don't) — and exact
+    * cosine top-k. This equals re-ranking the rows whose id is in
+    * shortlist ∪ tail ids except where an id has rows both in the tail
+    * and outside it: a snapshot row then serves only if shortlisted.
+    * [[syncFromLake]] tombstones such a row (an update's pre-image), so
+    * only a duplicate id [[append]]ed outside the sync can tell. */
+  private def rerankShortlist(vectors: (DataFrame, Set[String]),
+      snapshot: Set[String], cells: Seq[Int], ids: Seq[Any],
+      tombs: Array[(Long, Long)], probe: Array[Double], k: Int,
+      excludeId: Option[Long],
+      where: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val (read, files) = vectors
+    val tail = files -- snapshot
+    val shortlisted = col("vec_id").isin(ids: _*)
+    val scanned0 = read.filter(col("cell").isin(cells: _*) &&
+      (if (tail.isEmpty) shortlisted else shortlisted || inFiles(tail)))
+    val scanned = antiTombstones(read.sparkSession, tombs,
       where.fold(scanned0)(scanned0.filter))
-    excludeId.fold(scanned)(id => scanned.filter($"vec_id" =!= id))
-      .withColumn("sim", round(VectorFunctions.cosine($"embedding", pc), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-      .select($"vec_id", $"label", $"sim")
-      .orderBy($"sim".desc, $"vec_id")
+    excludeId.fold(scanned)(id => scanned.filter(col("vec_id") =!= id))
+      .withColumn("sim",
+        round(VectorFunctions.cosine(col("embedding"), typedLit(probe)), 3))
+      .filter(!isnan(col("sim")) && col("sim").isNotNull)
+      .select(col("vec_id"), col("label"), col("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
   }
 
@@ -2240,10 +2290,10 @@ object IvfIndex {
     * pre-image (every older row of the id) while its post-image, synced
     * in the same version's wave with `wave_v = v`, keeps serving; a
     * RE-INSERT after a delete lands at a later version and serves
-    * immediately. One row per event also makes [[tombstoneSlack]]
-    * exact: the lake's key uniqueness means each event hides exactly
-    * one previously-served row, so the event count IS the
-    * hidden-resident row count.
+    * immediately. One row per event also makes the shortlist slack
+    * ([[antiTombstones]]) exact: the lake's key uniqueness means each
+    * event hides exactly one previously-served row, so the event count
+    * IS the hidden-resident row count.
     *
     * Every serving path anti-joins the resolved set at its EXACT
     * re-rank stage — the same stage the `where` predicate rides — so a
@@ -2252,7 +2302,7 @@ object IvfIndex {
     * ADC/SQ8 shortlist slots until a rebuild compacts them (they carry
     * no metadata at the codes scan); the fraction is bounded by
     * [[maintainIvf]]'s `maxTombFrac` retrain trigger, and the paths
-    * widen `shortlist` by the event count ([[tombstoneSlack]]).
+    * widen `shortlist` by the event count ([[antiTombstones]]).
     * Publishing FULL sets (not deltas) keeps replay idempotent — a
     * re-published union is byte-equivalent — and keeps resolution one
     * marker read; the set is small by policy (events between retrains),
@@ -2488,6 +2538,16 @@ object IvfIndex {
     }
   }
 
+  /** A label-stats version's (cell, label, cnt) rows and schema, on
+    * the driver: cells × distinct labels rows, read whole like the
+    * centroids. */
+  private def labelCounts(s: SparkSession, root: String, statsDir: String)
+      : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) =
+    memoized(s, root, "lstats", statsDir) {
+      val df = s.read.parquet(statsDir)
+      (df.schema, df.collect())
+    }
+
   /** Resolve the committed label stats ONCE: (stats dir, covered
     * vector-file snapshot). Max versioned marker wins. */
   private def readLabelStats(fs: org.apache.hadoop.fs.FileSystem,
@@ -2519,41 +2579,42 @@ object IvfIndex {
     * and the probe returns empty honestly. The measured (rate, width)
     * pair lands in [[lastFilterWidening]]. */
   private def widenedShortlist(s: SparkSession, root: String,
-      cells: Seq[Int], shortlist: Int,
+      vectors: (DataFrame, Set[String]), cells: Seq[Int], shortlist: Int,
       pred: org.apache.spark.sql.Column): Int = {
     import s.implicits._
+    val (read, vecFiles) = vectors
     // metadata-sourced rate (guide §6 — don't scan what stats already
     // answer): when the committed label-stats sidecar covers exactly
-    // the live vector-file set AND the predicate resolves against the
-    // (cell, label) stats schema — i.e. it references only the columns
-    // the counts are grouped by — the (total, kept) pair comes from
-    // the cells × labels count table (bounded model state) instead of
-    // an O(probed rows) scan. EXACT, not approximate: a deterministic
+    // the live vector-file set (`vecFiles`, the probe's own listing)
+    // AND the predicate resolves against the (cell, label) stats
+    // schema — i.e. it references only the columns the counts are
+    // grouped by — the (total, kept) pair comes from the cells × labels
+    // count table (bounded model state, memoized; the predicate is
+    // evaluated over it as a local relation, no job) instead of an
+    // O(probed rows) scan. EXACT, not approximate: a deterministic
     // predicate over (cell, label) is constant within each count
     // group, so Σ cnt·pred equals the row-level count(when(pred, 1));
     // the file-set equality pins the rows to precisely the aggregated
     // ones. A predicate naming any other column (vec_id, embedding,
     // wave_v) fails ANALYSIS on the stats frame and falls back to the
     // measuring scan — never a wrong width, only a slower one.
-    val fromStats: Option[(Long, Long)] = {
-      val fs = fsOf(s, root)
-      readLabelStats(fs, root)
-        .filter { case (_, snap) =>
-          listVectorFiles(fs, s"$root/vectors") == snap }
+    val fromStats: Option[(Long, Long)] =
+      readLabelStats(fsOf(s, root), root)
+        .filter { case (_, snap) => vecFiles == snap }
         .flatMap { case (statsDir, _) =>
           scala.util.Try {
-            val row = s.read.parquet(statsDir)
+            val (schema, rows) = labelCounts(s, root, statsDir)
+            s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
               .filter($"cell".isin(cells.map(Int.box): _*))
-              .agg(sum($"cnt").as("total"),
-                sum(when(pred, $"cnt").otherwise(0L)).as("kept")).head()
-            (if (row.isNullAt(0)) 0L else row.getLong(0),
-              if (row.isNullAt(1)) 0L else row.getLong(1))
+              .select($"cnt", when(pred, $"cnt").otherwise(0L))
+              .collect()
+              .foldLeft((0L, 0L)) { case ((t, k), r) =>
+                (t + r.getLong(0), k + r.getLong(1)) }
           }.toOption.map { tk => widenStatsServed.incrementAndGet(); tk }
         }
-    }
     val (total, kept) = fromStats.getOrElse {
       widenMeasureScans.incrementAndGet()
-      val row = s.read.parquet(s"$root/vectors")
+      val row = read
         .filter($"cell".isin(cells.map(Int.box): _*))
         .agg(count(lit(1)).as("total"),
           count(when(pred, 1)).as("kept")).head()
@@ -2586,19 +2647,36 @@ object IvfIndex {
   private def readTombstones(s: SparkSession, dir: String): DataFrame =
     normalizeTombs(s.read.parquet(dir))
 
-  /** Anti-join the resolved tombstone events out of a candidate frame —
+  /** The live generation's tombstone events, resolved ONCE per probe:
+    * the shortlist slack (their count) and the anti-join must come from
+    * the same version, or a publish landing between them widens by the
+    * old set and hides by the new one. Empty when no sidecar exists. */
+  private def liveTombstones(s: SparkSession,
+      root: String): Array[(Long, Long)] =
+    readTombstoneDir(fsOf(s, root), root)
+      .fold(Array.empty[(Long, Long)])(tombEvents(s, root, _))
+
+  /** Anti-join resolved tombstone events out of a candidate frame —
     * the one stage every serving path shares. A candidate is dropped
     * iff some event for its id postdates the wave it arrived under
     * (`wave_v < tomb_v`; frames or files without `wave_v` read as base
     * rows, −1 — predating every lake version). The event set rides a
     * broadcast (bounded by events-between-retrains, the [[maintainIvf]]
-    * `maxTombFrac` policy); no tombstones = no join. */
-  private def antiTombstones(s: SparkSession, root: String,
+    * `maxTombFrac` policy); no events = no join.
+    *
+    * On the compressed tiers the events' COUNT is also the exact
+    * shortlist slack: a hidden row still holds codes, so it can occupy
+    * an ADC/SQ8 shortlist slot only to be anti-joined away here — up
+    * to |events| asked-for slots vanish (each event hides exactly one
+    * previously-served row — lake key uniqueness), so widening by the
+    * count restores the caller's width as a GUARANTEE, not an
+    * expectation. */
+  private def antiTombstones(s: SparkSession, tombs: Array[(Long, Long)],
       df: DataFrame): DataFrame =
-    readTombstoneDir(fsOf(s, root), root).fold(df) { dir =>
+    if (tombs.isEmpty) df
+    else {
       import s.implicits._
-      val t = broadcast(
-        tombEvents(s, root, dir).toSeq.toDF("__t_id", "__t_v"))
+      val t = broadcast(tombs.toSeq.toDF("__t_id", "__t_v"))
       val wv =
         if (df.columns.contains("wave_v"))
           coalesce(df("wave_v"), lit(-1L))
@@ -2606,19 +2684,6 @@ object IvfIndex {
       df.join(t, df("vec_id") === col("__t_id") && wv < col("__t_v"),
         "left_anti")
     }
-
-  /** EXACT shortlist compensation for resident tombstones on the
-    * compressed tiers: a hidden row still holds codes, so it can
-    * occupy an ADC/SQ8 shortlist slot only to be anti-joined away at
-    * the exact re-rank — up to |events| asked-for slots vanish (each
-    * event hides exactly one previously-served row — lake key
-    * uniqueness). Widening by the event COUNT (one footer-sized count
-    * of the tiny tombstone file; zero cost when no sidecar exists —
-    * the common case) restores the caller's width as a GUARANTEE, not
-    * an expectation: at most that many slots can be lost. */
-  private def tombstoneSlack(s: SparkSession, root: String): Int =
-    readTombstoneDir(fsOf(s, root), root).fold(0)(
-      tombEvents(s, root, _).length)
 
   /** Direct takedown: fold `ids` (a frame carrying `vec_id`) into the
     * live generation's tombstone set — the serving-surface twin of
@@ -2642,14 +2707,16 @@ object IvfIndex {
   /** Serving from the SQ8 tier: the shortlist stage scans only
     * (vec_id, q) of the probed cells — 4× smaller than the float scan,
     * on the same nprobe/cells partition pruning (spec asserts the
-    * sq8codes scan reads no embedding column) — then exact cosine
-    * re-ranks ONLY the shortlist plus the raw uncompacted tail (files
-    * appended after the sidecar). Scoring is asymmetric: the exact
-    * unit probe against the byte codes, one codegen'd dot per row.
-    * `where` follows the compressed-tier filtered contract: the
-    * predicate applies at the exact re-rank and the shortlist widens
-    * itself by the measured survivor rate ([[widenedShortlist]]).
-    * Fails loudly if no committed sidecar exists. */
+    * sq8codes scan reads no embedding column) — and collects its
+    * top-`shortlist` ids to the driver; exact cosine then re-ranks one
+    * scan of the probed cells keeping those ids plus every row of the
+    * raw uncompacted tail (files appended after the sidecar;
+    * [[rerankShortlist]]). Scoring is asymmetric: the exact unit probe
+    * against the byte codes, one codegen'd dot per row. `where`
+    * follows the compressed-tier filtered contract: the predicate
+    * applies at the exact re-rank and the shortlist widens itself by
+    * the measured survivor rate ([[widenedShortlist]]). Fails loudly
+    * if no committed sidecar exists. */
   def probeTopKSq8(s: SparkSession, indexPath: String,
       probe: Array[Double], k: Int = 10,
       nprobe: Int = Similarity.IvfProbes,
@@ -2667,38 +2734,23 @@ object IvfIndex {
           "buildSq8Sidecar first"))
     val probeU = unit(probe)
     val probeCells = nearestCells(s, root, probeU, nprobe)
-    val pu = array(probeU.map(lit): _*)
+    val vectors = scanOf(s, root, "vectors", s"$root/vectors")
+    val tombs = liveTombstones(s, root)
     // measured widening — same survivor-rate lever as the ADC tier
     val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, probeCells, shortlist, p)) +
-      tombstoneSlack(s, root)
-    val codeBase = s.read.parquet(codesDir)
+      widenedShortlist(s, root, vectors, probeCells, shortlist, p)) +
+      tombs.length
+    val codeBase = scanOf(s, root, "sq8codes", codesDir)._1
       .filter($"cell".isin(probeCells: _*))
-    val sqCand = excludeId.fold(codeBase)(id =>
+    val ids = excludeId.fold(codeBase)(id =>
         codeBase.filter($"vec_id" =!= id))
       .withColumn("approx",
-        VectorFunctions.dot(transform($"q", c => c.cast("double")), pu)
-          / 127.0)
+        VectorFunctions.dot(transform($"q", c => c.cast("double")),
+          typedLit(probeU)) / 127.0)
       .orderBy($"approx".desc, $"vec_id").limit(effShortlist)
-      .select($"vec_id")
-    // uncompacted tail: appended after the sidecar — always candidates
-    val vectors = s.read.parquet(s"$root/vectors")
-      .filter($"cell".isin(probeCells: _*))
-    val tail = listVectorFiles(fs, s"$root/vectors") -- snapshot
-    val cand =
-      if (tail.isEmpty) sqCand
-      else sqCand.union(inFiles(vectors, tail).select($"vec_id"))
-    val pc = array(probe.map(lit): _*)
-    val scanned0 = vectors
-      .join(broadcast(cand.distinct()), Seq("vec_id"), "left_semi")
-    val scanned = antiTombstones(s, root,
-      where.fold(scanned0)(scanned0.filter))
-    excludeId.fold(scanned)(id => scanned.filter($"vec_id" =!= id))
-      .withColumn("sim", round(VectorFunctions.cosine($"embedding", pc), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-      .select($"vec_id", $"label", $"sim")
-      .orderBy($"sim".desc, $"vec_id")
-      .limit(k)
+      .select($"vec_id").collect().map(_.get(0))
+    rerankShortlist(vectors, snapshot, probeCells, ids, tombs, probe, k,
+      excludeId, where)
   }
 
   /** BATCH serving from the SQ8 tier — [[probeTopKBatchAdc]]'s shape
@@ -2731,14 +2783,17 @@ object IvfIndex {
     val ranked = rankProbeCells(s, root, probes, nprobe)
     val cellsNeeded = ranked.select($"pcell").distinct()
       .collect().map(_.getInt(0)).sorted
+    val scan = scanOf(s, root, "vectors", s"$root/vectors")
+    // one tombstone resolution for the slack and the anti-join
+    val tombs = liveTombstones(s, root)
     // measured widening over the probed-cell union, shared by the batch
     val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, cellsNeeded.toSeq, shortlist, p)) +
-      tombstoneSlack(s, root)
+      widenedShortlist(s, root, scan, cellsNeeded.toSeq, shortlist, p)) +
+      tombs.length
     // int8 stage: codes-only scan of the probed-cell union, each hit
     // scored by one dot against its broadcast probe (scaling by 127 or
     // the probe's norm cannot change a per-probe ordering — skipped)
-    val codes = s.read.parquet(codesDir)
+    val codes = scanOf(s, root, "sq8codes", codesDir)._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
     val sqHits = codes
       .join(broadcast(ranked), $"cell" === $"pcell")
@@ -2756,22 +2811,20 @@ object IvfIndex {
       .filter($"arank" <= effShortlist)
       .select($"probe_id", $"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
-    val vectors = s.read.parquet(s"$root/vectors")
+    val vectors = scan._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapshot
+    val tailFiles = scan._2 -- snapshot
     val cand =
       if (tailFiles.isEmpty) shortlisted
       else shortlisted.union(
-        inFiles(vectors, tailFiles)
+        vectors.filter(inFiles(tailFiles))
           .select($"cell", $"vec_id")
           .join(broadcast(ranked.select($"probe_id", $"pcell")),
             $"cell" === $"pcell")
           .select($"probe_id", $"vec_id"))
     // exact re-rank of shortlist ∪ tail only; the metadata predicate
     // applies HERE — the one stage whose scan carries those columns
-    val rerankBase = vectors
-    val hits = antiTombstones(s, root,
-        where.fold(rerankBase)(rerankBase.filter))
+    val hits = antiTombstones(s, tombs, where.fold(vectors)(vectors.filter))
       .select($"vec_id", $"label", $"embedding")
       .join(broadcast(cand.distinct()), Seq("vec_id"))
       .join(broadcast(probes.select($"probe_id", $"embedding"

@@ -250,9 +250,10 @@ object ProductQuant {
 
   /** ADC score over `codes` for a prepared LUT: m 1-based array
     * lookups + adds — nothing per-row but integer indexing. The LUT
-    * is m·ks doubles, a flat literal. */
+    * is m·ks doubles, ONE array literal (not an array of m·ks literal
+    * children, which every Dataset step re-analyzes). */
   private[graft] def adcScore(lut: Array[Double], m: Int, ks: Int): Column =
-    adcScoreWith(array(lut.map(lit): _*), m, ks)
+    adcScoreWith(typedLit(lut), m, ks)
 
   /** Per-PROBE LUT as a column — [[lutFor]] lifted into the plan for
     * batch serving: given a probe vector column `p` (RAW, double) and

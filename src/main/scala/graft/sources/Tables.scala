@@ -117,7 +117,7 @@ object Tables {
     }
 
   /** A metadata-only version stamp of `path`: an order-independent hash
-    * of the (name, length, mtime) of every entry directly under it (or
+    * of the (path, length, mtime) of every entry directly under it (or
     * of `path` itself when it is a file). One `listStatus`, no data
     * read. A re-written dir lists new part-file names, lengths or
     * mtimes; on an object store, where a dir has no meaningful mtime of
@@ -126,13 +126,20 @@ object Tables {
   private[graft] def listingFingerprint(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Long = {
     val st = fs.getFileStatus(path)
-    val files = if (st.isDirectory) fs.listStatus(path) else Array(st)
+    fingerprint(if (st.isDirectory) fs.listStatus(path) else Array(st))
+  }
+
+  /** The order-independent (path, length, mtime) hash of
+    * [[listingFingerprint]] over statuses already listed, e.g. the leaf
+    * files of [[dataFiles]], where two cells can hold files of the same
+    * name. */
+  private[graft] def fingerprint(
+      files: Iterable[org.apache.hadoop.fs.FileStatus]): Long =
     files.foldLeft(17L) { (acc, f) =>
       // XOR-fold per-file hashes so listing order can't matter
-      acc ^ (f.getPath.getName.hashCode.toLong * 31L +
+      acc ^ (f.getPath.toString.hashCode.toLong * 31L +
         f.getLen * 1000003L + f.getModificationTime)
     }
-  }
 
   /** Whether a parquet events file/dir stores `ts` as TIMESTAMP(MICROS)
     * (Spark infers TimestampType) rather than TIMESTAMP(NANOS) (no ns

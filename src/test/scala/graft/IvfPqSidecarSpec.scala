@@ -45,10 +45,10 @@ class IvfPqSidecarSpec extends SparkSuite {
     assertParity(idx, "after sidecar")
 
     // the ADC stage reads (vec_id, codes) from pqcodes — the scan that
-    // replaces the float read must not materialize embeddings
-    val df = IvfIndex.probeTopKAdc(spark, idx, pemb, excludeId = Some(pid))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    // replaces the float read must not materialize embeddings (it runs
+    // as the shortlist's own query, before the re-rank's)
+    val plan = executedPlans(IvfIndex.probeTopKAdc(spark, idx, pemb,
+      excludeId = Some(pid)).collect()).mkString("\n")
     val pqScans = plan.linesIterator.filter(_.contains("pqcodes")).toSeq
     assert(pqScans.nonEmpty, s"expected a pqcodes scan in:\n$plan")
     assert(pqScans.forall(!_.contains("embedding")),
@@ -155,18 +155,19 @@ class IvfPqSidecarSpec extends SparkSuite {
     // at production widths (survivor-rate-widened shortlist): every
     // row satisfies the predicate, recall stays high, and the plan
     // still reads codes — never floats — at the shortlist stage
-    val df = IvfIndex.probeTopKAdc(spark, idx, pemb, k = 10,
-      shortlist = ProductQuant.RerankShortlist * 10,
-      excludeId = Some(Similarity.ProbeId),
-      where = Some($"label" === Similarity.FilterLabel))
-    val rows = df.collect()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val plan = executedPlans {
+      rows = IvfIndex.probeTopKAdc(spark, idx, pemb, k = 10,
+        shortlist = ProductQuant.RerankShortlist * 10,
+        excludeId = Some(Similarity.ProbeId),
+        where = Some($"label" === Similarity.FilterLabel)).collect()
+    }.mkString("\n")
     assert(rows.nonEmpty &&
       rows.forall(_.getInt(1) == Similarity.FilterLabel),
       "a filtered compressed probe must never return a non-matching row")
     val hits = exact.map(_.getLong(0))
       .count(rows.map(_.getLong(0)).toSet.contains)
     assert(hits >= 8, s"filtered compressed recall too low: $hits of 10")
-    val plan = df.queryExecution.executedPlan.toString
     val pqScans = plan.linesIterator.filter(_.contains("pqcodes")).toSeq
     assert(pqScans.nonEmpty &&
       pqScans.forall(!_.contains("embedding")),

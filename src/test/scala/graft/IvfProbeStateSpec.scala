@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, Similarity}
+import graft.sources.LakeLayout
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -9,9 +10,10 @@ import org.apache.spark.sql.functions._
 /** What a probe re-reads between probes. The vectors-dir listing walks
   * `listStatus` and must return exactly the file set the recursive
   * `listFiles` definition returned; the driver-side memo of per-version
-  * model state (centroids, codebooks, tombstone events) must never
-  * serve a state the index no longer has, and must save a repeated
-  * probe of an unchanged version its collect jobs. */
+  * state (centroids, codebooks, tombstone events, label stats, and the
+  * reads of the vectors and codes dirs) must never serve a state the
+  * index no longer has, and must save a repeated probe of an unchanged
+  * version its collect and schema-inference jobs. */
 class IvfProbeStateSpec extends SparkSuite {
   import spark.implicits._
 
@@ -79,7 +81,8 @@ class IvfProbeStateSpec extends SparkSuite {
   }
 
   /** Every tier's answer for each probe: raw, PQ and SQ8, single and
-    * batch. */
+    * batch, and a label-filtered single PQ probe. Per probe the single
+    * answers come in that order, then the three batch answers. */
   private def serve(idx: String): Seq[Seq[Row]] = {
     val batch = probes.toDF("probe_id", "embedding")
     def sorted(df: DataFrame) =
@@ -88,7 +91,9 @@ class IvfProbeStateSpec extends SparkSuite {
       Seq(
         IvfIndex.probeTopK(spark, idx, emb, k = 5, excludeId = Some(id)),
         IvfIndex.probeTopKAdc(spark, idx, emb, k = 5, excludeId = Some(id)),
-        IvfIndex.probeTopKSq8(spark, idx, emb, k = 5, excludeId = Some(id)))
+        IvfIndex.probeTopKSq8(spark, idx, emb, k = 5, excludeId = Some(id)),
+        IvfIndex.probeTopKAdc(spark, idx, emb, k = 5, excludeId = Some(id),
+          where = Some($"label" === Similarity.FilterLabel)))
         .map(_.collect().toSeq)
     } ++ Seq(
       sorted(IvfIndex.probeTopKBatch(spark, idx, batch, k = 5,
@@ -132,7 +137,39 @@ class IvfProbeStateSpec extends SparkSuite {
     }
     assert(rebuilt != built, "the rebuild's twins must change serving")
     check("tail")(IvfIndex.append(spark, idx, corpus(40L, 80L, 2000000L)))
-    check("PQ refresh")(IvfIndex.buildPqSidecar(spark, idx))
+    // a synced wave of the probes' twins lands in their probed cells
+    val lake = tmp("graft-ivf-memo-feed")
+    val synced = check("synced wave") {
+      LakeLayout.appendToLake(spark, lake, corpus(0L, 2L, 3000000L), "feed",
+        1L, statsKey = Some("vec_id"))
+      assert(IvfIndex.syncFromLake(spark, lake, idx) == 1L)
+    }
+    probes.indices.foreach { i =>
+      assert(synced(4 * i).exists(_.getAs[Long]("vec_id") ==
+        probes(i)._1 + 3000000L), s"probe $i: the synced twin is not served")
+    }
+    val refreshed = check("PQ refresh")(IvfIndex.buildPqSidecar(spark, idx))
+    // the served codes dir re-written at its path without the ids the
+    // PQ tier served for the first probe (all coded: the refresh
+    // absorbed the tail)
+    val dropped = refreshed(1).map(_.getAs[Long]("vec_id"))
+    val rewritten = check("PQ codes dir re-written at its path") {
+      val root = IvfIndex.layoutRoot(spark, idx)
+      val fs = fsOf(root)
+      val codes = fs.listStatus(new Path(root)).map(_.getPath)
+        .filter(_.getName.startsWith("pqcodes-"))
+        .maxBy(_.getName.stripPrefix("pqcodes-").toLong)
+      val copy = new Path(tmp("graft-ivf-memo-codes"), "codes")
+      spark.read.parquet(codes.toString)
+        .filter(!$"vec_id".isin(dropped: _*))
+        .write.partitionBy("cell").parquet(copy.toString)
+      fs.delete(codes, true)
+      assert(fs.rename(copy, codes))
+    }
+    assert(dropped.nonEmpty && rewritten(1).nonEmpty &&
+      !rewritten(1).exists(r => dropped.contains(r.getAs[Long]("vec_id"))),
+      s"PQ still serves ids its re-written codes dir no longer holds: " +
+        s"${rewritten(1)}")
     val twins = probes.map(_._1 + 1000000L)
     val hidden = check("tombstone publish")(
       IvfIndex.tombstoneIds(spark, idx, twins.take(1).toDF("vec_id")))
@@ -154,7 +191,8 @@ class IvfProbeStateSpec extends SparkSuite {
     // one slot per kind for the index, whatever it served before
     import scala.jdk.CollectionConverters._
     assert(IvfIndex.versionMemo.keySet.asScala.filter(_._1 == idx) ==
-      Set("centroids", "pqbooks", "tombs").map(idx -> _))
+      Set("centroids", "pqbooks", "tombs", "lstats", "vectors", "pqcodes",
+        "sq8codes").map(idx -> _))
     check("index re-created at the same path") {
       fs.delete(new Path(idx), true)
       IvfIndex.build(spark, sfDir, idx, cells = 12)
@@ -210,22 +248,30 @@ class IvfProbeStateSpec extends SparkSuite {
       Option(jobs.get(group)).fold(0)(_.get)
     }
     val (id, emb) = probes.head
+    val byLabel = Some($"label" === Similarity.FilterLabel)
     try {
       val counts = Seq[(String, () => DataFrame)](
         "raw" -> (() => IvfIndex.probeTopK(spark, idx, emb, excludeId = Some(id))),
         "pq" -> (() => IvfIndex.probeTopKAdc(spark, idx, emb, excludeId = Some(id))),
-        "sq8" -> (() => IvfIndex.probeTopKSq8(spark, idx, emb, excludeId = Some(id)))
+        "sq8" -> (() => IvfIndex.probeTopKSq8(spark, idx, emb, excludeId = Some(id))),
+        "pq-filtered" -> (() => IvfIndex.probeTopKAdc(spark, idx, emb,
+          excludeId = Some(id), where = byLabel))
       ).map { case (tier, probe) =>
         forgetVersionState()
         val first = jobsOf(s"$tier-1")(probe().collect())
         val second = jobsOf(s"$tier-2")(probe().collect())
         tier -> (first, second)
       }.toMap
-      // a cold probe collects the centroids (a schema job and a
-      // collect job) and the tombstone events (the same two); a cold
-      // PQ probe also collects the codebooks (two more)
-      assert(counts == Map("raw" -> (7, 3), "pq" -> (11, 5), "sq8" -> (9, 5)),
-        s"jobs per (first, second) probe: $counts")
+      // a warm probe runs its plan: the scan (raw), or the collected
+      // shortlist and the re-rank (PQ, SQ8, and a filtered PQ probe,
+      // whose survivor rate the memoized label stats give without a
+      // job), plus the tombstone broadcast. A cold probe also collects
+      // the centroids (a schema job and a collect job) and the
+      // tombstone events (the same two) and infers the schema of each
+      // dir it scans; a cold PQ probe collects the codebooks (two
+      // more), and a cold filtered one the label stats (two more).
+      assert(counts == Map("raw" -> (7, 2), "pq" -> (11, 3), "sq8" -> (9, 3),
+        "pq-filtered" -> (13, 3)), s"jobs per (first, second) probe: $counts")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

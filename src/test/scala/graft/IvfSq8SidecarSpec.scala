@@ -47,10 +47,10 @@ class IvfSq8SidecarSpec extends SparkSuite {
     assertParity(idx, "after sidecar")
 
     // the shortlist stage reads (vec_id, q) from sq8codes — never the
-    // embedding column
-    val df = IvfIndex.probeTopKSq8(spark, idx, pemb, excludeId = Some(pid))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    // embedding column (it runs as the shortlist's own query, before
+    // the re-rank's)
+    val plan = executedPlans(IvfIndex.probeTopKSq8(spark, idx, pemb,
+      excludeId = Some(pid)).collect()).mkString("\n")
     val sqScans = plan.linesIterator.filter(_.contains("sq8codes")).toSeq
     assert(sqScans.nonEmpty, s"expected an sq8codes scan in:\n$plan")
     assert(sqScans.forall(!_.contains("embedding")),

@@ -69,12 +69,14 @@ class ProductQuantSpec extends SparkSuite {
       .withColumn("codes", ProductQuant.codesCol(m, d))
       .select(col("vec_id"),
         ProductQuant.adcScoreWith(lutCol, m, ks).as("native"),
-        ProductQuant.adcScoreWithHof(lutCol, m, ks).as("hof"))
+        ProductQuant.adcScoreWithHof(lutCol, m, ks).as("hof"),
+        // the single-probe form: the LUT as one array literal
+        ProductQuant.adcScore(lut, m, ks).as("literal"))
     val rows = df.collect()
     assert(rows.nonEmpty)
-    val bad = rows.filter(r =>
-      java.lang.Double.compare(r.getAs[Double]("native"),
-        r.getAs[Double]("hof")) != 0)
+    val bad = rows.filter(r => Seq("native", "literal").exists(c =>
+      java.lang.Double.compare(r.getAs[Double](c),
+        r.getAs[Double]("hof")) != 0))
     assert(bad.isEmpty,
       s"${bad.length} rows with differing ADC scores, first: ${bad.headOption}")
   }
