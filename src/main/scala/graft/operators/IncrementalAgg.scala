@@ -3,7 +3,6 @@ package graft.operators
 import graft.sources.{LakeLayout, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Incremental maintenance of a grouped aggregate over a
   * manifest-committed lake table — the INCREMENTAL-CONSUMER side of the
@@ -42,28 +41,13 @@ object IncrementalAgg {
     df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("cnt"), sum(col(valueCol)).as("total"))
 
-  private def schemaOf(c: LakeLayout.LakeCommit): StructType =
-    DataType.fromJson(c.schemaJson.getOrElse(throw new IllegalArgumentException(
-      s"version ${c.version} has no recorded schema (legacy manifest); " +
-        "incremental maintenance needs format:3 commits")))
-      .asInstanceOf[StructType]
-
-  private def frameOf(spark: SparkSession, tablePath: String,
-      files: Seq[LakeLayout.LakeFile], schema: StructType): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else LakeLayout.filesFrame(spark, tablePath, files, Some(schema))
-
   /** The (oldCopies, newCopies) change regions between two committed
     * versions: rows of files rewritten away vs rows of files added,
-    * each read under its own version's schema. Requires file-granular
-    * manifests on both ends. */
+    * each read under its own version's schema. */
   def changeRegions(spark: SparkSession, tablePath: String,
       fromVersion: Long, toVersion: Long): (DataFrame, DataFrame) = {
     val from = LakeLayout.lakeCommitAt(spark, tablePath, fromVersion)
     val to = LakeLayout.lakeCommitAt(spark, tablePath, toVersion)
-    require(from.files.nonEmpty && to.files.nonEmpty,
-      "changeRegions needs file-granular (listed) manifests on both ends")
     val toByPath = to.files.map(f => f.path -> f).toMap
     val fromByPath = from.files.map(f => f.path -> f).toMap
     val oldOnly = from.files.filterNot(f => toByPath.contains(f.path))
@@ -76,8 +60,10 @@ object IncrementalAgg {
     val dvChanged = from.files.filter(f =>
       toByPath.get(f.path).exists(t => t.dv != f.dv))
     val dvChangedNew = dvChanged.map(f => toByPath(f.path))
-    (frameOf(spark, tablePath, oldOnly ++ dvChanged, schemaOf(from)),
-      frameOf(spark, tablePath, newOnly ++ dvChangedNew, schemaOf(to)))
+    (LakeLayout.filesFrame(spark, tablePath, oldOnly ++ dvChanged,
+        from.schema),
+      LakeLayout.filesFrame(spark, tablePath, newOnly ++ dvChangedNew,
+        to.schema))
   }
 
   /** Advance a maintained (cnt, total) state from `fromVersion`'s table

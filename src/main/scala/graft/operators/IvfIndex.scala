@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *   <indexPath>/_gen/<N>                          (atomic commit claim)
   *
   * Each generation may additionally carry versioned SIDECARS, all on
-  * the same marker-publish recipe (dirs named inside an
-  * exclusive-created marker, one grace version, lost race = loud):
-  * PQ codes+books (`_pq`), SQ8 codes (`_sq8`), and TOMBSTONES
+  * one marker codec ([[SidecarMarker]]: dirs named inside an
+  * exclusive-created marker `<kind>/<n>`, one grace version, each kind
+  * deciding what a lost race means): PQ codes+books (`_pq`), SQ8 codes
+  * (`_sq8`), per-(cell, label) counts (`_lstats`) and TOMBSTONES
   * (`_tomb` — versioned (vec_id, tomb_v) delete/update events every
   * serving path anti-joins at its exact re-rank against each row's
   * ingest version `wave_v`; a rebuild compacts the hidden rows
@@ -54,9 +55,7 @@ import org.apache.spark.sql.functions._
   * (a probe that resolved just before the swap still completes) and
   * reclaims older ones; a crash before the claim leaves an orphan
   * dir that readers never see (no claim names it), consumes NO
-  * generation number, and a later publish sweeps it. Legacy layouts —
-  * `g<N>/_COMMITTED` marker dirs and pre-generational flat
-  * `<indexPath>/vectors` — still resolve when no claim exists.
+  * generation number, and a later publish sweeps it.
   *
   * APPEND vs REBUILD concurrency: [[append]] is the normal ingestion
   * path and may run beside a scheduled [[rebuild]] without losing
@@ -104,9 +103,9 @@ object IvfIndex {
 
   private def memoizedAt[T <: AnyRef](s: SparkSession, root: String,
       kind: String, dir: String, fp: Long)(load: => T): T = {
-    // a generation dir `g<N>[-tag]` shares its index's slot
+    // a generation dir `g<N>-<tag>` shares its index's slot
     val index = hp(root).getName match {
-      case GenName(_) | TaggedGenName(_) => hp(root).getParent.toString
+      case TaggedGenName(_) => hp(root).getParent.toString
       case _ => root
     }
     def ours(v: AnyRef) = v match {
@@ -195,7 +194,6 @@ object IvfIndex {
     col("_metadata.file_path")
       .isin(files.toSeq.sorted.map(f => hp(f).toUri.toString): _*)
 
-  private val GenName = "g(\\d+)".r
   private val TaggedGenName = "g(\\d+)-[0-9a-f]+".r
   private val StageName = "\\.g(\\d+)-stage-.*".r
 
@@ -237,39 +235,30 @@ object IvfIndex {
       .toMap
   }
 
-  /** Resolve the live generation ONCE: (gen, root dir). Claim-log
-    * layouts win; legacy `g<N>/_COMMITTED` marker dirs (pre-claim
-    * indexes) resolve when no claim exists. None = flat/empty layout. */
+  /** Resolve the live generation ONCE: (gen, root dir) of the max
+    * claim. None = no generation committed yet. */
   private def resolveLive(s: SparkSession,
       indexPath: String): Option[(Long, String)] = {
     val fs = fsOf(s, indexPath)
     if (!fs.exists(hp(indexPath))) return None
     val claims = listClaims(fs, indexPath)
-    if (claims.nonEmpty) {
+    if (claims.isEmpty) None
+    else {
       val g = claims.keys.max
       Some(g -> s"$indexPath/${claims(g)}")
-    } else fs.listStatus(hp(indexPath)).iterator
-      .filter(_.isDirectory)
-      .flatMap(st => st.getPath.getName match {
-        case GenName(n)
-          if fs.exists(new org.apache.hadoop.fs.Path(
-            st.getPath, "_COMMITTED")) => Some(n.toLong)
-        case _ => None
-      })
-      .foldLeft(Option.empty[Long])((acc, g) =>
-        Some(acc.fold(g)(math.max(_, g))))
-      .map(g => g -> s"$indexPath/g$g")
+    }
   }
 
-  /** Max committed generation, or None for empty/legacy-flat layouts. */
+  /** Max committed generation, or None before the first build. */
   private[graft] def committedGen(s: SparkSession,
       indexPath: String): Option[Long] =
     resolveLive(s, indexPath).map(_._1)
 
   /** The dir holding the CURRENT consistent (vectors, centroids) pair:
-    * the max committed generation, or the legacy flat root when none
-    * exists. Resolve once per operation — both reads must come from the
-    * same resolution or a racing rebuild can mix generations. */
+    * the max committed generation, or the index path itself (which
+    * holds neither) before the first build. Resolve once per operation
+    * — both reads must come from the same resolution or a racing
+    * rebuild can mix generations. */
   private[graft] def layoutRoot(s: SparkSession, indexPath: String): String =
     resolveLive(s, indexPath).fold(indexPath)(_._2)
 
@@ -285,8 +274,8 @@ object IvfIndex {
     * winner's files are never touched. A crash between rename and
     * claim leaves an orphan dir no reader resolves and consumes no
     * generation number. After the claim: reclaim generations older
-    * than the grace (previous live) generation, stale stagings BELOW
-    * `gen`, and legacy flat dirs. */
+    * than the grace (previous live) generation and stale stagings
+    * BELOW `gen`. */
   private def publishGen(s: SparkSession, indexPath: String, gen: Long,
       stage: org.apache.hadoop.fs.Path): Unit = {
     val fs = fsOf(s, indexPath)
@@ -406,11 +395,7 @@ object IvfIndex {
     }
     fs.listStatus(hp(indexPath)).foreach { st =>
       val drop = st.getPath.getName match {
-        // legacy committed / orphan untagged generation dirs below
-        // the grace (pre-claim layouts keep their newest as grace
-        // until the claim log carries one)
-        case GenName(n) => n.toLong < grace
-        // orphan TAGGED dirs (a claim loser's leavings, a crash
+        // orphan generation dirs (a claim loser's leavings, a crash
         // between rename and claim) strictly below this generation;
         // the claimed dirs of `gen` and `grace` are kept by number
         case TaggedGenName(n) => n.toLong < grace
@@ -418,9 +403,6 @@ object IvfIndex {
         // at or above it may belong to a live maintainer whose own
         // claim attempt will decide its fate
         case StageName(n) => n.toLong < gen
-        // legacy flat dirs are the pre-generational "generation":
-        // grace them until a successor generation exists
-        case "vectors" | "centroids" => gen > 0
         case _ => false
       }
       if (drop) fs.delete(st.getPath, true)
@@ -1540,8 +1522,8 @@ object IvfIndex {
     lastPqCarry.set((totalN - freshN, freshN))
     books.coalesce(1).write.mode("overwrite")
       .parquet(s"$newRoot/pqbooks-0")
-    writeSidecarMarker(fs, s"$newRoot/_pq", 0L,
-      "d pqcodes-0 pqbooks-0", newFiles)
+    publishCodesMarker(fs, newRoot, "_pq", 0L, Seq("pqcodes-0", "pqbooks-0"),
+      newFiles, "compactTombstones")
   }
 
   /** Carry a committed SQ8 sidecar across a [[compactTombstones]]
@@ -1564,22 +1546,101 @@ object IvfIndex {
     carried.union(fresh)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$newRoot/sq8codes-0")
-    writeSidecarMarker(fs, s"$newRoot/_sq8", 0L, "d sq8codes-0", newFiles)
+    publishCodesMarker(fs, newRoot, "_sq8", 0L, Seq("sq8codes-0"), newFiles,
+      "compactTombstones")
   }
 
-  /** Exclusive-create a sidecar marker (the PQ/SQ8 commit point) with
-    * the given dir line and encoded-file snapshot. */
-  private def writeSidecarMarker(fs: org.apache.hadoop.fs.FileSystem,
-      markerDir: String, n: Long, dirLine: String,
-      files: Set[String]): Unit = {
-    fs.mkdirs(hp(markerDir))
-    val marker = new org.apache.hadoop.fs.Path(hp(markerDir), n.toString)
-    val body = (dirLine +: files.toSeq.sorted.map("f " + _))
-      .mkString("", "\n", "\n")
-    val out = fs.create(marker, false) // exclusive — the commit point
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  // ------------------------------------------------ sidecar markers
+  /** One committed version `n` of a generation's versioned sidecar
+    * (`_pq`, `_sq8`, `_tomb`, `_lstats` under its root): the marker
+    * file `<root>/<kind>/<n>`, exclusive-created LAST, whose `d` line
+    * names the version's dirs under the root and whose `f` lines (codes
+    * and label stats) record the vector-file snapshot it covers.
+    * `dirs` are resolved against the root. */
+  private final case class SidecarMarker(n: Long, dirs: Seq[String],
+      files: Set[String])
+
+  private def markerDir(root: String, kind: String) = hp(s"$root/$kind")
+
+  /** The committed version numbers of `kind` under `root`. */
+  private def markerVersions(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, kind: String): Set[Long] = {
+    val dir = markerDir(root, kind)
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator
+      .flatMap(st => claimGen(st.getPath.getName)).toSet
   }
+
+  /** Marker `n` of `kind`; None when absent or not yet written. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem, root: String,
+      kind: String, n: Long): Option[SidecarMarker] = {
+    val p = new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          .linesIterator.toSeq
+        finally in.close()
+      lines.collectFirst { case l if l.startsWith("d ") =>
+        SidecarMarker(n, l.drop(2).trim.split(" ").toSeq.map(d => s"$root/$d"),
+          lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
+      }
+    }
+  }
+
+  /** Resolve the committed version of `kind` ONCE: the max marker. */
+  private def latestMarker(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, kind: String): Option[SidecarMarker] = {
+    val versions = markerVersions(fs, root, kind)
+    if (versions.isEmpty) None else readMarker(fs, root, kind, versions.max)
+  }
+
+  /** Exclusive-create marker `n` of `kind` naming `dirs` (relative to
+    * `root`) and the covered `files` — the sidecar's commit point.
+    * Returns the create's failure when another writer holds `n` (each
+    * kind decides what a lost race means), None when this one won. */
+  private def createMarker(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, kind: String, n: Long, dirs: Seq[String],
+      files: Set[String]): Option[java.io.IOException] = {
+    fs.mkdirs(markerDir(root, kind))
+    val body = (s"d ${dirs.mkString(" ")}" +: files.toSeq.sorted.map("f " + _))
+      .mkString("", "\n", "\n")
+    try {
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString),
+        false) // exclusive — the commit point
+      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      None
+    } catch { case e: java.io.IOException => Some(e) }
+  }
+
+  /** Reclaim the listed versions of `kind` below `grace`, each marker
+    * BEFORE its dirs so no marker ever names a missing dir. */
+  private def reclaimMarkers(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, kind: String, versions: Set[Long], grace: Long): Unit =
+    versions.filter(_ < grace).foreach { v =>
+      readMarker(fs, root, kind, v).foreach { m =>
+        fs.delete(new org.apache.hadoop.fs.Path(markerDir(root, kind),
+          v.toString), false)
+        m.dirs.foreach(d => fs.delete(hp(d), true))
+      }
+    }
+
+  /** The PQ/SQ8 commit: a lost marker race discards this version's
+    * dirs and fails loudly — the codes sidecars are single-maintainer
+    * by contract. */
+  private def publishCodesMarker(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, kind: String, n: Long, dirs: Seq[String],
+      files: Set[String], verb: String): Unit =
+    createMarker(fs, root, kind, n, dirs, files).foreach { e =>
+      dirs.foreach(d => fs.delete(hp(s"$root/$d"), true))
+      throw new IllegalStateException(
+        s"$verb lost the marker race for version $n under $root — the " +
+          "sidecar is single-maintainer by contract; this version's " +
+          "dirs were discarded", e)
+    }
 
   /** What one [[maintainIvf]] pass saw and did. */
   final case class IvfMaintenanceReport(skew: Double, fit: Double,
@@ -1956,11 +2017,7 @@ object IvfIndex {
     val fs = fsOf(s, root)
     val files = listVectorFiles(fs, s"$root/vectors")
     require(files.nonEmpty, s"buildPqSidecar: no vectors under $root")
-    val pqDir = hp(s"$root/_pq")
-    val prior =
-      if (!fs.exists(pqDir)) Set.empty[Long]
-      else fs.listStatus(pqDir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
+    val prior = markerVersions(fs, root, "_pq")
     val n = prior.foldLeft(-1L)(math.max) + 1L
     val codesRel = s"pqcodes-$n"
     val booksRel = s"pqbooks-$n"
@@ -1981,91 +2038,20 @@ object IvfIndex {
     }.toSeq.toDF("sub", "code", "cvec")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$booksRel")
-    fs.mkdirs(pqDir)
-    val marker = new org.apache.hadoop.fs.Path(pqDir, n.toString)
-    val body = (s"d $codesRel $booksRel" +:
-      files.toSeq.sorted.map("f " + _)).mkString("", "\n", "\n")
-    try {
-      val out = fs.create(marker, false) // exclusive — the commit point
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
-      case e @ (_: java.io.IOException |
-                _: org.apache.hadoop.fs.FileAlreadyExistsException) =>
-        fs.delete(hp(s"$root/$codesRel"), true)
-        fs.delete(hp(s"$root/$booksRel"), true)
-        throw new IllegalStateException(
-          s"buildPqSidecar lost the marker race for version $n under " +
-            s"$root — the sidecar is single-maintainer by contract; " +
-            "this build's dirs were discarded", e)
-    }
-    // reclaim everything older than the grace version (n − 1): delete
-    // markers BEFORE their dirs so no marker ever names missing dirs
-    prior.filter(_ < n - 1).foreach { v =>
-      readPqMarker(fs, root, v).foreach { case (c, b, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(pqDir, v.toString), false)
-        fs.delete(hp(c), true)
-        fs.delete(hp(b), true)
-      }
-    }
-    // legacy unversioned sidecar (pre-r18): superseded by any
-    // versioned marker — reclaim it the first time one lands
-    if (fs.exists(hp(s"$root/_PQSNAPSHOT"))) {
-      fs.delete(hp(s"$root/_PQSNAPSHOT"), false)
-      fs.delete(hp(s"$root/pqcodes"), true)
-      fs.delete(hp(s"$root/pqbooks"), true)
-    }
+    publishCodesMarker(fs, root, "_pq", n, Seq(codesRel, booksRel), files,
+      "buildPqSidecar")
+    reclaimMarkers(fs, root, "_pq", prior, n - 1)
     // label stats over the same pinned snapshot: one narrow
     // (cell, label) aggregation at BUILD time so filtered probes skip
     // their per-query measuring scan while this file set serves
     buildLabelStats(s, root, files)
   }
 
-  private def readPqMarker(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, n: Long): Option[(String, String, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(hp(s"$root/_pq"), n.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.linesIterator.toSeq
-      lines.collectFirst { case l if l.startsWith("d ") =>
-        val parts = l.drop(2).split(" ")
-        (s"$root/${parts(0)}", s"$root/${parts(1)}",
-          lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
-      }
-    }
-  }
-
   /** Resolve the committed sidecar ONCE: (codes dir, books dir,
-    * encoded-file snapshot). Max versioned marker wins; the legacy
-    * unversioned layout resolves when no versioned marker exists. */
+    * encoded-file snapshot). */
   private def readPqSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(String, String, Set[String])] = {
-    val pqDir = hp(s"$root/_pq")
-    val versions =
-      if (!fs.exists(pqDir)) Set.empty[Long]
-      else fs.listStatus(pqDir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
-    if (versions.nonEmpty)
-      readPqMarker(fs, root, versions.max)
-    else {
-      val p = hp(s"$root/_PQSNAPSHOT")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some((s"$root/pqcodes", s"$root/pqbooks",
-          text.linesIterator.collect {
-            case l if l.startsWith("f ") => l.drop(2)
-          }.toSet))
-      }
-    }
-  }
+      root: String): Option[(String, String, Set[String])] =
+    latestMarker(fs, root, "_pq").map(m => (m.dirs(0), m.dirs(1), m.files))
 
   /** Serving from the COMPRESSED index: the ADC stage scans only
     * (vec_id, codes) of the probed cells — at [[ProductQuant]]'s 10
@@ -2187,11 +2173,7 @@ object IvfIndex {
     val fs = fsOf(s, root)
     val files = listVectorFiles(fs, s"$root/vectors")
     require(files.nonEmpty, s"buildSq8Sidecar: no vectors under $root")
-    val sq8Dir = hp(s"$root/_sq8")
-    val prior =
-      if (!fs.exists(sq8Dir)) Set.empty[Long]
-      else fs.listStatus(sq8Dir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
+    val prior = markerVersions(fs, root, "_sq8")
     val n = prior.foldLeft(-1L)(math.max) + 1L
     val codesRel = s"sq8codes-$n"
     val snap = s.read.option("basePath", s"$root/vectors")
@@ -2203,64 +2185,20 @@ object IvfIndex {
       .select($"vec_id", $"cell", $"q")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$root/$codesRel")
-    fs.mkdirs(sq8Dir)
-    val marker = new org.apache.hadoop.fs.Path(sq8Dir, n.toString)
-    val body = (s"d $codesRel" +:
-      files.toSeq.sorted.map("f " + _)).mkString("", "\n", "\n")
-    try {
-      val out = fs.create(marker, false) // exclusive — the commit point
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
-      case e @ (_: java.io.IOException |
-                _: org.apache.hadoop.fs.FileAlreadyExistsException) =>
-        fs.delete(hp(s"$root/$codesRel"), true)
-        throw new IllegalStateException(
-          s"buildSq8Sidecar lost the marker race for version $n under " +
-            s"$root — the sidecar is single-maintainer by contract; " +
-            "this build's dir was discarded", e)
-    }
-    // reclaim below the grace version; markers before dirs, as always
-    prior.filter(_ < n - 1).foreach { v =>
-      readSq8Marker(fs, root, v).foreach { case (c, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(sq8Dir, v.toString), false)
-        fs.delete(hp(c), true)
-      }
-    }
+    publishCodesMarker(fs, root, "_sq8", n, Seq(codesRel), files,
+      "buildSq8Sidecar")
+    reclaimMarkers(fs, root, "_sq8", prior, n - 1)
     // same label-stats refresh as the PQ build — whichever sidecar
     // lands last pins the stats to ITS snapshot (serving re-checks
     // the live listing, so an older stats version is just unused)
     buildLabelStats(s, root, files)
   }
 
-  private def readSq8Marker(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, n: Long): Option[(String, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(hp(s"$root/_sq8"), n.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.linesIterator.toSeq
-      lines.collectFirst { case l if l.startsWith("d ") =>
-        (s"$root/${l.drop(2).trim}",
-          lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
-      }
-    }
-  }
-
   /** Resolve the committed SQ8 sidecar ONCE: (codes dir, encoded-file
-    * snapshot). Max versioned marker wins. */
+    * snapshot). */
   private def readSq8Sidecar(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(String, Set[String])] = {
-    val sq8Dir = hp(s"$root/_sq8")
-    val versions =
-      if (!fs.exists(sq8Dir)) Set.empty[Long]
-      else fs.listStatus(sq8Dir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
-    if (versions.isEmpty) None else readSq8Marker(fs, root, versions.max)
-  }
+      root: String): Option[(String, Set[String])] =
+    latestMarker(fs, root, "_sq8").map(m => (m.dirs.head, m.files))
 
   // ------------------------------------------------ tombstone sidecar
   /** TOMBSTONE SIDECAR — the DELETE and UPDATE path to the serving
@@ -2314,10 +2252,9 @@ object IvfIndex {
     * predicate — from its training snapshot and every fold-in wave).
     * Either way the new generation starts with NO sidecar — the
     * deletes and superseded pre-images become physical at the cutover
-    * while current post-images carry over.
-    * Pre-`tomb_v` sidecars read as `tomb_v = Long.MaxValue`
-    * (hide every resident row of the id — the old id-only semantics);
-    * pre-`wave_v` vectors read as base rows. */
+    * while current post-images carry over. A direct takedown's id-only
+    * input publishes as `tomb_v = Long.MaxValue` ([[normalizeTombs]]);
+    * vectors without `wave_v` read as base rows. */
   /** What the last [[carryPqSidecar]] did — (codes carried byte-as-is,
     * rows freshly encoded). Observability for the O(events + tail)
     * encode-work contract of [[splitSidecarCarry]]. */
@@ -2345,12 +2282,8 @@ object IvfIndex {
   private def publishTombstones(s: SparkSession, root: String,
       tombs: DataFrame, observed: Option[Long]): Unit = {
     val fs = fsOf(s, root)
-    val tombDir = hp(s"$root/_tomb")
-    val prior =
-      if (!fs.exists(tombDir)) Set.empty[Long]
-      else fs.listStatus(tombDir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
-    val curMax = if (prior.isEmpty) None else Some(prior.max)
+    val prior = markerVersions(fs, root, "_tomb")
+    val curMax = prior.maxOption
     if (curMax != observed)
       throw new TombstoneVersionMoved(
         s"publishTombstones under $root: marker listing moved from " +
@@ -2361,29 +2294,14 @@ object IvfIndex {
     normalizeTombs(tombs).distinct()
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$rel")
-    fs.mkdirs(tombDir)
-    val marker = new org.apache.hadoop.fs.Path(tombDir, n.toString)
-    try {
-      val out = fs.create(marker, false) // exclusive — the commit point
-      try out.write(s"d $rel\n".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
-      case e @ (_: java.io.IOException |
-                _: org.apache.hadoop.fs.FileAlreadyExistsException) =>
-        fs.delete(hp(s"$root/$rel"), true)
-        throw new TombstoneVersionMoved(
-          s"publishTombstones lost the marker race for version $n under " +
-            s"$root — a concurrent publisher won; this build's dir was " +
-            "discarded", e)
+    createMarker(fs, root, "_tomb", n, Seq(rel), Set.empty).foreach { e =>
+      fs.delete(hp(s"$root/$rel"), true)
+      throw new TombstoneVersionMoved(
+        s"publishTombstones lost the marker race for version $n under " +
+          s"$root — a concurrent publisher won; this build's dir was " +
+          "discarded", e)
     }
-    // reclaim below the grace version; markers before dirs, as always
-    prior.filter(_ < n - 1).foreach { v =>
-      readTombMarker(fs, root, v).foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(tombDir, v.toString), false)
-        fs.delete(hp(d), true)
-      }
-    }
+    reclaimMarkers(fs, root, "_tomb", prior, n - 1)
   }
 
   /** The read-union-publish shape every carry/sync site needs, with
@@ -2418,21 +2336,6 @@ object IvfIndex {
     }
   }
 
-  private def readTombMarker(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, n: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(hp(s"$root/_tomb"), n.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.linesIterator.collectFirst { case l if l.startsWith("d ") =>
-        s"$root/${l.drop(2).trim}"
-      }
-    }
-  }
-
   /** Resolve the committed tombstone set ONCE: the dir of the max
     * versioned marker, or None when the generation carries no deletes. */
   private def readTombstoneDir(fs: org.apache.hadoop.fs.FileSystem,
@@ -2442,15 +2345,8 @@ object IvfIndex {
   /** As [[readTombstoneDir]], also returning the marker VERSION the dir
     * was resolved from — the observed version a CAS publish pins to. */
   private def readTombstoneState(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(Long, String)] = {
-    val tombDir = hp(s"$root/_tomb")
-    val versions =
-      if (!fs.exists(tombDir)) Set.empty[Long]
-      else fs.listStatus(tombDir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
-    if (versions.isEmpty) None
-    else readTombMarker(fs, root, versions.max).map(versions.max -> _)
-  }
+      root: String): Option[(Long, String)] =
+    latestMarker(fs, root, "_tomb").map(m => m.n -> m.dirs.head)
 
   /** What the last filtered-compressed probe MEASURED and CHOSE —
     * (survivor rate over the probed cells, effective shortlist) — the
@@ -2496,46 +2392,16 @@ object IvfIndex {
     val snap = s.read.option("basePath", s"$root/vectors")
       .parquet(files.toSeq.sorted: _*)
     if (!snap.columns.contains("label")) return
-    val dir = hp(s"$root/_lstats")
-    val prior =
-      if (!fs.exists(dir)) Set.empty[Long]
-      else fs.listStatus(dir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
+    val prior = markerVersions(fs, root, "_lstats")
     val n = prior.foldLeft(-1L)(math.max) + 1L
     val rel = s"lstats-$n"
     snap.groupBy($"cell", $"label").agg(count(lit(1)).as("cnt"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$rel")
-    try writeSidecarMarker(fs, s"$root/_lstats", n, s"d $rel", files)
-    catch {
-      case _: java.io.IOException |
-           _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(hp(s"$root/$rel"), true)
-        return
-    }
-    prior.filter(_ < n - 1).foreach { v =>
-      readLabelStatsMarker(fs, root, v).foreach { case (d, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, v.toString), false)
-        fs.delete(hp(d), true)
-      }
-    }
-  }
-
-  private def readLabelStatsMarker(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, n: Long): Option[(String, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(hp(s"$root/_lstats"), n.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.linesIterator.toSeq
-      lines.collectFirst { case l if l.startsWith("d ") =>
-        (s"$root/${l.drop(2).trim}",
-          lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
-      }
-    }
+    // a lost race is swallowed: the winner pinned the same file set
+    if (createMarker(fs, root, "_lstats", n, Seq(rel), files).isDefined)
+      fs.delete(hp(s"$root/$rel"), true)
+    else reclaimMarkers(fs, root, "_lstats", prior, n - 1)
   }
 
   /** A label-stats version's (cell, label, cnt) rows and schema, on
@@ -2549,17 +2415,10 @@ object IvfIndex {
     }
 
   /** Resolve the committed label stats ONCE: (stats dir, covered
-    * vector-file snapshot). Max versioned marker wins. */
+    * vector-file snapshot). */
   private def readLabelStats(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(String, Set[String])] = {
-    val dir = hp(s"$root/_lstats")
-    val versions =
-      if (!fs.exists(dir)) Set.empty[Long]
-      else fs.listStatus(dir).iterator
-        .flatMap(st => claimGen(st.getPath.getName)).toSet
-    if (versions.isEmpty) None
-    else readLabelStatsMarker(fs, root, versions.max)
-  }
+      root: String): Option[(String, Set[String])] =
+    latestMarker(fs, root, "_lstats").map(m => (m.dirs.head, m.files))
 
 
   /** MEASURED shortlist widening for the filtered compressed tiers.
@@ -2634,9 +2493,8 @@ object IvfIndex {
   }
 
   /** Normalize a tombstone frame to the (vec_id, tomb_v) event schema:
-    * id-only frames (pre-versioning sidecars, and direct-takedown
-    * inputs) read as `tomb_v = Long.MaxValue` — hide every resident
-    * row of the id, the original semantics. */
+    * id-only frames (direct-takedown inputs) read as
+    * `tomb_v = Long.MaxValue` — hide every resident row of the id. */
   private def normalizeTombs(df: DataFrame): DataFrame =
     if (df.columns.contains("tomb_v"))
       df.select(col("vec_id"),

@@ -76,7 +76,7 @@ object Catalog {
     * registration time (a consistent snapshot — concurrent commits
     * never tear a running query); re-register to advance to a newer
     * version. This is the SQL face of [[LakeLayout.readLake]] — the
-    * committed schema applies (format:3 null-fill included), so SQL
+    * committed schema applies (schema-in-manifest null-fill included), so SQL
     * and DataFrame readers see byte-identical tables. */
   // Per-session (viewName → (tablePath, version)) of the last lake
   // view registration: every LakeSql statement refreshes the views it

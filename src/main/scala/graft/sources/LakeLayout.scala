@@ -156,8 +156,8 @@ object LakeLayout {
       case _ if s.startsWith("l") => Some(LongKey(s.drop(1).toLong))
       case _ if s.startsWith("s") =>
         Some(StrKey(java.net.URLDecoder.decode(s.drop(1), "UTF-8")))
-      // legacy format:2/3 manifests wrote bare decimal longs
-      case _ => Some(LongKey(s.toLong))
+      case _ => throw new IllegalArgumentException(
+        s"key bound '$s' has no l/s type prefix")
     }
     /** a <= b in unsigned UTF-8 byte order (Spark's string ordering;
       * java String.compareTo would disagree on supplementary chars). */
@@ -248,7 +248,7 @@ object LakeLayout {
 
   /** A manifest entry's physical size: recorded at write time (the
     * writer lists its output dir anyway, so the length is free) or ONE
-    * stat fallback for legacy entries. This is what keeps maintenance
+    * stat for an entry without one. This is what keeps maintenance
     * census, DESCRIBE, and write accounting O(manifest) instead of
     * O(files) serial namenode RPCs — at the 800 k-file design point a
     * per-file stat loop was ~800 k round trips per maintenance pass. */
@@ -269,21 +269,24 @@ object LakeLayout {
     * (possibly spanning several data dirs — untouched files are carried
     * across versions by reference), the dir this version's own write
     * landed in, and the (checkpoint, batchId) provenance used for
-    * exactly-once replay detection. An empty file list means a legacy
-    * dir-pointer manifest: the version is exactly `dataDir`'s
-    * contents. `schemaJson` is the version's TABLE schema (Iceberg's
-    * schema-in-metadata idea): readers apply it to every listed file,
-    * so files written before a column existed null-fill it without any
-    * footer merging; None on legacy manifests → infer from footers.
-    * `op` types the commit for incremental consumers: `data` commits
-    * change rows; `compact` commits provably move only bytes (CDC and
-    * metric consumers skip them without opening a single data file);
-    * `delete` commits only remove rows. Legacy manifests read as
-    * `data` (the conservative type). */
+    * exactly-once replay detection. An empty file list is an empty
+    * table. `schemaJson` is the version's TABLE schema (Iceberg's
+    * schema-in-metadata idea), recorded by every commit: readers apply
+    * it to every listed file, so files written before a column existed
+    * null-fill it without any footer merging. `op` types the commit for
+    * incremental consumers: `data` commits change rows; `compact`
+    * commits provably move only bytes (CDC and metric consumers skip
+    * them without opening a single data file); `delete` commits only
+    * remove rows. `instantMs` is the commit's store-clock instant
+    * ([[storeNowMillis]] at publish). */
   final case class LakeCommit(version: Long, dataDir: String,
-      checkpoint: String, batchId: Long, files: Seq[LakeFile] = Seq.empty,
-      schemaJson: Option[String] = None, op: String = "data",
-      tsClusterCol: Option[String] = None, instantMs: Option[Long] = None)
+      checkpoint: String, batchId: Long, files: Seq[LakeFile],
+      schemaJson: String, op: String, tsClusterCol: Option[String],
+      instantMs: Long) {
+    def schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   private def commitsDir(table: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(table, "_commits")
@@ -314,17 +317,21 @@ object LakeLayout {
     * registry drives) run the same loop with one attempt, so a lost
     * race fails loudly.
     *
-    * Manifest wire format (one file per version):
+    * Manifest wire format (one file per version). A FULL manifest
+    * lists every file of the version:
     * {{{
-    * format:2
+    * format:4
     * <dataRel>            dir this version's own write landed in
     * <checkpoint>
     * <batchId>
-    * f <TAB> relpath <TAB> minKey|- <TAB> maxKey|-   (one per file)
+    * s <TAB> <tableSchemaJson>
+    * o <TAB> <op>                             (non-`data` commits)
+    * c <TAB> <clusterAxis>                    (when the table has one)
+    * t <TAB> <commitInstantMs>
+    * f <TAB> relpath <TAB> minKey|- <TAB> maxKey|- [<TAB> ...]  (per file)
     * }}}
-    * A 3-line manifest without the `format:2` header is the legacy
-    * dir-pointer form and stays readable (files = empty → read the
-    * dir).
+    * The per-file fields are [[encodeFileLine]]'s; a key bound is
+    * `l<long>`, `s<url-encoded string>` or `-` (unknown).
     *
     * format:5 is the DELTA form — the fix for the one genuine
     * scale-killer of full-list manifests: at 100 TB / ~800 k live
@@ -335,17 +342,18 @@ object LakeLayout {
     * format:5
     * <dataRel> / <checkpoint> / <batchId>     (as above)
     * p <TAB> <parentVersion>
-    * s <TAB> <tableSchemaJson>
-    * o <TAB> <op>                             (non-`data` commits)
-    * a <TAB> relpath <TAB> min <TAB> max      (file added vs parent)
+    * s / o / c / t lines                      (as above)
+    * a <TAB> relpath <TAB> min <TAB> max ...  (file added vs parent)
     * r <TAB> relpath                          (file removed vs parent)
     * }}}
+    * Any other header is a malformed manifest and fails the read.
     * Readers resolve `files = parent.files − removes + adds`, walking
     * the chain to the nearest FULL base. Two artifacts bound the walk
     * (Delta-log checkpointing, re-derived):
     *  - every [[checkpointEvery]]-th commit also writes a sidecar
     *    `v<padded>.checkpoint` holding the version's FULL resolved
-    *    list in the format:4 wire form. It is a resolution
+    *    list in the format:4 form (its `o` line always present, no `c`
+    *    or `t` line: only its files are read). It is a resolution
     *    accelerator, not a commit: its content is a pure function of
     *    the committed chain, so it is written best-effort AFTER the
     *    atomic claim (a crash between claim and checkpoint only makes
@@ -355,7 +363,7 @@ object LakeLayout {
     *    delta's chain never dangles.
     * Writers self-select the form: a commit whose delta would not be
     * smaller than its full list (first commit, full compaction, full
-    * rewrite, legacy parent) publishes the full format — so manifest
+    * rewrite, empty parent) publishes the full format — so manifest
     * bytes per commit are O(changed files) with an O(live files)
     * ceiling, never the reverse. */
   private val checkpointEvery = 8
@@ -366,20 +374,17 @@ object LakeLayout {
     * against parent, `Right` = self-contained full commit. */
   private final case class DeltaManifest(version: Long, dataRel: String,
       checkpoint: String, batchId: Long, parent: Long, adds: Seq[LakeFile],
-      removes: Set[String], schemaJson: Option[String], op: String,
-      tsClusterCol: Option[String] = None, instantMs: Option[Long] = None)
+      removes: Set[String], schemaJson: String, op: String,
+      tsClusterCol: Option[String], instantMs: Long)
 
-  private def parseManifest(content: String, v: Long)
-      : Either[DeltaManifest, LakeCommit] = {
-    val lines = content.split("\n")
-    def tagged(tag: String) = lines.drop(4).filter(_.startsWith(tag))
-    // fields 5/6, when present, are the optional second-dimension
-    // (time) bounds — older manifests simply lack them
-    // field 7, when present, is the deletion-vector dir reference;
-    // field 8 the exact row count; field 9 the file's byte length;
-    // field 10 the key bloom filter (base64 bitset); field 11 the
-    // named axis bounds for Z-order axes 3+ ([[encodeAxes]])
-    def fileLines(tag: String) = tagged(tag).map { ln =>
+  /** The file entries tagged `tag` (`f` full, `a` added). Fields 5/6
+    * are the optional second-dimension (time) bounds, 7 the
+    * deletion-vector dir reference, 8 the exact row count, 9 the byte
+    * length, 10 the key bloom filter (base64 bitset) and 11 the named
+    * axis bounds for Z-order axes 3+ ([[encodeAxes]]); an entry stops
+    * after its last recorded field. */
+  private def fileEntries(body: Seq[String], tag: String): Seq[LakeFile] =
+    body.filter(_.startsWith(tag + "\t")).map { ln =>
       val p = ln.split("\t")
       LakeFile(p(1), KeyBound.decode(p(2)), KeyBound.decode(p(3)),
         if (p.length > 5) KeyBound.decode(p(4)) else None,
@@ -389,32 +394,45 @@ object LakeLayout {
         if (p.length > 8 && p(8) != "-") Some(p(8).toLong) else None,
         if (p.length > 9 && p(9) != "-") Some(p(9)) else None,
         if (p.length > 10) decodeAxes(p(10)) else Seq.empty)
-    }.toSeq
-    val schema = lines.drop(4).find(_.startsWith("s\t")).map(_.drop(2))
-    val op = lines.drop(4).find(_.startsWith("o\t")).map(_.drop(2))
-      .getOrElse("data")
+    }
+
+  private def parseManifest(content: String, v: Long)
+      : Either[DeltaManifest, LakeCommit] = {
+    val lines = content.split("\n").toSeq
+    val body = lines.drop(4)
+    def line(tag: String) =
+      body.find(_.startsWith(tag + "\t")).map(_.drop(tag.length + 1))
+    def required(tag: String, what: String) = line(tag).getOrElse(
+      throw new IllegalArgumentException(s"no `$tag` ($what) line"))
+    val schema = required("s", "table schema")
+    val op = line("o").getOrElse("data")
     // `c` = the table's persisted CLUSTER AXIS (second/time dimension) —
     // a table property every writer carries forward so mid-ingest
     // rewrites keep recording ts bounds without callers threading it;
     // `t` = the commit's STORE-CLOCK instant, persisted at publish so
     // AS-OF resolution survives manifest copies that re-stamp mtimes
-    val cluster = lines.drop(4).find(_.startsWith("c\t")).map(_.drop(2))
-    val instant = lines.drop(4).find(_.startsWith("t\t"))
-      .map(_.drop(2).toLong)
-    lines(0) match {
-      case "format:2" | "format:3" | "format:4" =>
+    val cluster = line("c")
+    val instant = required("t", "commit instant").toLong
+    lines.head match {
+      case "format:4" =>
         Right(LakeCommit(v, lines(1), lines(2), lines(3).toLong,
-          fileLines("f\t"), schema, op, cluster, instant))
+          fileEntries(body, "f"), schema, op, cluster, instant))
       case "format:5" =>
-        val parent = lines.drop(4).find(_.startsWith("p\t")).map(_.drop(2).toLong)
-          .getOrElse(throw new IllegalStateException(
-            s"format:5 manifest v$v missing its parent line"))
-        Left(DeltaManifest(v, lines(1), lines(2), lines(3).toLong, parent,
-          fileLines("a\t"),
-          tagged("r\t").map(_.split("\t")(1)).toSet, schema, op,
-          cluster, instant))
-      case _ => Right(LakeCommit(v, lines(0), lines(1), lines(2).toLong))
+        Left(DeltaManifest(v, lines(1), lines(2), lines(3).toLong,
+          required("p", "parent version").toLong, fileEntries(body, "a"),
+          body.filter(_.startsWith("r\t")).map(_.split("\t")(1)).toSet,
+          schema, op, cluster, instant))
+      case h => throw new IllegalArgumentException(
+        s"unknown header '$h' (manifests are format:4 or format:5)")
     }
+  }
+
+  /** A checkpoint's resolved file list (the format:4 form). */
+  private def parseCheckpoint(content: String): Seq[LakeFile] = {
+    val lines = content.split("\n").toSeq
+    require(lines.head == "format:4",
+      s"unknown header '${lines.head}' (checkpoints are format:4)")
+    fileEntries(lines.drop(4), "f")
   }
 
   private def readFile(fs: org.apache.hadoop.fs.FileSystem,
@@ -437,8 +455,7 @@ object LakeLayout {
     * test runs create thousands of throwaway tables; clearing on
     * overflow is always safe (it is only a cache). */
   private val manifestCache =
-    new scala.collection.concurrent.TrieMap[String,
-      Either[DeltaManifest, LakeCommit]]()
+    new scala.collection.concurrent.TrieMap[String, AnyRef]()
   // approximate entry count — TrieMap.size is O(n), too hot for a
   // per-read guard; over/undercounting a few entries is harmless for
   // a clear-on-overflow bound
@@ -477,17 +494,28 @@ object LakeLayout {
   private def cacheKey(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): String = fs.makeQualified(p).toString
 
-  private def cachedParse(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, v: Long)
-      : Either[DeltaManifest, LakeCommit] = {
+  /** `parse` of the file at `p` (version `v`), cached. A file that does
+    * not parse fails loudly, naming its table and version. Manifest and
+    * checkpoint paths differ by suffix, so each key only ever holds its
+    * own parser's result. */
+  private def cachedParse[T <: AnyRef](fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, v: Long)(parse: String => T): T = {
     if (manifestCacheN.get > 8192) {
       manifestCache.clear(); manifestCacheN.set(0)
     }
     val key = cacheKey(fs, p)
     manifestCache.get(key) match {
-      case Some(hit) => hit
+      case Some(hit) => hit.asInstanceOf[T]
       case None =>
-        val parsed = parseManifest(readFile(fs, p), v)
+        val content = readFile(fs, p)
+        val parsed =
+          try parse(content)
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              throw new IllegalStateException(
+                s"malformed ${p.getName} of lake table " +
+                  s"${p.getParent.getParent} at version $v: ${e.getMessage}", e)
+          }
         if (manifestCache.putIfAbsent(key, parsed).isEmpty)
           manifestCacheN.incrementAndGet()
         parsed
@@ -497,7 +525,7 @@ object LakeLayout {
   private def readRawManifest(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path, v: Long)
       : Either[DeltaManifest, LakeCommit] =
-    cachedParse(fs, manifestPath(table, v), v)
+    cachedParse(fs, manifestPath(table, v), v)(parseManifest(_, v))
 
   /** The version's full resolved file list: nearest checkpoint, else
     * walk the delta chain to its full base. Chain length is bounded by
@@ -510,18 +538,11 @@ object LakeLayout {
     case Right(full) => full.files
     case Left(d) =>
       val ckpt = checkpointFilePath(table, d.version)
-      if (fs.exists(ckpt))
-        cachedParse(fs, ckpt, d.version)
-          .getOrElse(throw new IllegalStateException(
-            s"checkpoint $ckpt must be self-contained")).files
+      if (fs.exists(ckpt)) cachedParse(fs, ckpt, d.version)(parseCheckpoint)
       else {
         val parentRaw = readRawManifest(fs, table, d.parent)
-        val parentFiles = resolvedFileList(fs, table, d.parent, parentRaw)
-        require(parentFiles.nonEmpty,
-          s"delta manifest v${d.version} chains to a dir-pointer parent " +
-            s"v${d.parent} — protocol violation (deltas require a " +
-            "file-granular parent)")
-        parentFiles.filterNot(f => d.removes(f.path)) ++ d.adds
+        resolvedFileList(fs, table, d.parent, parentRaw)
+          .filterNot(f => d.removes(f.path)) ++ d.adds
       }
   }
 
@@ -543,7 +564,7 @@ object LakeLayout {
     * a checkpoint that dropped later fields would resurrect dv-deleted
     * rows and lose the metadata row/byte counts on resolution). Later
     * fields force the earlier optional ones (as "-") so field positions
-    * stay fixed; older manifests simply stop short. */
+    * stay fixed; an entry stops after its last recorded field. */
   private def encodeFileLine(tag: String, f: LakeFile,
       b: StringBuilder): Unit = {
     b.append(tag).append('\t').append(f.path).append('\t')
@@ -580,7 +601,7 @@ object LakeLayout {
     * `tmpTag` keeps racing writers' tmp files from colliding.
     *
     * `parentFiles` (the parent version's RESOLVED list, empty = no
-    * file-granular parent) enables the format:5 delta form: when the
+    * parent or an empty one) enables the format:5 delta form: when the
     * add/remove set is smaller than the full list, only the delta is
     * written — O(changed files) manifest bytes per commit. The parent
     * is always v−1: a successful claim of v proves the snapshot the
@@ -592,7 +613,7 @@ object LakeLayout {
   private def tryPublishManifest(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path, v: Long, dataRel: String,
       checkpoint: String, batchId: Long, files: Seq[LakeFile],
-      tmpTag: String, schemaJson: Option[String], op: String,
+      tmpTag: String, schemaJson: String, op: String,
       parentFiles: Seq[LakeFile], tsClusterCol: Option[String]): Boolean = {
     fs.mkdirs(commitsDir(table))
     // the commit's DURABLE instant, read from the store's own clock
@@ -601,22 +622,14 @@ object LakeLayout {
     // can no longer re-stamp the table's history
     val instantMs = storeNowMillis(fs, table)
     def commonLines(body: StringBuilder): Unit = {
-      schemaJson.foreach(j => body.append("s\t").append(j).append('\n'))
+      body.append("s\t").append(schemaJson).append('\n')
       if (op != "data") body.append("o\t").append(op).append('\n')
       tsClusterCol.foreach(c => body.append("c\t").append(c).append('\n'))
       body.append("t\t").append(instantMs).append('\n')
     }
-    // format:3 = format:2 plus an `s\t<json>` table-schema line;
-    // format:4 adds the `o\t<op>` commit-type line; format:5 is the
-    // delta form. The `c` (cluster axis) and `t` (commit instant)
-    // lines are tag-parsed, so they ride any header without a bump.
     def fullBody: String = {
-      val header =
-        if (op != "data") "format:4\n"
-        else if (schemaJson.isDefined) "format:3\n"
-        else "format:2\n"
       val body = new StringBuilder()
-        .append(header)
+        .append("format:4\n")
         .append(dataRel).append('\n')
         .append(checkpoint).append('\n').append(batchId).append('\n')
       commonLines(body)
@@ -675,21 +688,21 @@ object LakeLayout {
   }
 
   /** Sidecar checkpoint: the version's FULL resolved list in the
-    * format:4 wire form (self-contained — [[parseManifest]] reads it).
+    * format:4 wire form (self-contained — [[parseCheckpoint]] reads it).
     * Idempotent and deterministic (content is a function of the
     * committed chain), so last-write-wins is harmless; written
     * best-effort — failure only lengthens later resolution walks. */
   private def writeCheckpointFile(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path, v: Long, dataRel: String,
       checkpoint: String, batchId: Long, files: Seq[LakeFile],
-      schemaJson: Option[String], op: String): Unit =
+      schemaJson: String, op: String): Unit =
     try {
       val body = new StringBuilder()
         .append("format:4\n")
         .append(dataRel).append('\n')
         .append(checkpoint).append('\n').append(batchId).append('\n')
-      schemaJson.foreach(j => body.append("s\t").append(j).append('\n'))
-      body.append("o\t").append(op).append('\n')
+        .append("s\t").append(schemaJson).append('\n')
+        .append("o\t").append(op).append('\n')
       // the SHARED entry encoder: a checkpoint is a resolution
       // substitute for the chain, so dropping any per-file field here
       // (dv! rows, bytes) would change what resolution returns — a
@@ -880,17 +893,6 @@ object LakeLayout {
     }
   }
 
-  /** A reader honoring the commit's recorded table schema (format:3):
-    * applied to every file, so files written before a column was added
-    * null-fill it — no footer merging, no inference. */
-  private def schemaReader(spark: SparkSession, c: LakeCommit) =
-    c.schemaJson match {
-      case Some(j) => spark.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None => spark.read
-    }
-
   /** Read a set of committed files with their DELETION VECTORS applied
     * — the single choke point every lake read (snapshots, pruned
     * ranges, rewrite merges, compactions, change regions) goes
@@ -899,15 +901,17 @@ object LakeLayout {
     * file); each group's sidecar keys anti-join BROADCAST (sidecars
     * are O(deleted keys), tiny by construction). A left_anti join
     * keeps exactly the left side's columns in order, so grouping +
-    * unionByName is schema-stable. */
+    * unionByName is schema-stable. Every file is read under the table
+    * `schema` (files written before a column was added null-fill it —
+    * no footer merging, no inference); no files is the empty table,
+    * read without a job. */
   private[graft] def filesFrame(spark: SparkSession, tablePath: String,
       files: Seq[LakeFile],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    require(files.nonEmpty, "filesFrame needs at least one file")
-    def rdr = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-    files.groupBy(_.dv).toSeq.sortBy(_._1.getOrElse("")).map {
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    if (files.isEmpty) spark.read.schema(schema).parquet()
+    else files.groupBy(_.dv).toSeq.sortBy(_._1.getOrElse("")).map {
       case (dvRef, group) =>
-        val df = rdr.parquet(group.map(f =>
+        val df = spark.read.schema(schema).parquet(group.map(f =>
           lakeFileUri(tablePath, f.path)): _*)
         dvRef match {
           case None => df
@@ -917,29 +921,19 @@ object LakeLayout {
               Seq(keys.columns.head), "left_anti")
         }
     }.reduce(_ unionByName _)
-  }
-
-  private def commitSchema(c: LakeCommit)
-      : Option[org.apache.spark.sql.types.StructType] =
-    c.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** The table's carried cluster axis, DROPPED when the current schema
     * no longer has the column: a full rewrite may legally rename or
     * drop it, and re-persisting a dangling name would crash every
-    * later maintenance pass with no API path to unset it. A schemaless
-    * (legacy) commit keeps the property — unknowable is not wrong. */
+    * later maintenance pass with no API path to unset it. */
   private def carriedTsCluster(cur: LakeCommit): Option[String] =
-    cur.tsClusterCol.filter(c =>
-      commitSchema(cur).forall(_.fieldNames.contains(c)))
+    cur.tsClusterCol.filter(cur.schema.fieldNames.contains)
 
-  /** The DataFrame of a commit: explicit file paths (so a pinned reader
-    * keeps its exact version even as newer commits land), or the data
-    * dir for legacy manifests. */
+  /** The DataFrame of a commit: explicit file paths, so a pinned reader
+    * keeps its exact version even as newer commits land. */
   private def commitFrame(spark: SparkSession, tablePath: String,
       c: LakeCommit): DataFrame =
-    if (c.files.isEmpty) schemaReader(spark, c).parquet(s"$tablePath/${c.dataDir}")
-    else filesFrame(spark, tablePath, c.files, commitSchema(c))
+    filesFrame(spark, tablePath, c.files, c.schema)
 
   def latestLakeCommit(spark: SparkSession, tablePath: String): Option[LakeCommit] = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
@@ -969,23 +963,18 @@ object LakeLayout {
     * stats cover the table (the Delta-log trick: the footer pass that
     * records key bounds gets each file's exact row count for free, so
     * the most common warehouse query becomes an O(manifest) read).
-    * Files without a recorded count (statless commits, legacy
-    * manifests) or carrying a DELETION VECTOR (physical count ≠
+    * Files without a recorded count (statless commits) or carrying a
+    * DELETION VECTOR (physical count ≠
     * logical count, and the sidecar may over-approximate this file's
     * keys) fall back to scanning JUST those files — correctness never
     * depends on the fast path. None before the first commit. */
   def lakeRowCount(spark: SparkSession, tablePath: String): Option[Long] =
     latestLakeCommit(spark, tablePath).map { c =>
-      if (c.files.isEmpty)
-        commitFrame(spark, tablePath, c).count()
-      else {
-        val (counted, scanned) = c.files.partition(f =>
-          f.rows.isDefined && f.dv.isEmpty)
-        counted.flatMap(_.rows).sum +
-          (if (scanned.isEmpty) 0L
-           else filesFrame(spark, tablePath, scanned,
-             commitSchema(c)).count())
-      }
+      val (counted, scanned) = c.files.partition(f =>
+        f.rows.isDefined && f.dv.isEmpty)
+      counted.flatMap(_.rows).sum +
+        (if (scanned.isEmpty) 0L
+         else filesFrame(spark, tablePath, scanned, c.schema).count())
     }
 
   /** The committed table, resolved through the latest manifest; None
@@ -1012,7 +1001,7 @@ object LakeLayout {
     * before the attempt counts as lost: Some = it committed the
     * attempt's files another way. */
   private final case class Publish[R](dataRel: String, checkpoint: String,
-      files: Seq[LakeFile], schemaJson: Option[String], op: String,
+      files: Seq[LakeFile], schemaJson: String, op: String,
       tsClusterCol: Option[String], result: () => R,
       rebase: () => Option[R] = () => None) extends Step[R]
 
@@ -1129,7 +1118,7 @@ object LakeLayout {
         fileStats(s, tablePath, at.dataRel, effStats, effTs),
         df.schema.fieldNames.toSeq,
         explicitKey = statsKey, explicitBits = bloomBits)
-      Publish(at.dataRel, checkpoint, stats, Some(df.schema.json), op,
+      Publish(at.dataRel, checkpoint, stats, df.schema.json, op,
         effTs, () => at.v)
     }
   }
@@ -1233,16 +1222,13 @@ object LakeLayout {
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     commitLoop(spark, tablePath, "appendToLake", None, batchId, 1,
         dirSuffix = "-app") { at =>
-      at.cur.flatMap(_.schemaJson).foreach { j =>
-        val old = org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .map(f => (f.name, f.dataType))
+      at.cur.foreach { c =>
+        val old = c.schema.map(f => (f.name, f.dataType))
         val nw = rows.schema.map(f => (f.name, f.dataType))
         require(old == nw,
           s"appendToLake: batch schema $nw must match the table's $old")
       }
-      val carried = at.cur.map(c => resolveFiles(fs, table, c))
-        .getOrElse(Seq.empty)
+      val carried = at.cur.map(_.files).getOrElse(Seq.empty)
       val effTs = at.cur.flatMap(carriedTsCluster)
         .filter(rows.schema.fieldNames.contains)
       enforceLakeConstraints(spark, tablePath, rows)
@@ -1256,24 +1242,13 @@ object LakeLayout {
         rows.schema.fieldNames.toSeq,
         explicitKey = statsKey, explicitBits = bloomBits)
       Publish(at.dataRel, checkpoint, carried ++ newFiles,
-        Some(rows.schema.json), "data", effTs, () => {
+        rows.schema.json, "data", effTs, () => {
           val bytes = bytesOf(fs, table, newFiles)
           LakeUpsertResult(at.v, carried.size, 0, newFiles.size, bytes,
             bytes + bytesOf(fs, table, carried))
         })
     }
   }
-
-  /** A commit's file list, with legacy dir-pointer manifests resolved
-    * to one stat-less (always-touched) entry per file — the first
-    * file-granular operation converts the table to listed form. */
-  private def resolveFiles(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, cur: LakeCommit): Seq[LakeFile] =
-    if (cur.files.nonEmpty) cur.files
-    else fs.listStatus(new org.apache.hadoop.fs.Path(table, cur.dataDir))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => LakeFile(s"${cur.dataDir}/${st.getPath.getName}",
-        None, None, bytes = Some(st.getLen))).toSeq
 
   /** Materialize a rewrite's merged rows ONCE before the
     * range-partitioned write. `repartitionByRange` SAMPLES its child
@@ -1419,7 +1394,7 @@ object LakeLayout {
     * recomputing the merge. */
   private final case class UpsertConflict(dataRel: String,
       newFiles: Seq[LakeFile], rewrittenPaths: Set[String],
-      basePaths: Set[String], schemaJson: Option[String],
+      basePaths: Set[String], schemaJson: String,
       // dv reference of each file the attempt READ, as of its base
       // snapshot: the rebase is only sound if none changed under us
       baseDv: Map[String, Option[String]])
@@ -1467,8 +1442,7 @@ object LakeLayout {
         // place — our result was computed pre-delete, so re-pointing it
         // would resurrect the deleted rows; path survival alone is not
         // enough
-        val aOk = latest.files.nonEmpty &&
-          c.rewrittenPaths.forall(p => latestByPath.get(p)
+        val aOk = c.rewrittenPaths.forall(p => latestByPath.get(p)
             .exists(_.dv == c.baseDv.getOrElse(p, None)))
         if (!aOk || latest.schemaJson != c.schemaJson) return None
         val winnerNew = latest.files.filterNot(f => c.basePaths(f.path))
@@ -1496,12 +1470,12 @@ object LakeLayout {
           val newFiles = withKeyBlooms(spark, tablePath, dataRel,
             fileStats(spark, tablePath, dataRel, Some(key)),
             keep.schema.fieldNames.toSeq)
-          Publish(dataRel, provenance, newFiles, Some(keep.schema.json),
+          Publish(dataRel, provenance, newFiles, keep.schema.json,
             "data", None, () => result(at.v, Seq.empty, 0, newFiles, at.n),
             // a raced first commit is a pure-insert attempt: rebasable
             // if the winner's keys are disjoint (empty base/rewritten sets)
             () => rebase(UpsertConflict(dataRel, newFiles, Set.empty,
-              Set.empty, Some(keep.schema.json), Map.empty), at.n))
+              Set.empty, keep.schema.json, Map.empty), at.n))
         case Some(cur) =>
           val base = commitFrame(spark, tablePath, cur)
           // schema evolution (opt-in): the committed schema grows by the
@@ -1542,7 +1516,7 @@ object LakeLayout {
           val upKeep = keepRows(updates).select(evolved.fields.map(f =>
             if (updates.columns.contains(f.name)) col(f.name)
             else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-          val files = resolveFiles(fs, table, cur)
+          val files = cur.files
           val touched = touchedFilePaths(spark, files, updates, key)
           val (rewritten, carried) = files.partition(f => touched(f.path))
           val merged =
@@ -1552,7 +1526,7 @@ object LakeLayout {
               // column order, null-fills columns the files predate) WITH
               // deletion vectors applied — a raw read here would
               // resurrect dv-deleted rows into the rewrite
-              filesFrame(spark, tablePath, rewritten, Some(evolved))
+              filesFrame(spark, tablePath, rewritten, evolved)
                 .join(updates.select(col(key)).distinct(), Seq(key), "left_anti")
                 .unionByName(upKeep)
           // OPTIMIZED WRITE: without this the merged rows land in the
@@ -1590,11 +1564,11 @@ object LakeLayout {
             fileStats(spark, tablePath, dataRel, Some(key), effTs),
             evolved.fieldNames.toSeq)
           Publish(dataRel, provenance, carried ++ newFiles,
-            Some(evolved.json), "data", effTs,
+            evolved.json, "data", effTs,
             () => result(at.v, carried, rewritten.size, newFiles, at.n),
             () => rebase(UpsertConflict(dataRel, newFiles,
               rewritten.map(_.path).toSet, files.map(_.path).toSet,
-              Some(evolved.json), rewritten.map(f => f.path -> f.dv).toMap),
+              evolved.json, rewritten.map(f => f.path -> f.dv).toMap),
               at.n))
       }
     }
@@ -1617,9 +1591,7 @@ object LakeLayout {
     * rows keeps its bytes instead of being rewritten verbatim), pinned
     * by LakeSqlSpec's SQL-vs-API parity. Commits under the OCC claim;
     * a lost race recomputes against the new tip (no rebase fast path —
-    * the predicate must re-evaluate against the winner's rows).
-    * Requires file-granular manifests; callers fall back to the
-    * upsert lowering on legacy dir-pointer tables. */
+    * the predicate must re-evaluate against the winner's rows). */
   private[graft] def updateLakeWhereOcc(spark: SparkSession,
       tablePath: String, key: String, pred: Column,
       assigns: Seq[(String, String)], writerId: String, batchId: Long,
@@ -1630,10 +1602,8 @@ object LakeLayout {
         batchId, maxAttempts) { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"updateLakeWhereOcc: $tablePath has no committed version"))
-      require(cur.files.nonEmpty,
-        "updateLakeWhereOcc needs file-granular manifests")
-      val schema = commitSchema(cur)
-      val files = resolveFiles(fs, table, cur)
+      val schema = cur.schema
+      val files = cur.files
       def assignProj(df: DataFrame): Seq[Column] = {
         val byName = assigns.map { case (c, e) => c.toLowerCase -> e }.toMap
         df.schema.fields.toIndexedSeq.map { f =>
@@ -1662,8 +1632,7 @@ object LakeLayout {
       val merged =
         if (rewritten.isEmpty)
           spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            schema.getOrElse(filesFrame(spark, tablePath, files, None).schema))
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         else {
           val base = filesFrame(spark, tablePath, rewritten, schema)
           base.select(assignProj(base): _*)
@@ -1681,10 +1650,9 @@ object LakeLayout {
         .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
       finally releaseRewrite(mat)
       val effTs = carriedTsCluster(cur)
-        .filter(f => schema.forall(_.fieldNames.contains(f)))
       val newFiles = withKeyBlooms(spark, tablePath, dataRel,
         fileStats(spark, tablePath, dataRel, Some(key), effTs),
-        schema.map(_.fieldNames.toSeq).getOrElse(Seq(key)))
+        schema.fieldNames.toSeq)
       Publish(dataRel, writerId, carried ++ newFiles, cur.schemaJson,
         "data", effTs, () => {
           val bytesWritten = bytesOf(fs, table, newFiles)
@@ -1903,11 +1871,8 @@ object LakeLayout {
     val cons = lakeConstraints(spark, tablePath)
     if (cons.nonEmpty) {
       constraintValidations.incrementAndGet()
-      val committed = latestLakeCommit(spark, tablePath)
-        .flatMap(_.schemaJson)
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      val missing = committed.map(_.fields.toSeq).getOrElse(Seq.empty)
+      val missing = latestLakeCommit(spark, tablePath)
+        .map(_.schema.fields.toSeq).getOrElse(Seq.empty)
         .filterNot(f => batch.columns.contains(f.name))
       val aligned = batch.select(batch.columns.map(col).toIndexedSeq ++
         missing.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
@@ -2207,7 +2172,7 @@ object LakeLayout {
           KeyBound.strLeq(lo, s) && KeyBound.strLeq(s, hi)
         case _ => true
       }
-    resolveFiles(fs, table, cur).filter { f =>
+    cur.files.filter { f =>
       val bloom = resolveBloom(fs, table, tablePath, f)
       keys.zip(hashes).exists { case (k, h) =>
         inRange(f, k) && bloom.forall(b => bloomMayContain(b, h))
@@ -2232,9 +2197,8 @@ object LakeLayout {
     val cur = latestLakeCommit(spark, tablePath)
       .getOrElse(throw new IllegalArgumentException(
         s"readLakeMatching: $tablePath has no committed version"))
-    val hit = readLakeMatchingFiles(spark, tablePath, cur, keys, key)
-    if (hit.isEmpty) readLake(spark, tablePath).get.limit(0)
-    else filesFrame(spark, tablePath, hit, commitSchema(cur))
+    filesFrame(spark, tablePath,
+      readLakeMatchingFiles(spark, tablePath, cur, keys, key), cur.schema)
   }
 
   /** [[readLakeMatching]]'s pruned file list — package-private so specs
@@ -2244,9 +2208,8 @@ object LakeLayout {
       key: String): Seq[LakeFile] = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = resolveFiles(fs, table, cur)
-    val touched = touchedFilePaths(spark, files, keys, key)
-    val hit = files.filter(f => touched(f.path))
+    val touched = touchedFilePaths(spark, cur.files, keys, key)
+    val hit = cur.files.filter(f => touched(f.path))
     bloomRefineMatching(spark, tablePath, table, fs, cur, hit, keys, key)
   }
 
@@ -2307,8 +2270,7 @@ object LakeLayout {
     }
     if (decoded.iterator.map(_._2 * 8L).sum > BloomRefineCapBytes)
       return hit
-    val colType = commitSchema(cur)
-      .flatMap(_.fields.find(_.name == key)).map(_.dataType)
+    val colType = cur.schema.fields.find(_.name == key).map(_.dataType)
     val keyStr = colType.fold(col(key))(c => col(key).cast(c))
       .cast("string")
     val joined = keys.select(keyStr.as("__kv")).distinct()
@@ -2341,14 +2303,10 @@ object LakeLayout {
     val cur = latestLakeCommit(spark, tablePath).get
     // hash probe literals through the stored column's type so their
     // string cast agrees with what the bloom builder hashed
-    val colType = commitSchema(cur)
-      .flatMap(_.fields.find(_.name == key)).map(_.dataType)
-    val candidates = lakeFilesForKeys(spark, tablePath, keys, colType)
-    val base =
-      if (candidates.isEmpty)
-        readLake(spark, tablePath).get.limit(0)
-      else filesFrame(spark, tablePath, candidates, commitSchema(cur))
-    base.filter(col(key).isin(keys: _*))
+    val colType = cur.schema.fields.find(_.name == key).map(_.dataType)
+    filesFrame(spark, tablePath,
+      lakeFilesForKeys(spark, tablePath, keys, colType), cur.schema)
+      .filter(col(key).isin(keys: _*))
   }
 
   /** FILE-GRANULAR delete — the removal operation a training-data
@@ -2367,9 +2325,8 @@ object LakeLayout {
     commitLoop(spark, tablePath, "deleteFromLake", None, batchId, 1) { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"deleteFromLake: $tablePath has no committed version"))
-      val files = resolveFiles(fs, table, cur)
-      val touched = touchedFilePaths(spark, files, deletes, key)
-      val (rewritten, carried) = files.partition(f => touched(f.path))
+      val touched = touchedFilePaths(spark, cur.files, deletes, key)
+      val (rewritten, carried) = cur.files.partition(f => touched(f.path))
       val newFiles =
         if (rewritten.isEmpty) Seq.empty
         else {
@@ -2378,7 +2335,7 @@ object LakeLayout {
           // by the rewritten files' exact bytes. Materialized once —
           // the range sampler would otherwise re-run the anti-join.
           val mat = materializedRewrite(
-            filesFrame(spark, tablePath, rewritten, commitSchema(cur))
+            filesFrame(spark, tablePath, rewritten, cur.schema)
               .join(deletes.select(col(key)).distinct(), Seq(key),
                 "left_anti"))
           try mat.repartitionByRange(
@@ -2390,7 +2347,7 @@ object LakeLayout {
           withKeyBlooms(spark, tablePath, at.dataRel,
             fileStats(spark, tablePath, at.dataRel, Some(key),
               carriedTsCluster(cur)),
-            commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key)))
+            cur.schema.fieldNames.toSeq)
         }
       Publish(at.dataRel, checkpoint, carried ++ newFiles, cur.schemaJson,
         "delete", carriedTsCluster(cur), () => {
@@ -2455,9 +2412,6 @@ object LakeLayout {
         dirSuffix = "-dv") { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed version"))
-      require(cur.files.nonEmpty,
-        s"$verb needs file-granular manifests (run a full compaction " +
-          "once to convert a legacy dir-pointer table)")
       val affected = touchedFilePaths(spark, cur.files, deletes, key)
       if (affected.isEmpty) Done(cur.version)
       else {
@@ -2564,17 +2518,9 @@ object LakeLayout {
   private def prunedRange(spark: SparkSession, tablePath: String,
       candidate: LakeFile => Boolean,
       residual: Column): Option[DataFrame] =
-    latestLakeCommit(spark, tablePath).map { c =>
-      val frame =
-        if (c.files.isEmpty)
-          schemaReader(spark, c).parquet(s"$tablePath/${c.dataDir}")
-        else {
-          val hit = c.files.filter(candidate)
-          if (hit.isEmpty) commitFrame(spark, tablePath, c).limit(0)
-          else filesFrame(spark, tablePath, hit, commitSchema(c))
-        }
-      frame.filter(residual)
-    }
+    latestLakeCommit(spark, tablePath).map(c =>
+      filesFrame(spark, tablePath, c.files.filter(candidate), c.schema)
+        .filter(residual))
 
   /** Time travel: the table AS OF a specific committed version (must
     * not have been vacuumed). The version list is the audit surface a
@@ -2590,36 +2536,34 @@ object LakeLayout {
   }
 
   /** TIME TRAVEL by wall clock — the newest committed version whose
-    * manifest landed at or before `tsMillis` on the STORE's clock
-    * (Delta's `TIMESTAMP AS OF`). The manifest's modification time IS
-    * its commit instant: versions publish sequentially through the
-    * atomic claim, so picking the max VERSION among qualifying
-    * manifests is correct even if store timestamps jitter within the
-    * claim order. None when the table has no version that old (born
-    * later) — callers distinguish "didn't exist yet" from "vacuumed"
-    * loudly: a version this returns is live by construction (it was
-    * listed), so the subsequent read can never hit a dangling
-    * pointer. Pass a DRIVER timestamp only if driver and store clocks
+    * commit instant (the store-clock `t` its manifest records) is at
+    * or before `tsMillis` (Delta's `TIMESTAMP AS OF`): versions publish
+    * sequentially through the atomic claim, so picking the max VERSION
+    * among qualifying manifests is correct even if store timestamps
+    * jitter within the claim order. None when the table has no
+    * version that old (born later) — callers distinguish "didn't
+    * exist yet" from "vacuumed" loudly: a version this returns is live
+    * by construction (it was listed), so the subsequent read can never
+    * hit a dangling pointer. Pass a DRIVER timestamp only if driver and store clocks
     * are aligned; audit pipelines should record the store's own
-    * commit mtimes ([[lakeCommitInstants]]) at write time and replay
+    * commit instants ([[lakeCommitInstants]]) at write time and replay
     * those. */
   def lakeVersionAsOf(spark: SparkSession, tablePath: String,
       tsMillis: Long): Option[Long] =
     lakeCommitInstants(spark, tablePath)
-      .filter { case (_, mtime) => mtime <= tsMillis }
+      .filter { case (_, t) => t <= tsMillis }
       .keys.maxOption
 
   /** Every live version's (version → store commit instant) — the audit
     * surface a training pipeline records so a run can later be pinned
     * to the exact wall-clock table state it read. The instant is the
     * one PERSISTED INSIDE the manifest at publish time (read from the
-    * store's own clock — [[storeNowMillis]]); legacy manifests fall
-    * back to the manifest file's mtime. Instants are then MONOTONIZED
-    * over ascending versions (a regressed instant becomes
+    * store's own clock — [[storeNowMillis]]). Instants are then
+    * MONOTONIZED over ascending versions (a regressed instant becomes
     * predecessor + 1 ms — Delta's adjusted-commit-timestamp
-    * semantics): clock jitter between metadata nodes, or a copy tool
-    * that re-stamps some mtimes, can otherwise make AS-OF resolution
-    * serve a version committed AFTER the pinned instant. */
+    * semantics): clock jitter between metadata nodes can otherwise
+    * make AS-OF resolution serve a version committed AFTER the pinned
+    * instant. */
   def lakeCommitInstants(spark: SparkSession,
       tablePath: String): Map[Long, Long] = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
@@ -2638,13 +2582,12 @@ object LakeLayout {
       table: org.apache.hadoop.fs.Path,
       statuses: Seq[(Long, org.apache.hadoop.fs.FileStatus)])
       : Map[Long, Long] = {
-    val raw = statuses.flatMap { case (v, st) =>
+    val raw = statuses.flatMap { case (v, _) =>
       try {
-        val persisted = readRawManifest(fs, table, v) match {
+        Some(v -> (readRawManifest(fs, table, v) match {
           case Right(c) => c.instantMs
           case Left(d) => d.instantMs
-        }
-        Some(v -> persisted.getOrElse(st.getModificationTime))
+        }))
       } catch {
         case _: java.io.FileNotFoundException => None
       }
@@ -2704,9 +2647,7 @@ object LakeLayout {
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", ") +
           "; drop the constraint first to restore deliberately")
     }
-    // dataDir carries the TARGET's dir so a legacy dir-pointer target
-    // (empty file list = "read the dir") restores with the same
-    // semantics it was committed under
+    // the manifest records the TARGET's data dir: a restore writes none
     commitLoop(spark, tablePath, "restoreLake", None, version, 1) { at =>
       Publish(target.dataDir, "restore", target.files, target.schemaJson,
         "restore", target.tsClusterCol, () => at.v)
@@ -2766,8 +2707,8 @@ object LakeLayout {
         s"describeLake: $tablePath has no committed version"))
     try {
       // sizes come from the MANIFEST (recorded at write time) — the
-      // whole DESCRIBE is O(manifest), no per-file stat loop; only
-      // legacy entries without a recorded length fall back to one stat
+      // whole DESCRIBE is O(manifest), no per-file stat loop; only an
+      // entry without a recorded length falls back to one stat
       val sizes = cur.files.map(fileLen(fs, table, _))
       val dvDirs = cur.files.flatMap(_.dv).distinct
       val dvBytes = dvDirs.map(d => fs.getContentSummary(
@@ -2781,19 +2722,15 @@ object LakeLayout {
         cur.files.count(f => f.minKey.isDefined && f.maxKey.isDefined).toLong,
         cur.files.count(f => f.minTs.isDefined && f.maxTs.isDefined).toLong,
         // -1 = not answerable from metadata alone (stat-less or
-        // dv-carrying files would need a scan; lakeRowCount does that).
-        // A modern manifest with ZERO file entries is a committed
-        // empty table — trivially 0 rows; only a legacy dir-pointer
-        // (no file list, no recorded schema) is truly unknown.
-        if (cur.files.isEmpty)
-          (if (cur.schemaJson.isDefined) 0L else -1L)
-        else if (cur.files.forall(f => f.rows.isDefined && f.dv.isEmpty))
+        // dv-carrying files would need a scan; lakeRowCount does that);
+        // an empty table is trivially 0 rows
+        if (cur.files.forall(f => f.rows.isDefined && f.dv.isEmpty))
           cur.files.flatMap(_.rows).sum
         else -1L,
         // the persisted cluster axis — operators check it before
         // relying on two-axis pruning or scheduling OPTIMIZE, so show
-        // the CARRIED view (a dangling legacy axis reads as absent,
-        // matching what every write/maintenance path does)
+        // the CARRIED view (a dangling axis reads as absent, matching
+        // what every write/maintenance path does)
         carriedTsCluster(cur).orNull))
         .toDF("version", "n_versions", "n_files", "total_bytes",
           "min_file_bytes", "max_file_bytes", "n_dv_files", "n_dv_sidecars",
@@ -2802,7 +2739,7 @@ object LakeLayout {
     } catch {
       // TOCTOU next to live maintenance: a concurrent vacuum can
       // retire the just-resolved version between the manifest read and
-      // a legacy/sidecar listing — re-resolve the new latest once
+      // a sidecar listing — re-resolve the new latest once
       // (same retry posture as the OCC paths), then fail loudly
       case _: java.io.FileNotFoundException if retry =>
         describeLakeAttempt(spark, tablePath, retry = false)
@@ -2876,14 +2813,10 @@ object LakeLayout {
       .getOrElse(throw new IllegalArgumentException(
         s"compactLake: $tablePath has no committed version"))
     val df = commitFrame(spark, tablePath, cur)
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val table = new org.apache.hadoop.fs.Path(tablePath)
-    val bytes =
-      if (cur.files.nonEmpty)
-        bytesOf(table.getFileSystem(hadoopConf), table, cur.files)
-      else df.inputFiles
-        .map(f => new org.apache.hadoop.fs.Path(f))
-        .map(p => p.getFileSystem(hadoopConf).getFileStatus(p).getLen).sum
+    val bytes = bytesOf(
+      table.getFileSystem(spark.sessionState.newHadoopConf()), table,
+      cur.files)
     val nFiles = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
     // statsKey: a compacted version's manifest carries tight DISJOINT
     // per-file key ranges (repartitionByRange), the layout that makes
@@ -2981,9 +2914,7 @@ object LakeLayout {
       smallFileMB, targetFileMB, tsCluster, minFiles)
 
   /** The one partial-compaction path behind [[compactLakeSmallFiles]]
-    * and [[compactLakeOcc]] (`writer` as in [[commitLoop]]). A legacy
-    * dir-pointer table converts through a single-writer full
-    * compaction. */
+    * and [[compactLakeOcc]] (`writer` as in [[commitLoop]]). */
   private def compactSmallWith(spark: SparkSession, tablePath: String,
       key: String, writer: Option[String], maxAttempts: Int,
       smallFileMB: Int, targetFileMB: Int, tsCluster: Option[String],
@@ -2997,37 +2928,29 @@ object LakeLayout {
         dirSuffix = writer.fold("")(_ => "-cmp")) { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed version"))
-      if (cur.files.isEmpty) {
-        require(writer.isEmpty, s"$verb needs file-granular manifests (run " +
-          "a single-writer full compaction once to convert a legacy " +
-          "dir-pointer table)")
-        Done(compactLake(spark, tablePath, key, targetFileMB))
-      } else {
-        // the persisted cluster axis kicks in when the caller passes
-        // none — an OPTIMIZE'd table keeps its two-axis layout through
-        // plain maintenance without every scheduler knowing the table's
-        // history
-        val effTs = tsCluster.orElse(carriedTsCluster(cur))
-        val sized = cur.files.map(f => f -> fileLen(fs, table, f))
-        val (small, big) = sized.partition(_._2 < smallFileMB * 1024L * 1024L)
-        if (small.size < 2) Done(cur.version)
-        else {
-          val bytes = small.map(_._2).sum
-          val nFiles = math.max(math.max(1, minFiles),
-            (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-          maintenanceWrite(
-            filesFrame(spark, tablePath, small.map(_._1), commitSchema(cur)),
-            nFiles, key, effTs, s"$tablePath/${at.dataRel}")
-          Publish(at.dataRel,
-            writer.fold(s"compaction-small:${cur.version}")(w =>
-              s"compaction-occ:$w"),
-            big.map(_._1) ++
-              withKeyBlooms(spark, tablePath, at.dataRel,
-                fileStats(spark, tablePath, at.dataRel, Some(key), effTs),
-                commitSchema(cur).map(_.fieldNames.toSeq)
-                  .getOrElse(Seq(key))),
-            cur.schemaJson, "compact", effTs, () => at.v)
-        }
+      // the persisted cluster axis kicks in when the caller passes
+      // none — an OPTIMIZE'd table keeps its two-axis layout through
+      // plain maintenance without every scheduler knowing the table's
+      // history
+      val effTs = tsCluster.orElse(carriedTsCluster(cur))
+      val sized = cur.files.map(f => f -> fileLen(fs, table, f))
+      val (small, big) = sized.partition(_._2 < smallFileMB * 1024L * 1024L)
+      if (small.size < 2) Done(cur.version)
+      else {
+        val bytes = small.map(_._2).sum
+        val nFiles = math.max(math.max(1, minFiles),
+          (bytes / (targetFileMB * 1024L * 1024L)).toInt)
+        maintenanceWrite(
+          filesFrame(spark, tablePath, small.map(_._1), cur.schema),
+          nFiles, key, effTs, s"$tablePath/${at.dataRel}")
+        Publish(at.dataRel,
+          writer.fold(s"compaction-small:${cur.version}")(w =>
+            s"compaction-occ:$w"),
+          big.map(_._1) ++
+            withKeyBlooms(spark, tablePath, at.dataRel,
+              fileStats(spark, tablePath, at.dataRel, Some(key), effTs),
+              cur.schema.fieldNames.toSeq),
+          cur.schemaJson, "compact", effTs, () => at.v)
       }
     }
   }
@@ -3052,8 +2975,6 @@ object LakeLayout {
         maxAttempts, dirSuffix = "-dvm") { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"materializeDvOcc: $tablePath has no committed version"))
-      require(cur.files.nonEmpty,
-        "materializeDvOcc needs file-granular manifests")
       val (vectored, clean) = cur.files.partition(_.dv.isDefined)
       if (vectored.isEmpty) Done(cur.version)
       else {
@@ -3062,14 +2983,13 @@ object LakeLayout {
         val nFiles = math.max(math.max(1, minFiles),
           (bytes / (targetFileMB * 1024L * 1024L)).toInt)
         maintenanceWrite(
-          filesFrame(spark, tablePath, vectored, commitSchema(cur)),
+          filesFrame(spark, tablePath, vectored, cur.schema),
           nFiles, key, effTs, s"$tablePath/${at.dataRel}")
         Publish(at.dataRel, s"dv-materialize:$writerId",
           clean ++
             withKeyBlooms(spark, tablePath, at.dataRel,
               fileStats(spark, tablePath, at.dataRel, Some(key), effTs),
-              commitSchema(cur).map(_.fieldNames.toSeq)
-                .getOrElse(Seq(key))),
+              cur.schema.fieldNames.toSeq),
           cur.schemaJson, "compact", effTs, () => at.v)
       }
     }
@@ -3119,7 +3039,6 @@ object LakeLayout {
     val cur = latestLakeCommit(spark, tablePath)
       .getOrElse(throw new IllegalArgumentException(
         s"maintainLake: $tablePath has no committed version"))
-    require(cur.files.nonEmpty, "maintainLake needs file-granular manifests")
     // the small-file census reads lengths from the MANIFEST — the
     // whole decision pass stays O(manifest) instead of one stat RPC
     // per live file (at the 800 k-file delta-protocol design point
@@ -3256,10 +3175,7 @@ object LakeLayout {
         -1L, maxAttempts, dirSuffix = "-zord") { at =>
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"optimizeLakeZOrderOcc: $tablePath has no committed version"))
-      require(cur.files.nonEmpty,
-        "optimizeLakeZOrderOcc needs file-granular manifests (run a " +
-          "single-writer full compaction once to convert a legacy table)")
-      val df = filesFrame(spark, tablePath, cur.files, commitSchema(cur))
+      val df = filesFrame(spark, tablePath, cur.files, cur.schema)
       dims.foreach { c =>
         import org.apache.spark.sql.types._
         val ok = df.schema(c).dataType match {
@@ -3289,7 +3205,7 @@ object LakeLayout {
         withKeyBlooms(spark, tablePath, at.dataRel,
           fileStats(spark, tablePath, at.dataRel, Some(key), dims.lift(1),
             extraAxes = dims.drop(2)),
-          commitSchema(cur).map(_.fieldNames.toSeq).getOrElse(Seq(key))),
+          cur.schema.fieldNames.toSeq),
         cur.schemaJson, "compact", dims.lift(1), () => at.v)
     }
   }
@@ -3474,12 +3390,9 @@ object LakeLayout {
     val refFiles: Set[String] = kept.flatMap(_.files.map(_.path)).toSet ++
       kept.flatMap(_.files.flatMap(_.bloom))
         .filter(_.startsWith("@")).map(_.drop(1))
-    // legacy dir-pointer manifests reference their whole dir; a live
-    // deletion-vector reference keeps its whole sidecar dir (deleting
-    // a referenced sidecar would RESURRECT its deleted rows)
-    val refDirs: Set[String] =
-      kept.filter(_.files.isEmpty).map(_.dataDir).toSet ++
-        kept.flatMap(_.files.flatMap(_.dv))
+    // a live deletion-vector reference keeps its whole sidecar dir
+    // (deleting a referenced sidecar would RESURRECT its deleted rows)
+    val refDirs: Set[String] = kept.flatMap(_.files.flatMap(_.dv)).toSet
     val dataRoot = new org.apache.hadoop.fs.Path(table, "data")
     if (!fs.exists(dataRoot)) return 0
     val cutoff =
@@ -3797,12 +3710,11 @@ object LakeLayout {
     val cur = latestLakeCommit(spark, srcPath)
       .getOrElse(throw new IllegalArgumentException(
         s"cloneLakeShallow: $srcPath has no committed version"))
-    val files = resolveFiles(fs, src, cur)
     def qualify(rel: String): String =
       fs.makeQualified(lakeFilePath(src, rel)).toString
     // spilled bloom references point into the SOURCE table's data
     // dirs — qualify them like paths/dv so the clone's lookups resolve
-    val absFiles = files.map(f =>
+    val absFiles = cur.files.map(f =>
       f.copy(path = qualify(f.path), dv = f.dv.map(qualify),
         bloom = f.bloom.map(b =>
           if (b.startsWith("@")) "@" + qualify(b.drop(1)) else b)))
@@ -4259,10 +4171,10 @@ object LakeLayout {
     * flag column, then upsert every 7th order carrying a NEW
     * `priority_flag` column (`evolveSchema = true`). The readback
     * groups on the evolved column — rows in files that PREDATE the
-    * column surface it as null (the format:3 schema-in-manifest
-    * null-fill), which is the group the oracle checks alongside the
-    * updated ones. Aggregates stay on integer columns (no
-    * float-sum drift in the hash compare). */
+    * column surface it as null (the schema-in-manifest null-fill),
+    * which is the group the oracle checks alongside the updated ones.
+    * Aggregates stay on integer columns (no float-sum drift in the
+    * hash compare). */
   def qLakeEvolve(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.load(s, dir, "orders")
     val lake = cloneLake(s, stagedOrders(s, dir, 6))

@@ -458,26 +458,10 @@ object LakeSql {
     // per-row CASE rewrite of exactly those files — the generic
     // filter-into-batch upsert lowering read the touched bytes 4×
     // (predicate scan, key touch-set, anti-join, union) for the same
-    // result rows ([[LakeLayout.updateLakeWhereOcc]]). Legacy
-    // dir-pointer tables (no file list) keep the upsert lowering.
-    val r =
-      if (LakeLayout.latestLakeCommit(spark, path).exists(_.files.nonEmpty))
-        LakeLayout.updateLakeWhereOcc(spark, path, key,
-          org.apache.spark.sql.functions.expr(pred), assigns,
-          writerId = "sql", batchId = sqlBatchId.incrementAndGet())
-      else {
-        val byName = assigns.toMap
-        val updated = snap
-          .filter(org.apache.spark.sql.functions.expr(pred))
-          .select(snap.schema.fields.toIndexedSeq.map { f =>
-            byName.get(f.name)
-              .map(e => org.apache.spark.sql.functions.expr(e)
-                .cast(f.dataType).as(f.name))
-              .getOrElse(org.apache.spark.sql.functions.col(f.name))
-          }: _*)
-        LakeLayout.upsertIntoLakeOcc(spark, path, updated, key,
-          writerId = "sql", batchId = sqlBatchId.incrementAndGet())
-      }
+    // result rows ([[LakeLayout.updateLakeWhereOcc]])
+    val r = LakeLayout.updateLakeWhereOcc(spark, path, key,
+      org.apache.spark.sql.functions.expr(pred), assigns,
+      writerId = "sql", batchId = sqlBatchId.incrementAndGet())
     val orig = refreshView(spark, name)
     Seq((orig, r.filesRewritten.toLong, r.version))
       .toDF("table_name", "files_rewritten", "version")

@@ -60,18 +60,14 @@ object CdfStream {
     // consumer a full diff of the compacted bytes for a guaranteed-
     // empty result.
     if (cur.op == "compact" && live.contains(v - 1)) {
-      val tableSchema = cur.schemaJson
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .getOrElse(LakeLayout.readLakeVersion(spark, tablePath, v).schema)
-      // Build the zero-row frame through the same column derivations as
-      // the data paths (lit()-derived _change/_version, both
-      // non-nullable) so the change feed's schema+nullability is
-      // identical for every version op — a consumer unioning or writing
-      // per-version frames under strict schema checks must never see a
-      // compact version differ. Still opens/lists no data files.
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+      // Build the zero-row frame through the same read and column
+      // derivations as the data paths (the table schema as a file read
+      // gives it; lit()-derived _change/_version, both non-nullable) so
+      // the change feed's schema+nullability is identical for every
+      // version op — a consumer unioning or writing per-version frames
+      // under strict schema checks must never see a compact version
+      // differ. Still opens/lists no data files.
+      LakeLayout.filesFrame(spark, tablePath, Seq.empty, cur.schema)
         .withColumn("_change", lit("compact"))
         .withColumn("_version", lit(v))
     } else if (cur.op == "dvdelete" && live.contains(v - 1)) {
@@ -90,13 +86,8 @@ object CdfStream {
       val curByPath = cur.files.map(f => f.path -> f).toMap
       val affectedOld = prev.files.filter(f =>
         curByPath.get(f.path).exists(_.dv != f.dv))
-      val prevSchema = prev.schemaJson
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
       val base =
-        if (affectedOld.isEmpty)
-          LakeLayout.readLakeVersion(spark, tablePath, v - 1).limit(0)
-        else LakeLayout.filesFrame(spark, tablePath, affectedOld, prevSchema)
+        LakeLayout.filesFrame(spark, tablePath, affectedOld, prev.schema)
       val sidecar = spark.read.parquet(s"$tablePath/${cur.dataDir}")
       base.join(broadcast(sidecar.select(col(key)).distinct()),
           Seq(key), "left_semi")

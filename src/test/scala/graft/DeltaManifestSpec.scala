@@ -39,8 +39,8 @@ class DeltaManifestSpec extends SparkSuite {
       base.repartitionByRange(32, $"id").sortWithinPartitions($"id"),
       table, "ck", 0L, statsKey = Some("id"))
     val fullBytes = commits(table)("v" + "0" * 19 + "0.manifest")
-    assert(firstLine(table, "v" + "0" * 19 + "0.manifest") == "format:3",
-      "a first commit has no parent and must be the full (schema-bearing) form")
+    assert(firstLine(table, "v" + "0" * 19 + "0.manifest") == "format:4",
+      "a first commit has no parent and must be the full form")
 
     // one-key upsert: touches exactly one of 32 files
     val r = LakeLayout.upsertIntoLake(spark, table,

@@ -1027,10 +1027,7 @@ class LakeLayoutSpec extends SparkSuite {
     (0 until 3).foreach(b =>
       assert(LakeLayout.lakeHasCommit(spark, table, "wB", b.toLong)))
     def fieldsAt(v: Long): Set[String] =
-      LakeLayout.lakeCommitAt(spark, table, v).schemaJson.map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames.toSet).getOrElse(Set.empty)
+      LakeLayout.lakeCommitAt(spark, table, v).schema.fieldNames.toSet
     val vEvolve = versions.find(v =>
       LakeLayout.lakeCommitAt(spark, table, v).checkpoint == "wE").get
     versions.filter(_ > vEvolve).foreach { v =>
