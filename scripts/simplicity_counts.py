@@ -12,7 +12,14 @@ harness under `perfbench/` and the test scope are not counted). It prints:
 - the `graft.*` keys the main scope reads (Spark conf keys and table
   properties, found as string literals), each with where it is read;
 - the environment variables the main scope reads (`sys.env(...)`,
-  `sys.env.get(...)`, `sys.env.getOrElse(...)`, `System.getenv(...)`).
+  `sys.env.get(...)`, `sys.env.getOrElse(...)`, `System.getenv(...)`);
+- the metadata commit-point sites, each with its location: exclusive
+  creates (`create(..., false)`), hard links (`createLink`), atomic
+  replaces (`Rename.OVERWRITE`), plain renames (`fs.rename(`, which
+  flags a check-then-rename claim when `exists` precedes it on the
+  line) and metadata reads (`Source.fromInputStream`). One claim
+  implementation shows `createLink`, `Rename.OVERWRITE` and
+  `Source.fromInputStream` once each and no `create(..., false)`.
 
 Run it at two commits to price a simplification: LoC should fall while the
 key and variable lists do not grow.
@@ -27,21 +34,39 @@ import sys
 KEY_RE = re.compile(r'"(graft\.[A-Za-z0-9_.]+)"')
 ENV_RE = re.compile(
     r'(?:sys\.env(?:\.get|\.getOrElse)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"')
+# commit-point primitives; a call may close two lines down, so each match is
+# tried on a line joined with its next two and counted where it starts
+_ARG = r'(?:[^()]|\((?:[^()]|\([^()]*\))*\))*'
+COMMIT_RES = {
+    "create(..., false)": re.compile(r'\.create\(' + _ARG + r',\s*false\s*\)'),
+    "createLink": re.compile(r'\bcreateLink\('),
+    "Rename.OVERWRITE": re.compile(r'Rename\.OVERWRITE'),
+    "fs.rename(": re.compile(r'\bfs\.rename\('),
+    "exists && rename": re.compile(r'exists\(.*&&.*\.rename\('),
+    "Source.fromInputStream": re.compile(r'Source\.fromInputStream'),
+}
 
 
 def scan(root):
     files = sorted((root / "src" / "main").rglob("*.scala"))
     loc, keys, env = {}, {}, {}
+    commits = {name: [] for name in COMMIT_RES}
     for f in files:
         rel = str(f.relative_to(root))
         text = f.read_text(encoding="utf-8")
         loc[rel] = text.count("\n") + (0 if text.endswith("\n") or not text else 1)
-        for n, line in enumerate(text.splitlines(), 1):
+        lines = text.splitlines()
+        for n, line in enumerate(lines, 1):
             for k in KEY_RE.findall(line):
                 keys.setdefault(k, []).append(f"{rel}:{n}")
             for v in ENV_RE.findall(line):
                 env.setdefault(v, []).append(f"{rel}:{n}")
-    return loc, keys, env
+            joined = " ".join([line] + [x.strip() for x in lines[n:n + 2]])
+            for name, rx in COMMIT_RES.items():
+                m = rx.search(joined)
+                if m and m.start() < len(line):
+                    commits[name].append(f"{rel}:{n}")
+    return loc, keys, env, commits
 
 
 def main():
@@ -54,11 +79,12 @@ def main():
     root = pathlib.Path(args.root)
     if not (root / "src" / "main").is_dir():
         sys.exit(f"no src/main under {root}")
-    loc, keys, env = scan(root)
+    loc, keys, env, commits = scan(root)
     total = sum(loc.values())
     if args.json:
         print(json.dumps({"main_loc_total": total, "main_loc": loc,
-                          "graft_keys": keys, "env_vars": env}, indent=1))
+                          "graft_keys": keys, "env_vars": env,
+                          "commit_sites": commits}, indent=1))
         return
     print(f"main-scope LoC: {total} in {len(loc)} files")
     for rel, n in sorted(loc.items(), key=lambda kv: (-kv[1], kv[0])):
@@ -69,6 +95,9 @@ def main():
     print(f"environment variables read: {len(env)}")
     for v in sorted(env):
         print(f"  {v}  ({', '.join(env[v])})")
+    print("metadata commit-point sites:")
+    for name, sites in commits.items():
+        print(f"  {name}: {len(sites)}" + (f"  ({', '.join(sites)})" if sites else ""))
 
 
 if __name__ == "__main__":

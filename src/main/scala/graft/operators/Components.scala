@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,19 +20,15 @@ import org.apache.spark.sql.functions._
   *
   * Materialization discipline (the round-7 28 s → ~9 s fix): each
   * sweep's min-aggregate frame `m` AND its jumped output are
-  * snapshotted to tiny parquet writes and read back — without a
-  * materialization boundary on `m`, the pointer-jump self-join plus
-  * the snapshot job recomputed the whole sweep chain 4-6×, and a
-  * `.cache()` boundary (tried first) pinned the aggregate's full
-  * shuffle-partition fan-out because cached-plan materialization skips
-  * AQE partition coalescing. Parquet snapshots (a) truncate lineage
-  * like `checkpoint` but with a single job instead of checkpoint's
-  * count+write pair, and (b) give this code ownership of the files:
-  * each snapshot is deleted as soon as it is superseded, so a bench
-  * loop never accumulates per-iteration disk garbage (round-7 left
-  * every checkpoint on disk for the JVM's lifetime). Convergence is
-  * checked after EVERY sweep — the round-7 two-sweep batch paid one
-  * full extra sweep after the fixpoint.
+  * snapshotted — without a materialization boundary on `m`, the
+  * pointer-jump self-join plus the snapshot job recomputed the whole
+  * sweep chain 4-6×, and a `.cache()` boundary (tried first) pinned
+  * the aggregate's full shuffle-partition fan-out because cached-plan
+  * materialization skips AQE partition coalescing. A snapshot is a
+  * `localCheckpoint` (one job, lineage truncated), released as soon as
+  * it is superseded, so a bench loop never accumulates per-iteration
+  * storage. Convergence is checked after EVERY sweep — the round-7
+  * two-sweep batch paid one full extra sweep after the fixpoint.
   *
   * Scale notes (100 TB posture):
   *  - The graph is the PAIR set (∝ near-dup volume), not the corpus —
@@ -44,49 +39,35 @@ import org.apache.spark.sql.functions._
   *  - Convergence is detected distributively: labels are non-increasing
   *    per node, so an unchanged DECIMAL label sum (overflow-safe for
   *    arbitrary long ids) IS the fixpoint; the sum rides the snapshot
-  *    WRITE job as a `Dataset.observe` metric, so convergence costs
-  *    zero extra jobs per sweep, and nothing proportional to the
-  *    corpus ever reaches the driver.
-  *  - Snapshots live under the session checkpoint dir when one is set
-  *    (shared storage on a real cluster); the local-temp fallback is
-  *    refused off local[*] masters, same rule as GraphTraversal.bfs.
+  *    job as a `Dataset.observe` metric, so convergence costs zero
+  *    extra jobs per sweep, and nothing proportional to the corpus
+  *    ever reaches the driver.
   */
 object Components {
 
-  /** Snapshot a (small) frame to flat parquet and read it back — the
+  /** Truncate a (small) frame's plan with a local checkpoint — the
     * plan-materialization boundary used before handing a frame to an
     * operator that references it several times or inside a loop. A
     * `.cache()` keeps the DATA but every downstream action still
     * re-analyzes/re-optimizes (and for multi-reference plans,
-    * re-executes) the frame's whole logical subtree; the parquet
-    * round-trip makes every consumer start from a leaf scan (measured
-    * on this drive: the md5+window label build and the LSH∪SimHash
+    * re-executes) the frame's whole logical subtree; the checkpoint
+    * makes every consumer start from a leaf scan (measured on this
+    * drive: the md5+window label build and the LSH∪SimHash
     * pair-generation each ran 3-5× per action without the boundary).
     * `parts = 1` is right for the batch/label frames this serves —
-    * hundreds of rows; one file means one task per downstream scan. */
-  private[graft] def snapshotFlat(df: DataFrame, tag: String,
-      parts: Int = 1): DataFrame = {
-    val s = df.sparkSession
-    // same strategy switch as the CC sweep loop (measured r22):
-    // localCheckpoint truncates the plan identically without the
-    // filesystem round trip; `graft.cc.materialize=parquet` restores
-    // the shared-storage snapshot for fault-tolerance-critical runs
-    if (!s.conf.getOption("graft.cc.materialize").contains("parquet"))
-      return df.coalesce(parts).localCheckpoint(true)
-    val sc = s.sparkContext
-    val root = sc.getCheckpointDir.getOrElse {
-      require(sc.master.startsWith("local"),
-        "snapshotFlat needs sparkContext.setCheckpointDir pointing at " +
-          "shared storage (HDFS/S3) on a non-local master")
-      java.nio.file.Files.createTempDirectory("graft-snap").toString
+    * hundreds of rows; one partition means one task per downstream
+    * scan. */
+  private[graft] def snapshotFlat(df: DataFrame, parts: Int = 1): DataFrame =
+    df.coalesce(parts).localCheckpoint(true)
+
+  /** Unpersist a [[snapshotFlat]] frame's block-manager RDD now — a loop
+    * must not leave superseded snapshots pinned until some later GC. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ =>
     }
-    val p = s"$root/snap-$tag-${java.util.UUID.randomUUID().toString.take(12)}"
-    val fs = new Path(p).getFileSystem(sc.hadoopConfiguration)
-    // backs the returned lazy frame — reclaimed at JVM exit
-    fs.deleteOnExit(new Path(p))
-    df.coalesce(parts).write.mode("overwrite").parquet(p)
-    s.read.parquet(p)
-  }
 
   /** Min-label connected components over an undirected pair list.
     *
@@ -101,88 +82,35 @@ object Components {
     * materialization change can never silently alter the algorithm. */
   def connectedComponentsWithStats(pairs: DataFrame, maxSweeps: Int = 25)
       : (DataFrame, Int) = {
-    val s = pairs.sparkSession
-    val sc = s.sparkContext
-    // snapshot root: the session checkpoint dir if the caller set one
-    // (shared storage on a real cluster), else a self-installed local
-    // temp dir — refused off local[*], where executor-local /tmp would
-    // strand the files
-    val root = sc.getCheckpointDir.getOrElse {
-      require(sc.master.startsWith("local"),
-        "connectedComponents needs sparkContext.setCheckpointDir pointing " +
-          "at shared storage (HDFS/S3) on a non-local master")
-      java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    }
-    val runDir = s"$root/cc-${java.util.UUID.randomUUID().toString.take(12)}"
-    val fs = new Path(runDir).getFileSystem(sc.hadoopConfiguration)
-    // the FINAL snapshot backs the returned (lazy) DataFrame, so it can
-    // only be reclaimed at JVM exit; everything else is deleted eagerly
-    // inside the loop
-    fs.deleteOnExit(new Path(runDir))
+    val sc = pairs.sparkSession.sparkContext
     // label frames are tiny next to the shuffle partitioning that
     // produces them; narrow-coalesce before each snapshot
     val par = math.max(2, sc.defaultParallelism / 4)
-    // Materialization strategy (re-measured r22, superseding the r14
-    // parquet choice): `localCheckpoint` keeps each sweep's frame in
-    // the block manager — same lineage truncation, no filesystem
-    // round-trip — and benches 12% faster across the CC drives at
-    // sf0.1. Trade-off: locally-checkpointed partitions die with
-    // their executor, so a run that must survive executor loss (a
-    // multi-hour 100 TB sweep on a flaky fleet) should set
-    // `graft.cc.materialize=parquet` to keep the shared-storage
-    // snapshots; the default favors the common case where re-running
-    // the query on executor loss is acceptable (the loop is minutes,
-    // not hours — sweeps are O(log diameter)).
-    val useLocalCkpt =
-      s.conf.getOption("graft.cc.materialize").getOrElse("localckpt") match {
-        case "localckpt" => true
-        case "parquet" => false
-        case other => throw new IllegalArgumentException(
-          s"graft.cc.materialize must be localckpt|parquet, got '$other'")
-      }
-    // superseded-materialization release, the same discipline for both
-    // strategies: parquet snapshots are deleted eagerly (a bench loop
-    // must not accumulate per-iteration disk garbage — round 7) and
-    // locally-checkpointed frames unpersist their block-manager RDD
-    // eagerly (ContextCleaner would only reclaim them at some later
-    // GC; a loop must not accumulate pinned storage either).
+    // Materialization (measured r22): `localCheckpoint` keeps each
+    // sweep's frame in the block manager — the lineage truncation of a
+    // parquet snapshot without its filesystem round trip, 12% faster
+    // across the CC drives at sf0.1. Locally
+    // checkpointed partitions die with their executor; re-running the
+    // query is the recovery (the loop is minutes, not hours — sweeps
+    // are O(log diameter)). Superseded frames unpersist their
+    // block-manager RDD eagerly: ContextCleaner would only reclaim them
+    // at some later GC, and a loop must not accumulate pinned storage.
     val live = scala.collection.mutable.Map.empty[String, DataFrame]
-    def release(name: String): Unit = live.remove(name).foreach { df =>
-      if (useLocalCkpt) df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-      else fs.delete(new Path(s"$runDir/$name"), true)
-    }
+    def release(name: String): Unit = live.remove(name).foreach(releaseCheckpoint)
     def snapshot(df: DataFrame, name: String): DataFrame = {
-      val p = s"$runDir/$name"
-      val out =
-        if (useLocalCkpt) df.coalesce(par).localCheckpoint(true)
-        else {
-          df.coalesce(par).write.mode("overwrite").parquet(p)
-          s.read.parquet(p)
-        }
+      val out = snapshotFlat(df, par)
       live(name) = out
       out
     }
-    // The convergence label-sum rides the snapshot WRITE job as an
-    // observed metric instead of running as its own action — one job
-    // per sweep instead of two (the top cost of this operator is
-    // per-sweep scheduler constant, not data; measured round 8).
+    // The convergence label-sum rides the snapshot job as an observed
+    // metric instead of running as its own action — one job per sweep
+    // instead of two (the top cost of this operator is per-sweep
+    // scheduler constant, not data; measured round 8).
     def snapshotWithSum(df: DataFrame, name: String)
         : (DataFrame, java.math.BigDecimal) = {
-      val p = s"$runDir/$name"
       val obs = org.apache.spark.sql.Observation(s"graft-cc-$name")
-      val observed = df.observe(obs,
-        sum(col("label").cast("decimal(38,0)")).as("lsum"))
-      val out =
-        if (useLocalCkpt) observed.coalesce(par).localCheckpoint(true)
-        else {
-          observed.coalesce(par).write.mode("overwrite").parquet(p)
-          s.read.parquet(p)
-        }
-      live(name) = out
+      val out = snapshot(df.observe(obs,
+        sum(col("label").cast("decimal(38,0)")).as("lsum")), name)
       val v = obs.get("lsum")
       val sumV =
         if (v == null) java.math.BigDecimal.ZERO // empty frame
@@ -198,8 +126,8 @@ object Components {
     // it on every job even though the DATA is cached. Measured on the
     // incremental-components drive: 4.3 s/sweep with a cache on a
     // 280-edge graph, 1.3 s/sweep against a flat parquet scan. The
-    // snapshot pays one write job and makes every sweep's plan start
-    // from a leaf. The edge-count observation rides that write (r21):
+    // snapshot pays one job and makes every sweep's plan start from a
+    // leaf. The edge-count observation rides that job (r21):
     // the empty-graph short-circuit used to be its own `isEmpty` job.
     val edgesObs = org.apache.spark.sql.Observation("graft-cc-edges")
     val edges = snapshot(
@@ -211,8 +139,7 @@ object Components {
     locally {
       // sweep-0 labels = node ids; cached, not snapshotted — it is read
       // twice inside sweep 1's plan, and a cache serves those for one
-      // distinct's cost without the parquet write+read round-trip a
-      // snapshot would add
+      // distinct's cost without the extra job a snapshot would add
       var labels = edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
         .cache()
@@ -226,7 +153,7 @@ object Components {
       // 1 strictly decreases the sum (some edge's larger endpoint takes
       // its neighbor's smaller label), so convergence can never trigger
       // before the sweep-2 vs sweep-1 comparison — the first sum rides
-      // sweep 1's snapshot write like every later one.
+      // sweep 1's snapshot like every later one.
       //
       // Convergence is checked on the PROP aggregate `m` (r21), one
       // half-sweep earlier than the post-jump frame it used to wait
@@ -235,7 +162,7 @@ object Components {
       // its fixpoint ⟺ labels are constant per component (min included)
       // — and then the pointer jump is the IDENTITY, so skipping it
       // returns identical data while saving the final sweep's join +
-      // snapshot write+read. Sweep counts are unchanged (the old
+      // snapshot. Sweep counts are unchanged (the old
       // post-jump detection fired at the same sweep index: labels ≥ m ≥
       // jumped forces m == labels whenever jumped == labels).
       var prevSum: Option[java.math.BigDecimal] = None
@@ -250,7 +177,7 @@ object Components {
         // frame and would otherwise recompute it, and a .cache() here
         // pins the aggregate's full shuffle-partition fan-out (cached
         // plan materialization skips AQE partition coalescing) — the
-        // tiny parquet round-trip keeps every stage AQE-coalesced.
+        // checkpoint keeps every stage AQE-coalesced.
         // (Fusing m into the jump plan — one 4-stage job per sweep
         // instead of two small jobs — was measured 1.3-1.6 s/query
         // SLOWER at sf0.1 and rejected: the wide job's stage barriers
@@ -259,7 +186,7 @@ object Components {
           labels.union(prop)
             .groupBy(col("node")).agg(min(col("label")).as("label")),
           s"m_$sweep")
-        // no-op after sweep 1 (parquet-backed frames hold no cache);
+        // no-op after sweep 1 (checkpointed frames hold no cache);
         // releases the sweep-0 label cache once it is superseded
         labels.unpersist(blocking = false)
         if (prevSum.exists(_.compareTo(mSum) == 0)) {
@@ -288,13 +215,13 @@ object Components {
         s"connectedComponents did not converge within $maxSweeps sweeps " +
           "(propagation + pointer jump each) — raise maxSweeps")
       // empty-graph path only: the loop never superseded the cached
-      // sweep-0 frame (after any sweep, labels is parquet-backed and
-      // this is a no-op)
+      // sweep-0 frame (after any sweep, labels is checkpointed and this
+      // is a no-op)
       labels.unpersist(blocking = false)
       // after ≥1 sweep the returned frame reads only its own snapshot —
       // the edge snapshot is garbage; on the empty-graph path (sweep 0)
       // the returned frame still derives from it, so it must survive
-      // (deleteOnExit / GC-time cleaning reclaims it at JVM exit)
+      // (ContextCleaner reclaims it once the frame is unreferenced)
       if (sweep > 0) release("edges")
       (labels.select(col("node").as("doc_id"), col("label").as("component")),
         sweep)
@@ -373,15 +300,13 @@ object Components {
       fp.withColumn("component",
           min($"doc_id").over(org.apache.spark.sql.expressions.Window
             .partitionBy($"fp")))
-        .select($"doc_id", $"component"),
-      "inc-labels")
+        .select($"doc_id", $"component"))
     // same boundary for the batch: the LSH∪SimHash pair-generation plan
     // (12 md5 variants inlined) is referenced by the touched-node union
     // (twice) and the re-sweep edge build — one execution, three scans.
     val batch = snapshotFlat(
       Dedup.dMinhashLsh(s, dir).select($"i", $"j")
-        .union(Dedup.dSimhashPairs(s, dir).select($"i", $"j")).distinct(),
-      "inc-batch")
+        .union(Dedup.dSimhashPairs(s, dir).select($"i", $"j")).distinct())
     val merged = incrementalComponents(labels, batch)
     // csize via a window, not groupBy+self-join: the join form evaluates
     // the merged plan (labels + pair-generation subtrees) TWICE per

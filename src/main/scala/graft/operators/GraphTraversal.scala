@@ -259,10 +259,10 @@ object GraphTraversal {
     *    that is the caller contract for undirected graphs; a DIRECTED
     *    graph with inflow-less or dangling nodes needs a
     *    node-preserving variant;
-    *  - the frame is SNAPSHOTTED to a tiny parquet every few
-    *    iterations (the [[Components]] pattern — one write job, read
-    *    back flat, superseded snapshots deleted eagerly) so AQE never
-    *    re-optimizes an unbounded tree.
+    *  - the frame is SNAPSHOTTED (a local checkpoint) every few
+    *    iterations (the [[Components]] pattern — one job, superseded
+    *    snapshots released eagerly) so AQE never re-optimizes an
+    *    unbounded tree.
     * The teleport term is a driver literal from ONE bounded count —
     * the only scalar that leaves the cluster.
     *
@@ -280,68 +280,26 @@ object GraphTraversal {
     *    graphs must add the dangling-mass term and a node-preserving
     *    outer join. */
   def pageRank(edges: DataFrame, iters: Int = PageRankIters): DataFrame = {
-    val s = edges.sparkSession
-    val sc = s.sparkContext
-    val root = sc.getCheckpointDir.getOrElse {
-      require(sc.master.startsWith("local"),
-        "pageRank needs sparkContext.setCheckpointDir pointing at shared " +
-          "storage (HDFS/S3) on a non-local master")
-      java.nio.file.Files.createTempDirectory("graft-pr-ckpt").toString
-    }
-    val runDir = s"$root/pr-${java.util.UUID.randomUUID().toString.take(12)}"
-    val fs = new org.apache.hadoop.fs.Path(runDir)
-      .getFileSystem(sc.hadoopConfiguration)
-    fs.deleteOnExit(new org.apache.hadoop.fs.Path(runDir))
-    val par = math.max(2, sc.defaultParallelism / 4)
-    // same materialization switch as Components (measured r22):
-    // localCheckpoint truncates iteration lineage without the parquet
-    // round trip; graft.cc.materialize=parquet restores shared-storage
-    // snapshots for executor-loss-tolerant runs
-    val useLocalCkpt =
-      !s.conf.getOption("graft.cc.materialize").contains("parquet")
-    val live = scala.collection.mutable.Map.empty[String, DataFrame]
-    def release(name: String): Unit = live.remove(name).foreach { df =>
-      if (useLocalCkpt) df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-      else fs.delete(new org.apache.hadoop.fs.Path(s"$runDir/$name"), true)
-    }
-    def snapTo(df: DataFrame, name: String): DataFrame = {
-      val out =
-        if (useLocalCkpt) df.coalesce(par).localCheckpoint(true)
-        else {
-          df.coalesce(par).write.mode("overwrite").parquet(s"$runDir/$name")
-          s.read.parquet(s"$runDir/$name")
-        }
-      live(name) = out
-      out
-    }
-    var lastSnap = -1
-    def snapshot(df: DataFrame, k: Int): DataFrame = {
-      val out = snapTo(df, s"iter_$k")
-      if (lastSnap >= 0) release(s"iter_$lastSnap")
-      lastSnap = k
-      out
-    }
+    val par = math.max(2, edges.sparkSession.sparkContext.defaultParallelism / 4)
+    // the Components materialization (measured r22): a local checkpoint
+    // truncates iteration lineage without a parquet round trip
+    def snap(df: DataFrame) = Components.snapshotFlat(df, par)
     // SNAPSHOTTED, not cached (the Components lesson, measured there at
     // 4.3 vs 1.3 s/sweep): a cache holds the DATA but every iteration's
     // plan still embeds and re-optimizes the whole edge-build subtree
     // (for the co-purchase caller: a lineitem self-join + aggregate).
-    // Two flat parquet leaves make each iteration's plan start from a
-    // scan; both dirs are deleted as soon as the loop no longer reads
-    // them.
-    val e = snapTo(edges.select(col("src"), col("dst")), "edges")
-    val eo = snapTo(
-      e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"),
-      "eo")
+    // Two checkpointed leaves make each iteration's plan start from a
+    // scan; both are released as soon as the loop no longer reads them.
+    val e = snap(edges.select(col("src"), col("dst")))
+    val eo = snap(
+      e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"))
     // src covers every node of a bidirectional edge list
     val n = e.select(col("src")).distinct().count()
     require(n > 0, "pageRank needs a non-empty graph")
     val teleport = (3L * PageRankScale) / (20L * n)
     var ranks: DataFrame = e.select(col("src").as("node")).distinct()
       .withColumn("rank_fp", lit(PageRankScale / n))
+    var lastSnap: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val next = eo
         .join(ranks.select(col("node").as("src"), col("rank_fp")), "src")
@@ -351,12 +309,19 @@ object GraphTraversal {
         .agg(sum(col("c")).as("inflow"))
         .select(col("node"),
           expr(s"${teleport}L + (17 * inflow) div 20").as("rank_fp"))
-      ranks = if (i % 3 == 0 || i == iters) snapshot(next, i) else next
+      ranks =
+        if (i % 3 != 0 && i != iters) next
+        else {
+          val out = snap(next)
+          lastSnap.foreach(Components.releaseCheckpoint)
+          lastSnap = Some(out)
+          out
+        }
     }
     if (iters >= 1) {
-      // the final ranks frame reads only its own iter_N snapshot
-      release("edges")
-      release("eo")
+      // the final ranks frame reads only its own snapshot
+      Components.releaseCheckpoint(e)
+      Components.releaseCheckpoint(eo)
     }
     ranks
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import graft.sources.Tables
+import graft.sources.{MetaFiles, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *   <indexPath>/_gen/<N>                          (atomic commit claim)
   *
   * Each generation may additionally carry versioned SIDECARS, all on
-  * one marker codec ([[SidecarMarker]]: dirs named inside an
-  * exclusive-created marker `<kind>/<n>`, one grace version, each kind
+  * one marker codec ([[SidecarMarker]]: dirs named inside a marker
+  * `<kind>/<n>` published last, one grace version, each kind
   * deciding what a lost race means): PQ codes+books (`_pq`), SQ8 codes
   * (`_sq8`), per-(cell, label) counts (`_lstats`) and TOMBSTONES
   * (`_tomb` — versioned (vec_id, tomb_v) delete/update events every
@@ -33,17 +33,23 @@ import org.apache.spark.sql.functions._
   * ([[Similarity.ivfCentroids]]'s fixed-point means), so rebuilding the
   * index on the same corpus yields byte-identical assignments.
   *
-  * GENERATIONS are what make [[rebuild]] atomic — the SAME
-  * exclusive-create commit point as [[graft.sources.LakeLayout]]'s
-  * manifest claim, so two overlapping maintainers are mutually
-  * excluded BY CONSTRUCTION, not by detection. A generation is staged
-  * into a writer-tagged hidden dir (`.g<N>-stage-<tag>`), renamed
-  * whole into the equally writer-tagged `g<N>-<tag>` (tag-unique —
-  * renames can never contend), and committed by ONE atomic
-  * exclusive CREATE of the claim file `_gen/<N>` whose content names
-  * the winning dir. Generation numbers are strictly sequential
+  * COMMIT POINTS: the generation claim `_gen/<N>` and every sidecar
+  * marker publish through [[graft.sources.MetaFiles.putIfAbsent]] —
+  * the one claim primitive [[graft.sources.LakeLayout]]'s manifests
+  * use: content first, then one atomic claim, so no claim or marker
+  * is ever partial; only "the name is taken" is a lost race, and any
+  * other I/O error propagates. The `_lakesync` marks are replaced
+  * atomically ([[graft.sources.MetaFiles.replace]]).
+  *
+  * GENERATIONS are what make [[rebuild]] atomic: two overlapping
+  * maintainers are mutually excluded BY CONSTRUCTION, not by
+  * detection. A generation is staged into a writer-tagged hidden dir
+  * (`.g<N>-stage-<tag>`), renamed whole into the equally writer-tagged
+  * `g<N>-<tag>` (tag-unique — renames can never contend), and
+  * committed by ONE claim of `_gen/<N>`, whose content names the
+  * winning dir. Generation numbers are strictly sequential
   * (`N = live + 1`, derived from the claim log, never from dirs), so
-  * that single create is simultaneously the mutual-exclusion point
+  * that single claim is simultaneously the mutual-exclusion point
   * (two maintainers that derived from the same live generation race
   * for the same claim name — exactly one can ever win) and the
   * staleness pin (a maintainer whose source generation moved finds
@@ -203,35 +209,23 @@ object IvfIndex {
   private def claimGen(name: String): Option[Long] =
     if (name.forall(_.isDigit) && name.nonEmpty) Some(name.toLong) else None
 
-  /** List the claim log: (gen → claimed dir name). A claim is created
-    * AFTER its dir's rename completes, so every listed claim names a
-    * complete generation dir (reclamation deletes a claim BEFORE its
-    * dir, preserving the invariant from the other side). Two transient
-    * states a concurrent maintainer can expose are tolerated, not
-    * errors: a claim CREATED but not yet written reads as empty
-    * content (not-yet-committed — skip it; the writer's close makes it
-    * visible atomically enough for the next listing), and a claim
-    * reclaimed between listStatus and open raises FileNotFound (the
-    * generation is gone — skip it). Resolving either as a live claim
-    * would point a reader at `$indexPath/` itself or at a deleted
-    * dir. */
+  /** List the claim log: (gen → claimed dir name). A claim is
+    * published AFTER its dir's rename completes, so every listed claim
+    * names a complete generation dir (reclamation deletes a claim
+    * BEFORE its dir, preserving the invariant from the other side). A
+    * claim reclaimed between listStatus and the read is skipped (the
+    * generation is gone), and so is an empty one: a claim is written
+    * content first and never reads empty, but resolving one would
+    * point a reader at `$indexPath/` itself. */
   private def listClaims(fs: org.apache.hadoop.fs.FileSystem,
       indexPath: String): Map[Long, String] = {
     val d = claimsDir(indexPath)
     if (!fs.exists(d)) Map.empty
     else fs.listStatus(d).iterator
       .filter(_.isFile)
-      .flatMap(st => claimGen(st.getPath.getName).flatMap { g =>
-        try {
-          val in = fs.open(st.getPath)
-          val dir =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (dir.isEmpty) None else Some(g -> dir)
-        } catch {
-          case _: java.io.FileNotFoundException => None
-        }
-      })
+      .flatMap(st => claimGen(st.getPath.getName).flatMap(g =>
+        MetaFiles.readText(fs, st.getPath).map(_.trim).filter(_.nonEmpty)
+          .map(g -> _)))
       .toMap
   }
 
@@ -264,16 +258,17 @@ object IvfIndex {
 
   /** Commit a fully-staged generation `gen` BY CONSTRUCTION: rename
     * the writer-tagged staging into the equally writer-tagged final
-    * dir (tag-unique — never contended), then atomically
-    * exclusive-create the claim file `_gen/<gen>` naming it. The
-    * claim is the single commit point: of two maintainers that both
-    * derived from generation `gen − 1`, exactly one create can
-    * succeed — mutual exclusion AND staleness detection in one atomic
-    * op (a maintainer whose source moved targets an already-claimed
-    * number). The loser deletes its own dir and fails loudly; the
-    * winner's files are never touched. A crash between rename and
-    * claim leaves an orphan dir no reader resolves and consumes no
-    * generation number. After the claim: reclaim generations older
+    * dir (tag-unique — never contended), then claim `_gen/<gen>`
+    * naming it ([[MetaFiles.putIfAbsent]]). The claim is the single
+    * commit point: of two maintainers that both derived from
+    * generation `gen − 1`, exactly one claim can succeed — mutual
+    * exclusion AND staleness detection in one atomic op (a maintainer
+    * whose source moved targets an already-claimed number). The loser
+    * deletes its own dir and fails loudly; the winner's files are
+    * never touched. An I/O error at the claim propagates; like a crash
+    * between rename and claim, it leaves an orphan dir no reader
+    * resolves, consumes no generation number, and a later publish
+    * sweeps it. After the claim: reclaim generations older
     * than the grace (previous live) generation and stale stagings
     * BELOW `gen`. */
   private def publishGen(s: SparkSession, indexPath: String, gen: Long,
@@ -287,20 +282,11 @@ object IvfIndex {
       throw new IllegalStateException(
         s"ivf publish: rename of ${stage.getName} to $destName failed " +
           s"under $indexPath — staging left in place for inspection")
-    fs.mkdirs(claimsDir(indexPath))
     val claim = new org.apache.hadoop.fs.Path(claimsDir(indexPath),
       gen.toString)
-    val claimed =
-      try {
-        val out = fs.create(claim, false) // exclusive — the commit point
-        try out.write(destName.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        true
-      } catch {
-        case _: java.io.IOException | _: org.apache.hadoop.fs
-          .FileAlreadyExistsException => false
-      }
+    // the commit point; an I/O error propagates with the dir in place
+    val claimed = MetaFiles.putIfAbsent(fs, claim,
+      destName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     if (!claimed) {
       fs.delete(dest, true)
       throw new IllegalStateException(
@@ -312,11 +298,11 @@ object IvfIndex {
     }
     // staleness backstop: a rebuild stale by 2+ generations can find
     // its target claim number already RECLAIMED (publishGen deletes
-    // claims < gen − 1) and win the exclusive create for a long-dead
-    // number — resolveLive (max claim) would never serve it, a
-    // silently lost rebuild. The claim create is still the atomic
-    // point; this check only turns that silent loss into the loud
-    // abort the commit-by-construction contract promises.
+    // claims < gen − 1) and win the claim for a long-dead number —
+    // resolveLive (max claim) would never serve it, a silently lost
+    // rebuild. The claim is still the atomic point; this check only
+    // turns that silent loss into the loud abort the
+    // commit-by-construction contract promises.
     val maxClaim = listClaims(fs, indexPath).keys.foldLeft(gen)(math.max)
     if (maxClaim > gen) {
       fs.delete(claim, false)
@@ -472,18 +458,13 @@ object IvfIndex {
 
   private def readSource(fs: org.apache.hadoop.fs.FileSystem,
       genDir: org.apache.hadoop.fs.Path): Option[(String, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(genDir, "_SOURCE")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = text.linesIterator.toSeq
-      lines.collectFirst { case l if l.startsWith("src ") => l.drop(4) }
-        .map(_ -> lines.collect { case l if l.startsWith("f ") => l.drop(2) }
-          .toSet)
-    }
+    MetaFiles.readText(fs, new org.apache.hadoop.fs.Path(genDir, "_SOURCE"))
+      .flatMap { text =>
+        val lines = text.linesIterator.toSeq
+        lines.collectFirst { case l if l.startsWith("src ") => l.drop(4) }
+          .map(_ -> lines.collect { case l if l.startsWith("f ") => l.drop(2) }
+            .toSet)
+      }
   }
 
   private val LsyncFileName = "lsync-([0-9a-f]+)-v(\\d+)-.*".r
@@ -703,11 +684,7 @@ object IvfIndex {
           val v = st.getPath.getName.drop(srcTag.length + 1)
           if (v.isEmpty || !v.forall(_.isDigit)) None
           else {
-            val in = fs.open(st.getPath)
-            val body =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            body.linesIterator
+            MetaFiles.readText(fs, st.getPath).getOrElse("").linesIterator
               .collectFirst { case l if l.startsWith("src ") => l.drop(4) }
               .foreach(src => require(src == lakePath,
                 s"syncFromLake: mark ${st.getPath.getName} under " +
@@ -809,13 +786,9 @@ object IvfIndex {
         }
       fs.delete(stage, true)
       // the mark is the commit point — written only after every file
-      // of the wave is in place
-      fs.mkdirs(markDir)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(markDir, s"$srcTag-$v"), true)
-      try out.write(s"src $lakePath\nv $v\n".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      // of the wave is in place, content first (a redo replaces it)
+      MetaFiles.replace(fs, new org.apache.hadoop.fs.Path(markDir, s"$srcTag-$v"),
+        s"src $lakePath\nv $v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       afterMark(v)
       // post-mark arbitration: a cutover DURING this version can have
       // reclaimed the generation the wave landed in before any sweep
@@ -1281,7 +1254,7 @@ object IvfIndex {
     *    as-is and only event-touched ids plus rows the old sidecar
     *    never encoded (its raw tail, this compaction's fold-ins)
     *    re-encode — O(events + tail) encode work, never O(corpus);
-    *  - the cutover is the SAME staged-dir + exclusive claim publish
+    *  - the cutover is the SAME staged-dir + claim publish
     *    as rebuild (fold-in diff rounds for racing appends, `_SOURCE`
     *    manifest, grace generation, loud lost-race), and the new
     *    generation publishes with NO tombstone sidecar — including
@@ -1553,7 +1526,7 @@ object IvfIndex {
   // ------------------------------------------------ sidecar markers
   /** One committed version `n` of a generation's versioned sidecar
     * (`_pq`, `_sq8`, `_tomb`, `_lstats` under its root): the marker
-    * file `<root>/<kind>/<n>`, exclusive-created LAST, whose `d` line
+    * file `<root>/<kind>/<n>`, published LAST, whose `d` line
     * names the version's dirs under the root and whose `f` lines (codes
     * and label stats) record the vector-file snapshot it covers.
     * `dirs` are resolved against the root. */
@@ -1571,22 +1544,18 @@ object IvfIndex {
       .flatMap(st => claimGen(st.getPath.getName)).toSet
   }
 
-  /** Marker `n` of `kind`; None when absent or not yet written. */
+  /** Marker `n` of `kind`; None when absent. */
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem, root: String,
       kind: String, n: Long): Option[SidecarMarker] = {
-    val p = new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          .linesIterator.toSeq
-        finally in.close()
-      lines.collectFirst { case l if l.startsWith("d ") =>
-        SidecarMarker(n, l.drop(2).trim.split(" ").toSeq.map(d => s"$root/$d"),
-          lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
+    MetaFiles.readText(fs,
+        new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString))
+      .flatMap { text =>
+        val lines = text.linesIterator.toSeq
+        lines.collectFirst { case l if l.startsWith("d ") =>
+          SidecarMarker(n, l.drop(2).trim.split(" ").toSeq.map(d => s"$root/$d"),
+            lines.collect { case f if f.startsWith("f ") => f.drop(2) }.toSet)
+        }
       }
-    }
   }
 
   /** Resolve the committed version of `kind` ONCE: the max marker. */
@@ -1596,25 +1565,19 @@ object IvfIndex {
     if (versions.isEmpty) None else readMarker(fs, root, kind, versions.max)
   }
 
-  /** Exclusive-create marker `n` of `kind` naming `dirs` (relative to
-    * `root`) and the covered `files` — the sidecar's commit point.
-    * Returns the create's failure when another writer holds `n` (each
-    * kind decides what a lost race means), None when this one won. */
+  /** Publish marker `n` of `kind` naming `dirs` (relative to `root`)
+    * and the covered `files` — the sidecar's commit point, through
+    * [[MetaFiles.putIfAbsent]]. False when another writer holds `n`
+    * (each kind decides what a lost race means); an I/O error
+    * propagates. */
   private def createMarker(fs: org.apache.hadoop.fs.FileSystem,
       root: String, kind: String, n: Long, dirs: Seq[String],
-      files: Set[String]): Option[java.io.IOException] = {
-    fs.mkdirs(markerDir(root, kind))
-    val body = (s"d ${dirs.mkString(" ")}" +: files.toSeq.sorted.map("f " + _))
-      .mkString("", "\n", "\n")
-    try {
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString),
-        false) // exclusive — the commit point
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      None
-    } catch { case e: java.io.IOException => Some(e) }
-  }
+      files: Set[String]): Boolean =
+    MetaFiles.putIfAbsent(fs,
+      new org.apache.hadoop.fs.Path(markerDir(root, kind), n.toString),
+      (s"d ${dirs.mkString(" ")}" +: files.toSeq.sorted.map("f " + _))
+        .mkString("", "\n", "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Reclaim the listed versions of `kind` below `grace`, each marker
     * BEFORE its dirs so no marker ever names a missing dir. */
@@ -1634,12 +1597,12 @@ object IvfIndex {
   private def publishCodesMarker(fs: org.apache.hadoop.fs.FileSystem,
       root: String, kind: String, n: Long, dirs: Seq[String],
       files: Set[String], verb: String): Unit =
-    createMarker(fs, root, kind, n, dirs, files).foreach { e =>
+    if (!createMarker(fs, root, kind, n, dirs, files)) {
       dirs.foreach(d => fs.delete(hp(s"$root/$d"), true))
       throw new IllegalStateException(
         s"$verb lost the marker race for version $n under $root — the " +
           "sidecar is single-maintainer by contract; this version's " +
-          "dirs were discarded", e)
+          "dirs were discarded")
     }
 
   /** What one [[maintainIvf]] pass saw and did. */
@@ -1997,7 +1960,7 @@ object IvfIndex {
     * never both, never neither); re-running buildPqSidecar absorbs
     * the tail, the same compaction cadence as [[rebuild]]. Each
     * sidecar version's codes and books live in THEIR OWN dirs named
-    * inside its marker, and the marker is exclusive-created LAST —
+    * inside its marker, and the marker is published LAST —
     * so one marker resolution pins a consistent codes+books pair even
     * while a refresh overlaps reads (the r17 in-place overwrite could
     * serve new codes against old codebooks mid-refresh); the previous
@@ -2162,8 +2125,8 @@ object IvfIndex {
     * codebook the sidecar can never drift — maintenance is
     * append-encode only (re-run absorbs the raw tail, nothing
     * retrains). Same atomicity story as the PQ sidecar: each version's
-    * codes live in their own dir named inside an exclusive-created
-    * marker; the previous version is read grace; a rebuild publishes a
+    * codes live in their own dir named inside a marker published last;
+    * the previous version is read grace; a rebuild publishes a
     * new generation bare. Single sidecar maintainer per index — a lost
     * marker race fails loudly. */
   def buildSq8Sidecar(s: SparkSession, indexPath: String): Unit = {
@@ -2214,8 +2177,8 @@ object IvfIndex {
     *   <root>/tombs-<n>/...parquet   ((vec_id, tomb_v) — the FULL
     *                                  current event set, one row per
     *                                  delete/update event)
-    *   <root>/_tomb/<n>              (marker naming the dir, written
-    *                                  LAST via exclusive create)
+    *   <root>/_tomb/<n>              (marker naming the dir,
+    *                                  published LAST)
     *
     * Events are VERSIONED: `tomb_v` is the lake version of the
     * delete/update (Long.MaxValue for a direct [[tombstoneIds]]
@@ -2266,14 +2229,14 @@ object IvfIndex {
     * [[unionPublishTombstones]] retries on (r21, advisor item: the
     * read-union-publish shape used to publish a union built from a
     * stale `cur`, silently dropping a concurrent publisher's events). */
-  private final class TombstoneVersionMoved(msg: String,
-      cause: Throwable = null) extends IllegalStateException(msg, cause)
+  private final class TombstoneVersionMoved(msg: String)
+      extends IllegalStateException(msg)
 
   /** Publish a FULL tombstone set as marker version `observed`+1 —
     * compare-and-swap semantics: `observed` is the max marker version
     * the caller's set was computed FROM (None = no marker existed). A
-    * cheap pre-check aborts if the listing already moved; the exclusive
-    * marker CREATE is the true commit point — two racers targeting the
+    * cheap pre-check aborts if the listing already moved; the marker
+    * claim is the true commit point — two racers targeting the
     * same pinned version resolve to exactly one winner, and the loser
     * throws [[TombstoneVersionMoved]] instead of silently shadowing the
     * winner's events under a higher version (the pre-r21 behavior
@@ -2294,12 +2257,12 @@ object IvfIndex {
     normalizeTombs(tombs).distinct()
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$rel")
-    createMarker(fs, root, "_tomb", n, Seq(rel), Set.empty).foreach { e =>
+    if (!createMarker(fs, root, "_tomb", n, Seq(rel), Set.empty)) {
       fs.delete(hp(s"$root/$rel"), true)
       throw new TombstoneVersionMoved(
         s"publishTombstones lost the marker race for version $n under " +
           s"$root — a concurrent publisher won; this build's dir was " +
-          "discarded", e)
+          "discarded")
     }
     reclaimMarkers(fs, root, "_tomb", prior, n - 1)
   }
@@ -2369,8 +2332,8 @@ object IvfIndex {
     * compressed probe derive its survivor rate WITHOUT the
     * O(probed rows) measuring scan. Built from the same pinned file
     * snapshot the codes sidecars encode, on the same versioned-marker
-    * recipe (`<root>/lstats-<n>` named by `_lstats/<n>`, exclusive-
-    * created, one grace version). The table is bounded model state:
+    * recipe (`<root>/lstats-<n>` named by `_lstats/<n>`, one grace
+    * version). The table is bounded model state:
     * cells × distinct labels rows, read whole like the centroids.
     *
     * Staleness contract: the marker records the EXACT vector-file set
@@ -2399,9 +2362,9 @@ object IvfIndex {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$rel")
     // a lost race is swallowed: the winner pinned the same file set
-    if (createMarker(fs, root, "_lstats", n, Seq(rel), files).isDefined)
-      fs.delete(hp(s"$root/$rel"), true)
-    else reclaimMarkers(fs, root, "_lstats", prior, n - 1)
+    if (createMarker(fs, root, "_lstats", n, Seq(rel), files))
+      reclaimMarkers(fs, root, "_lstats", prior, n - 1)
+    else fs.delete(hp(s"$root/$rel"), true)
   }
 
   /** A label-stats version's (cell, label, cnt) rows and schema, on

@@ -435,13 +435,6 @@ object LakeLayout {
     fileEntries(lines.drop(4), "f")
   }
 
-  private def readFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
   /** Parsed-manifest cache. SOUND BY IMMUTABILITY: a manifest file is
     * never modified after its atomic claim (the whole protocol rests
     * on that), and a checkpoint sidecar's content is a deterministic
@@ -507,7 +500,10 @@ object LakeLayout {
     manifestCache.get(key) match {
       case Some(hit) => hit.asInstanceOf[T]
       case None =>
-        val content = readFile(fs, p)
+        // a version vacuumed mid-resolution surfaces as FileNotFound,
+        // which the history readers skip
+        val content = MetaFiles.readText(fs, p)
+          .getOrElse(throw new java.io.FileNotFoundException(p.toString))
         val parsed =
           try parse(content)
           catch {
@@ -587,18 +583,10 @@ object LakeLayout {
     b.append('\n')
   }
 
-  /** Attempt to claim version `v`: tmp write + an ATOMIC claim of the
-    * manifest path. Returns false iff another writer already claimed
-    * this version number — the OCC conflict signal. The claim must
-    * stay atomic under contention:
-    *  - on the local filesystem Hadoop's rename silently REPLACES an
-    *    existing destination (java.io.File.renameTo → POSIX rename(2)),
-    *    so a raced rename would overwrite a published commit; the claim
-    *    is a hard link instead — link(2) fails EEXIST atomically;
-    *  - on HDFS-like stores, rename-without-overwrite is atomic and
-    *    fails if the destination exists (the FileSystem contract), so
-    *    the rename itself is the claim.
-    * `tmpTag` keeps racing writers' tmp files from colliding.
+  /** Attempt to claim version `v`: publish its manifest with
+    * [[MetaFiles.putIfAbsent]] (content first, then one atomic claim).
+    * Returns false iff another writer already claimed this version
+    * number — the OCC conflict signal; an I/O error propagates.
     *
     * `parentFiles` (the parent version's RESOLVED list, empty = no
     * parent or an empty one) enables the format:5 delta form: when the
@@ -613,9 +601,8 @@ object LakeLayout {
   private def tryPublishManifest(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path, v: Long, dataRel: String,
       checkpoint: String, batchId: Long, files: Seq[LakeFile],
-      tmpTag: String, schemaJson: String, op: String,
+      schemaJson: String, op: String,
       parentFiles: Seq[LakeFile], tsClusterCol: Option[String]): Boolean = {
-    fs.mkdirs(commitsDir(table))
     // the commit's DURABLE instant, read from the store's own clock
     // (one probe per publish): AS-OF resolution reads this line, so a
     // migration tool that copies `_commits` without preserving mtimes
@@ -662,25 +649,8 @@ object LakeLayout {
         if (adds.size + removes.size < files.size) deltaBody(adds, removes)
         else fullBody
       }
-    val tmp = new org.apache.hadoop.fs.Path(commitsDir(table),
-      s".tmp-$tmpTag${versionName(v)}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8"))
-    finally out.close()
-    val dst = manifestPath(table, v)
-    val claimed =
-      if (fs.getUri.getScheme == "file") {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } else !fs.exists(dst) && fs.rename(tmp, dst)
-    // the link path and a failed claim both leave the tmp file behind
-    if (fs.exists(tmp)) fs.delete(tmp, false)
+    val claimed = MetaFiles.putIfAbsent(fs, manifestPath(table, v),
+      content.getBytes("UTF-8"))
     if (claimed && v > 0 && v % checkpointEvery == 0)
       writeCheckpointFile(fs, table, v, dataRel, checkpoint, batchId,
         files, schemaJson, op)
@@ -709,13 +679,8 @@ object LakeLayout {
       // dv-delete landing on a checkpoint boundary would resurrect
       // its deleted rows (CheckpointFidelitySpec pins this)
       files.foreach(f => encodeFileLine("f", f, body))
-      val tmp = new org.apache.hadoop.fs.Path(commitsDir(table),
-        s".tmpckpt-${versionName(v)}")
-      val out = fs.create(tmp, true)
-      try out.write(body.toString.getBytes("UTF-8"))
-      finally out.close()
-      val dst = checkpointFilePath(table, v)
-      if (!fs.rename(tmp, dst) && fs.exists(tmp)) fs.delete(tmp, false)
+      MetaFiles.replace(fs, checkpointFilePath(table, v),
+        body.toString.getBytes("UTF-8"))
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** The files of a just-written data dir with per-file bounds of
@@ -904,15 +869,21 @@ object LakeLayout {
     * unionByName is schema-stable. Every file is read under the table
     * `schema` (files written before a column was added null-fill it —
     * no footer merging, no inference); no files is the empty table,
-    * read without a job. */
+    * read without a job. `withPath` adds each row's file URI as column
+    * `__file`, taken at the scan (`input_file_name()` above a dv group's
+    * anti-join has two sources and fails analysis). */
   private[graft] def filesFrame(spark: SparkSession, tablePath: String,
       files: Seq[LakeFile],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: org.apache.spark.sql.types.StructType,
+      withPath: Boolean = false): DataFrame =
     if (files.isEmpty) spark.read.schema(schema).parquet()
     else files.groupBy(_.dv).toSeq.sortBy(_._1.getOrElse("")).map {
       case (dvRef, group) =>
-        val df = spark.read.schema(schema).parquet(group.map(f =>
+        val scan = spark.read.schema(schema).parquet(group.map(f =>
           lakeFileUri(tablePath, f.path)): _*)
+        val df =
+          if (withPath) scan.withColumn("__file", col("_metadata.file_path"))
+          else scan
         dvRef match {
           case None => df
           case Some(d) =>
@@ -1018,19 +989,18 @@ object LakeLayout {
     * writers desynchronize deterministically.
     *
     * `writer` = Some(writerId) is an OCC writer: its id tags the data
-    * dirs (`data/v<N>-<id><dirSuffix>`) and tmp files so racing writers
-    * never interleave bytes before the claim decides the winner. None
-    * is a single writer: untagged names (`data/v<N><dirSuffix>`,
-    * `.tmp-v<N>`) and, by contract, `maxAttempts = 1`, so a lost race
-    * fails loudly. Either way the loop gives up with an
-    * IllegalStateException after `maxAttempts` lost claims. */
+    * dirs (`data/v<N>-<id><dirSuffix>`) so racing writers never
+    * interleave bytes before the claim decides the winner. None is a
+    * single writer: untagged dirs (`data/v<N><dirSuffix>`) and, by
+    * contract, `maxAttempts = 1`, so a lost race fails loudly. Either
+    * way the loop gives up with an IllegalStateException after
+    * `maxAttempts` lost claims. */
   private def commitLoop[R](spark: SparkSession, tablePath: String,
       verb: String, writer: Option[String], batchId: Long,
       maxAttempts: Int, dirSuffix: String = "")(body: Attempt => Step[R]): R = {
     writer.foreach(w => require(w.nonEmpty && !w.contains("/"),
       "writerId must be a non-empty path-safe token"))
     val tag = writer.map(w => s"-$w").getOrElse("")
-    val tmpTag = if (writer.isEmpty) "" else tag + dirSuffix
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val rnd = new scala.util.Random(writer.getOrElse("").hashCode * 31 + batchId)
@@ -1045,7 +1015,7 @@ object LakeLayout {
         case Done(r) => return r
         case p: Publish[R] =>
           if (tryPublishManifest(fs, table, v, p.dataRel, p.checkpoint,
-              batchId, p.files, tmpTag, p.schemaJson, p.op,
+              batchId, p.files, p.schemaJson, p.op,
               cur.map(_.files).getOrElse(Seq.empty), p.tsClusterCol))
             return p.result()
           val rebased = p.rebase()
@@ -1451,7 +1421,7 @@ object LakeLayout {
         val newList = latest.files.filterNot(f => c.rewrittenPaths(f.path)) ++
           c.newFiles
         if (tryPublishManifest(fs, table, latest.version + 1, c.dataRel,
-            provenance, batchId, newList, s"-${writer.get}-rb", c.schemaJson,
+            provenance, batchId, newList, c.schemaJson,
             "data", latest.files, carriedTsCluster(latest)))
           return Some(result(latest.version + 1,
             newList.filterNot(c.newFiles.contains), c.rewrittenPaths.size,
@@ -1589,9 +1559,11 @@ object LakeLayout {
     * Row-visible results are IDENTICAL to the upsert lowering (same
     * replacement values; a range-intersecting file with no predicate
     * rows keeps its bytes instead of being rewritten verbatim), pinned
-    * by LakeSqlSpec's SQL-vs-API parity. Commits under the OCC claim;
-    * a lost race recomputes against the new tip (no rebase fast path —
-    * the predicate must re-evaluate against the winner's rows). */
+    * by LakeSqlSpec's SQL-vs-API parity. A statement no row matches
+    * writes nothing and reports the current version. Commits under the
+    * OCC claim; a lost race recomputes against the new tip (no rebase
+    * fast path — the predicate must re-evaluate against the winner's
+    * rows). */
   private[graft] def updateLakeWhereOcc(spark: SparkSession,
       tablePath: String, key: String, pred: Column,
       assigns: Seq[(String, String)], writerId: String, batchId: Long,
@@ -1617,49 +1589,52 @@ object LakeLayout {
       }
       // scan 1: the files that actually HOLD a predicate row — the
       // projection reads only the predicate's columns (plus the file
-      // name), so at scale this is a narrow column scan with the
+      // path), so at scale this is a narrow column scan with the
       // predicate pushed to parquet, not a table materialization
-      val touchedUris = filesFrame(spark, tablePath, files, schema)
-        .filter(pred).select(input_file_name().as("__f"))
-        .distinct().collect().map(_.getString(0)).toSet
-      def uriOf(f: LakeFile): String = {
+      // compared as decoded paths: the scan reports `file:/…` URIs
+      // where a qualified Path prints `file:///…`
+      val touched =
+        if (files.isEmpty) Set.empty[String]
+        else filesFrame(spark, tablePath, files, schema, withPath = true)
+          .filter(pred).select(col("__file")).distinct().collect()
+          .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+      def pathOf(f: LakeFile): String = {
         val p = lakeFilePath(table, f.path)
-        p.getFileSystem(fs.getConf).makeQualified(p).toUri.toString
+        p.getFileSystem(fs.getConf).makeQualified(p).toUri.getPath
       }
-      val (rewritten, carried) = files.partition(f =>
-        touchedUris.contains(uriOf(f)))
-      val dataRel = at.dataRel
-      val merged =
-        if (rewritten.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else {
-          val base = filesFrame(spark, tablePath, rewritten, schema)
-          base.select(assignProj(base): _*)
-        }
-      // constraints gate the REPLACEMENT rows (the batch the upsert
-      // lowering validated); zero-cost when the table declares none
-      if (lakeConstraints(spark, tablePath).nonEmpty && rewritten.nonEmpty)
-        enforceLakeConstraints(spark, tablePath, merged.filter(pred))
-      val outParts = sizeParts(spark,
-        BigInt(bytesOf(fs, table, rewritten)))
-      // one computation of the CASE-rewritten rows (materializedRewrite)
-      val mat = materializedRewrite(merged)
-      try mat.repartitionByRange(outParts, col(key))
-        .sortWithinPartitions(col(key))
-        .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
-      finally releaseRewrite(mat)
-      val effTs = carriedTsCluster(cur)
-      val newFiles = withKeyBlooms(spark, tablePath, dataRel,
-        fileStats(spark, tablePath, dataRel, Some(key), effTs),
-        schema.fieldNames.toSeq)
-      Publish(dataRel, writerId, carried ++ newFiles, cur.schemaJson,
-        "data", effTs, () => {
-          val bytesWritten = bytesOf(fs, table, newFiles)
-          LakeUpsertResult(at.v, carried.size, rewritten.size,
-            newFiles.size, bytesWritten,
-            bytesWritten + bytesOf(fs, table, carried), at.n)
-        })
+      val (rewritten, carried) = files.partition(f => touched(pathOf(f)))
+      // no predicate row: nothing to write, no version to publish
+      if (rewritten.isEmpty)
+        Done(LakeUpsertResult(cur.version, files.size, 0, 0, 0L,
+          bytesOf(fs, table, files), at.n))
+      else {
+        val dataRel = at.dataRel
+        val base = filesFrame(spark, tablePath, rewritten, schema)
+        val merged = base.select(assignProj(base): _*)
+        // constraints gate the REPLACEMENT rows (the batch the upsert
+        // lowering validated); zero-cost when the table declares none
+        if (lakeConstraints(spark, tablePath).nonEmpty)
+          enforceLakeConstraints(spark, tablePath, merged.filter(pred))
+        val outParts = sizeParts(spark,
+          BigInt(bytesOf(fs, table, rewritten)))
+        // one computation of the CASE-rewritten rows (materializedRewrite)
+        val mat = materializedRewrite(merged)
+        try mat.repartitionByRange(outParts, col(key))
+          .sortWithinPartitions(col(key))
+          .write.mode("overwrite").parquet(s"$tablePath/$dataRel")
+        finally releaseRewrite(mat)
+        val effTs = carriedTsCluster(cur)
+        val newFiles = withKeyBlooms(spark, tablePath, dataRel,
+          fileStats(spark, tablePath, dataRel, Some(key), effTs),
+          schema.fieldNames.toSeq)
+        Publish(dataRel, writerId, carried ++ newFiles, cur.schemaJson,
+          "data", effTs, () => {
+            val bytesWritten = bytesOf(fs, table, newFiles)
+            LakeUpsertResult(at.v, carried.size, rewritten.size,
+              newFiles.size, bytesWritten,
+              bytesWritten + bytesOf(fs, table, carried), at.n)
+          })
+      }
     }
   }
 
@@ -1778,28 +1753,18 @@ object LakeLayout {
     writeConstraintsFile(spark, tablePath, constraints)
   }
 
-  /** Publish the constraint file via tmp-write + OVERWRITE rename
-    * (FileContext — one atomic replace), so a writer reading
-    * [[lakeConstraints]] mid-swap sees the old set or the new set,
-    * NEVER a missing file: a delete-then-rename gap would read as
-    * "unconstrained" and admit a violating batch unvalidated. */
+  /** Publish the constraint file as one atomic replace
+    * ([[MetaFiles.replace]]), so a writer reading [[lakeConstraints]]
+    * mid-swap sees the old set or the new set, NEVER a missing file: a
+    * delete-then-rename gap would read as "unconstrained" and admit a
+    * violating batch unvalidated. */
   private def writeConstraintsFile(spark: SparkSession, tablePath: String,
       constraints: Map[String, String]): Unit = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = table.getFileSystem(conf)
-    val target = fs.makeQualified(constraintsFile(table))
-    fs.mkdirs(target.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-      s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, true)
-    try out.write(constraints.toSeq.sortBy(_._1)
-      .map { case (n, e) => s"$n\t$e\n" }.mkString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
-      .rename(fs.makeQualified(tmp), target,
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    MetaFiles.replace(table.getFileSystem(spark.sessionState.newHadoopConf()),
+      constraintsFile(table), constraints.toSeq.sortBy(_._1)
+        .map { case (n, e) => s"$n\t$e\n" }.mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** The table's current constraint set (empty = unconstrained). */
@@ -1808,11 +1773,7 @@ object LakeLayout {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val f = constraintsFile(table)
-    if (!fs.exists(f)) Map.empty
-    else {
-      val in = fs.open(f)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    MetaFiles.readText(fs, f).fold(Map.empty[String, String]) { text =>
       text.linesIterator.filter(_.nonEmpty).map { line =>
         val i = line.indexOf('\t')
         require(i > 0, s"malformed constraint line in $f: $line")
@@ -1915,19 +1876,9 @@ object LakeLayout {
     require(!key.exists(c => c == '\t' || c == '\n'),
       s"bloom key column name must not contain tabs or newlines: '$key'")
     val table = new org.apache.hadoop.fs.Path(tablePath)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = table.getFileSystem(conf)
-    val target = fs.makeQualified(bloomIndexFile(table))
-    fs.mkdirs(target.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-      s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, true)
-    try out.write(s"key\t$key\nbpk\t$bitsPerKey\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
-      .rename(fs.makeQualified(tmp), target,
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    MetaFiles.replace(table.getFileSystem(spark.sessionState.newHadoopConf()),
+      bloomIndexFile(table), s"key\t$key\nbpk\t$bitsPerKey\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** The table's persisted bloom index, if declared: (key, bits/key). */
@@ -1935,10 +1886,8 @@ object LakeLayout {
       tablePath: String): Option[(String, Int)] = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val f = bloomIndexFile(table)
-    if (!fs.exists(f)) None
-    else {
-      val kv = readFile(fs, f).linesIterator.filter(_.nonEmpty).map { ln =>
+    MetaFiles.readText(fs, bloomIndexFile(table)).flatMap { text =>
+      val kv = text.linesIterator.filter(_.nonEmpty).map { ln =>
         val i = ln.indexOf('\t')
         ln.substring(0, i) -> ln.substring(i + 1)
       }.toMap
@@ -2134,9 +2083,8 @@ object LakeLayout {
         val m = bloomSidecarCache.getOrElseUpdate(
           lakeFileUri(tablePath, rel), {
             val p = lakeFilePath(table, rel)
-            val pfs = p.getFileSystem(fs.getConf)
-            if (!pfs.exists(p)) Map.empty
-            else readFile(pfs, p).linesIterator.filter(_.nonEmpty)
+            MetaFiles.readText(p.getFileSystem(fs.getConf), p)
+              .getOrElse("").linesIterator.filter(_.nonEmpty)
               .map { ln =>
                 val i = ln.indexOf('\t')
                 ln.substring(0, i) -> ln.substring(i + 1)
@@ -2382,7 +2330,7 @@ object LakeLayout {
     * sidecar, and pointing a file at a superset of its own deleted
     * keys is harmless by anti-join semantics. Returns the published
     * version; no-op (current version) when no file can hold any
-    * delete key. */
+    * delete key or there is none. */
   def deleteFromLakeDv(spark: SparkSession, tablePath: String,
       deletes: DataFrame, key: String, checkpoint: String,
       batchId: Long): Long =
@@ -2413,7 +2361,9 @@ object LakeLayout {
       val cur = at.cur.getOrElse(throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed version"))
       val affected = touchedFilePaths(spark, cur.files, deletes, key)
-      if (affected.isEmpty) Done(cur.version)
+      // stat-less files count as touched by any key set, even an empty
+      // one: no key to delete must write no sidecar either
+      if (affected.isEmpty || deletes.isEmpty) Done(cur.version)
       else {
         writeDvSidecar(spark, tablePath, cur, affected, deletes, key,
           at.dataRel)

@@ -179,45 +179,4 @@ class ComponentsSpec extends SparkSuite {
       s"only the returned frame's checkpoint may survive, found " +
         s"${leftover.size} persistent RDDs")
   }
-
-  test("superseded sweep snapshots are deleted eagerly in parquet mode, not at JVM exit") {
-    // a bench loop runs CC dozens of times in one JVM — per-sweep disk
-    // residue must be bounded at ONE live snapshot per run (round 7 left
-    // every checkpoint on disk for the JVM's lifetime). Pinned under the
-    // explicit parquet strategy (the fault-tolerant cluster posture).
-    spark.conf.set("graft.cc.materialize", "parquet")
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val pairs = (1L until 9L).map(k => (k, k + 1)).toDF("i", "j")
-      val (lab, sweeps) = Components.connectedComponentsWithStats(pairs)
-      lab.collect()
-      assert(sweeps > 1, "needs a multi-sweep run to observe deletion")
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-        "parquet mode must not pin new block-manager storage")
-      // the returned frame is parquet-backed: its one live snapshot dir
-      // is the run dir's sole surviving child. Since r21 convergence is
-      // detected on the prop aggregate (the final sweep skips its
-      // identity pointer jump), so the survivor is m_N, not sweep_N.
-      val snapFile = lab.inputFiles.headOption.getOrElse(
-        fail("components result should be parquet-backed"))
-      val runDir = new java.io.File(new java.net.URI(snapFile))
-        .getParentFile.getParentFile
-      val children = runDir.listFiles().map(_.getName).toSet
-      assert(children == Set(s"m_$sweeps"),
-        s"only the final snapshot may survive the run, found $children")
-    } finally spark.conf.unset("graft.cc.materialize")
-  }
-
-  test("localckpt and parquet materializations produce identical components") {
-    val pairs = (1L until 40L).filter(_ % 7 != 0)
-      .map(k => (k, k + (k % 3) + 1)).toDF("i", "j")
-    def run(): Map[Long, Long] = Components.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCkpt = run()
-    spark.conf.set("graft.cc.materialize", "parquet")
-    val viaParquet = try run() finally
-      spark.conf.unset("graft.cc.materialize")
-    assert(viaCkpt == viaParquet,
-      "materialization strategy must be invisible in the labeling")
-  }
 }
