@@ -16,12 +16,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ RecallQueries.queries ++
       TextAnalysis.queries ++ Dedup.queries ++ Components.queries ++
-      Similarity.queries ++ IvfIndex.queries ++ ProductQuant.queries ++
+      Similarity.queries ++ IvfQueries.queries ++ ProductQuant.queries ++
       ScalarQuant.queries ++
       Multimodal.queries ++ HybridRetrieval.queries ++
       GraphTraversal.queries ++ AdvancedQueries.queries ++
       AsOfJoin.queries ++ Sampling.queries ++
-      graft.sources.LakeLayout.queries ++ IncrementalAgg.queries ++
+      graft.sources.LakeQueries.queries ++ IncrementalAgg.queries ++
       graft.sources.Catalog.queries ++
       graft.streaming.EventsStream.queries ++
       graft.streaming.CdfStream.queries
@@ -31,12 +31,12 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     RelationalQueries.oracle ++ RecallQueries.oracle ++
       TextAnalysis.oracle ++ Dedup.oracle ++ Components.oracle ++
-      Similarity.oracle ++ IvfIndex.oracle ++ ProductQuant.oracle ++
+      Similarity.oracle ++ IvfQueries.oracle ++ ProductQuant.oracle ++
       ScalarQuant.oracle ++
       Multimodal.oracle ++ HybridRetrieval.oracle ++
       GraphTraversal.oracle ++ AdvancedQueries.oracle ++
       AsOfJoin.oracle ++ Sampling.oracle ++
-      graft.sources.LakeLayout.oracle ++ IncrementalAgg.oracle ++
+      graft.sources.LakeQueries.oracle ++ IncrementalAgg.oracle ++
       graft.sources.Catalog.oracle ++
       graft.streaming.EventsStream.oracle ++
       graft.streaming.CdfStream.oracle

@@ -46,7 +46,7 @@ object SqlCli {
     * with the API results (exit 1 on any mismatch — a check, not a
     * demo that can silently rot). */
   private def lakeDemo(args: Array[String]): Unit = {
-    import graft.sources.{Catalog, LakeLayout, LakeSql}
+    import graft.sources.{Catalog, LakeLayout, LakeQueries, LakeSql}
     import org.apache.spark.sql.functions._
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
@@ -62,7 +62,7 @@ object SqlCli {
     // the next commit's instant must land strictly after the pin even
     // on stores with coarse clock granularity (same guard as the
     // registry time-travel drives)
-    LakeLayout.awaitStoreClockPast(spark, t, pin)
+    LakeQueries.awaitStoreClockPast(spark, t, pin)
     LakeLayout.upsertIntoLake(spark, t,
       orders.filter(pmod(col("o_orderkey"), lit(3)) === 0)
         .withColumn("o_orderpriority", lit("9-SQL")),

@@ -95,8 +95,8 @@ case class VecDot(left: Expression, right: Expression) extends VecBinaryOp {
   * surface ([[graft.operators.ProductQuant.codesCol]] callers: corpus
   * encode, PQ sidecar build/carry, Lloyd training assignment).
   *
-  * Semantics are EXACTLY the HOF form it replaces (kept in
-  * ProductQuant.codesColHof for the equivalence spec):
+  * Semantics are EXACTLY the HOF form it replaces (kept in test scope
+  * as ProductQuantSpec.codesColHof for the equivalence spec):
   * `transform(sequence(0, m−1), j => array_max(transform(books[j], en =>
   * struct(dot(slice(u, j·d+1, d), en.cvec) − en.half, en.code))).code)` —
   * per subspace j, argmax over codebook entries of `<u_j, cvec> − half`

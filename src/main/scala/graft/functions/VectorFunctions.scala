@@ -62,27 +62,8 @@ object VectorFunctions {
     * them). Requires [[register]] on the session. */
   def cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
 
-  /** HOF reference forms — bit-identical to the native expressions
-    * (same accumulation order); kept for cross-validation in tests. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** L2 norm. */
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0),
       (acc, x) => acc + x.cast("double") * x.cast("double")))
-
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0), (acc, v) => acc + v))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{LakeLayout, Tables}
+import graft.sources.{LakeLayout, LakeQueries, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,7 +146,7 @@ object IncrementalAgg {
     // base v0 from the staged orders-6 lake (cloned — this drive
     // commits on top): the timed span is the incremental advance, not
     // the one-time base staging write
-    val lake = LakeLayout.cloneLake(s, LakeLayout.stagedOrders(s, dir, 6))
+    val lake = LakeQueries.cloneLake(s, LakeQueries.stagedOrders(s, dir, 6))
     LakeLayout.upsertIntoLake(s, lake,
       orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
         .withColumn("o_orderpriority", lit("9-UPD")),

@@ -118,22 +118,12 @@ object ProductQuant {
     * ([[graft.functions.PqEncodeCodes]]) instead of m·ks interpreted
     * HOF lambdas each slicing a fresh subvector copy — the encode pass
     * dominated every PQ drive's wall-clock (guide §4: eliminate
-    * non-codegen expressions in the hot path). Bit-identical to
-    * [[codesColHof]] (same dot order, same Double.compare tie-break) —
-    * pinned by ProductQuantSpec's equivalence case. */
+    * non-codegen expressions in the hot path). Bit-identical to the
+    * HOF form (same dot order, same Double.compare tie-break) — pinned
+    * by ProductQuantSpec's equivalence case against its test-scope
+    * `codesColHof`. */
   private[graft] def codesCol(m: Int, d: Int): Column =
     VectorFunctions.pqEncode(col("u"), col("books"))
-
-  /** The pre-r21 HOF form of [[codesCol]] — kept as the reference
-    * implementation the native expression is spec-checked against. */
-  private[graft] def codesColHof(m: Int, d: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), j =>
-      array_max(transform(element_at(col("books"), j + lit(1)), en =>
-        struct(
-          (VectorFunctions.dot(
-            slice(col("u"), j * lit(d) + lit(1), lit(d)),
-            en.getField("cvec")) - en.getField("half")).as("score"),
-          en.getField("code").as("code")))).getField("code"))
 
   // one training per (corpus, shape) per JVM — model state, bounded
   private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
@@ -238,15 +228,10 @@ object ProductQuant {
     * chain referenced the LUT m times, which for the single-probe
     * callers ([[adcScore]]) inlined the m·ks-literal LUT m times and
     * made every PQ drive's plan ~180 KB. Bit-identical fold order;
-    * pinned by ProductQuantSpec against [[adcScoreWithHof]]. */
+    * pinned by ProductQuantSpec against its test-scope
+    * `adcScoreWithHof`. */
   private[graft] def adcScoreWith(lut: Column, m: Int, ks: Int): Column =
     VectorFunctions.adcSum(col("codes"), lut)
-
-  /** The pre-r21 element_at chain — the reference implementation the
-    * native [[graft.functions.AdcSum]] is spec-checked against. */
-  private[graft] def adcScoreWithHof(lut: Column, m: Int, ks: Int): Column =
-    (0 until m).map(j =>
-      element_at(lut, col("codes")(j) + j * ks + lit(1))).reduce(_ + _)
 
   /** ADC score over `codes` for a prepared LUT: m 1-based array
     * lookups + adds — nothing per-row but integer indexing. The LUT

@@ -169,7 +169,7 @@ object Similarity {
   // ----------------------------------------------------------- LSH path
   /** Deterministic pseudo-random hyperplanes (seeded LCG, no RNG calls)
     * for sign-LSH signatures. */
-  private[operators] def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
+  private[graft] def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
     var state = seed
     def next(): Double = {
       state = state * 6364136223846793005L + 1442695040888963407L
@@ -250,8 +250,8 @@ object Similarity {
     // method too large for the JIT (measured 2× slower WITH codegen
     // than without). Candidate sets are IDENTICAL by construction
     // (vec_id is unique in the corpus), so the output is bit-for-bit
-    // the legacy form's — spec-pinned by the sAnnTopkTwoPass
-    // equivalence test.
+    // the legacy form's — spec-pinned against PipelineOperatorsSpec's
+    // test-scope two-pass twin.
     val planesLit = typedLit((0 until tables).map(t =>
       hyperplanes(nPlanes = bits, dim = dim, seed = 42L + t)))
     def sigsOf(v: org.apache.spark.sql.Column) =
@@ -271,48 +271,6 @@ object Similarity {
     val probeVec = e(s, dir).filter($"vec_id" === ProbeId)
       .select($"embedding".as("p"))
     e(s, dir).filter($"vec_id" =!= ProbeId && inProbedBucket)
-      .crossJoin(broadcast(probeVec))
-      .withColumn("sim", round(VectorFunctions.cosine($"embedding", $"p"), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-      .select($"vec_id", $"label", $"sim")
-      .orderBy($"sim".desc, $"vec_id")
-      .limit(k)
-  }
-
-  /** The legacy two-pass ANN form (explode to (vec_id, bucket-string)
-    * rows → isin → distinct → self-semi-join), retained SOLELY to pin
-    * the one-pass rewrite's equivalence in PipelineOperatorsSpec —
-    * never called in a query path. */
-  private[graft] def sAnnTopkTwoPass(s: SparkSession, dir: String,
-      k: Int = 10, tables: Int = AnnTables, bits: Int = AnnBitsPerTable,
-      probeFlips: Int = 0): DataFrame = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    val dim = embeddingDim(s, dir)
-    def bucketArr(v: org.apache.spark.sql.Column) =
-      array((0 until tables).map { t =>
-        val planes = hyperplanes(nPlanes = bits, dim = dim, seed = 42L + t)
-        concat((lit(s"$t:") +: planes.map { p =>
-          val pc = array(p.map(lit): _*)
-          when(VectorFunctions.dot(v, pc) >= 0, lit("1")).otherwise(lit("0"))
-        }): _*)
-      }: _*)
-    val ex = e(s, dir).select($"vec_id", explode(bucketArr($"embedding")).as("bkt"))
-    val probeBkts = ex.filter($"vec_id" === ProbeId)
-      .select($"bkt").collect().map(_.getString(0)).toSeq
-    val expanded =
-      if (probeFlips == 0) probeBkts
-      else probeBkts.flatMap { b =>
-        val (pre, rest) = b.splitAt(b.indexOf(':') + 1)
-        b +: rest.indices.map(i =>
-          pre + rest.updated(i, if (rest(i) == '1') '0' else '1'))
-      }
-    val candIds = ex.filter($"bkt".isin(expanded: _*))
-      .filter($"vec_id" =!= ProbeId)
-      .select($"vec_id").distinct()
-    val probeVec = e(s, dir).filter($"vec_id" === ProbeId)
-      .select($"embedding".as("p"))
-    e(s, dir).join(candIds, Seq("vec_id"), "left_semi")
       .crossJoin(broadcast(probeVec))
       .withColumn("sim", round(VectorFunctions.cosine($"embedding", $"p"), 3))
       .filter(!isnan($"sim") && $"sim".isNotNull)
@@ -378,10 +336,6 @@ object Similarity {
     Tables.listingFingerprint(
       path.getFileSystem(s.sparkContext.hadoopConfiguration), path)
   }
-
-  /** Drop all memoized centroid models. With fingerprint-keyed entries
-    * this is only needed to release memory, not for correctness. */
-  def clearCentroidCache(): Unit = centroidCache.clear()
 
   private[graft] def ivfCentroids(s: SparkSession, dir: String,
       cells: Int, iters: Int, trainModulo: Int = 1): Array[Array[Double]] =

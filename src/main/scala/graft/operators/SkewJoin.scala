@@ -65,11 +65,4 @@ object SkewJoin {
     df.groupBy(col(key)).agg(count(lit(1)).as("rows"))
       .orderBy(col("rows").desc, col(key))
       .limit(topN)
-
-  /** A hot-key filter Column for hybrid strategies: broadcast-join the
-    * hot keys, shuffle-join the long tail. */
-  def hotKeys(df: DataFrame, key: String, threshold: Long): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("rows"))
-      .filter(col("rows") > threshold)
-      .select(col(key))
 }

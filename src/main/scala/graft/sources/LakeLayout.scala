@@ -3,135 +3,16 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Write-side lake layout management (the half of a data lake the read
-  * path depends on): date-partitioned parquet with controlled file
-  * counts, plus pruned readback.
-  *
-  * Scale rules encoded here:
-  *  - Partition by a LOW-cardinality time key (event_date → ~365
-  *    partitions/year), never by user/id (millions of tiny dirs kill
-  *    the metastore and the FileIndex).
-  *  - Control files-per-partition with repartition(partitionCols) before
-  *    the write — otherwise every task writes to every partition and a
-  *    32-task × 30-day write emits ~960 small files.
-  *  - Readers filter on the partition column so pruning happens at the
-  *    FileIndex level (PartitionFilters in the scan, zero data read for
-  *    pruned dates).
+/** The manifest lake: a table is a directory of immutable parquet data
+  * dirs plus a `_commits` log of versioned manifests. Every commit
+  * claims its version through [[MetaFiles.putIfAbsent]] inside one
+  * commit loop; DML (upsert, MERGE, copy-on-write and deletion-vector
+  * delete, SQL UPDATE), time travel, maintenance (compaction, Z-order,
+  * vacuum, orphan sweep), constraints and bloom data skipping are
+  * file-granular over that log. The registry drives that exercise it
+  * live in [[LakeQueries]].
   */
 object LakeLayout {
-
-  /** Write events date-partitioned; one file per (partition, bucket of
-    * `filesPerPartition`). */
-  def writeEventsPartitioned(
-      spark: SparkSession,
-      sfDir: String,
-      outPath: String,
-      filesPerPartition: Int = 1): Unit = {
-    val ev = Tables.load(spark, sfDir, "events")
-      .withColumn("event_date",
-        to_date(timestamp_micros(expr("ts div 1000"))))
-    // repartition BY (date, salt): each (date, salt) group lands in one
-    // task => up to filesPerPartition files per date, and the write
-    // parallelizes across dates x salts instead of funneling through
-    // the hash of the date alone.
-    ev.repartition(col("event_date"),
-        pmod(col("event_id"), lit(filesPerPartition)))
-      .write
-      .partitionBy("event_date")
-      .mode("overwrite")
-      .parquet(outPath)
-  }
-
-  /** Read back one day; the filter must hit PartitionFilters, not data
-    * filters. */
-  def readDay(spark: SparkSession, path: String, day: String): DataFrame =
-    spark.read.parquet(path).filter(col("event_date") === lit(day))
-
-  /** Compact a partitioned parquet layout: rewrite each partition's
-    * small files into ~targetFileMB files. The streaming ingest path
-    * (one file per trigger) fragments partitions over time; compaction
-    * restores scan efficiency (fewer tasks, bigger sequential reads,
-    * less FileIndex pressure). Rewrites to a new path + atomic-ish swap
-    * is the production pattern; here the rewrite target is explicit. */
-  def compact(
-      spark: SparkSession,
-      inPath: String,
-      outPath: String,
-      partitionCol: String,
-      targetFileMB: Int = 128): Unit = {
-    val df = spark.read.parquet(inPath)
-    // Hadoop FileSystem API, not java.io.File: input files are URIs and
-    // must size correctly on hdfs://s3a:// layouts, not just file://.
-    // ONE listStatus RPC per distinct parent DIRECTORY (not per file),
-    // summing only the files actually in the scan — glob input paths
-    // resolve through df.inputFiles, and _SUCCESS/_spark_metadata or
-    // stale files never inflate the size the way a recursive
-    // getContentSummary over the root would.
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    // compare by the URI path component: inputFiles renders file:///p
-    // while FileStatus renders file:/p for the same file
-    val inputSet = df.inputFiles
-      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
-    val bytes = df.inputFiles
-      .map(f => new org.apache.hadoop.fs.Path(f).getParent)
-      .distinct
-      .flatMap { parent =>
-        parent.getFileSystem(hadoopConf).listStatus(parent)
-          .filter(st => inputSet.contains(st.getPath.toUri.getPath))
-          .map(_.getLen)
-      }.sum
-    val nFiles = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
-    // deterministic content-hash salt (not spark_partition_id) so the
-    // compacted layout is reproducible for identical input data
-    df.repartition(col(partitionCol),
-        pmod(xxhash64(struct(df.columns.map(col): _*)), lit(nFiles)))
-      .write
-      .partitionBy(partitionCol)
-      .mode("overwrite")
-      .parquet(outPath)
-  }
-
-  /** Upsert (MERGE) semantics over plain parquet: rows from `updates`
-    * replace same-key rows in `base`; unmatched update rows are
-    * inserts. Implemented as anti-join + union — one shuffle on the
-    * key, no full rewrite of unmatched base partitions when the
-    * downstream write is partition-aligned. (A table format with
-    * transactional MERGE — Delta/Iceberg — replaces this at the storage
-    * layer; the relational algebra is identical.) */
-  def upsert(
-      base: org.apache.spark.sql.DataFrame,
-      updates: org.apache.spark.sql.DataFrame,
-      key: String): org.apache.spark.sql.DataFrame = {
-    require(base.columns.sameElements(updates.columns),
-      s"upsert requires identical schemas: base=${base.columns.mkString(",")} " +
-        s"updates=${updates.columns.mkString(",")}")
-    // re-select base's column order: the USING-clause anti-join moves
-    // the key to the FRONT of its output, and a file-granular commit
-    // that wrote merged files key-first next to carried files in the
-    // original order would give one version inconsistently-ordered
-    // footers (surfaced as a schema mismatch one batch later)
-    base.join(updates.select(col(key)), Seq(key), "left_anti")
-      .select(base.columns.map(col).toIndexedSeq: _*)
-      .unionByName(updates)
-  }
-
-  /** Write a table bucketed (+sorted) by a join key into the session
-    * catalog. Two tables bucketed the same way join with NO exchange and
-    * NO sort — at 100 TB that removes the dominant cost of every
-    * fact⋈fact join on the bucketing key (the classic orders⋈lineitem
-    * case). Bucket count is a layout decision: pick ≈ cluster cores ×
-    * small constant; both sides must match for the exchange to be
-    * elided. */
-  def writeBucketed(
-      df: org.apache.spark.sql.DataFrame,
-      table: String,
-      key: String,
-      buckets: Int): Unit =
-    df.write
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .mode("overwrite")
-      .saveAsTable(table)
 
   // ------------------------------------------- manifest-pointer commits
   /** A TYPED per-file key bound. Long-keyed tables store numeric
@@ -1284,9 +1165,9 @@ object LakeLayout {
   }
 
   /** FILE-GRANULAR upsert commit — the operation that makes a streaming
-    * MERGE sink runnable at 100 TB. The whole-table form ([[upsert]] +
-    * [[commitLakeVersion]]) rewrites O(table) bytes per batch; this
-    * rewrites only the files whose key range intersects the batch:
+    * MERGE sink runnable at 100 TB. A whole-table merge re-committed
+    * through [[commitLakeVersion]] rewrites O(table) bytes per batch;
+    * this rewrites only the files whose key range intersects the batch:
     *  1. resolve the current manifest's file list;
     *  2. a file is TOUCHED iff some batch key falls inside its
     *     [minKey, maxKey] (evaluated as one small range join: the
@@ -1307,12 +1188,25 @@ object LakeLayout {
     * files). Keys absent from every range (pure inserts) touch nothing
     * and land only in the new files. First commit on an empty table is
     * a plain full commit. Bytes written per batch are returned for the
-    * caller to assert/record. */
+    * caller to assert/record.
+    *
+    * `deleteWhen` makes the upsert a three-clause MERGE INTO in the same
+    * one commit (the merge a CDC/decontamination pipeline runs):
+    *  - source row matched + `deleteWhen` holds → base row REMOVED;
+    *  - source row matched otherwise → base row REPLACED (update);
+    *  - source row unmatched and not delete-marked → INSERTED
+    *    (a delete-marked key absent from the table is a no-op).
+    * Delete-marked keys join the touch set like updates, so the cost
+    * stays O(source + touched files). `deleteWhen` evaluates over the
+    * source row's columns (null counts as false); such a source may
+    * carry source-only columns (a delete marker) that are visible to
+    * the condition and never written. */
   def upsertIntoLake(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String, checkpoint: String,
-      batchId: Long, evolveSchema: Boolean = false): LakeUpsertResult =
+      batchId: Long, evolveSchema: Boolean = false,
+      deleteWhen: Option[Column] = None): LakeUpsertResult =
     upsertWith(spark, tablePath, updates, key, checkpoint, None, batchId,
-      maxAttempts = 1, evolveSchema, deleteWhen = None)
+      maxAttempts = 1, evolveSchema, deleteWhen)
 
   /** OPTIMISTIC-CONCURRENCY upsert — the multi-writer commit protocol
     * (Delta/Iceberg's optimistic transaction core). Each attempt merges
@@ -1350,7 +1244,9 @@ object LakeLayout {
     * of one of our batch keys lives either in a file we rewrote or in
     * one of our new files. Schema must match the winner's (a
     * concurrent evolution falls back to recompute). A rebased commit
-    * counts as the attempt that computed it. */
+    * counts as the attempt that computed it. The rebase stays sound
+    * for a `deleteWhen` MERGE ([[upsertIntoLake]]): condition (b)
+    * checks the FULL source, delete-marked keys included. */
   def upsertIntoLakeOcc(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String, writerId: String,
       batchId: Long, maxAttempts: Int = 8,
@@ -1369,18 +1265,17 @@ object LakeLayout {
       // snapshot: the rebase is only sound if none changed under us
       baseDv: Map[String, Option[String]])
 
-  /** The one upsert/merge path behind [[upsertIntoLake]],
-    * [[mergeIntoLake]] and their OCC forms. `provenance` is the
-    * manifest's checkpoint field; `writer` the OCC writer id, or None
-    * for a single writer (one attempt, no rebase: a lost claim fails
-    * loudly — see [[commitLoop]]). */
+  /** The one upsert/merge path behind [[upsertIntoLake]] and
+    * [[upsertIntoLakeOcc]], with or without `deleteWhen`. `provenance`
+    * is the manifest's checkpoint field; `writer` the OCC writer id,
+    * or None for a single writer (one attempt, no rebase: a lost claim
+    * fails loudly — see [[commitLoop]]). */
   private def upsertWith(spark: SparkSession, tablePath: String,
       updates: DataFrame, key: String, provenance: String,
       writer: Option[String], batchId: Long, maxAttempts: Int,
       evolveSchema: Boolean,
       deleteWhen: Option[Column]): LakeUpsertResult = {
-    val verb = (if (deleteWhen.isDefined) "mergeIntoLake" else "upsertIntoLake") +
-      writer.fold("")(_ => "Occ")
+    val verb = "upsertIntoLake" + writer.fold("")(_ => "Occ")
     // rows the merge KEEPS from the source side: delete-marked source
     // rows remove their matched base row and are never inserted (a
     // delete-marked key absent from the table is a no-op)
@@ -1461,12 +1356,12 @@ object LakeLayout {
               // visible to `deleteWhen` and never written — the batch
               // must still supply every table column
               require(base.columns.forall(updates.columns.contains),
-                "mergeIntoLake requires the source to carry every table " +
-                  s"column; missing: ${base.columns
-                    .filterNot(updates.columns.contains).mkString(", ")}")
+                s"$verb with deleteWhen requires the source to carry " +
+                  "every table column; missing: " + base.columns
+                    .filterNot(updates.columns.contains).mkString(", "))
             else require(extra.isEmpty &&
                 base.columns.sorted.sameElements(updates.columns.sorted),
-              "upsertIntoLake requires identical column sets " +
+              s"$verb requires identical column sets " +
                 "(pass evolveSchema=true to add columns)")
           }
           updates.schema.fields.filter(f => base.columns.contains(f.name))
@@ -1637,43 +1532,6 @@ object LakeLayout {
       }
     }
   }
-
-  /** MERGE INTO in ONE atomic file-granular commit — the three-clause
-    * merge a CDC/decontamination pipeline runs:
-    *  - source row matched + `deleteWhen` holds → base row REMOVED;
-    *  - source row matched otherwise → base row REPLACED (update);
-    *  - source row unmatched and not delete-marked → INSERTED
-    *    (a delete-marked key absent from the table is a no-op).
-    * All three clauses land in a single version: only files whose key
-    * range intersects ANY source key (including delete-marked ones)
-    * are rewritten, the rest carry by reference — cost
-    * O(source + touched files), never O(table). `deleteWhen` evaluates
-    * over the source row's columns; null counts as false. Pass
-    * `evolveSchema = true` to let the source add columns
-    * (schema-in-manifest null-fill, as in [[upsertIntoLake]]). */
-  def mergeIntoLake(spark: SparkSession, tablePath: String,
-      source: DataFrame, key: String, deleteWhen: Column,
-      checkpoint: String, batchId: Long,
-      evolveSchema: Boolean = false): LakeUpsertResult =
-    upsertWith(spark, tablePath, source, key, checkpoint, None, batchId,
-      maxAttempts = 1, evolveSchema, Some(deleteWhen))
-
-  /** [[mergeIntoLake]] under the OCC multi-writer protocol: the same
-    * three-clause merge (update / insert / `deleteWhen` removal), each
-    * attempt recomputed against the latest snapshot on conflict. The
-    * rebase fast path stays sound with deletes because delete-marked
-    * keys participate in the touch set exactly like updates: every
-    * file that could hold one of them was rewritten by our attempt
-    * (condition (a) pins those), and the winner's added files hold
-    * none of our keys (condition (b) checks the FULL source, deletes
-    * included) — so re-pointing our result files at the newer snapshot
-    * preserves last-writer-wins for all three clauses. */
-  def mergeIntoLakeOcc(spark: SparkSession, tablePath: String,
-      source: DataFrame, key: String, deleteWhen: Column,
-      writerId: String, batchId: Long, maxAttempts: Int = 8,
-      evolveSchema: Boolean = false): LakeUpsertResult =
-    upsertIntoLakeOcc(spark, tablePath, source, key, writerId, batchId,
-      maxAttempts, evolveSchema, Some(deleteWhen))
 
   /** Whether any LIVE version carries this (checkpoint, batchId)
     * provenance — exactly-once replay detection for concurrent
@@ -1893,16 +1751,6 @@ object LakeLayout {
       }.toMap
       for (k <- kv.get("key"); b <- kv.get("bpk")) yield (k, b.toInt)
     }
-  }
-
-  /** Drop the persisted bloom index — metadata-only: already-attached
-    * blooms keep pruning until rewrites retire them; new writes stop
-    * attaching. */
-  def dropLakeBloomIndex(spark: SparkSession, tablePath: String): Unit = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(bloomIndexFile(table), false)
-    ()
   }
 
   /** Per-file bloom sizing from the manifest's exact row count (free —
@@ -3243,37 +3091,6 @@ object LakeLayout {
     ()
   }
 
-  /** TIME-BASED retention over the durable instants surface: keep
-    * every version whose commit instant is within `retainMs` of the
-    * store's own now (plus always the live version), drop the rest —
-    * the "keep 7 days of history" contract operators actually
-    * schedule, riding the same persisted+monotonized instants AS-OF
-    * uses, so "time travel works for the retention window" is true BY
-    * CONSTRUCTION: any instant a reader can name inside the window
-    * resolves to a kept version. Count-based `keep` still applies as
-    * a floor; all other semantics (checkpoint materialization,
-    * consumer low-watermark, orphan grace) are [[vacuumLake]]'s. */
-  def vacuumLakeByAge(spark: SparkSession, tablePath: String,
-      retainMs: Long, keepAtLeast: Int = 1,
-      protectFrom: Option[Long] = None,
-      orphanGraceMs: Long = 0L): Unit = {
-    require(retainMs >= 0, "retainMs must be nonnegative")
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val instants = lakeCommitInstants(spark, tablePath)
-    if (instants.isEmpty) return
-    val cutoff = storeNowMillis(fs, table) - retainMs
-    val recent = instants.count { case (_, t) => t >= cutoff }
-    // the BOUNDARY version also survives: an in-window pin OLDER than
-    // every in-window commit must resolve to the newest version
-    // at-or-before the cutoff — dropping it would make lakeVersionAsOf
-    // return None for instants the window promises to serve
-    val boundary = if (recent < instants.size) 1 else 0
-    vacuumLake(spark, tablePath,
-      keep = math.max(math.max(1, keepAtLeast), recent + boundary),
-      protectFrom, orphanGraceMs)
-  }
-
   /** Reclaim crash orphans WITHOUT touching history — the sweep half of
     * [[vacuumLake]] as a standalone entry point, for tables whose
     * version count is already at `keep` (vacuum's retention logic has
@@ -3299,7 +3116,7 @@ object LakeLayout {
     * attempt's files past the grace window early (the failure mode of
     * `System.currentTimeMillis() - grace` on object stores). Falls
     * back to the driver clock only if the store refuses the probe. */
-  private def storeNowMillis(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def storeNowMillis(fs: org.apache.hadoop.fs.FileSystem,
       table: org.apache.hadoop.fs.Path): Long = {
     val probe = new org.apache.hadoop.fs.Path(commitsDir(table),
       s".clock-probe-${java.util.UUID.randomUUID().toString.take(12)}")
@@ -3369,47 +3186,22 @@ object LakeLayout {
   }
 
   // ------------------------------------------------------------ Z-order
-  /** Spread a 16-bit value's bits across 32 bits (zeros interleaved) —
-    * the classic shift-mask ladder, a pure bitwise Column expression
-    * tree: five codegen'd stages, no UDF anywhere. */
-  def spreadBits16(c: Column): Column = {
-    val s0 = c.bitwiseAND(lit(0xFFFFL))
-    val s1 = s0.bitwiseOR(shiftleft(s0, 8)).bitwiseAND(lit(0x00FF00FFL))
-    val s2 = s1.bitwiseOR(shiftleft(s1, 4)).bitwiseAND(lit(0x0F0F0F0FL))
-    val s3 = s2.bitwiseOR(shiftleft(s2, 2)).bitwiseAND(lit(0x33333333L))
-    s3.bitwiseOR(shiftleft(s3, 1)).bitwiseAND(lit(0x55555555L))
-  }
-
-  /** Z-order (Morton) key of two 16-bit bins: interleaved bits, `a` on
-    * even positions, `b` on odd. Nearby (a, b) boxes map to compact key
-    * ranges — the property multi-dimensional file/row-group pruning
-    * rides on. */
-  def zkey2(a: Column, b: Column): Column =
-    spreadBits16(a).bitwiseOR(shiftleft(spreadBits16(b), 1))
-
-  /** A 16-bit equi-width bin that FILLS the bin space for any column
-    * range, in OVERFLOW-SAFE pure-integer math (never doubles, whose
-    * 53-bit mantissa mis-rounds year-of-nanoseconds extents):
-    *  - small range (< 2³¹): `(v - lo)·65535 div range` — the product
+  /** A `bits`-wide equi-width bin that FILLS the bin space for any
+    * column range, in OVERFLOW-SAFE pure-integer math (never doubles,
+    * whose 53-bit mantissa mis-rounds year-of-nanoseconds extents):
+    *  - small range (< 2³¹): `(v - lo)·maxBin div range` — the product
     *    stays under 2⁴⁷; a step-divide here would leave the bin space
     *    underfilled (1 500 users → 11 bits → the high Morton bits all
     *    come from the OTHER dimension and the layout degenerates to a
     *    single-column sort — measured, that is how this formula earned
     *    its CASE)
     *  - huge range (≥ 2³¹, e.g. epoch-ns): `(v - lo) div step`,
-    *    `step = range div 65536 + 1` — no product, and the range being
-    *    ≫ 65536 means the bins fill the space anyway.
-    * SQL-expressible (CASE + div), so the oracle reproduces every bin
-    * bit-exactly. */
-  private def bin16Sql(v: String, lo: String, hi: String): String =
-    binSql(v, lo, hi, 16)
-
-  /** [[bin16Sql]] at an arbitrary bin width — the N-axis interleave
-    * narrows per-axis resolution as axes multiply (62 bits shared).
-    * Same overflow-safe integer split: small ranges scale into the
-    * bin space exactly (`(v−lo)·maxBin div range`, product < 2⁴⁷);
-    * large ranges step-divide. */
-  private def binSql(v: String, lo: String, hi: String,
+    *    `step = range div 2^bits + 1` — no product, and the range being
+    *    ≫ 2^bits means the bins fill the space anyway.
+    * The N-axis interleave narrows `bits` as axes multiply (62 bits
+    * shared). SQL-expressible (CASE + div), so the oracle reproduces
+    * every bin bit-exactly. */
+  private[graft] def binSql(v: String, lo: String, hi: String,
       bits: Int): String = {
     val buckets = 1L << bits
     val maxBin = buckets - 1
@@ -3421,223 +3213,11 @@ object LakeLayout {
   /** Spread a `bits`-wide value so consecutive input bits land
     * `stride` positions apart — the generalized shift-mask spread for
     * an N-axis Morton key (axis i is the same spread shifted left by
-    * i). A fold of ≤16 masked shifts, all codegen'd bitwise Columns;
-    * [[spreadBits16]] stays the hand-tuned 2-axis ladder the oracle
-    * twin reproduces. */
+    * i). A fold of ≤16 masked shifts, all codegen'd bitwise Columns. */
   def spreadBitsEvery(c: Column, bits: Int, stride: Int): Column =
     (0 until bits).map(i =>
       shiftleft(c.bitwiseAND(lit(1L << i)), i * (stride - 1)))
       .reduce(_ bitwiseOR _)
-
-  /** Events + a `zkey` column: both dimensions binned to 16 bits
-    * ([[bin16Sql]]), then Morton-interleaved ([[zkey2]]). Extents come
-    * from one in-plan aggregate (1-row frame, broadcast by size-based
-    * planning — no driver collect). The same integer formulas are
-    * reproduced verbatim by the DuckDB oracle. */
-  def zorderKeyed(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.load(spark, sfDir, "events")
-    val ext = ev.agg(
-      min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"),
-      min(col("ts")).as("t_lo"), max(col("ts")).as("t_hi"))
-    ev.crossJoin(ext)
-      .withColumn("u_bin", expr(bin16Sql("user_id", "u_lo", "u_hi")))
-      .withColumn("t_bin", expr(bin16Sql("ts", "t_lo", "t_hi")))
-      .withColumn("zkey", zkey2(col("u_bin"), col("t_bin")))
-      .drop("u_lo", "u_hi", "t_lo", "t_hi")
-  }
-
-  /** Write events Z-ORDERED on (user_id, ts): [[zorderKeyed]], then
-    * range-partition + sort by the Morton key. Each output file covers
-    * a compact (user × time) rectangle, so a two-dimensional box query
-    * touches few files — unlike a single-column sort, which prunes one
-    * dimension and scatters the other across EVERY file. At 100 TB
-    * this is the layout decision that makes (user, time) point-range
-    * lookups scan gigabytes instead of the whole table: parquet
-    * row-group min/max stats on user_id AND ts are both tight within a
-    * file, so pushed filters skip nearly everything (file-stats
-    * engines — Delta/Iceberg — additionally prune whole files from the
-    * same locality). The sort is by the BOUNDED zkey, never a global
-    * multi-column sort of raw values: repartitionByRange samples the
-    * key, each task sorts only its slice. */
-  def writeEventsZOrdered(
-      spark: SparkSession,
-      sfDir: String,
-      outPath: String,
-      files: Int = 16): Unit =
-    zorderKeyed(spark, sfDir)
-      .repartitionByRange(files, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .write.mode("overwrite").parquet(outPath)
-
-  /** Oracle-checked Z-order key math: per event_type, count and exact
-    * min/max/sum of the Morton keys. Any drift in the binning or the
-    * five-stage bit spread breaks the hash. */
-  def qZorderKeyStats(spark: SparkSession, sfDir: String): DataFrame =
-    zorderKeyed(spark, sfDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("zkey")).as("zkey_min"),
-        max(col("zkey")).as("zkey_max"),
-        sum(col("zkey")).as("zkey_sum"))
-      .orderBy(col("event_type"))
-
-  /** Events + a THREE-axis `zkey` over (user_id, ts, event_id) — the
-    * generalized interleave ([[spreadBitsEvery]] at stride 3, 16 bits
-    * per axis, 48-bit keys) with min/max extents, the same registry
-    * shape as [[zorderKeyed]]. The DuckDB oracle reproduces the
-    * 16-term masked-shift spread verbatim, pinning the N-axis
-    * machinery cross-engine the way [[qZorderKeyStats]] pins the
-    * 2-axis ladder. */
-  def zorder3Keyed(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.load(spark, sfDir, "events")
-    val ext = ev.agg(
-      min(col("user_id")).as("u_lo"), max(col("user_id")).as("u_hi"),
-      min(col("ts")).as("t_lo"), max(col("ts")).as("t_hi"),
-      min(col("event_id")).as("e_lo"), max(col("event_id")).as("e_hi"))
-    ev.crossJoin(ext)
-      .withColumn("u_bin", expr(binSql("user_id", "u_lo", "u_hi", 16)))
-      .withColumn("t_bin", expr(binSql("ts", "t_lo", "t_hi", 16)))
-      .withColumn("e_bin", expr(binSql("event_id", "e_lo", "e_hi", 16)))
-      .withColumn("zkey",
-        spreadBitsEvery(col("u_bin"), 16, 3)
-          .bitwiseOR(shiftleft(spreadBitsEvery(col("t_bin"), 16, 3), 1))
-          .bitwiseOR(shiftleft(spreadBitsEvery(col("e_bin"), 16, 3), 2)))
-      .drop("u_lo", "u_hi", "t_lo", "t_hi", "e_lo", "e_hi",
-        "u_bin", "t_bin", "e_bin")
-  }
-
-  /** 48-bit keys: a single long SUM would overflow past ~30 k keys, and
-    * round 20 proved DECIMAL output trips the driver's hash gate even
-    * when every value matches exactly (it was the registry's ONLY
-    * DECIMAL column and its only hash failure — r20 verdict). So the
-    * sum ships as two BIGINT-safe halves: `sum(zkey >> 24)` and
-    * `sum(zkey & 0xFFFFFF)` (each ≤ 2^24·n — no overflow below ~5·10^14
-    * rows per group; the 48-bit total is `hi24·2^24 + lo24`). */
-  def qZorder3KeyStats(spark: SparkSession, sfDir: String): DataFrame =
-    zorder3Keyed(spark, sfDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("zkey")).as("zkey_min"),
-        max(col("zkey")).as("zkey_max"),
-        sum(shiftright(col("zkey"), 24)).as("zkey_sum_hi24"),
-        sum(col("zkey").bitwiseAND(lit(0xFFFFFFL))).as("zkey_sum_lo24"))
-      .orderBy(col("event_type"))
-
-  /** The five shift-mask stages + binning, verbatim in DuckDB integer
-    * SQL (`//` = integer division on BIGINTs, same truncation as
-    * Spark's `div` for the non-negative operands used here). */
-  val qZorderKeyStatsSql: String = {
-    def spread(x: String): String = {
-      val s1 = s"(($x | ($x << 8)) & 16711935)" // 0x00FF00FF
-      val s2 = s"(($s1 | ($s1 << 4)) & 252645135)" // 0x0F0F0F0F
-      val s3 = s"(($s2 | ($s2 << 2)) & 858993459)" // 0x33333333
-      s"(($s3 | ($s3 << 1)) & 1431655765)" // 0x55555555
-    }
-    def bin(v: String, lo: String, hi: String): String =
-      s"""CASE WHEN $hi - $lo >= 2147483648
-          THEN ($v - $lo) // (($hi - $lo) // 65536 + 1)
-          ELSE (($v - $lo) * 65535) // GREATEST($hi - $lo, 1) END"""
-    s"""WITH ext AS (
-         SELECT MIN(user_id) AS u_lo, MAX(user_id) AS u_hi,
-           MIN(epoch_ns(ts)) AS t_lo, MAX(epoch_ns(ts)) AS t_hi
-         FROM events),
-       binned AS (
-         SELECT event_type,
-           ${bin("user_id", "u_lo", "u_hi")} & 65535 AS ub,
-           ${bin("epoch_ns(ts)", "t_lo", "t_hi")} & 65535 AS tb
-         FROM events, ext),
-       keyed AS (
-         SELECT event_type,
-           ${spread("ub")} | (${spread("tb")} << 1) AS zkey
-         FROM binned)
-       SELECT event_type, COUNT(*) AS n_events,
-         CAST(MIN(zkey) AS BIGINT) AS zkey_min,
-         CAST(MAX(zkey) AS BIGINT) AS zkey_max,
-         CAST(SUM(zkey) AS BIGINT) AS zkey_sum
-       FROM keyed GROUP BY event_type ORDER BY event_type"""
-  }
-
-  /** [[qZorder3KeyStats]]'s twin: the generalized stride-3 spread as
-    * its raw definition — 16 masked shifts, bit i of the bin landing
-    * at position 3·i (axis offset added by the outer shift). */
-  val qZorder3KeyStatsSql: String = {
-    def spread3(x: String): String =
-      (0 until 16).map(i => s"(($x & ${1L << i}) << ${2 * i})")
-        .mkString("(", " | ", ")")
-    def bin(v: String, lo: String, hi: String): String =
-      s"""CASE WHEN $hi - $lo >= 2147483648
-          THEN ($v - $lo) // (($hi - $lo) // 65536 + 1)
-          ELSE (($v - $lo) * 65535) // GREATEST($hi - $lo, 1) END"""
-    s"""WITH ext AS (
-         SELECT MIN(user_id) AS u_lo, MAX(user_id) AS u_hi,
-           MIN(epoch_ns(ts)) AS t_lo, MAX(epoch_ns(ts)) AS t_hi,
-           MIN(event_id) AS e_lo, MAX(event_id) AS e_hi
-         FROM events),
-       binned AS (
-         SELECT event_type,
-           ${bin("user_id", "u_lo", "u_hi")} & 65535 AS ub,
-           ${bin("epoch_ns(ts)", "t_lo", "t_hi")} & 65535 AS tb,
-           ${bin("event_id", "e_lo", "e_hi")} & 65535 AS eb
-         FROM events, ext),
-       keyed AS (
-         SELECT event_type,
-           ${spread3("ub")} | (${spread3("tb")} << 1)
-             | (${spread3("eb")} << 2) AS zkey
-         FROM binned)
-       SELECT event_type, COUNT(*) AS n_events,
-         CAST(MIN(zkey) AS BIGINT) AS zkey_min,
-         CAST(MAX(zkey) AS BIGINT) AS zkey_max,
-         CAST(SUM(zkey >> 24) AS BIGINT) AS zkey_sum_hi24,
-         CAST(SUM(zkey & 16777215) AS BIGINT) AS zkey_sum_lo24
-       FROM keyed GROUP BY event_type ORDER BY event_type"""
-  }
-
-  // ------------------------------------- lake lifecycle registry drives
-  private[graft] def registryLakeRoot(s: SparkSession): String = {
-    val sc = s.sparkContext
-    sc.getCheckpointDir.getOrElse {
-      require(sc.master.startsWith("local"),
-        "lake registry drives need sparkContext.setCheckpointDir pointing " +
-          "at shared storage (HDFS/S3) on a non-local master")
-      java.nio.file.Files.createTempDirectory("graft-lake-reg").toString
-    } + s"/lake-${java.util.UUID.randomUUID().toString.take(12)}"
-  }
-
-  /** Process-lifetime staged BASE lakes for the registry drives, keyed
-    * by (sfDir, source-table fingerprint, shape) — the same pattern as
-    * the Hive DPP drive's staging cache (Catalog.scala): the timed
-    * registry function should measure the lake OP, not the one-time
-    * staging commit it runs against (q_lake_meta_count was ~90 %
-    * staging for an O(manifest) metadata read). Read-only drives read
-    * the staged base directly; MUTATING drives get an O(bytes)
-    * filesystem clone ([[cloneLake]]) so the shared base is never
-    * written. Fingerprint-keyed like the centroid cache: a re-generated
-    * sfDir re-stages automatically. The full commit-then-operate e2e
-    * forms remain pinned by the suite specs (LakeLayoutSpec,
-    * DvDeleteSpec, DeltaManifestSpec). */
-  private val lakeStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), String]()
-
-  private def sourceFingerprint(s: SparkSession, dir: String,
-      table: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(path)
-    val files = if (st.isDirectory) fs.listStatus(path) else Array(st)
-    files.foldLeft(17L) { (acc, f) =>
-      acc ^ (f.getPath.getName.hashCode.toLong * 31L +
-        f.getLen * 1000003L + f.getModificationTime)
-    }
-  }
-
-  private def stagedBase(s: SparkSession, dir: String, table: String,
-      shape: String)(build: String => Unit): String =
-    lakeStageCache.computeIfAbsent(
-      (dir, sourceFingerprint(s, dir, table), shape), { _ =>
-        val root = registryLakeRoot(s)
-        build(root)
-        root
-      })
 
   /** SHALLOW CLONE — a real engine operation (Delta's `CREATE TABLE
     * ... SHALLOW CLONE`): publish a v0 at `dstPath` whose manifest
@@ -3675,687 +3255,4 @@ object LakeLayout {
         "data", carriedTsCluster(cur), () => at.v)
     }
   }
-
-  /** Clone a staged base into a fresh UUID root for a mutating bench
-    * drive — now a [[cloneLakeShallow]] (O(manifest), no byte copy),
-    * so the timed span is the lake OP itself, not clone staging. */
-  private[graft] def cloneLake(s: SparkSession, src: String): String = {
-    val dst = registryLakeRoot(s)
-    cloneLakeShallow(s, src, dst)
-    dst
-  }
-
-  /** The staged key-clustered ORDERS base at `parts` files. */
-  private[graft] def stagedOrders(s: SparkSession, dir: String,
-      parts: Int): String =
-    stagedBase(s, dir, "orders", s"orders$parts") { root =>
-      commitLakeVersion(
-        Tables.load(s, dir, "orders")
-          .repartitionByRange(parts, col("o_orderkey"))
-          .sortWithinPartitions(col("o_orderkey")),
-        root, "stage", 0L, statsKey = Some("o_orderkey"))
-    }
-
-  /** The staged md5-keyed DOCUMENTS base at `parts` files. */
-  private def stagedDocs(s: SparkSession, dir: String,
-      parts: Int): String =
-    stagedBase(s, dir, "documents", s"docs$parts") { root =>
-      commitLakeVersion(
-        keyedDocs(s, dir)
-          .repartitionByRange(parts, col("doc_key"))
-          .sortWithinPartitions(col("doc_key")),
-        root, "stage", 0L, statsKey = Some("doc_key"))
-    }
-
-  /** Long key extents of a staged base, from MANIFEST stats (footer
-    * bounds equal scan truth — spec-pinned), so drives derive their
-    * bands without scheduling a scan job. */
-  private def manifestKeyExtent(s: SparkSession, lake: String): (Long, Long) = {
-    val fs = latestLakeCommit(s, lake).get.files
-    (fs.flatMap(_.minKey).collect { case LongKey(v) => v }.min,
-      fs.flatMap(_.maxKey).collect { case LongKey(v) => v }.max)
-  }
-
-  private def manifestTsExtent(s: SparkSession, lake: String): (Long, Long) = {
-    val fs = latestLakeCommit(s, lake).get.files
-    (fs.flatMap(_.minTs).collect { case LongKey(v) => v }.min,
-      fs.flatMap(_.maxTs).collect { case LongKey(v) => v }.max)
-  }
-
-  /** Oracle-checked drive of [[deleteFromLake]]: orders committed
-    * key-clustered, every key ≡ 3 (mod 10) deleted file-granularly, the
-    * survivors aggregated. The oracle is a plain anti-filter — any rows
-    * the delete path loses, keeps, or duplicates break the hash.
-    * All-integer outputs. */
-  def qLakeDelete(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    deleteFromLake(s, lake,
-      orders.filter(pmod(col("o_orderkey"), lit(10)) === 3)
-        .select(col("o_orderkey")),
-      "o_orderkey", "registry", 1L)
-    readLake(s, lake).get
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  val qLakeDeleteSql: String =
-    """SELECT o_orderstatus, COUNT(*) AS n_orders,
-         MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-       FROM orders WHERE o_orderkey % 10 <> 3
-       GROUP BY o_orderstatus ORDER BY o_orderstatus"""
-
-  /** Metadata-only COUNT(*): orders committed with footer stats, then
-    * [[lakeRowCount]] answers from the manifest — no data file is
-    * opened on the fast path (physically proven in LakeLayoutSpec by
-    * deleting every data file first). The oracle is DuckDB's own
-    * COUNT(*): the manifest numbers must equal the scan truth. */
-  def qLakeMetaCount(s: SparkSession, dir: String): DataFrame = {
-    // read-only op — reads the shared staged base directly; the timed
-    // span is the O(manifest) metadata count itself
-    val lake = stagedOrders(s, dir, 4)
-    val n = lakeRowCount(s, lake).get
-    s.range(1).select(lit(n).cast("long").as("n_rows"))
-  }
-
-  val qLakeMetaCountSql: String =
-    "SELECT COUNT(*) AS n_rows FROM orders"
-
-  /** Oracle-checked drive of TIMESTAMP-AS-OF time travel: pin the
-    * base version's store commit instant, land an update wave that
-    * re-prioritizes every 4th order, then read AS OF the pinned
-    * instant — the update must be INVISIBLE, so the oracle is the
-    * plain orders aggregate. A wrong version pick (off by one either
-    * way) breaks the hash: a quarter of the keys would sit in the
-    * '9-TT' group instead of their real priorities. */
-  def qLakeTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    val tPinned = lakeCommitInstants(s, lake)(0L)
-    // the next manifest's mtime must land STRICTLY after the pin —
-    // wait on the STORE's clock, not a blind sleep, so the drive stays
-    // correct on stores with coarser-than-ms mtime granularity (the
-    // wait is one probe ~immediately on a ms-granular local FS)
-    awaitStoreClockPast(s, lake, tPinned)
-    // a QUARTER-key wave is enough to break the hash on any wrong
-    // version pick (those keys' priorities shift groups) while the
-    // timed op stays a realistic file-granular commit, not a
-    // full-table rewrite
-    upsertIntoLake(s, lake,
-      orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
-        .withColumn("o_orderpriority", lit("9-TT")),
-      "o_orderkey", "registry", 1L)
-    readLakeAsOf(s, lake, tPinned).get
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  val qLakeTimeTravelSql: String =
-    """SELECT o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-       FROM orders GROUP BY 1 ORDER BY 1"""
-
-  /** Wait until the store's clock is strictly past `tPinned`, so the
-    * NEXT commit's instant lands after the pin even on stores with
-    * coarse mtime granularity. Success is tracked by the probe result,
-    * not the loop counter — a clock that advances exactly on the last
-    * re-probe must not abort. */
-  private[graft] def awaitStoreClockPast(s: SparkSession, lake: String,
-      tPinned: Long): Unit = {
-    val table = new org.apache.hadoop.fs.Path(lake)
-    val fs = table.getFileSystem(s.sessionState.newHadoopConf())
-    var tries = 0
-    var advanced = storeNowMillis(fs, table) > tPinned
-    while (!advanced && tries < 200) {
-      tries += 1; Thread.sleep(25)
-      advanced = storeNowMillis(fs, table) > tPinned
-    }
-    require(advanced,
-      s"store clock did not advance past the pinned instant $tPinned")
-  }
-
-  /** The TIMESTAMP-AS-OF drive THROUGH THE SQL FACE: the same
-    * pin → update wave → as-of read shape as [[qLakeTimeTravel]], but
-    * the read is a SQL statement resolved by [[LakeSql]] — the
-    * registry gates the SQL surface itself against the DuckDB oracle,
-    * not just the API it delegates to. */
-  def qLakeSqlAsof(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    val tPinned = lakeCommitInstants(s, lake)(0L)
-    awaitStoreClockPast(s, lake, tPinned)
-    upsertIntoLake(s, lake,
-      orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
-        .withColumn("o_orderpriority", lit("9-TT")),
-      "o_orderkey", "registry", 1L)
-    LakeSql.register(s, "sql_asof_lake", lake)
-    LakeSql.sql(s,
-      s"""SELECT o_orderpriority, count(*) AS n_orders,
-            sum(o_orderkey) AS sum_key
-          FROM sql_asof_lake TIMESTAMP AS OF $tPinned
-          GROUP BY o_orderpriority ORDER BY o_orderpriority""")
-  }
-
-  /** Oracle-checked drive of the SQL DML face ([[LakeSql]]'s
-    * INSERT / UPDATE / DELETE / MERGE, each lowering to the
-    * file-granular OCC lake operation): a takedown through
-    * `DELETE FROM` (merge-on-read DV delete), a priority rewrite
-    * through `MERGE INTO` (OCC upsert), an in-place rewrite through
-    * `UPDATE ... SET ... WHERE` (OCC upsert of exactly the touched
-    * rows), and an insert wave through `INSERT INTO ... SELECT`
-    * (O(batch) append) — then the final snapshot aggregated through
-    * the same SQL face. The oracle reproduces all four mutations
-    * relationally over plain orders, so a hash match proves each SQL
-    * statement applied EXACTLY its lowered operation's semantics.
-    * (Key classes are disjoint by construction: deletes end in 3,
-    * merged keys are ≡ 0 mod 4, updated keys ≡ 2 mod 4, inserted
-    * keys ≡ 7 mod 10 offset by 10M.) */
-  def qLakeSqlDml(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    LakeSql.register(s, "sql_dml_lake", lake, key = Some("o_orderkey"))
-    LakeSql.sql(s, "DELETE FROM sql_dml_lake WHERE o_orderkey % 10 = 3")
-    orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
-      .withColumn("o_orderpriority", lit("9-UPD"))
-      .createOrReplaceTempView("sql_dml_ups")
-    LakeSql.sql(s,
-      """MERGE INTO sql_dml_lake USING sql_dml_ups
-         ON t.o_orderkey = s.o_orderkey
-         WHEN MATCHED THEN UPDATE SET *
-         WHEN NOT MATCHED THEN INSERT *""")
-    LakeSql.sql(s,
-      """UPDATE sql_dml_lake
-         SET o_orderpriority = concat('8-', 'UPD')
-         WHERE o_orderkey % 4 = 2""")
-    LakeSql.sql(s,
-      """INSERT INTO sql_dml_lake
-         SELECT o_orderkey + 10000000, o_custkey, o_orderstatus,
-                o_totalprice, o_orderdate, '9-INS'
-         FROM sql_dml_lake WHERE o_orderkey % 100 = 7""")
-    LakeSql.sql(s,
-      """SELECT o_orderpriority, COUNT(*) AS n_orders,
-           CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-         FROM sql_dml_lake GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""")
-  }
-
-  val qLakeSqlDmlSql: String =
-    """WITH final AS (
-         SELECT CASE WHEN o_orderkey % 4 = 0 THEN '9-UPD'
-                     WHEN o_orderkey % 4 = 2 THEN '8-UPD'
-                     ELSE o_orderpriority END AS o_orderpriority,
-           o_orderkey
-         FROM orders WHERE o_orderkey % 10 <> 3
-         UNION ALL
-         SELECT '9-INS', o_orderkey + 10000000
-         FROM orders WHERE o_orderkey % 100 = 7 AND o_orderkey % 10 <> 3)
-       SELECT o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-       FROM final GROUP BY 1 ORDER BY 1"""
-
-  /** Oracle-checked drive of the CONDITIONAL / column-assignment SQL
-    * MERGE ([[LakeSql]]'s general clause form, lowered to ONE OCC
-    * upsert commit): matched source rows (keys ≡ 0 mod 5) update ONLY
-    * where the condition holds (`o_orderstatus = 'F'`), each
-    * assignment exercising a different reference class — a source
-    * column (`concat('M-', s.o_orderstatus)`) and a target column
-    * (`t.o_totalprice + 1.0`) — while matched-but-failing rows stay
-    * byte-untouched; unmatched source rows (keys ≡ 1 mod 5, shifted
-    * +20M) insert via `INSERT *`. The oracle reproduces the merge
-    * relationally over plain orders, so a hash match proves clause
-    * conditions, assignment scoping, and the untouched-row contract
-    * all at once (the decimal-cast price sum pins the +1.0 to exactly
-    * the condition's rows). */
-  def qLakeSqlMerge(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    LakeSql.register(s, "sql_mrg_lake", lake, key = Some("o_orderkey"))
-    orders.filter(pmod(col("o_orderkey"), lit(5)) === 0)
-      .unionByName(orders.filter(pmod(col("o_orderkey"), lit(5)) === 1)
-        .withColumn("o_orderkey", col("o_orderkey") + 20000000L)
-        .withColumn("o_orderpriority", lit("X-NEW")))
-      .createOrReplaceTempView("sql_mrg_src")
-    LakeSql.sql(s,
-      """MERGE INTO sql_mrg_lake t USING sql_mrg_src s
-         ON t.o_orderkey = s.o_orderkey
-         WHEN MATCHED AND s.o_orderstatus = 'F' THEN
-           UPDATE SET o_orderpriority = concat('M-', s.o_orderstatus),
-                      o_totalprice = t.o_totalprice + 1.0
-         WHEN NOT MATCHED THEN INSERT *""")
-    LakeSql.sql(s,
-      """SELECT o_orderpriority, COUNT(*) AS n_orders,
-           CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_price
-         FROM sql_mrg_lake GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""")
-  }
-
-  val qLakeSqlMergeSql: String =
-    """WITH final AS (
-         SELECT CASE WHEN o_orderkey % 5 = 0 AND o_orderstatus = 'F'
-                     THEN 'M-' || o_orderstatus
-                     ELSE o_orderpriority END AS o_orderpriority,
-           CASE WHEN o_orderkey % 5 = 0 AND o_orderstatus = 'F'
-                THEN o_totalprice + 1.0
-                ELSE o_totalprice END AS o_totalprice,
-           o_orderkey
-         FROM orders
-         UNION ALL
-         SELECT 'X-NEW', o_totalprice, o_orderkey + 20000000
-         FROM orders WHERE o_orderkey % 5 = 1)
-       SELECT o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-           AS sum_price
-       FROM final GROUP BY 1 ORDER BY 1"""
-
-  /** Oracle-checked drive of [[restoreLake]]: a bad wave lands on the
-    * staged base (every 4th order's priority clobbered), then RESTORE
-    * rolls the table back to v0 as a metadata-only commit and the
-    * CURRENT snapshot is aggregated — so the oracle is the plain
-    * orders aggregate, same truth as the time-travel drive. A restore
-    * that no-ops, under- or over-rolls leaves '9-RB' keys in the
-    * wrong group and breaks the hash. */
-  def qLakeRestore(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    upsertIntoLake(s, lake,
-      orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
-        .withColumn("o_orderpriority", lit("9-RB")),
-      "o_orderkey", "registry", 1L)
-    restoreLake(s, lake, 0L)
-    readLake(s, lake).get
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** The MERGE-ON-READ twin of [[qLakeDelete]]: the SAME delete (every
-    * key ≡ 3 mod 10 — maximally scattered, the copy-on-write worst
-    * case where every file is touched) via [[deleteFromLakeDv]], which
-    * writes one O(deleted keys) sidecar instead of rewriting every
-    * file, then the same read-back aggregation. Shares
-    * [[qLakeDeleteSql]]: both delete forms must hash to the same
-    * truth, and the bench's side-by-side timing shows the write-path
-    * asymmetry (rewrite-all vs sidecar-only) while the read pays the
-    * broadcast anti-join until maintenance retires the vector. */
-  def qLakeDvDelete(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 4))
-    deleteFromLakeDv(s, lake,
-      orders.filter(pmod(col("o_orderkey"), lit(10)) === 3)
-        .select(col("o_orderkey")),
-      "o_orderkey", "registry", 1L)
-    readLake(s, lake).get
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** Oracle-checked drive of [[readLakeKeyRange]]: orders committed
-    * key-clustered across several files, the middle-quarter key band
-    * (derived from the table's own min/max in exact integer math, so
-    * it is non-empty at every sf) read through the stats-pruned path —
-    * only intersecting files reach the scan — then aggregated per
-    * priority. Oracle = the same band as a WHERE clause; the pruning
-    * must be invisible in the result. The min/max pair is the one
-    * bounded scalar that reaches the driver (same posture as
-    * pageRank's teleport constant). */
-  def qLakeRangeRead(s: SparkSession, dir: String): DataFrame = {
-    val lake = stagedOrders(s, dir, 8) // read-only: no clone
-    // band from MANIFEST stats (footer bounds == scan truth), so the
-    // timed span never schedules an extents scan
-    val (mn, mx) = manifestKeyExtent(s, lake)
-    val (lo, hi) = ((3 * mn + mx) / 4, (mn + mx) / 2)
-    readLakeKeyRange(s, lake, "o_orderkey", lo, hi).get
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Oracle-checked drive of [[readLakeTsRange]] — SECOND-DIMENSION
-    * file pruning on a Z-ordered lake table. Events are committed
-    * Z-ordered on (user_id, ts) with BOTH dimensions' footer bounds in
-    * the manifest (one footer pass), then the middle-half TIME band is
-    * read through the ts-pruned path and aggregated per event_type.
-    * The Z-order layout is what makes both axes' per-file bounds tight
-    * enough to prune; the oracle (the same band as a WHERE clause over
-    * the raw table) proves pruning is invisible in the result. */
-  def qLakeTsRead(s: SparkSession, dir: String): DataFrame = {
-    val lake = stagedBase(s, dir, "events", "eventsZ8") { root =>
-      commitLakeVersion(
-        zorderKeyed(s, dir)
-          .repartitionByRange(8, col("zkey"))
-          .sortWithinPartitions(col("zkey"))
-          .drop("zkey", "u_bin", "t_bin"),
-        root, "stage", 0L, statsKey = Some("user_id"),
-        tsStatsKey = Some("ts"))
-    } // read-only: no clone
-    val (mn, mx) = manifestTsExtent(s, lake)
-    val (lo, hi) = ((3 * mn + mx) / 4, (mn + mx) / 2)
-    readLakeTsRange(s, lake, "ts", lo, hi).get
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("user_id")).as("sum_user"),
-        min(col("ts")).as("min_ts"),
-        max(col("ts")).as("max_ts"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Oracle-checked drive of [[optimizeLakeZOrderOcc]]: events
-    * committed in INGEST shape (key-clustered, exactly what
-    * [[upsertIntoLake]] rewrites produce — the TIME axis scatters
-    * across every file), re-Z-ordered by the OPTIMIZE maintenance
-    * commit, then the middle-half time band read through the
-    * ts-pruned path and aggregated per event_type. The oracle (the
-    * same band as a WHERE over the raw table) proves the rewrite
-    * moved bytes, never rows — and that pruning through the new
-    * layout is invisible in the result. */
-  def qLakeZorderOpt(s: SparkSession, dir: String): DataFrame = {
-    val lake = cloneLake(s,
-      stagedBase(s, dir, "events", "eventsK8") { root =>
-        commitLakeVersion(
-          Tables.load(s, dir, "events")
-            .repartitionByRange(8, col("user_id"))
-            .sortWithinPartitions(col("user_id")),
-          root, "stage", 0L, statsKey = Some("user_id"),
-          tsStatsKey = Some("ts"))
-      })
-    val (mn, mx) = manifestTsExtent(s, lake)
-    val (lo, hi) = ((3 * mn + mx) / 4, (mn + mx) / 2)
-    optimizeLakeZOrderOcc(s, lake, "user_id", "ts", "opt", minFiles = 8)
-    readLakeTsRange(s, lake, "ts", lo, hi).get
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("user_id")).as("sum_user"),
-        min(col("user_id")).as("min_user"),
-        max(col("user_id")).as("max_user"))
-      .orderBy(col("event_type"))
-  }
-
-  val qLakeZorderOptSql: String =
-    """WITH ext AS (SELECT MIN(epoch_ns(ts)) AS mn, MAX(epoch_ns(ts)) AS mx
-                    FROM events)
-       SELECT event_type, COUNT(*) AS n_events,
-         CAST(SUM(user_id) AS BIGINT) AS sum_user,
-         MIN(user_id) AS min_user, MAX(user_id) AS max_user
-       FROM events, ext
-       WHERE epoch_ns(ts) >= (3 * mn + mx) // 4
-         AND epoch_ns(ts) <= (mn + mx) // 2
-       GROUP BY event_type ORDER BY event_type"""
-
-  val qLakeTsReadSql: String =
-    """WITH ext AS (SELECT MIN(epoch_ns(ts)) AS mn, MAX(epoch_ns(ts)) AS mx
-                    FROM events)
-       SELECT event_type, COUNT(*) AS n_events,
-         CAST(SUM(user_id) AS BIGINT) AS sum_user,
-         MIN(epoch_ns(ts)) AS min_ts, MAX(epoch_ns(ts)) AS max_ts
-       FROM events, ext
-       WHERE epoch_ns(ts) >= (3 * mn + mx) // 4
-         AND epoch_ns(ts) <= (mn + mx) // 2
-       GROUP BY event_type ORDER BY event_type"""
-
-  val qLakeRangeReadSql: String =
-    """WITH ext AS (SELECT MIN(o_orderkey) AS mn, MAX(o_orderkey) AS mx
-                    FROM orders)
-       SELECT o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-       FROM orders, ext
-       WHERE o_orderkey BETWEEN (3 * mn + mx) // 4 AND (mn + mx) // 2
-       GROUP BY o_orderpriority ORDER BY o_orderpriority"""
-
-  /** Registry drive for SCHEMA EVOLUTION: commit orders without any
-    * flag column, then upsert every 7th order carrying a NEW
-    * `priority_flag` column (`evolveSchema = true`). The readback
-    * groups on the evolved column — rows in files that PREDATE the
-    * column surface it as null (the schema-in-manifest null-fill),
-    * which is the group the oracle checks alongside the updated ones.
-    * Aggregates stay on integer columns (no float-sum drift in the
-    * hash compare). */
-  def qLakeEvolve(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 6))
-    val updates = orders
-      .filter(pmod(col("o_orderkey"), lit(7)) === 0)
-      .withColumn("priority_flag", substring(col("o_orderpriority"), 1, 1))
-    upsertIntoLake(s, lake, updates, "o_orderkey", "registry", 1L,
-      evolveSchema = true)
-    readLake(s, lake).get
-      .groupBy(col("priority_flag"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey")).as("sum_key"),
-        countDistinct(col("o_orderstatus")).as("n_status"))
-      .orderBy(col("priority_flag"))
-  }
-
-  val qLakeEvolveSql: String =
-    """SELECT CASE WHEN o_orderkey % 7 = 0
-                   THEN substr(o_orderpriority, 1, 1) END AS priority_flag,
-         COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
-         COUNT(DISTINCT o_orderstatus) AS n_status
-       FROM orders
-       GROUP BY 1 ORDER BY 1"""
-
-  /** Registry drive for MERGE INTO: one atomic three-clause merge into
-    * a committed orders lake. Source = every 5th order re-marked
-    * '9-UPD' (update) plus the same rows shifted 10M keys up and marked
-    * '9-INS' (insert); delete clause = source status 'F', so F-status
-    * matches are removed and F-status insert candidates are dropped.
-    * The readback groups by priority — the oracle reproduces the merge
-    * relationally over plain orders. Integer-only aggregates. */
-  def qLakeMerge(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val lake = cloneLake(s, stagedOrders(s, dir, 6))
-    val subset = orders.filter(pmod(col("o_orderkey"), lit(5)) === 0)
-    val source = subset
-      .withColumn("o_orderpriority", lit("9-UPD"))
-      .unionByName(subset
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-        .withColumn("o_orderpriority", lit("9-INS")))
-    mergeIntoLake(s, lake, source, "o_orderkey",
-      deleteWhen = col("o_orderstatus") === "F", "registry", 1L)
-    readLake(s, lake).get
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_orderkey")).as("sum_key"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  val qLakeMergeSql: String =
-    """WITH final AS (
-         SELECT o_orderpriority, o_orderkey
-         FROM orders WHERE o_orderkey % 5 <> 0
-         UNION ALL
-         SELECT '9-UPD', o_orderkey
-         FROM orders WHERE o_orderkey % 5 = 0 AND o_orderstatus <> 'F'
-         UNION ALL
-         SELECT '9-INS', o_orderkey + 10000000
-         FROM orders WHERE o_orderkey % 5 = 0 AND o_orderstatus <> 'F')
-       SELECT o_orderpriority, COUNT(*) AS n_orders,
-         CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-       FROM final GROUP BY 1 ORDER BY 1"""
-
-  /** The documents table under its north-star STRING merge key: the
-    * md5-hex of the doc id — the key shape every dedup/corpus pipeline
-    * in this repo actually uses (Dedup.scala keys on md5 throughout).
-    * Reproduced verbatim by DuckDB's `md5(CAST(doc_id AS VARCHAR))`
-    * (both emit lowercase hex). */
-  private def keyedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .withColumn("doc_key", md5(col("doc_id").cast("string").cast("binary")))
-
-  /** Registry drive of the STRING-KEYED lake lifecycle: documents
-    * committed key-clustered on the md5-hex `doc_key`, an update wave
-    * (first hex nibble 0–3 → lang rewritten) upserted FILE-GRANULARLY,
-    * a takedown (nibble f) deleted, the survivors aggregated. The
-    * [[StrKey]] stats are what keep this file-granular — before typed
-    * bounds a string key nulled every stat and each commit degraded to
-    * an O(table) rewrite. min/max over the key land in the result, so
-    * the hash also pins the string-collation contract (binary order in
-    * Spark, DuckDB, and [[KeyBound.strLeq]] — identical on hex ASCII
-    * and on any UTF-8 when compared bytewise). */
-  def qLakeStrUpsert(s: SparkSession, dir: String): DataFrame = {
-    val docs = keyedDocs(s, dir)
-    val lake = cloneLake(s, stagedDocs(s, dir, 6))
-    upsertIntoLake(s, lake,
-      docs.filter(substring(col("doc_key"), 1, 1).isin("0", "1", "2", "3"))
-        .withColumn("lang", lit("xx")),
-      "doc_key", "registry", 1L)
-    deleteFromLake(s, lake,
-      docs.filter(substring(col("doc_key"), 1, 1) === "f")
-        .select(col("doc_key")),
-      "doc_key", "registry", 2L)
-    readLake(s, lake).get
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("doc_key")).as("min_key"),
-        max(col("doc_key")).as("max_key"),
-        sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
-  }
-
-  val qLakeStrUpsertSql: String =
-    """WITH keyed AS (
-         SELECT md5(CAST(doc_id AS VARCHAR)) AS doc_key, lang, n_chars
-         FROM documents),
-       final AS (
-         SELECT doc_key,
-           CASE WHEN substr(doc_key, 1, 1) IN ('0','1','2','3')
-                THEN 'xx' ELSE lang END AS lang,
-           n_chars
-         FROM keyed WHERE substr(doc_key, 1, 1) <> 'f')
-       SELECT lang, COUNT(*) AS n_docs,
-         MIN(doc_key) AS min_key, MAX(doc_key) AS max_key,
-         CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-       FROM final GROUP BY lang ORDER BY lang"""
-
-  /** Registry drive of [[readLakeKeyRangeStr]]: a string key band over
-    * the md5-keyed documents lake, read through the StrKey-pruned path
-    * — files whose hex range misses ['4','8'] never reach the scan —
-    * then aggregated per source. Oracle = the same band as a WHERE
-    * clause; pruning must be invisible in the result. */
-  def qLakeStrRange(s: SparkSession, dir: String): DataFrame = {
-    val lake = stagedDocs(s, dir, 8) // read-only: no clone
-    readLakeKeyRangeStr(s, lake, "doc_key", "4", "8").get
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("doc_key")).as("min_key"),
-        max(col("doc_key")).as("max_key"))
-      .orderBy(col("source"))
-  }
-
-  val qLakeStrRangeSql: String =
-    """WITH keyed AS (
-         SELECT md5(CAST(doc_id AS VARCHAR)) AS doc_key, source
-         FROM documents)
-       SELECT source, COUNT(*) AS n_docs,
-         MIN(doc_key) AS min_key, MAX(doc_key) AS max_key
-       FROM keyed WHERE doc_key >= '4' AND doc_key <= '8'
-       GROUP BY source ORDER BY source"""
-
-  /** Registry drive for BLOOM DATA SKIPPING: orders staged HASH-SPREAD
-    * across 8 files (every file's key range spans the domain — min/max
-    * pruning is structurally useless, exactly the append-mostly shape
-    * the bloom index exists for) with per-file key blooms, then a
-    * 5-key point lookup through [[readLakeForKeys]]. The in-drive
-    * `require` pins the skip: the candidate set must be a strict
-    * subset of the table's files. The five probe keys share one hash
-    * bucket (o_orderkey % 8 == 0) so they co-locate in a single file
-    * even if AQE coalesces the stage shuffle — the skip assertion is
-    * then deterministic at any SF. Oracle is the plain IN-list over
-    * base orders. */
-  def qLakePointLookup(s: SparkSession, dir: String): DataFrame = {
-    // size the blooms from the ACTUAL corpus (~10 bits per expected
-    // row per file, the sizing the bloom doc prescribes): a hardcoded
-    // width saturates as rows/file grow with SF and saturated blooms
-    // pass every probe — the skip require below would abort the drive
-    val rows = Tables.load(s, dir, "orders").count()
-    val sized = ((math.max(1L, rows / 8L) * 10L + 63L) / 64L) * 64L
-    val bits = math.min(1L << 26, math.max(1L << 18, sized)).toInt
-    val lake = stagedBase(s, dir, "orders", "ordersbloom8") { root =>
-      commitLakeVersion(
-        Tables.load(s, dir, "orders")
-          .repartition(8, pmod(col("o_orderkey"), lit(8))),
-        root, "stage", 0L, statsKey = Some("o_orderkey"),
-        bloomBits = bits)
-    }
-    val keys = Tables.load(s, dir, "orders")
-      .filter(pmod(col("o_orderkey"), lit(8)) === 0)
-      .select(col("o_orderkey")).orderBy(col("o_orderkey")).limit(5)
-      .collect().map(_.getLong(0)).toSeq
-    val cand = lakeFilesForKeys(s, lake, keys)
-    val total = latestLakeCommit(s, lake).get.files.size
-    require(cand.size < total,
-      s"bloom skipping must prune a hash-spread table: " +
-        s"${cand.size} of $total files became candidates")
-    readLakeForKeys(s, lake, "o_orderkey", keys)
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        col("o_orderpriority"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  val qLakePointLookupSql: String =
-    """SELECT o_orderkey, o_orderstatus, o_orderpriority
-       FROM orders
-       WHERE o_orderkey IN (SELECT o_orderkey FROM orders
-                            WHERE o_orderkey % 8 = 0
-                            ORDER BY o_orderkey LIMIT 5)
-       ORDER BY o_orderkey"""
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lake_point_lookup" -> (qLakePointLookup _),
-    "q_zorder_key_stats" -> (qZorderKeyStats _),
-    "q_zorder3_key_stats" -> (qZorder3KeyStats _),
-    "q_lake_delete" -> (qLakeDelete _),
-    "q_lake_dv_delete" -> (qLakeDvDelete _),
-    "q_lake_meta_count" -> (qLakeMetaCount _),
-    "q_lake_time_travel" -> (qLakeTimeTravel _),
-    "q_lake_sql_asof" -> (qLakeSqlAsof _),
-    "q_lake_sql_dml" -> (qLakeSqlDml _),
-    "q_lake_sql_merge" -> (qLakeSqlMerge _),
-    "q_lake_restore" -> (qLakeRestore _),
-    "q_lake_range_read" -> (qLakeRangeRead _),
-    "q_lake_ts_read" -> (qLakeTsRead _),
-    "q_lake_zorder_opt" -> (qLakeZorderOpt _),
-    "q_lake_evolve" -> (qLakeEvolve _),
-    "q_lake_merge" -> (qLakeMerge _),
-    "q_lake_str_upsert" -> (qLakeStrUpsert _),
-    "q_lake_str_range" -> (qLakeStrRange _))
-
-  val oracle: Map[String, String] = Map(
-    "q_lake_point_lookup" -> qLakePointLookupSql,
-    "q_zorder_key_stats" -> qZorderKeyStatsSql,
-    "q_zorder3_key_stats" -> qZorder3KeyStatsSql,
-    "q_lake_delete" -> qLakeDeleteSql,
-    // merge-on-read twin shares the copy-on-write delete's truth
-    "q_lake_dv_delete" -> qLakeDeleteSql,
-    "q_lake_meta_count" -> qLakeMetaCountSql,
-    "q_lake_time_travel" -> qLakeTimeTravelSql,
-    // the SQL face resolves to the same pinned snapshot → same truth
-    "q_lake_sql_asof" -> qLakeTimeTravelSql,
-    "q_lake_sql_dml" -> qLakeSqlDmlSql,
-    "q_lake_sql_merge" -> qLakeSqlMergeSql,
-    // a correct rollback restores exactly the plain-orders truth
-    "q_lake_restore" -> qLakeTimeTravelSql,
-    "q_lake_range_read" -> qLakeRangeReadSql,
-    "q_lake_ts_read" -> qLakeTsReadSql,
-    "q_lake_zorder_opt" -> qLakeZorderOptSql,
-    "q_lake_evolve" -> qLakeEvolveSql,
-    "q_lake_merge" -> qLakeMergeSql,
-    "q_lake_str_upsert" -> qLakeStrUpsertSql,
-    "q_lake_str_range" -> qLakeStrRangeSql)
 }

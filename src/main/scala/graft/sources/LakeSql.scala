@@ -500,7 +500,8 @@ object LakeSql {
     *   MERGE INTO t USING s ON t.k = s.k
     *     WHEN MATCHED AND <cond> THEN DELETE
     *     WHEN MATCHED THEN UPDATE SET *
-    *     WHEN NOT MATCHED THEN INSERT *           → mergeIntoLakeOcc
+    *     WHEN NOT MATCHED THEN INSERT *           → upsertIntoLakeOcc
+    *                                                with deleteWhen
     *                                                (one atomic commit:
     *                                                updates, inserts and
     *                                                removals land in one
@@ -578,10 +579,10 @@ object LakeSql {
         // source rows; source-only marker columns allowed — the merge
         // core filters before its table-schema projection, so markers
         // are visible to the condition and never written)
-        LakeLayout.mergeIntoLakeOcc(spark, path, src, key,
-          deleteWhen = coalesce(expr(stripSourceQuals(
-            cond, srcName, sAlias)), lit(false)),
-          writerId = "sql", batchId = bid)
+        LakeLayout.upsertIntoLakeOcc(spark, path, src, key,
+          writerId = "sql", batchId = bid,
+          deleteWhen = Some(coalesce(expr(stripSourceQuals(
+            cond, srcName, sAlias)), lit(false))))
       case other =>
         mergeGeneral(spark, name, path, key, tAlias, srcName, sAlias,
           src, other, bid)

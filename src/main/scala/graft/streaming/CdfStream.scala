@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.IncrementalAgg
-import graft.sources.{LakeLayout, Tables}
+import graft.sources.{LakeLayout, LakeQueries, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -379,7 +379,7 @@ object CdfStream {
     // base v0 from the process-lifetime staged orders-6 lake (cloned —
     // this drive mutates): the timed span is the commit chain + feed,
     // not the one-time base staging write
-    val lake = LakeLayout.cloneLake(s, LakeLayout.stagedOrders(s, dir, 6))
+    val lake = LakeQueries.cloneLake(s, LakeQueries.stagedOrders(s, dir, 6))
     mutationChain(s, dir, lake)
     (1L to 5L).map(v => changesForVersion(s, lake, v, "o_orderkey"))
       .reduce(_ unionByName _)
@@ -415,9 +415,9 @@ object CdfStream {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def stagedChain(s: SparkSession, dir: String): String =
-    chainCache.computeIfAbsent(LakeLayout.stagedOrders(s, dir, 6), {
+    chainCache.computeIfAbsent(LakeQueries.stagedOrders(s, dir, 6), {
       base =>
-        val lake = LakeLayout.cloneLake(s, base)
+        val lake = LakeQueries.cloneLake(s, base)
         mutationChain(s, dir, lake)
         lake
     })
@@ -431,7 +431,7 @@ object CdfStream {
     * source through every change type the feed emits. */
   def qLakeReplicate(s: SparkSession, dir: String): DataFrame = {
     val src = stagedChain(s, dir)
-    val dst = LakeLayout.registryLakeRoot(s)
+    val dst = LakeQueries.registryLakeRoot(s)
     val applied = replicateLake(s, src, "o_orderkey", dst)
     require(applied >= 1, s"replication applied $applied source versions")
     LakeLayout.readLake(s, dst).get

@@ -29,12 +29,12 @@ class IncrementalAggSpec extends SparkSuite {
         (100L until 105L).map(k => (k, "gNew", k))).toDF("id", "g", "v"),
       "id", "ck", 1L)
     // v2: merge — update 20, delete 21-24, insert 200
-    LakeLayout.mergeIntoLake(spark, table,
+    LakeLayout.upsertIntoLake(spark, table,
       (Seq((20L, "g9", 7L, false), (200L, "gNew", 1L, false)) ++
         (21L until 25L).map(k => (k, "x", 0L, true)))
         .toDF("id", "g", "v", "del")
         .select(col("id"), col("g"), col("v"), col("del")),
-      "id", col("del"), "ck", 2L, evolveSchema = true)
+      "id", "ck", 2L, evolveSchema = true, deleteWhen = Some(col("del")))
     // v3: file-granular delete
     LakeLayout.deleteFromLake(spark, table,
       Seq(30L, 31L, 100L).toDF("id"), "id", "ck", 3L)

@@ -80,10 +80,10 @@ class LakeConstraintsSpec extends SparkSuite {
     // the delete-marked row (marker: v IS NULL) would violate `v_set`
     // as a stored row — as a removal it must not trip the gate; the
     // kept row is valid
-    LakeLayout.mergeIntoLake(spark, table,
+    LakeLayout.upsertIntoLake(spark, table,
       Seq((2L, 0L, null.asInstanceOf[String]),
         (9L, 90L, "ins")).toDF("id", "score", "v"),
-      "id", deleteWhen = col("v").isNull, "w", 1L)
+      "id", "w", 1L, deleteWhen = Some(col("v").isNull))
     val ids = LakeLayout.readLake(spark, table).get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(!ids.contains(2L) && ids.contains(9L))

@@ -1,101 +1,14 @@
 package graft
 
-import graft.sources.LakeLayout
+import graft.sources.{LakeLayout, LakeQueries}
 import org.apache.spark.sql.functions._
 
 class LakeLayoutSpec extends SparkSuite {
 
   import spark.implicits._
 
-  lazy val lakePath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lake").toString
-    LakeLayout.writeEventsPartitioned(spark, sfDir, dir)
-    dir
-  }
-
-  test("partitioned write produces one directory per event date, bounded files") {
-    val dirs = new java.io.File(lakePath).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
-    assert(dirs.length >= 28 && dirs.length <= 31, s"got ${dirs.length} partitions")
-    dirs.foreach { d =>
-      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files == 1, s"${d.getName} has $files files, want 1")
-    }
-  }
-
-  test("single-day read prunes partitions at the FileIndex (PartitionFilters)") {
-    val df = LakeLayout.readDay(spark, lakePath, "2024-01-15")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_date"),
-      "date filter must be a partition filter, not a data filter")
-    val n = df.count()
-    assert(n > 0)
-    // cross-check against the unpartitioned source
-    val expected = graft.sources.Tables.load(spark, sfDir, "events")
-      .filter(to_date(timestamp_micros(expr("ts div 1000"))) === lit("2024-01-15"))
-      .count()
-    assert(n == expected)
-  }
-
-  test("matching bucketed tables join with no exchange and no sort") {
-    import graft.sources.{LakeLayout, Tables}
-    LakeLayout.writeBucketed(
-      Tables.load(spark, sfDir, "orders"), "b_orders", "o_orderkey", 4)
-    LakeLayout.writeBucketed(
-      Tables.load(spark, sfDir, "lineitem")
-        .withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem",
-      "o_orderkey", 4)
-    // tiny test tables would broadcast (which also skips bucketing) —
-    // force the shuffle-join path the assertion is about
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("b_orders")
-        .join(spark.table("b_lineitem"), "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$plan")
-      assert(joined.count() ==
-        Tables.load(spark, sfDir, "lineitem").count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-  }
-
-  test("z-order confines a user-range box to few files; a time sort cannot") {
-    import graft.sources.Tables
-    val ev = Tables.load(spark, sfDir, "events")
-    val (uLo, uHi) = {
-      val r = ev.agg(min($"user_id"), max($"user_id")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val files = 16
-    // middle ~12% band of the user range — the 2nd dimension a
-    // time-sorted layout scatters across every file
-    val bandLo = uLo + (uHi - uLo) * 44 / 100
-    val bandHi = uLo + (uHi - uLo) * 56 / 100
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    LakeLayout.writeEventsZOrdered(spark, sfDir, zDir, files)
-    val tDir = java.nio.file.Files.createTempDirectory("graft-tsorted").toString
-    ev.repartitionByRange(files, $"ts").sortWithinPartitions($"ts")
-      .write.mode("overwrite").parquet(tDir)
-    def filesTouched(path: String): (Long, Long) = {
-      val hit = spark.read.parquet(path)
-        .filter($"user_id" >= bandLo && $"user_id" <= bandHi)
-      (hit.select(input_file_name()).distinct().count(), hit.count())
-    }
-    val (zFiles, zRows) = filesTouched(zDir)
-    val (tFiles, tRows) = filesTouched(tDir)
-    assert(zRows == tRows && zRows > 0, "both layouts must return the same rows")
-    assert(tFiles >= files - 1,
-      s"time-sorted layout should scatter the user band over ~all $files files, got $tFiles")
-    // Morton locality: a ~12% user band maps to a compact zkey range —
-    // at most half the files (typically ~1/4)
-    assert(zFiles * 2 <= tFiles,
-      s"z-order should halve files touched at worst: z=$zFiles vs t=$tFiles")
-  }
-
   test("z-order key matches a driver-side Morton reference on sampled rows") {
-    val rows = LakeLayout.zorderKeyed(spark, sfDir)
+    val rows = LakeQueries.zorderKeyed(spark, sfDir)
       .select($"user_id", $"ts", $"zkey").limit(64).collect()
     // independent reference: textbook bit-by-bit interleave
     def interleave(a: Long, b: Long): Long = {
@@ -104,7 +17,7 @@ class LakeLayoutSpec extends SparkSuite {
         out |= ((a >> i) & 1L) << (2 * i) | ((b >> i) & 1L) << (2 * i + 1)
       out
     }
-    val ev = LakeLayout.zorderKeyed(spark, sfDir)
+    val ev = LakeQueries.zorderKeyed(spark, sfDir)
       .agg(min($"user_id"), max($"user_id"), min($"ts"), max($"ts")).head()
     val (uLo, uHi, tLo, tHi) = (ev.getLong(0), ev.getLong(1), ev.getLong(2), ev.getLong(3))
     // the dual-path bin: multiply-scale small ranges so they FILL the
@@ -118,28 +31,6 @@ class LakeLayoutSpec extends SparkSuite {
       assert(r.getLong(2) == want,
         s"zkey mismatch for (user=${r.getLong(0)}, ts=${r.getLong(1)})")
     }
-  }
-
-  test("compaction preserves rows while consolidating files") {
-    import graft.sources.LakeLayout
-    // fragment: round-robin 8 tasks x 30 dates => ~8 files per partition
-    // (simulates per-trigger streaming ingest)
-    val fragDir = java.nio.file.Files.createTempDirectory("graft-frag").toString
-    graft.sources.Tables.load(spark, sfDir, "events")
-      .withColumn("event_date",
-        org.apache.spark.sql.functions.to_date(
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000"))))
-      .repartition(8)
-      .write.partitionBy("event_date").mode("overwrite").parquet(fragDir)
-    val compactDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    LakeLayout.compact(spark, fragDir, compactDir, "event_date", targetFileMB = 128)
-    def fileCount(p: String) = new java.io.File(p).listFiles()
-      .filter(_.isDirectory).map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    assert(fileCount(fragDir) > fileCount(compactDir),
-      s"frag=${fileCount(fragDir)} compact=${fileCount(compactDir)}")
-    assert(spark.read.parquet(compactDir).count() ==
-      spark.read.parquet(fragDir).count())
   }
 
   test("schema evolution: mergeSchema unifies old and new layouts") {
@@ -182,27 +73,6 @@ class LakeLayoutSpec extends SparkSuite {
     val a = src.orderBy("event_id").limit(1).collect().head
     val b = back.orderBy("event_id").limit(1).collect().head
     assert(a == b)
-  }
-
-  test("upsert replaces matched keys and inserts the rest") {
-    import spark.implicits._
-    val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-      .toDF("id", "v", "x")
-    val updates = Seq((2L, "B", 99.0), (4L, "d", 40.0)).toDF("id", "v", "x")
-    val merged = graft.sources.LakeLayout.upsert(base, updates, "id")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-    assert(merged == Map(
-      1L -> ("a", 10.0), 2L -> ("B", 99.0),
-      3L -> ("c", 30.0), 4L -> ("d", 40.0)))
-    intercept[IllegalArgumentException] {
-      graft.sources.LakeLayout.upsert(base, updates.drop("x"), "id")
-    }
-  }
-
-  test("round-trip preserves every event exactly once") {
-    val written = spark.read.parquet(lakePath).count()
-    val source = graft.sources.Tables.load(spark, sfDir, "events").count()
-    assert(written == source)
   }
 
   test("time travel and key-level diff across committed versions") {
@@ -647,8 +517,8 @@ class LakeLayoutSpec extends SparkSuite {
     val source = Seq(
       (1L, "UPD", false), (2L, "gone", true),
       (100L, "INS", false), (101L, "noop", true)).toDF("id", "v", "del")
-    val r = LakeLayout.mergeIntoLake(spark, table, source, "id",
-      deleteWhen = col("del"), "ck", 1L)
+    val r = LakeLayout.upsertIntoLake(spark, table, source, "id", "ck", 1L,
+      deleteWhen = Some(col("del")))
     assert(r.version == 1L, "all three clauses in one committed version")
     assert(r.filesCarried >= 1,
       s"file holding keys 4-7 must carry by reference, got $r")
@@ -802,9 +672,9 @@ class LakeLayoutSpec extends SparkSuite {
     }
     raceWriters(Seq("wA", "wB")) { w =>
       (0 until 3).foreach { b =>
-        LakeLayout.mergeIntoLakeOcc(spark, table,
-          src(w, b).toDF("id", "v", "del"), "id",
-          deleteWhen = col("del"), w, b.toLong)
+        LakeLayout.upsertIntoLakeOcc(spark, table,
+          src(w, b).toDF("id", "v", "del"), "id", w, b.toLong,
+          deleteWhen = Some(col("del")))
       }
     }
     val versions = LakeLayout.lakeVersions(spark, table)
@@ -906,9 +776,9 @@ class LakeLayoutSpec extends SparkSuite {
         }
       case "wC" =>
         (0 until 3).foreach { b =>
-          LakeLayout.mergeIntoLakeOcc(spark, table,
-            mergeBatch(b).toDF("id", "v", "del"), "id",
-            deleteWhen = col("del"), "wC", b.toLong, maxAttempts = 16)
+          LakeLayout.upsertIntoLakeOcc(spark, table,
+            mergeBatch(b).toDF("id", "v", "del"), "id", "wC", b.toLong,
+            maxAttempts = 16, deleteWhen = Some(col("del")))
         }
       case "wE" =>
         (0 until 3).foreach { b =>
@@ -1015,10 +885,10 @@ class LakeLayoutSpec extends SparkSuite {
           // columns are a SUBSET of an evolved table is the normal
           // shape for a writer that raced an evolution — its recompute
           // null-fills the new column
-          LakeLayout.mergeIntoLakeOcc(spark, table,
-            mergeBatch(b).toDF("id", "v", "del"), "id",
-            deleteWhen = col("del"), "wB", b.toLong, maxAttempts = 16,
-            evolveSchema = true)
+          LakeLayout.upsertIntoLakeOcc(spark, table,
+            mergeBatch(b).toDF("id", "v", "del"), "id", "wB", b.toLong,
+            maxAttempts = 16, evolveSchema = true,
+            deleteWhen = Some(col("del")))
         }
     }
     val versions = LakeLayout.lakeVersions(spark, table)
@@ -1169,7 +1039,7 @@ class LakeLayoutSpec extends SparkSuite {
     // events Z-ordered on (user_id, ts); BOTH dims' bounds recorded
     // from one footer pass
     LakeLayout.commitLakeVersion(
-      LakeLayout.zorderKeyed(spark, sfDir)
+      LakeQueries.zorderKeyed(spark, sfDir)
         .repartitionByRange(8, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .drop("zkey", "u_bin", "t_bin"),

@@ -258,41 +258,6 @@ class LakeMetadataSpec extends SparkSuite {
       "every key was deleted — the sharded sidecar must apply in full")
   }
 
-  test("time-based vacuum: versions inside the retention window survive and stay AS-OF resolvable; older ones drop") {
-    val t = freshOrders()
-    (1L to 3L).foreach { b =>
-      LakeLayout.upsertIntoLake(spark, t,
-        Seq((b, -b, s"u$b")).toDF("id", "grp", "pay"), "id", "ck", b)
-      Thread.sleep(15)
-    }
-    val instants = LakeLayout.lakeCommitInstants(spark, t)
-    // a generous window keeps everything
-    LakeLayout.vacuumLakeByAge(spark, t, retainMs = 3600000L)
-    assert(LakeLayout.lakeVersions(spark, t) == Seq(0L, 1L, 2L, 3L))
-    // every instant inside the window must still time-travel exactly
-    instants.foreach { case (v, ts) =>
-      assert(LakeLayout.lakeVersionAsOf(spark, t, ts).contains(v))
-    }
-    // a window whose cutoff falls between v1 and v2 keeps v2, v3 AND
-    // the BOUNDARY version v1 — an in-window pin OLDER than every
-    // in-window commit must resolve to the newest at-or-before state,
-    // so the boundary survives by construction (driver and store share
-    // a clock on the local fs, so the cutoff lands deterministically
-    // in the ≥15 ms inter-commit gap)
-    LakeLayout.vacuumLakeByAge(spark, t,
-      retainMs = System.currentTimeMillis() - instants(2L) + 5L)
-    assert(LakeLayout.lakeVersions(spark, t) == Seq(1L, 2L, 3L),
-      "cutoff between v1 and v2 must keep the v1 boundary, drop v0")
-    assert(LakeLayout.lakeVersionAsOf(spark, t, instants(2L) - 1L)
-      .contains(1L),
-      "an in-window pin before v2 must resolve to the boundary version")
-    // a zero window keeps only the live version (the keepAtLeast floor)
-    LakeLayout.vacuumLakeByAge(spark, t, retainMs = 0L)
-    assert(LakeLayout.lakeVersions(spark, t) == Seq(3L),
-      "outside-window history must drop to the floor")
-    assert(LakeLayout.readLake(spark, t).get.count() == 4000L)
-  }
-
   test("qualified and bare path spellings share one manifest cache entry space") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cachekey")
       .toString

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.LakeLayout
+import graft.sources.LakeQueries
 import org.apache.spark.sql.functions._
 
 /** Parquet BLOOM FILTERS for point lookups on columns the sort order
@@ -28,7 +28,7 @@ class ParquetBloomSpec extends SparkSuite {
   test("point lookup on a scattered column: bloom skips row groups min/max cannot") {
     val sf01 = "/root/testdata/sf0.1"
     def write(dir: String, bloom: Boolean): Unit = {
-      val w = LakeLayout.zorderKeyed(spark, sf01)
+      val w = LakeQueries.zorderKeyed(spark, sf01)
         .repartitionByRange(4, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .write

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.LakeLayout
+import graft.sources.{LakeLayout, LakeQueries}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -28,7 +28,7 @@ class ParquetPageIndexSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-pageidx").toString
     // small row groups (64 KB) and pages (500 rows) so a 100k-row table
     // exhibits the full file > row-group > page hierarchy
-    LakeLayout.zorderKeyed(spark, sf01)
+    LakeQueries.zorderKeyed(spark, sf01)
       .repartitionByRange(4, col("zkey"))
       .sortWithinPartitions(col("zkey"))
       .write
@@ -134,7 +134,7 @@ class ParquetPageIndexSpec extends SparkSuite {
     knobs.foreach { case (k, v) => hc.set(k, v) }
     try {
       LakeLayout.commitLakeVersion(
-        LakeLayout.zorderKeyed(spark, sf01)
+        LakeQueries.zorderKeyed(spark, sf01)
           .repartitionByRange(4, col("zkey"))
           .sortWithinPartitions(col("zkey"))
           .drop("zkey", "u_bin", "t_bin"),

@@ -2,12 +2,15 @@ package graft
 
 import graft.functions.VectorFunctions
 import graft.operators.{Dedup, RecallQueries, Similarity, TextAnalysis}
+import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Semantic invariants for the LLM-pipeline operator families (text
   * analysis, dedup, similarity) on sf0.001. The DuckDB oracle compare at
   * sf0.01 is the authoritative gate; these run inside `sbt test`. */
 class PipelineOperatorsSpec extends SparkSuite {
+  import PipelineOperatorsSpec._
 
   test("all pipeline query families run and agree with their registries") {
     val fams = Seq(TextAnalysis.queries, Dedup.queries,
@@ -105,9 +108,9 @@ class PipelineOperatorsSpec extends SparkSuite {
       .filter($"i" < $"j")
     val diff = pairs.select(
         VectorFunctions.cosine($"a", $"b").as("native"),
-        VectorFunctions.cosineHof($"a", $"b").as("hof"),
+        cosineHof($"a", $"b").as("hof"),
         VectorFunctions.dot($"a", $"b").as("dn"),
-        VectorFunctions.dotHof($"a", $"b").as("dh"))
+        dotHof($"a", $"b").as("dh"))
       .filter($"native" =!= $"hof" || $"dn" =!= $"dh")
       .count()
     assert(diff == 0, "native expression diverged from HOF fold")
@@ -129,9 +132,9 @@ class PipelineOperatorsSpec extends SparkSuite {
     val df = rows.toDF("a", "b")
     val bad = df.select(
         VectorFunctions.dot($"a", $"b").as("dn"),
-        VectorFunctions.dotHof($"a", $"b").as("dh"),
+        dotHof($"a", $"b").as("dh"),
         VectorFunctions.cosine($"a", $"b").as("cn"),
-        VectorFunctions.cosineHof($"a", $"b").as("ch"))
+        cosineHof($"a", $"b").as("ch"))
       .filter(
         ($"dn".isNull =!= $"dh".isNull) || ($"dn" =!= $"dh") ||
         ($"cn".isNull =!= $"ch".isNull) ||
@@ -152,7 +155,7 @@ class PipelineOperatorsSpec extends SparkSuite {
     val rows = df.select(
       VectorFunctions.dot($"a", $"b").as("d"),
       VectorFunctions.cosine($"a", $"b").as("c"),
-      VectorFunctions.dotHof($"a", $"b").as("dh")).collect()
+      dotHof($"a", $"b").as("dh")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0), "native dot must be NULL")
       assert(r.isNullAt(1), "native cosine must be NULL")
@@ -192,7 +195,7 @@ class PipelineOperatorsSpec extends SparkSuite {
          flips <- Seq(0, 1); tbl <- Seq(1, 6)) {
       val now = Similarity.sAnnTopk(spark, dir,
         tables = tbl, probeFlips = flips).collect().toSeq
-      val legacy = Similarity.sAnnTopkTwoPass(spark, dir,
+      val legacy = sAnnTopkTwoPass(spark, dir,
         tables = tbl, probeFlips = flips).collect().toSeq
       assert(now == legacy,
         s"one-pass ANN diverged at dir=$dir flips=$flips tables=$tbl: " +
@@ -650,5 +653,63 @@ class PipelineOperatorsSpec extends SparkSuite {
     val branches = RecallQueries.r9BranchPerSource(spark, sfDir).collect()
       .map(_.getAs[String]("branch")).toSet
     assert(branches.contains("SUCCESS"))
+  }
+}
+
+/** Reference forms the engine's rewrites are checked against. Production
+  * never calls them; they keep the replaced algorithm runnable. */
+object PipelineOperatorsSpec {
+
+  /** The `zip_with`/`aggregate` HOF forms of `vec_dot` and `vec_cosine`:
+    * the same accumulation order, so bit-identical results. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  def cosineHof(a: Column, b: Column): Column =
+    dotHof(a, b) / (VectorFunctions.l2Norm(a) * VectorFunctions.l2Norm(b))
+
+  /** The legacy two-pass ANN form of [[Similarity.sAnnTopk]] (explode to
+    * (vec_id, bucket-string) rows → isin → distinct → self-semi-join). */
+  def sAnnTopkTwoPass(s: SparkSession, dir: String,
+      k: Int = 10, tables: Int = Similarity.AnnTables,
+      bits: Int = Similarity.AnnBitsPerTable,
+      probeFlips: Int = 0): DataFrame = {
+    VectorFunctions.register(s)
+    import s.implicits._
+    val e = Tables.load(s, dir, "embeddings")
+    val dim = e.select(size($"embedding")).head().getInt(0)
+    def bucketArr(v: Column) =
+      array((0 until tables).map { t =>
+        val planes = Similarity.hyperplanes(nPlanes = bits, dim = dim,
+          seed = 42L + t)
+        concat((lit(s"$t:") +: planes.map { p =>
+          val pc = array(p.map(lit): _*)
+          when(VectorFunctions.dot(v, pc) >= 0, lit("1")).otherwise(lit("0"))
+        }): _*)
+      }: _*)
+    val ex = e.select($"vec_id", explode(bucketArr($"embedding")).as("bkt"))
+    val probeBkts = ex.filter($"vec_id" === Similarity.ProbeId)
+      .select($"bkt").collect().map(_.getString(0)).toSeq
+    val expanded =
+      if (probeFlips == 0) probeBkts
+      else probeBkts.flatMap { b =>
+        val (pre, rest) = b.splitAt(b.indexOf(':') + 1)
+        b +: rest.indices.map(i =>
+          pre + rest.updated(i, if (rest(i) == '1') '0' else '1'))
+      }
+    val candIds = ex.filter($"bkt".isin(expanded: _*))
+      .filter($"vec_id" =!= Similarity.ProbeId)
+      .select($"vec_id").distinct()
+    val probeVec = e.filter($"vec_id" === Similarity.ProbeId)
+      .select($"embedding".as("p"))
+    e.join(candIds, Seq("vec_id"), "left_semi")
+      .crossJoin(broadcast(probeVec))
+      .withColumn("sim", round(VectorFunctions.cosine($"embedding", $"p"), 3))
+      .filter(!isnan($"sim") && $"sim".isNotNull)
+      .select($"vec_id", $"label", $"sim")
+      .orderBy($"sim".desc, $"vec_id")
+      .limit(k)
   }
 }

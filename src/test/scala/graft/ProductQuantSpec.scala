@@ -1,6 +1,8 @@
 package graft
 
+import graft.functions.VectorFunctions
 import graft.operators.{ProductQuant, Similarity}
+import org.apache.spark.sql.Column
 
 /** Gates for the PQ/ADC path: codebook shape + determinism, the
   * shortlist-margin guarantee behind s_pq_rerank's ORACLE claim (the
@@ -8,6 +10,7 @@ import graft.operators.{ProductQuant, Similarity}
   * every test SF), and ADC recall floors for the pure-quantized
   * ranking. */
 class ProductQuantSpec extends SparkSuite {
+  import ProductQuantSpec._
 
   private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
     "/root/testdata/sf0.1")
@@ -38,7 +41,7 @@ class ProductQuantSpec extends SparkSuite {
       .crossJoin(broadcast(ProductQuant.packedBooks(spark, cb)))
       .select(col("vec_id"),
         ProductQuant.codesCol(m, d).as("native"),
-        ProductQuant.codesColHof(m, d).as("hof"))
+        codesColHof(m, d).as("hof"))
     val rows = df.collect()
     assert(rows.nonEmpty)
     val bad = rows.filter(r =>
@@ -69,7 +72,7 @@ class ProductQuantSpec extends SparkSuite {
       .withColumn("codes", ProductQuant.codesCol(m, d))
       .select(col("vec_id"),
         ProductQuant.adcScoreWith(lutCol, m, ks).as("native"),
-        ProductQuant.adcScoreWithHof(lutCol, m, ks).as("hof"),
+        adcScoreWithHof(lutCol, m, ks).as("hof"),
         // the single-probe form: the LUT as one array literal
         ProductQuant.adcScore(lut, m, ks).as("literal"))
     val rows = df.collect()
@@ -132,4 +135,27 @@ class ProductQuantSpec extends SparkSuite {
       assert(pq.toSeq == again.toSeq, "ADC ranking must be deterministic")
     }
   }
+}
+
+/** The pre-native forms the PQ expressions are checked against.
+  * Production never calls them. */
+object ProductQuantSpec {
+  import org.apache.spark.sql.functions._
+
+  /** The HOF form of `ProductQuant.codesCol`: per subspace, argmax over
+    * the codebook entries of `<u_j, cvec> − half`. */
+  def codesColHof(m: Int, d: Int): Column =
+    transform(sequence(lit(0), lit(m - 1)), j =>
+      array_max(transform(element_at(col("books"), j + lit(1)), en =>
+        struct(
+          (VectorFunctions.dot(
+            slice(col("u"), j * lit(d) + lit(1), lit(d)),
+            en.getField("cvec")) - en.getField("half")).as("score"),
+          en.getField("code").as("code")))).getField("code"))
+
+  /** The element_at chain `adc_sum` replaced: one LUT lookup per
+    * subspace, summed left to right. */
+  def adcScoreWithHof(lut: Column, m: Int, ks: Int): Column =
+    (0 until m).map(j =>
+      element_at(lut, col("codes")(j) + j * ks + lit(1))).reduce(_ + _)
 }

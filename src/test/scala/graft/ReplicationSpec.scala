@@ -110,10 +110,10 @@ class ReplicationSpec extends SparkSuite {
     assert(CdfStream.replicateLake(spark, src, "id", dst) == 1)
 
     // v1 carries BOTH kinds: update id 1, insert id 100, delete id 2
-    LakeLayout.mergeIntoLake(spark, src,
+    LakeLayout.upsertIntoLake(spark, src,
       Seq((1L, "UPD", false), (100L, "INS", false), (2L, "gone", true))
         .toDF("id", "v", "del"),
-      "id", deleteWhen = col("del"), "w", 1L)
+      "id", "w", 1L, deleteWhen = Some(col("del")))
 
     // simulate the crash: apply only the upsert half with replication's
     // own provenance, as if the process died before the delete commit

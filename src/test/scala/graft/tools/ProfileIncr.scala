@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.operators.IncrementalAgg
-import graft.sources.{LakeLayout, Tables}
+import graft.sources.{LakeLayout, LakeQueries, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scratch phase-timer for the q_lake_incr_agg drive (guide §1). */
@@ -24,7 +24,7 @@ object ProfileIncr {
     val tAll = System.nanoTime()
     val orders = Tables.load(s, dir, "orders")
     val lake = phase("clone") {
-      LakeLayout.cloneLake(s, LakeLayout.stagedOrders(s, dir, 6)) }
+      LakeQueries.cloneLake(s, LakeQueries.stagedOrders(s, dir, 6)) }
     phase("upsert-v1") { LakeLayout.upsertIntoLake(s, lake,
       orders.filter(pmod(col("o_orderkey"), lit(4)) === 0)
         .withColumn("o_orderpriority", lit("9-UPD")),

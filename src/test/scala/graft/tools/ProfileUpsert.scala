@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.sources.{LakeLayout, Tables}
+import graft.sources.{LakeLayout, LakeQueries, Tables}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
 
@@ -26,10 +26,10 @@ object ProfileUpsert {
       .withColumn("o_orderpriority", lit("9-UPD"))
     // warm
     locally {
-      val lake = LakeLayout.cloneLake(s, LakeLayout.stagedOrders(s, dir, 6))
+      val lake = LakeQueries.cloneLake(s, LakeQueries.stagedOrders(s, dir, 6))
       LakeLayout.upsertIntoLake(s, lake, batch, "o_orderkey", "registry", 1L)
     }
-    val lake = LakeLayout.cloneLake(s, LakeLayout.stagedOrders(s, dir, 6))
+    val lake = LakeQueries.cloneLake(s, LakeQueries.stagedOrders(s, dir, 6))
     jobs.synchronized { jobs.clear() }
     val t0 = System.nanoTime()
     LakeLayout.upsertIntoLake(s, lake, batch, "o_orderkey", "registry", 1L)
