@@ -20,6 +20,11 @@ harness under `perfbench/` and the test scope are not counted). It prints:
   line) and metadata reads (`Source.fromInputStream`). One claim
   implementation shows `createLink`, `Rename.OVERWRITE` and
   `Source.fromInputStream` once each and no `create(..., false)`;
+- the codes-tier literal sites: main-scope code lines (comments
+  skipped) that spell a compressed tier's marker kind or dir names
+  (`"_pq"`, `"_sq8"`, `pqcodes`, `pqbooks`, `sq8codes`), each with its
+  location. With one codes-tier body these are only the lines of the
+  two tier values in `IvfIndex`;
 - the spec-only surface: main-scope `def`s and `object`s whose every
   reference outside their own definition line is under `src/test` or
   inside another spec-only member (or that nothing references at all),
@@ -58,6 +63,22 @@ COMMIT_RES = {
 }
 
 
+# names of the compressed codes tiers; a code line spelling one names a tier
+TIER_RE = re.compile(r'"_pq"|"_sq8"|pqcodes|pqbooks|sq8codes')
+
+
+def tier_sites(root):
+    """Locations of main-scope code lines (comments skipped, string
+    literals kept) that spell a codes tier's marker kind or dir names."""
+    sites = []
+    for f in sorted((root / "src" / "main").rglob("*.scala")):
+        rel = str(f.relative_to(root))
+        for n, line in code_lines(f, keep_strings=True):
+            if TIER_RE.search(line):
+                sites.append(f"{rel}:{n}")
+    return sites
+
+
 def scan(root):
     files = sorted((root / "src" / "main").rglob("*.scala"))
     loc, keys, env = {}, {}, {}
@@ -89,11 +110,11 @@ DEF_RE = re.compile(
     r'(def|object)\s+([A-Za-z_][A-Za-z0-9_]*)')
 NOT_SURFACE = {"main", "apply", "unapply", "toString", "equals",
                "hashCode"}
-def code_lines(path):
+def code_lines(path, keep_strings=False):
     """(line number, code text) of a Scala file, with comments and the
     contents of string literals (triple-quoted ones too) blanked out, so
     that a scaladoc link or a SQL string naming a function is not a
-    reference."""
+    reference. `keep_strings` keeps single-line string literals whole."""
     out, mode = [], None  # None, "block", '"""'
     for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1):
         text, i = [], 0
@@ -115,7 +136,7 @@ def code_lines(path):
                 j = i + 1
                 while j < len(line) and line[j] != '"':
                     j += 2 if line[j] == "\\" else 1
-                text.append('""')
+                text.append(line[i:j + 1] if keep_strings else '""')
                 i = j + 1
             else:
                 text.append(line[i])
@@ -268,12 +289,14 @@ def main():
         sys.exit(f"no src/main under {root}")
     loc, keys, env, commits = scan(root)
     total = sum(loc.values())
+    tiers = tier_sites(root)
     only_specs = spec_only(root)
     pinned = harness_pinned(root)
     if args.json:
         print(json.dumps({"main_loc_total": total, "main_loc": loc,
                           "graft_keys": keys, "env_vars": env,
                           "commit_sites": commits,
+                          "codes_tier_sites": tiers,
                           "spec_only": only_specs,
                           "harness_pinned": pinned}, indent=1))
         return
@@ -289,6 +312,8 @@ def main():
     print("metadata commit-point sites:")
     for name, sites in commits.items():
         print(f"  {name}: {len(sites)}" + (f"  ({', '.join(sites)})" if sites else ""))
+    print(f"codes-tier literal sites: {len(tiers)}" +
+          (f"  ({', '.join(tiers)})" if tiers else ""))
     print(f"spec-only surface (main-scope defs/objects only specs use): {len(only_specs)}")
     for d in only_specs:
         users = ", ".join(d["spec_users"]) or d["main_users"]

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.sources.{MetaFiles, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index — the production serving shape for ANN at 100 TB.
@@ -164,21 +164,6 @@ object IvfIndex {
     if (n > 0) probe.map(_ / n) else probe
   }
 
-  /** A PQ sidecar version's codebooks, `cb(sub)(code)`. */
-  private def codebooks(s: SparkSession, root: String,
-      booksDir: String): Array[Array[Array[Double]]] =
-    memoized(s, root, "pqbooks", booksDir) {
-      val books = s.read.parquet(booksDir).collect()
-      val m = books.map(_.getAs[Int]("sub")).max + 1
-      val ks = books.map(_.getAs[Int]("code")).max + 1
-      val cb = Array.ofDim[Array[Double]](m, ks)
-      books.foreach { r =>
-        cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
-          r.getAs[scala.collection.Seq[Double]]("cvec").toArray
-      }
-      cb
-    }
-
   /** A tombstone version's (vec_id, tomb_v) events, normalized. A
     * takedown frame's `vec_id` keeps its caller's type, so it is cast
     * here; a null id hides nothing and is dropped. */
@@ -196,7 +181,7 @@ object IvfIndex {
     * applies to the file listing before any file is opened when it
     * stands alone. The column holds URI-encoded paths (a space reads
     * `%20`), so each listed path is encoded the same way. */
-  private def inFiles(files: Set[String]): org.apache.spark.sql.Column =
+  private def inFiles(files: Set[String]): Column =
     col("_metadata.file_path")
       .isin(files.toSeq.sorted.map(f => hp(f).toUri.toString): _*)
 
@@ -917,48 +902,41 @@ object IvfIndex {
     // any mod: the hash is uniform over vec_ids, so a drifted wave
     // lands in the sample at its corpus-wide rate.
     val fs = fsOf(s, root)
-    val (pqFit, pqTail, pqFitSample) = readPqSidecar(fs, root) match {
-      case None => (0.0, 0.0, 0L)
-      case Some((_, booksDir, snapFiles)) =>
-        val (fit, sampled) = vecsOpt match {
-          case Some(vecs) if nVec > 0 =>
-            val cb = codebooks(s, root, booksDir)
-            val (m, d) = (cb.length, cb(0)(0).length)
-            val recon = flatten(transform(
-              ProductQuant.codesCol(m, d), (c, j) =>
-                element_at(element_at(col("books"), j + lit(1)),
-                  c + lit(1)).getField("cvec")))
-            val mod = if (nVec < PqFitFullScanFloor) 1L else PqFitSampleMod
-            val row = ProductQuant.withUnit(
-                vecs.select(col("vec_id"), col("embedding"))
-                  .filter(pmod(xxhash64(col("vec_id")), lit(mod)) === 0))
-              .crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
-              .agg(avg(VectorFunctions.cosine(col("u"), recon)),
-                count(lit(1)))
-              .head()
-            (Option(row.get(0)).fold(0.0)(_.asInstanceOf[Double]),
-              row.getLong(1))
-          case _ => (0.0, 0L)
-        }
-        val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
-        val tailRows =
-          if (tailFiles.isEmpty) 0L
-          else vecsOpt.fold(0L)(_.filter(inFiles(tailFiles)).count())
-        (fit, if (nVec > 0) tailRows.toDouble / nVec else 0.0, sampled)
+    val pq = readCodes(fs, root, Pq)
+    val (pqFit, pqFitSample) = (pq, vecsOpt) match {
+      case (Some(side), Some(vecs)) if nVec > 0 =>
+        val cb = Pq.model(s, root, side.dirs.tail)
+        val (m, d) = (cb.length, cb(0)(0).length)
+        val recon = flatten(transform(
+          ProductQuant.codesCol(m, d), (c, j) =>
+            element_at(element_at(col("books"), j + lit(1)),
+              c + lit(1)).getField("cvec")))
+        val mod = if (nVec < PqFitFullScanFloor) 1L else PqFitSampleMod
+        val row = ProductQuant.withUnit(
+            vecs.select(col("vec_id"), col("embedding"))
+              .filter(pmod(xxhash64(col("vec_id")), lit(mod)) === 0))
+          .crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
+          .agg(avg(VectorFunctions.cosine(col("u"), recon)),
+            count(lit(1)))
+          .head()
+        (Option(row.get(0)).fold(0.0)(_.asInstanceOf[Double]),
+          row.getLong(1))
+      case _ => (0.0, 0L)
     }
-    // SQ8 tail: rows appended after the int8 sidecar's snapshot
-    // (parquet footer counts — no data pages open). No fit metric
-    // exists by construction — with no codebook there is nothing to
-    // drift — so the tail fraction is the tier's whole health story,
-    // and a fleet dashboard reading only this row sees it.
-    val sq8Tail = readSq8Sidecar(fs, root) match {
-      case None => 0.0
-      case Some((_, snapFiles)) =>
-        val tailFiles = listVectorFiles(fs, s"$root/vectors") -- snapFiles
-        if (tailFiles.isEmpty || nVec == 0L) 0.0
-        else vecsOpt.fold(0L)(_.filter(inFiles(tailFiles)).count())
-          .toDouble / nVec
+    // a codes tier's tail: rows appended after its snapshot (parquet
+    // footer counts — no data pages open), each paying float-scan cost
+    // on every probe of the tier. SQ8 has no fit metric by
+    // construction — with no model there is nothing to drift — so its
+    // tail fraction is the tier's whole health story, and a fleet
+    // dashboard reading only this row sees it.
+    def tailFrac(side: Option[SidecarMarker]): Double = side.fold(0.0) { m =>
+      val tailFiles = listVectorFiles(fs, s"$root/vectors") -- m.files
+      if (tailFiles.isEmpty || nVec == 0L) 0.0
+      else vecsOpt.fold(0L)(_.filter(inFiles(tailFiles)).count())
+        .toDouble / nVec
     }
+    val pqTail = tailFrac(pq)
+    val sq8Tail = tailFrac(readCodes(fs, root, Sq8))
     // tombstone fraction: committed deletes still physically resident
     // (served-around by the anti-join) as a share of the corpus — the
     // measured trigger for a compacting retrain, next to the tails
@@ -1359,8 +1337,8 @@ object IvfIndex {
     stageTombstoneDelta(s, live, stage, tombDir)
     // resolve the old generation's sidecars BEFORE the cutover — they
     // carry across it (the old dir stays on disk as read grace)
-    val oldPq = readPqSidecar(fs, live)
-    val oldSq8 = readSq8Sidecar(fs, live)
+    val oldCodes =
+      CodesTiers.flatMap(tier => readCodes(fs, live, tier).map(tier -> _))
     publishGen(s, indexPath, gen, stage)
     val newRoot = s"$indexPath/${listClaims(fs, indexPath)(gen)}"
     val late = listFoldable() -- snap
@@ -1385,14 +1363,10 @@ object IvfIndex {
     val eventIds = eventDir
       .map(d => readTombstones(s, d).select($"vec_id").distinct())
       .getOrElse(s.range(0).select($"id".as("vec_id")))
-    if (listVectorFiles(fs, s"$newRoot/vectors").nonEmpty) {
-      oldPq.foreach { case (codesDir, booksDir, snapFiles) =>
-        carryPqSidecar(s, newRoot, codesDir, booksDir, snapFiles, eventIds)
+    if (listVectorFiles(fs, s"$newRoot/vectors").nonEmpty)
+      oldCodes.foreach { case (tier, side) =>
+        carryCodes(s, tier, live, side, newRoot, eventIds)
       }
-      oldSq8.foreach { case (codesDir, snapFiles) =>
-        carrySq8Sidecar(s, newRoot, codesDir, snapFiles, eventIds)
-      }
-    }
     true
   }
 
@@ -1413,12 +1387,12 @@ object IvfIndex {
     * whole corpus.) The price is one narrow anti-join of the unmatched
     * rows against the old codes' id column — id longs, never
     * embeddings — which at 100 TB is a narrow-column shuffle vs an
-    * m·ks·d-flop re-encode per touched row. Returns (ids whose old
-    * codes must be DROPPED, rows to re-encode, the new generation's
-    * encoded-file snapshot for the fresh marker). */
+    * m·ks·d-flop re-encode per touched row. The old codes of every
+    * event-touched id are dropped; returns (rows to re-encode, the new
+    * generation's encoded-file snapshot for the fresh marker). */
   private def splitSidecarCarry(s: SparkSession, newRoot: String,
       oldSnapshot: Set[String], eventIds: DataFrame, oldCodesDir: String)
-      : (DataFrame, DataFrame, Set[String]) = {
+      : (DataFrame, Set[String]) = {
     import s.implicits._
     val fs = fsOf(s, newRoot)
     val newVecDir = s"$newRoot/vectors"
@@ -1445,81 +1419,48 @@ object IvfIndex {
       .union(unmatchedRows.join(evb, Seq("vec_id"), "left_semi"))
       .union(unmatchedRows.join(evb, Seq("vec_id"), "left_anti")
         .join(oldIds, Seq("vec_id"), "left_anti"))
-    (eventIds, reencode, newFiles)
+    (reencode, newFiles)
   }
 
-  /** Carry a committed PQ sidecar across a [[compactTombstones]]
-    * cutover: the codebooks did not move, so codes of undisturbed ids
-    * are kept byte-as-is and only the [[splitSidecarCarry]] targets
-    * re-encode under the SAME books — O(events + tail) encode work. A
-    * fresh version-0 marker under the new root pins the carried tier
-    * to the new generation's file snapshot. */
-  private def carryPqSidecar(s: SparkSession, newRoot: String,
-      oldCodesDir: String, oldBooksDir: String,
-      oldSnapshot: Set[String], eventIds: DataFrame): Unit = {
-    import s.implicits._
+  /** Carry `tier`'s committed version `side` of the old generation
+    * (`oldRoot`) across a [[compactTombstones]] cutover: the model did
+    * not move, so codes of undisturbed ids are kept byte-as-is and only
+    * the [[splitSidecarCarry]] targets re-encode under the SAME model —
+    * O(events + tail) encode work, recorded in the tier's
+    * `lastCarry`. The model's dirs copy over, and a fresh version-0
+    * marker under the new root pins the carried tier to the new
+    * generation's file snapshot. */
+  private def carryCodes(s: SparkSession, tier: CodesTier, oldRoot: String,
+      side: SidecarMarker, newRoot: String, eventIds: DataFrame): Unit = {
     val fs = fsOf(s, newRoot)
-    val (dropIds, reencode, newFiles) =
-      splitSidecarCarry(s, newRoot, oldSnapshot, eventIds, oldCodesDir)
-    val books = s.read.parquet(oldBooksDir)
-    val rows = books.collect()
-    val m = rows.map(_.getAs[Int]("sub")).max + 1
-    val cb = Array.ofDim[Array[Double]](m,
-      rows.map(_.getAs[Int]("code")).max + 1)
-    rows.foreach { r =>
-      cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
-        r.getAs[scala.collection.Seq[Double]]("cvec").toArray
-    }
-    val d = cb(0)(0).length
-    val carried = s.read.parquet(oldCodesDir)
-      .join(dropIds, Seq("vec_id"), "left_anti")
-      .select($"vec_id", $"cell", $"codes")
-    val fresh = ProductQuant.withUnit(reencode)
-      .crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
-      .withColumn("codes", ProductQuant.codesCol(m, d))
-      .select($"vec_id", $"cell", $"codes")
+    val (reencode, newFiles) =
+      splitSidecarCarry(s, newRoot, side.files, eventIds, side.dirs.head)
+    val model = tier.model(s, oldRoot, side.dirs.tail)
+    val rels = tier.dirs(0L)
+    val carried = s.read.parquet(side.dirs.head)
+      .join(eventIds, Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), col("cell"), col(tier.codes))
+    val fresh = tier.encode(s, model, ProductQuant.withUnit(reencode))
     // carry-vs-encode accounting rides the write as observed metrics
     // (zero extra jobs) — the O(events + tail) encode-work contract is
     // spec-checked against this, not trusted from the docstring
     val obs = org.apache.spark.sql.Observation(
-      s"graft-pq-carry-${java.util.UUID.randomUUID().toString.take(8)}")
+      s"graft-carry-${java.util.UUID.randomUUID().toString.take(8)}")
     carried.withColumn("__fresh", lit(0L))
       .union(fresh.withColumn("__fresh", lit(1L)))
-      .observe(obs, sum($"__fresh").as("fresh"),
+      .observe(obs, sum(col("__fresh")).as("fresh"),
         count(lit(1)).as("total"))
       .drop("__fresh")
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$newRoot/pqcodes-0")
+      .parquet(s"$newRoot/${rels.head}")
     val freshN = Option(obs.get("fresh")).fold(0L)(_.asInstanceOf[Long])
     val totalN = Option(obs.get("total")).fold(0L)(_.asInstanceOf[Long])
-    lastPqCarry.set((totalN - freshN, freshN))
-    books.coalesce(1).write.mode("overwrite")
-      .parquet(s"$newRoot/pqbooks-0")
-    publishCodesMarker(fs, newRoot, "_pq", 0L, Seq("pqcodes-0", "pqbooks-0"),
-      newFiles, "compactTombstones")
-  }
-
-  /** Carry a committed SQ8 sidecar across a [[compactTombstones]]
-    * cutover — [[carryPqSidecar]]'s recipe with no books at all (the
-    * encoding is `round(127·u_i)`, nothing can drift). */
-  private def carrySq8Sidecar(s: SparkSession, newRoot: String,
-      oldCodesDir: String, oldSnapshot: Set[String],
-      eventIds: DataFrame): Unit = {
-    import s.implicits._
-    val fs = fsOf(s, newRoot)
-    val (dropIds, reencode, newFiles) =
-      splitSidecarCarry(s, newRoot, oldSnapshot, eventIds, oldCodesDir)
-    val carried = s.read.parquet(oldCodesDir)
-      .join(dropIds, Seq("vec_id"), "left_anti")
-      .select($"vec_id", $"cell", $"q")
-    val fresh = ProductQuant.withUnit(reencode)
-      .withColumn("q",
-        transform($"u", x => round(x * 127).cast("tinyint")))
-      .select($"vec_id", $"cell", $"q")
-    carried.union(fresh)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$newRoot/sq8codes-0")
-    publishCodesMarker(fs, newRoot, "_sq8", 0L, Seq("sq8codes-0"), newFiles,
+    tier.lastCarry.set((totalN - freshN, freshN))
+    side.dirs.tail.zip(rels.tail).foreach { case (from, to) =>
+      s.read.parquet(from).coalesce(1).write.mode("overwrite")
+        .parquet(s"$newRoot/$to")
+    }
+    publishCodesMarker(fs, newRoot, tier.kind, 0L, rels, newFiles,
       "compactTombstones")
   }
 
@@ -1645,8 +1586,8 @@ object IvfIndex {
     sweepSourceStragglers(s, indexPath)
     val root0 = layoutRoot(s, indexPath)
     val fs0 = fsOf(s, root0)
-    val hadSidecar = readPqSidecar(fs0, root0).isDefined
-    val hadSq8 = readSq8Sidecar(fs0, root0).isDefined
+    val had = CodesTiers.map(tier => tier -> readCodes(fs0, root0, tier).isDefined)
+      .toMap
     val d = describeIvf(s, indexPath).collect()(0)
     val skew = d.getAs[Double]("occupancy_skew")
     val fit = d.getAs[Double]("mean_centroid_sim")
@@ -1672,17 +1613,18 @@ object IvfIndex {
     val compactOnly = any && !trigger && tombFrac > maxTombFrac
     if (trigger) rebuild(s, indexPath, cells, iters)
     else if (compactOnly) compactTombstones(s, indexPath)
-    // compaction CARRIED the sidecars (absorbing their raw tails into
-    // the fresh encoded snapshot), so only a retrain — whose new
-    // generation starts bare — or genuine codebook drift re-derives
-    val refresh = hadSidecar && any &&
-      (trigger || pqFit < minPqFit || (!compactOnly && pqTail > maxPqTail))
+    // a retrain ALWAYS re-derives a tier the previous generation
+    // carried (the new generation starts bare); compaction CARRIED the
+    // tiers (absorbing their raw tails into the fresh encoded
+    // snapshot), so otherwise only model drift (PQ's codebooks; SQ8
+    // has none) or a raw tail paying float-scan cost on too many
+    // probes re-derives a tier
+    def refreshes(tier: CodesTier, drift: Boolean, tail: Double) =
+      had(tier) && any &&
+        (trigger || drift || (!compactOnly && tail > maxPqTail))
+    val refresh = refreshes(Pq, pqFit < minPqFit, pqTail)
     if (refresh) buildPqSidecar(s, indexPath)
-    // a retrain ALWAYS re-derives a carried SQ8 tier (the new
-    // generation starts bare); otherwise append-encode when the raw
-    // tail is paying float-scan cost on too many probes
-    val sq8Refresh = hadSq8 && any &&
-      (trigger || (!compactOnly && sq8Tail > maxPqTail))
+    val sq8Refresh = refreshes(Sq8, false, sq8Tail)
     if (sq8Refresh) buildSq8Sidecar(s, indexPath)
     IvfMaintenanceReport(skew, fit, trigger, pqFit, pqTail, refresh,
       sq8Tail, sq8Refresh, tombFrac, compactOnly)
@@ -1705,7 +1647,7 @@ object IvfIndex {
   def probeTopK(s: SparkSession, indexPath: String, probe: Array[Double],
       k: Int = 10, nprobe: Int = Similarity.IvfProbes,
       excludeId: Option[Long] = None,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      where: Option[Column] = None): DataFrame = {
     VectorFunctions.register(s)
     import s.implicits._
     // one resolution pins the generation for BOTH the model collect
@@ -1715,40 +1657,12 @@ object IvfIndex {
     val scanned = scanOf(s, root, "vectors", s"$root/vectors")._1
       .filter($"cell".isin(probeCells: _*))
     val kept0 = excludeId.fold(scanned)(id => scanned.filter($"vec_id" =!= id))
-    antiTombstones(s, liveTombstones(s, root),
-        where.fold(kept0)(kept0.filter))
-      .withColumn("sim",
-        round(VectorFunctions.cosine($"embedding", typedLit(probe)), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-      .select($"vec_id", $"label", $"sim")
-      .orderBy($"sim".desc, $"vec_id")
-      .limit(k)
+    exactTopK(antiTombstones(s, liveTombstones(s, root),
+      where.fold(kept0)(kept0.filter)), probe, k)
   }
 
-  /** BATCH serving from the persisted index — one distributed pass for
-    * a whole frame of probes (the offline-inference shape: score a
-    * query table against the corpus, not one vector at a time from the
-    * driver). `probes` must carry (probe_id: long, embedding); returns
-    * (probe_id, vec_id, label, sim, rank) with `rank` 1..k per probe.
-    *
-    * The plan keeps both IVF economies at batch scale:
-    *  - cell RANKING rides the packed 1-row broadcast model (plan size
-    *    independent of K, same argmax shape as [[assignCells]]), and
-    *    per-probe tie-breaks match [[probeTopK]] exactly (max sim,
-    *    then min cell — the struct sort is position-independent);
-    *  - the vectors SCAN reads only the UNION of probed cells — the
-    *    probed-cell set (≤ K values, collected like every other
-    *    bounded model state) lands as a partition filter, so the scan
-    *    cost is ~|cells probed|/K of the corpus, not the corpus;
-    *  - the probe side (|probes| × nprobe rows) BROADCASTS onto the
-    *    pruned scan — no shuffle of corpus vectors; the only shuffle
-    *    is the per-probe top-k window over candidate hits. For probe
-    *    batches too big to broadcast, shard the probe frame and union
-    *    — each shard keeps this plan.
-    * `excludeSelf` drops vec_id == probe_id hits (corpus-vs-itself
-    * queries, parity with [[probeTopK]]'s excludeId). */
   /** Per-probe cell ranking over the packed 1-row broadcast model —
-    * the shared front stage of both batch serving paths. Returns one
+    * the shared front stage of every batch serving path. Returns one
     * row per (probe, probed cell): (probe_id, probe_emb, pcell), with
     * [[probeTopK]]'s exact tie-break (max sim, then min cell — the
     * struct sort on (-dot, cell) is position-independent; scaling by
@@ -1773,51 +1687,101 @@ object IvfIndex {
       .drop("cents")
   }
 
-  /** `where` is the FILTERED batch form: the predicate applies inside
+  /** The probed-cell union of [[rankProbeCells]]' rows, bounded by K —
+    * collected so the scan carries a LITERAL partition filter (file
+    * pruning at the index). */
+  private def probedCells(ranked: DataFrame): Array[Int] =
+    ranked.select(col("pcell")).distinct()
+      .collect().map(_.getInt(0)).sorted
+
+  /** The exact cosine top-k of `cand` against `probe`:
+    * (vec_id, label, sim) by (sim desc, vec_id). */
+  private def exactTopK(cand: DataFrame, probe: Array[Double],
+      k: Int): DataFrame =
+    cand
+      .withColumn("sim",
+        round(VectorFunctions.cosine(col("embedding"), typedLit(probe)), 3))
+      .filter(!isnan(col("sim")) && col("sim").isNotNull)
+      .select(col("vec_id"), col("label"), col("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(k)
+
+  /** The exact cosine top-k per probe of candidate rows carrying
+    * (probe_id, vec_id, label, embedding, probe_emb):
+    * (probe_id, vec_id, label, sim, rank) with `rank` 1..k by
+    * (sim desc, vec_id); `excludeSelf` drops vec_id == probe_id hits.
+    * Both vectors are shed before the per-probe ranking shuffle — the
+    * window needs four narrow columns, not the embeddings that
+    * produced `sim`. */
+  private def exactTopKPerProbe(cand: DataFrame, k: Int,
+      excludeSelf: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val hits = cand
+      .withColumn("sim",
+        round(VectorFunctions.cosine(col("embedding"), col("probe_emb")), 3))
+      .filter(!isnan(col("sim")) && col("sim").isNotNull)
+    val kept = if (excludeSelf) hits.filter(col("vec_id") =!= col("probe_id"))
+      else hits
+    kept
+      .select(col("probe_id"), col("vec_id"), col("label"), col("sim"))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("probe_id"))
+        .orderBy(col("sim").desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("probe_id"), col("vec_id"), col("label"), col("sim"),
+        col("rank"))
+  }
+
+  /** BATCH serving from the persisted index — one distributed pass for
+    * a whole frame of probes (the offline-inference shape: score a
+    * query table against the corpus, not one vector at a time from the
+    * driver). `probes` must carry (probe_id: long, embedding); returns
+    * (probe_id, vec_id, label, sim, rank) with `rank` 1..k per probe.
+    *
+    * The plan keeps both IVF economies at batch scale:
+    *  - cell RANKING rides the packed 1-row broadcast model (plan size
+    *    independent of K, same argmax shape as [[assignCells]]), and
+    *    per-probe tie-breaks match [[probeTopK]] exactly (max sim,
+    *    then min cell — the struct sort is position-independent);
+    *  - the vectors SCAN reads only the UNION of probed cells — the
+    *    probed-cell set (≤ K values, collected like every other
+    *    bounded model state) lands as a partition filter, so the scan
+    *    cost is ~|cells probed|/K of the corpus, not the corpus;
+    *  - the probe side (|probes| × nprobe rows) BROADCASTS onto the
+    *    pruned scan — no shuffle of corpus vectors; the only shuffle
+    *    is the per-probe top-k window over candidate hits. For probe
+    *    batches too big to broadcast, shard the probe frame and union
+    *    — each shard keeps this plan.
+    * `excludeSelf` drops vec_id == probe_id hits (corpus-vs-itself
+    * queries, parity with [[probeTopK]]'s excludeId).
+    *
+    * `where` is the FILTERED batch form: the predicate applies inside
     * the probed cells, reaching the pruned scan together with the
     * partition filter — recall contract identical to [[probeTopK]]'s
     * filtered form (widen nprobe as selectivity rises). */
   def probeTopKBatch(s: SparkSession, indexPath: String, probes: DataFrame,
       k: Int = 10, nprobe: Int = Similarity.IvfProbes,
       excludeSelf: Boolean = false,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      where: Option[Column] = None): DataFrame = {
     VectorFunctions.register(s)
     import s.implicits._
     // one resolution pins the generation for model, pruning, and scan
     val root = layoutRoot(s, indexPath)
     val ranked = rankProbeCells(s, root, probes, nprobe)
-    // the probed-cell union is bounded by K — collect it so the scan
-    // carries a LITERAL partition filter (file pruning at the index)
-    val cellsNeeded = ranked.select($"pcell").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val cellsNeeded = probedCells(ranked)
     val cand0 = scanOf(s, root, "vectors", s"$root/vectors")._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
     val cand = antiTombstones(s, liveTombstones(s, root),
       where.fold(cand0)(cand0.filter))
-    val hits = cand
-      .join(broadcast(ranked), $"cell" === $"pcell")
-      .withColumn("sim",
-        round(VectorFunctions.cosine($"embedding", $"probe_emb"), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-    val kept = if (excludeSelf) hits.filter($"vec_id" =!= $"probe_id")
-      else hits
-    import org.apache.spark.sql.expressions.Window
-    // shed both vectors before the per-probe ranking shuffle — the
-    // window needs four narrow columns, not the embeddings that
-    // produced `sim`
-    kept
-      .select($"probe_id", $"vec_id", $"label", $"sim")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"probe_id").orderBy($"sim".desc, $"vec_id")))
-      .filter($"rank" <= k)
-      .select($"probe_id", $"vec_id", $"label", $"sim", $"rank")
+    exactTopKPerProbe(cand.join(broadcast(ranked), $"cell" === $"pcell"), k,
+      excludeSelf)
   }
 
   /** BATCH serving from the COMPRESSED index — [[probeTopKBatch]]
     * composed with the PQ sidecar, the serving-fleet shape at 100 TB:
     * N probes in ONE job whose wide scan reads (vec_id, codes) only —
     * ~25× smaller than the float scan the raw batch path pays, on top
-    * of the same probed-cell-union partition pruning. Stages:
+    * of the same probed-cell-union partition pruning. Stages
+    * ([[probeCodesBatch]]):
     *  - cell ranking per probe over the packed 1-row broadcast model
     *    (shared with [[probeTopKBatch]] — exact [[probeTopK]]
     *    tie-breaks);
@@ -1832,8 +1796,9 @@ object IvfIndex {
     *  - exact cosine re-ranks only shortlist ∪ tail per probe.
     * Exact per-probe parity with [[probeTopKAdc]] is spec-pinned
     * (IvfBatchProbeSpec's recipe); the codes scan's no-floats plan
-    * assertion lives in IvfPqSidecarSpec's recipe. */
-  /** `where` is the FILTERED batch-compressed form — the serving-fleet
+    * assertion lives in IvfPqSidecarSpec's recipe.
+    *
+    * `where` is the FILTERED batch-compressed form — the serving-fleet
     * query (the reference's own KB search is a source-filtered
     * match_count search, `reference/archon-workflow.md:38-57`). Codes
     * carry no metadata, so the predicate applies at the EXACT re-rank,
@@ -1848,35 +1813,236 @@ object IvfIndex {
       nprobe: Int = Similarity.IvfProbes,
       shortlist: Int = ProductQuant.RerankShortlist,
       excludeSelf: Boolean = false,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // one resolution pins generation + sidecar + tail diff together
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val (codesDir, booksDir, snapshot) = readPqSidecar(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"probeTopKBatchAdc: no committed PQ sidecar under $root — run " +
-          "buildPqSidecar first"))
-    // codebooks: bounded model state, the same memoized read the
-    // single-probe ADC path pays, packed as the encoder packs them
-    val cb = codebooks(s, root, booksDir)
-    val (m, ks, d) = (cb.length, cb(0).length, cb(0)(0).length)
-    val packedBooks = broadcast(ProductQuant.packedBooks(s, cb))
+      where: Option[Column] = None): DataFrame =
+    probeCodesBatch(s, Pq, "probeTopKBatchAdc", indexPath, probes, k,
+      nprobe, shortlist, excludeSelf, where)
+
+  // ------------------------------------------------------ codes tiers
+  /** A compressed tier of the serving ladder (raw floats, SQ8 at 4×,
+    * PQ at ~25×): the codes format and its approximate score, the one
+    * decision the tiers differ in. Build, read, compaction carry,
+    * single and batch probe, tail measurement and refresh rule are one
+    * body over a tier. Version `n` persists under the generation root
+    * as the dirs `<dirKinds(i)>-<n>` — the cell-partitioned
+    * (vec_id, `codes`) rows, then the model's — named inside the marker
+    * `<kind>/<n>`, which also records the vector-file snapshot the
+    * codes encode; each dir kind is also its [[versionMemo]] kind.
+    * `score` names the approximate-score column the shortlist orders
+    * by. A tier without a model keeps the no-model defaults. */
+  private[graft] sealed abstract class CodesTier(val kind: String,
+      val dirKinds: Seq[String], val name: String, val builder: String,
+      val codes: String, val score: String) {
+    /** Driver-side state the codes are encoded and scored with. */
+    type Model
+    /** (codes carried byte-as-is, rows freshly encoded) by this tier's
+      * last [[carryCodes]]. */
+    val lastCarry =
+      new java.util.concurrent.atomic.AtomicReference[(Long, Long)]((0L, 0L))
+    def dirs(n: Long): Seq[String] = dirKinds.map(d => s"$d-$n")
+    /** A committed version's model, read from its model dirs. */
+    def model(s: SparkSession, root: String, modelDirs: Seq[String]): Model
+    def writeModel(s: SparkSession, model: Model,
+        modelDirs: Seq[String]): Unit = ()
+    /** (vec_id, cell, codes) of rows carrying the unit vector `u`. */
+    def encode(s: SparkSession, model: Model, uv: DataFrame): DataFrame
+    /** A codes row's score against the unit probe `probeU`. */
+    def probeScore(model: Model, probeU: Array[Double]): Column
+    /** [[rankProbeCells]]' rows plus the state [[batchScore]] reads. */
+    def withProbeState(s: SparkSession, model: Model,
+        ranked: DataFrame): DataFrame = ranked
+    /** A codes row's score against the probe row it joined. */
+    def batchScore(model: Model): Column
+  }
+
+  /** PQ (IVFADC): `m` sub-codes per row against codebooks trained at
+    * build ([[ProductQuant]]), scored by ADC over a per-probe lookup
+    * table — a literal for one probe, an in-plan column per batch
+    * probe. */
+  private[graft] object Pq extends CodesTier("_pq",
+      Seq("pqcodes", "pqbooks"), "PQ", "buildPqSidecar", "codes", "adc") {
+    type Model = Array[Array[Array[Double]]]
+    /** The version's codebooks, `cb(sub)(code)`. */
+    def model(s: SparkSession, root: String,
+        modelDirs: Seq[String]): Model =
+      memoized(s, root, dirKinds(1), modelDirs.head) {
+        val books = s.read.parquet(modelDirs.head).collect()
+        val cb = Array.ofDim[Array[Double]](
+          books.map(_.getAs[Int]("sub")).max + 1,
+          books.map(_.getAs[Int]("code")).max + 1)
+        books.foreach { r =>
+          cb(r.getAs[Int]("sub"))(r.getAs[Int]("code")) =
+            r.getAs[scala.collection.Seq[Double]]("cvec").toArray
+        }
+        cb
+      }
+    override def writeModel(s: SparkSession, cb: Model,
+        modelDirs: Seq[String]): Unit = {
+      import s.implicits._
+      cb.zipWithIndex.flatMap { case (book, j) =>
+        book.zipWithIndex.map { case (c, i) => (j, i, c) }
+      }.toSeq.toDF("sub", "code", "cvec")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(modelDirs.head)
+    }
+    def encode(s: SparkSession, cb: Model, uv: DataFrame): DataFrame =
+      uv.crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
+        .withColumn(codes, ProductQuant.codesCol(cb.length, cb(0)(0).length))
+        .select(col("vec_id"), col("cell"), col(codes))
+    def probeScore(cb: Model, probeU: Array[Double]): Column =
+      ProductQuant.adcScore(ProductQuant.lutFor(cb, probeU), cb.length,
+        cb(0).length)
     // per-probe LUT as data: raw-probe dots against the broadcast
     // books folded into a flat m·ks column (unnormalized BY DESIGN —
     // see ProductQuant.lutCol: scaling by the probe's norm cannot
     // change a per-probe ordering, and the unit division inside the
     // per-entry lambda was the measured interpreted-HOF hot spot);
     // probes then broadcast WITH their LUTs
-    val ranked = rankProbeCells(s, root, probes, nprobe)
-      .crossJoin(packedBooks)
-      .withColumn("lut", ProductQuant.lutCol(
-        transform($"probe_emb", x => x.cast("double")), d))
-      .drop("books")
-    val cellsNeeded = ranked.select($"pcell").distinct()
-      .collect().map(_.getInt(0)).sorted
+    override def withProbeState(s: SparkSession, cb: Model,
+        ranked: DataFrame): DataFrame =
+      ranked.crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
+        .withColumn("lut", ProductQuant.lutCol(
+          transform(col("probe_emb"), x => x.cast("double")), cb(0)(0).length))
+        .drop("books")
+    def batchScore(cb: Model): Column =
+      ProductQuant.adcScoreWith(col("lut"), cb.length, cb(0).length)
+  }
+
+  /** SQ8: one signed byte per dimension of the unit vector and no
+    * model, scored by one codegen'd dot of the byte codes against the
+    * float probe ([[ScalarQuant.sq8Encode]], [[ScalarQuant.sq8Score]]). */
+  private[graft] object Sq8 extends CodesTier("_sq8", Seq("sq8codes"),
+      "SQ8", "buildSq8Sidecar", "q", "approx") {
+    type Model = Unit
+    def model(s: SparkSession, root: String, modelDirs: Seq[String]): Unit =
+      ()
+    def encode(s: SparkSession, model: Unit, uv: DataFrame): DataFrame =
+      uv.withColumn(codes, ScalarQuant.sq8Encode(col("u")))
+        .select(col("vec_id"), col("cell"), col(codes))
+    def probeScore(model: Unit, probeU: Array[Double]): Column =
+      ScalarQuant.sq8Score(typedLit(probeU))
+    // scaling by 127 or the probe's norm cannot change a per-probe
+    // ordering — skipped
+    def batchScore(model: Unit): Column = ScalarQuant.sq8Dot(
+      transform(col("probe_emb"), x => x.cast("double")))
+  }
+
+  private val CodesTiers: Seq[CodesTier] = Seq(Pq, Sq8)
+
+  /** Resolve a tier's committed version ONCE: its marker, naming the
+    * codes dir, then the model's dirs, and the encoded-file snapshot. */
+  private def readCodes(fs: org.apache.hadoop.fs.FileSystem, root: String,
+      tier: CodesTier): Option[SidecarMarker] =
+    latestMarker(fs, root, tier.kind)
+
+  /** [[readCodes]] for a probe named `verb`, failing loudly when no
+    * version is committed. */
+  private def servedCodes(s: SparkSession, root: String, tier: CodesTier,
+      verb: String): SidecarMarker =
+    readCodes(fsOf(s, root), root, tier).getOrElse(
+      throw new IllegalStateException(
+        s"$verb: no committed ${tier.name} sidecar under $root — run " +
+          s"${tier.builder} first"))
+
+  /** Encode a pinned file snapshot of the live generation as `tier`'s
+    * next version, its model derived by `train` from the snapshot's
+    * unit rows; the marker publishes LAST, versions below the grace
+    * are reclaimed. */
+  private def buildCodes(s: SparkSession, indexPath: String,
+      tier: CodesTier)(train: DataFrame => tier.Model): Unit = {
+    VectorFunctions.register(s)
+    val root = layoutRoot(s, indexPath)
+    val fs = fsOf(s, root)
+    val files = listVectorFiles(fs, s"$root/vectors")
+    require(files.nonEmpty, s"${tier.builder}: no vectors under $root")
+    val prior = markerVersions(fs, root, tier.kind)
+    val n = prior.foldLeft(-1L)(math.max) + 1L
+    val rels = tier.dirs(n)
+    val uv = ProductQuant.withUnit(s.read.option("basePath", s"$root/vectors")
+      .parquet(files.toSeq.sorted: _*)
+      .select(col("vec_id"), col("embedding"), col("cell")))
+    val model = train(uv)
+    tier.encode(s, model, uv)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$root/${rels.head}")
+    tier.writeModel(s, model, rels.tail.map(r => s"$root/$r"))
+    publishCodesMarker(fs, root, tier.kind, n, rels, files, tier.builder)
+    reclaimMarkers(fs, root, tier.kind, prior, n - 1)
+    // label stats over the same pinned snapshot: one narrow
+    // (cell, label) aggregation at BUILD time so filtered probes skip
+    // their per-query measuring scan while this file set serves —
+    // whichever tier lands last pins the stats to ITS snapshot
+    // (serving re-checks the live listing, so an older stats version
+    // is just unused)
+    buildLabelStats(s, root, files)
+  }
+
+  /** A single compressed probe of `tier`, for the entry `verb`: the
+    * codes stage scans only (vec_id, codes) of the `nprobe` nearest
+    * cells and collects its top `shortlist` ids (plus the tombstone
+    * slack, widened under `where`) to the driver; exact cosine then
+    * re-ranks one scan of the probed cells keeping those ids and every
+    * row of the tail files (listed files not in the tier's snapshot),
+    * after the `where` predicate and the tombstone anti-join — the one
+    * stage whose scan carries the metadata columns. This equals
+    * re-ranking the rows whose id is in shortlist ∪ tail ids except
+    * where an id has rows both in the tail and outside it: a snapshot
+    * row then serves only if shortlisted. [[syncFromLake]] tombstones
+    * such a row (an update's pre-image), so only a duplicate id
+    * [[append]]ed outside the sync can tell. */
+  private def probeCodes(s: SparkSession, tier: CodesTier, verb: String,
+      indexPath: String, probe: Array[Double], k: Int, nprobe: Int,
+      shortlist: Int, excludeId: Option[Long],
+      where: Option[Column]): DataFrame = {
+    VectorFunctions.register(s)
+    import s.implicits._
+    // one resolution pins generation + sidecar + tail diff together
+    val root = layoutRoot(s, indexPath)
+    val side = servedCodes(s, root, tier, verb)
+    val probeU = unit(probe)
+    val probeCells = nearestCells(s, root, probeU, nprobe)
+    val score = tier.probeScore(tier.model(s, root, side.dirs.tail), probeU)
+    val (read, files) = scanOf(s, root, "vectors", s"$root/vectors")
+    val tombs = liveTombstones(s, root)
+    // measured widening: a predicate thins the exact re-rank's input,
+    // so the unfiltered codes cut is widened by the measured survivor
+    // rate (capped at exhaustive) — recall no longer rides a
+    // caller-managed width
+    val effShortlist = where.fold(shortlist)(p =>
+      widenedShortlist(s, root, (read, files), probeCells, shortlist, p)) +
+      tombs.length
+    val codes = scanOf(s, root, tier.dirKinds.head, side.dirs.head)._1
+      .filter($"cell".isin(probeCells: _*))
+    val ids = excludeId.fold(codes)(id => codes.filter($"vec_id" =!= id))
+      .withColumn(tier.score, score)
+      .orderBy(col(tier.score).desc, $"vec_id").limit(effShortlist)
+      .select($"vec_id").collect().map(_.get(0))
+    val tail = files -- side.files
+    val shortlisted = $"vec_id".isin(ids: _*)
+    val scanned0 = read.filter($"cell".isin(probeCells: _*) &&
+      (if (tail.isEmpty) shortlisted else shortlisted || inFiles(tail)))
+    val scanned = antiTombstones(s, tombs,
+      where.fold(scanned0)(scanned0.filter))
+    exactTopK(excludeId.fold(scanned)(id => scanned.filter($"vec_id" =!= id)),
+      probe, k)
+  }
+
+  /** A batch of compressed probes of `tier`, for the entry `verb`, in
+    * one distributed pass — the stages [[probeTopKBatchAdc]] lists. */
+  private def probeCodesBatch(s: SparkSession, tier: CodesTier,
+      verb: String, indexPath: String, probes: DataFrame, k: Int,
+      nprobe: Int, shortlist: Int, excludeSelf: Boolean,
+      where: Option[Column]): DataFrame = {
+    VectorFunctions.register(s)
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // one resolution pins generation + sidecar + tail diff together
+    val root = layoutRoot(s, indexPath)
+    val side = servedCodes(s, root, tier, verb)
+    // bounded model state: the same memoized read the single probe pays
+    val model = tier.model(s, root, side.dirs.tail)
+    val ranked = tier.withProbeState(s, model,
+      rankProbeCells(s, root, probes, nprobe))
+    val cellsNeeded = probedCells(ranked)
     val scan = scanOf(s, root, "vectors", s"$root/vectors")
     // one tombstone resolution for the slack and the anti-join
     val tombs = liveTombstones(s, root)
@@ -1885,32 +2051,31 @@ object IvfIndex {
     val effShortlist = where.fold(shortlist)(p =>
       widenedShortlist(s, root, scan, cellsNeeded.toSeq, shortlist, p)) +
       tombs.length
-    // ADC stage: codes-only scan of the probed-cell union, each hit
-    // scored against its probe's LUT — per-probe top-`shortlist` with
-    // the single-probe path's exact ordering (adc desc, vec_id)
-    val codes = scanOf(s, root, "pqcodes", codesDir)._1
+    // codes stage: codes-only scan of the probed-cell union, each hit
+    // scored against its probe — per-probe top-`shortlist` with the
+    // single-probe path's exact ordering (score desc, vec_id)
+    val hits = scanOf(s, root, tier.dirKinds.head, side.dirs.head)._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val adcHits = codes
       .join(broadcast(ranked), $"cell" === $"pcell")
-      .withColumn("adc", ProductQuant.adcScoreWith($"lut", m, ks))
-    val adcKept = if (excludeSelf) adcHits.filter($"vec_id" =!= $"probe_id")
-      else adcHits
+      .withColumn(tier.score, tier.batchScore(model))
+    val kept = if (excludeSelf) hits.filter($"vec_id" =!= $"probe_id")
+      else hits
     // SHED the model columns before the per-probe window: the ranking
     // shuffle must carry three narrow columns per candidate, never the
     // m·ks-double LUT or the probe vector that scored it (leaving them
     // attached made the exchange ~500× wider than the data it ranks —
     // the plan-width discipline every other serving path keeps)
-    val shortlisted = adcKept
-      .select($"probe_id", $"vec_id", $"adc")
-      .withColumn("arank", row_number().over(
-        Window.partitionBy($"probe_id").orderBy($"adc".desc, $"vec_id")))
+    val shortlisted = kept
+      .select($"probe_id", $"vec_id", col(tier.score))
+      .withColumn("arank", row_number().over(Window.partitionBy($"probe_id")
+        .orderBy(col(tier.score).desc, $"vec_id")))
       .filter($"arank" <= effShortlist)
       .select($"probe_id", $"vec_id")
     // uncompacted tail: appended after the sidecar — always candidates
     // for every probe whose probed cells they landed in
     val vectors = scan._1
       .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val tailFiles = scan._2 -- snapshot
+    val tailFiles = scan._2 -- side.files
     val cand =
       if (tailFiles.isEmpty) shortlisted
       else shortlisted.union(
@@ -1922,22 +2087,12 @@ object IvfIndex {
     // exact re-rank of shortlist ∪ tail only: the float read is
     // O(probes × shortlist), never the corpus. The metadata predicate
     // applies HERE — the one stage whose scan carries those columns
-    val hits = antiTombstones(s, tombs, where.fold(vectors)(vectors.filter))
-      .select($"vec_id", $"label", $"embedding")
-      .join(broadcast(cand.distinct()), Seq("vec_id"))
-      .join(broadcast(probes.select($"probe_id", $"embedding"
-        .as("probe_emb"))), Seq("probe_id"))
-      .withColumn("sim",
-        round(VectorFunctions.cosine($"embedding", $"probe_emb"), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-    val kept = if (excludeSelf) hits.filter($"vec_id" =!= $"probe_id")
-      else hits
-    kept
-      .select($"probe_id", $"vec_id", $"label", $"sim")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"probe_id").orderBy($"sim".desc, $"vec_id")))
-      .filter($"rank" <= k)
-      .select($"probe_id", $"vec_id", $"label", $"sim", $"rank")
+    exactTopKPerProbe(
+      antiTombstones(s, tombs, where.fold(vectors)(vectors.filter))
+        .select($"vec_id", $"label", $"embedding")
+        .join(broadcast(cand.distinct()), Seq("vec_id"))
+        .join(broadcast(probes.select($"probe_id", $"embedding"
+          .as("probe_emb"))), Seq("probe_id")), k, excludeSelf)
   }
 
   // ------------------------------------------------- PQ codes sidecar
@@ -1972,48 +2127,9 @@ object IvfIndex {
   def buildPqSidecar(s: SparkSession, indexPath: String,
       m: Int = ProductQuant.Subspaces,
       ks: Int = ProductQuant.CodebookSize,
-      iters: Int = ProductQuant.TrainIters): Unit = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val files = listVectorFiles(fs, s"$root/vectors")
-    require(files.nonEmpty, s"buildPqSidecar: no vectors under $root")
-    val prior = markerVersions(fs, root, "_pq")
-    val n = prior.foldLeft(-1L)(math.max) + 1L
-    val codesRel = s"pqcodes-$n"
-    val booksRel = s"pqbooks-$n"
-    val snap = s.read.option("basePath", s"$root/vectors")
-      .parquet(files.toSeq.sorted: _*)
-      .select($"vec_id", $"embedding", $"cell")
-    val uv = ProductQuant.withUnit(snap)
-    val cb = ProductQuant.trainCodebooksFrom(s,
-      uv.select($"vec_id", $"u"), m, ks, iters)
-    val d = cb(0)(0).length
-    uv.crossJoin(broadcast(ProductQuant.packedBooks(s, cb)))
-      .withColumn("codes", ProductQuant.codesCol(m, d))
-      .select($"vec_id", $"cell", $"codes")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/$codesRel")
-    cb.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, i) => (j, i, c) }
-    }.toSeq.toDF("sub", "code", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$booksRel")
-    publishCodesMarker(fs, root, "_pq", n, Seq(codesRel, booksRel), files,
-      "buildPqSidecar")
-    reclaimMarkers(fs, root, "_pq", prior, n - 1)
-    // label stats over the same pinned snapshot: one narrow
-    // (cell, label) aggregation at BUILD time so filtered probes skip
-    // their per-query measuring scan while this file set serves
-    buildLabelStats(s, root, files)
-  }
-
-  /** Resolve the committed sidecar ONCE: (codes dir, books dir,
-    * encoded-file snapshot). */
-  private def readPqSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(String, String, Set[String])] =
-    latestMarker(fs, root, "_pq").map(m => (m.dirs(0), m.dirs(1), m.files))
+      iters: Int = ProductQuant.TrainIters): Unit =
+    buildCodes(s, indexPath, Pq)(uv => ProductQuant.trainCodebooksFrom(s,
+      uv.select(col("vec_id"), col("u")), m, ks, iters))
 
   /** Serving from the COMPRESSED index: the ADC stage scans only
     * (vec_id, codes) of the probed cells — at [[ProductQuant]]'s 10
@@ -2025,7 +2141,7 @@ object IvfIndex {
     * tombstone slack). Exact cosine then re-ranks one scan of the
     * probed cells keeping the shortlisted ids plus every row of the
     * uncompacted tail (files appended after the sidecar snapshot —
-    * read raw, always candidates; [[rerankShortlist]]), so the result
+    * read raw, always candidates; [[probeCodes]]), so the result
     * matches [[probeTopK]] whenever the true top-k survives the
     * shortlist cut (the same spec-gated margin contract as
     * [[ProductQuant.sPqRerank]]). Fails loudly if no committed
@@ -2043,71 +2159,9 @@ object IvfIndex {
       nprobe: Int = Similarity.IvfProbes,
       shortlist: Int = ProductQuant.RerankShortlist,
       excludeId: Option[Long] = None,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    // one resolution pins generation + sidecar + tail diff together
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val (codesDir, booksDir, snapshot) = readPqSidecar(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"probeTopKAdc: no committed PQ sidecar under $root — run " +
-          "buildPqSidecar first"))
-    val probeU = unit(probe)
-    val probeCells = nearestCells(s, root, probeU, nprobe)
-    val cb = codebooks(s, root, booksDir)
-    val (m, ks) = (cb.length, cb(0).length)
-    val lut = ProductQuant.lutFor(cb, probeU)
-    val vectors = scanOf(s, root, "vectors", s"$root/vectors")
-    val tombs = liveTombstones(s, root)
-    // measured widening: a predicate thins the exact re-rank's input,
-    // so the unfiltered ADC cut is widened by the measured survivor
-    // rate (capped at exhaustive) — recall no longer rides a
-    // caller-managed width
-    val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, vectors, probeCells, shortlist, p)) +
-      tombs.length
-    val adcBase = scanOf(s, root, "pqcodes", codesDir)._1
-      .filter($"cell".isin(probeCells: _*))
-    val ids = excludeId.fold(adcBase)(id => adcBase.filter($"vec_id" =!= id))
-      .withColumn("adc", ProductQuant.adcScore(lut, m, ks))
-      .orderBy($"adc".desc, $"vec_id").limit(effShortlist)
-      .select($"vec_id").collect().map(_.get(0))
-    rerankShortlist(vectors, snapshot, probeCells, ids, tombs, probe, k,
-      excludeId, where)
-  }
-
-  /** The exact re-rank of a single compressed probe: one scan of the
-    * probed `cells` keeping the rows whose id the shortlist named
-    * (`ids`, collected on the driver) and every row of the tail files
-    * (`vectors`' listed files not in the sidecar's `snapshot`), then
-    * the `where` predicate, the tombstone anti-join — the one stage
-    * whose scan carries the metadata columns (codes don't) — and exact
-    * cosine top-k. This equals re-ranking the rows whose id is in
-    * shortlist ∪ tail ids except where an id has rows both in the tail
-    * and outside it: a snapshot row then serves only if shortlisted.
-    * [[syncFromLake]] tombstones such a row (an update's pre-image), so
-    * only a duplicate id [[append]]ed outside the sync can tell. */
-  private def rerankShortlist(vectors: (DataFrame, Set[String]),
-      snapshot: Set[String], cells: Seq[Int], ids: Seq[Any],
-      tombs: Array[(Long, Long)], probe: Array[Double], k: Int,
-      excludeId: Option[Long],
-      where: Option[org.apache.spark.sql.Column]): DataFrame = {
-    val (read, files) = vectors
-    val tail = files -- snapshot
-    val shortlisted = col("vec_id").isin(ids: _*)
-    val scanned0 = read.filter(col("cell").isin(cells: _*) &&
-      (if (tail.isEmpty) shortlisted else shortlisted || inFiles(tail)))
-    val scanned = antiTombstones(read.sparkSession, tombs,
-      where.fold(scanned0)(scanned0.filter))
-    excludeId.fold(scanned)(id => scanned.filter(col("vec_id") =!= id))
-      .withColumn("sim",
-        round(VectorFunctions.cosine(col("embedding"), typedLit(probe)), 3))
-      .filter(!isnan(col("sim")) && col("sim").isNotNull)
-      .select(col("vec_id"), col("label"), col("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(k)
-  }
+      where: Option[Column] = None): DataFrame =
+    probeCodes(s, Pq, "probeTopKAdc", indexPath, probe, k, nprobe,
+      shortlist, excludeId, where)
 
   // ------------------------------------------------ SQ8 codes sidecar
   /** SQ8 CODES SIDECAR — the MIDDLE compression tier, persisted and
@@ -2128,42 +2182,53 @@ object IvfIndex {
     * the previous version is read grace; a rebuild publishes a
     * new generation bare. Single sidecar maintainer per index — a lost
     * marker race fails loudly. */
-  def buildSq8Sidecar(s: SparkSession, indexPath: String): Unit = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val files = listVectorFiles(fs, s"$root/vectors")
-    require(files.nonEmpty, s"buildSq8Sidecar: no vectors under $root")
-    val prior = markerVersions(fs, root, "_sq8")
-    val n = prior.foldLeft(-1L)(math.max) + 1L
-    val codesRel = s"sq8codes-$n"
-    val snap = s.read.option("basePath", s"$root/vectors")
-      .parquet(files.toSeq.sorted: _*)
-      .select($"vec_id", $"embedding", $"cell")
-    ProductQuant.withUnit(snap)
-      .withColumn("q",
-        transform($"u", x => round(x * 127).cast("tinyint")))
-      .select($"vec_id", $"cell", $"q")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/$codesRel")
-    publishCodesMarker(fs, root, "_sq8", n, Seq(codesRel), files,
-      "buildSq8Sidecar")
-    reclaimMarkers(fs, root, "_sq8", prior, n - 1)
-    // same label-stats refresh as the PQ build — whichever sidecar
-    // lands last pins the stats to ITS snapshot (serving re-checks
-    // the live listing, so an older stats version is just unused)
-    buildLabelStats(s, root, files)
-  }
+  def buildSq8Sidecar(s: SparkSession, indexPath: String): Unit =
+    buildCodes(s, indexPath, Sq8)(_ => ())
 
-  /** Resolve the committed SQ8 sidecar ONCE: (codes dir, encoded-file
-    * snapshot). */
-  private def readSq8Sidecar(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(String, Set[String])] =
-    latestMarker(fs, root, "_sq8").map(m => (m.dirs.head, m.files))
+  /** Serving from the SQ8 tier: the shortlist stage scans only
+    * (vec_id, q) of the probed cells — 4× smaller than the float scan,
+    * on the same nprobe/cells partition pruning (spec asserts the
+    * sq8codes scan reads no embedding column) — and collects its
+    * top-`shortlist` ids to the driver; exact cosine then re-ranks one
+    * scan of the probed cells keeping those ids plus every row of the
+    * raw uncompacted tail (files appended after the sidecar;
+    * [[probeCodes]]). Scoring is asymmetric: the exact unit probe
+    * against the byte codes, one codegen'd dot per row. `where`
+    * follows the compressed-tier filtered contract: the predicate
+    * applies at the exact re-rank and the shortlist widens itself by
+    * the measured survivor rate ([[widenedShortlist]]). Fails loudly
+    * if no committed sidecar exists. */
+  def probeTopKSq8(s: SparkSession, indexPath: String,
+      probe: Array[Double], k: Int = 10,
+      nprobe: Int = Similarity.IvfProbes,
+      shortlist: Int = ScalarQuant.Shortlist,
+      excludeId: Option[Long] = None,
+      where: Option[Column] = None): DataFrame =
+    probeCodes(s, Sq8, "probeTopKSq8", indexPath, probe, k, nprobe,
+      shortlist, excludeId, where)
+
+  /** BATCH serving from the SQ8 tier — [[probeTopKBatchAdc]]'s shape
+    * minus the LUT machinery (asymmetric int8 scoring needs no
+    * codebook: each candidate costs ONE codegen'd dot of its byte
+    * codes against the broadcast probe): cell ranking per probe over
+    * the packed 1-row model, 4×-compressed codes-only scan of the
+    * probed-cell union, per-probe shortlist window (model columns shed
+    * before the exchange), raw tail unioned, exact cosine re-rank of
+    * shortlist ∪ tail. `where` follows the compressed-tier filtered
+    * contract (predicate at the exact re-rank; the shortlist widens
+    * itself by the measured survivor rate, [[widenedShortlist]]).
+    * Exact per-probe parity with [[probeTopKSq8]] is spec-pinned. */
+  def probeTopKSq8Batch(s: SparkSession, indexPath: String,
+      probes: DataFrame, k: Int = 10,
+      nprobe: Int = Similarity.IvfProbes,
+      shortlist: Int = ScalarQuant.Shortlist,
+      excludeSelf: Boolean = false,
+      where: Option[Column] = None): DataFrame =
+    probeCodesBatch(s, Sq8, "probeTopKSq8Batch", indexPath, probes, k,
+      nprobe, shortlist, excludeSelf, where)
 
   // ------------------------------------------------ tombstone sidecar
-  /** TOMBSTONE SIDECAR — the DELETE and UPDATE path to the serving
+  /* TOMBSTONE SIDECAR — the DELETE and UPDATE path to the serving
     * surface. The lake deletes and updates in O(touched keys)
     * (`deleteFromLake`, DV deletes, SQL DELETE/UPDATE/MERGE — the
     * takedown/GDPR and correction shapes), but an IVF layout cannot
@@ -2217,12 +2282,6 @@ object IvfIndex {
     * while current post-images carry over. A direct takedown's id-only
     * input publishes as `tomb_v = Long.MaxValue` ([[normalizeTombs]]);
     * vectors without `wave_v` read as base rows. */
-  /** What the last [[carryPqSidecar]] did — (codes carried byte-as-is,
-    * rows freshly encoded). Observability for the O(events + tail)
-    * encode-work contract of [[splitSidecarCarry]]. */
-  private[graft] val lastPqCarry =
-    new java.util.concurrent.atomic.AtomicReference[(Long, Long)]((0L, 0L))
-
   /** Thrown when a tombstone publish observes a marker version other
     * than the one its union was computed from — the lost-update signal
     * [[unionPublishTombstones]] retries on (r21, advisor item: the
@@ -2401,7 +2460,7 @@ object IvfIndex {
     * pair lands in [[lastFilterWidening]]. */
   private def widenedShortlist(s: SparkSession, root: String,
       vectors: (DataFrame, Set[String]), cells: Seq[Int], shortlist: Int,
-      pred: org.apache.spark.sql.Column): Int = {
+      pred: Column): Int = {
     import s.implicits._
     val (read, vecFiles) = vectors
     // metadata-sourced rate (guide §6 — don't scan what stats already
@@ -2522,143 +2581,5 @@ object IvfIndex {
     // by [[syncFromLake]] rather than silently never served)
     val incoming = normalizeTombs(ids.select(col("vec_id")))
     unionPublishTombstones(s, root, incoming)
-  }
-
-  /** Serving from the SQ8 tier: the shortlist stage scans only
-    * (vec_id, q) of the probed cells — 4× smaller than the float scan,
-    * on the same nprobe/cells partition pruning (spec asserts the
-    * sq8codes scan reads no embedding column) — and collects its
-    * top-`shortlist` ids to the driver; exact cosine then re-ranks one
-    * scan of the probed cells keeping those ids plus every row of the
-    * raw uncompacted tail (files appended after the sidecar;
-    * [[rerankShortlist]]). Scoring is asymmetric: the exact unit probe
-    * against the byte codes, one codegen'd dot per row. `where`
-    * follows the compressed-tier filtered contract: the predicate
-    * applies at the exact re-rank and the shortlist widens itself by
-    * the measured survivor rate ([[widenedShortlist]]). Fails loudly
-    * if no committed sidecar exists. */
-  def probeTopKSq8(s: SparkSession, indexPath: String,
-      probe: Array[Double], k: Int = 10,
-      nprobe: Int = Similarity.IvfProbes,
-      shortlist: Int = ScalarQuant.Shortlist,
-      excludeId: Option[Long] = None,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    // one resolution pins generation + sidecar + tail diff together
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val (codesDir, snapshot) = readSq8Sidecar(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"probeTopKSq8: no committed SQ8 sidecar under $root — run " +
-          "buildSq8Sidecar first"))
-    val probeU = unit(probe)
-    val probeCells = nearestCells(s, root, probeU, nprobe)
-    val vectors = scanOf(s, root, "vectors", s"$root/vectors")
-    val tombs = liveTombstones(s, root)
-    // measured widening — same survivor-rate lever as the ADC tier
-    val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, vectors, probeCells, shortlist, p)) +
-      tombs.length
-    val codeBase = scanOf(s, root, "sq8codes", codesDir)._1
-      .filter($"cell".isin(probeCells: _*))
-    val ids = excludeId.fold(codeBase)(id =>
-        codeBase.filter($"vec_id" =!= id))
-      .withColumn("approx",
-        VectorFunctions.dot(transform($"q", c => c.cast("double")),
-          typedLit(probeU)) / 127.0)
-      .orderBy($"approx".desc, $"vec_id").limit(effShortlist)
-      .select($"vec_id").collect().map(_.get(0))
-    rerankShortlist(vectors, snapshot, probeCells, ids, tombs, probe, k,
-      excludeId, where)
-  }
-
-  /** BATCH serving from the SQ8 tier — [[probeTopKBatchAdc]]'s shape
-    * minus the LUT machinery (asymmetric int8 scoring needs no
-    * codebook: each candidate costs ONE codegen'd dot of its byte
-    * codes against the broadcast probe): cell ranking per probe over
-    * the packed 1-row model, 4×-compressed codes-only scan of the
-    * probed-cell union, per-probe shortlist window (model columns shed
-    * before the exchange), raw tail unioned, exact cosine re-rank of
-    * shortlist ∪ tail. `where` follows the compressed-tier filtered
-    * contract (predicate at the exact re-rank; the shortlist widens
-    * itself by the measured survivor rate, [[widenedShortlist]]).
-    * Exact per-probe parity with [[probeTopKSq8]] is spec-pinned. */
-  def probeTopKSq8Batch(s: SparkSession, indexPath: String,
-      probes: DataFrame, k: Int = 10,
-      nprobe: Int = Similarity.IvfProbes,
-      shortlist: Int = ScalarQuant.Shortlist,
-      excludeSelf: Boolean = false,
-      where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    VectorFunctions.register(s)
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // one resolution pins generation + sidecar + tail diff together
-    val root = layoutRoot(s, indexPath)
-    val fs = fsOf(s, root)
-    val (codesDir, snapshot) = readSq8Sidecar(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"probeTopKSq8Batch: no committed SQ8 sidecar under $root — " +
-          "run buildSq8Sidecar first"))
-    val ranked = rankProbeCells(s, root, probes, nprobe)
-    val cellsNeeded = ranked.select($"pcell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val scan = scanOf(s, root, "vectors", s"$root/vectors")
-    // one tombstone resolution for the slack and the anti-join
-    val tombs = liveTombstones(s, root)
-    // measured widening over the probed-cell union, shared by the batch
-    val effShortlist = where.fold(shortlist)(p =>
-      widenedShortlist(s, root, scan, cellsNeeded.toSeq, shortlist, p)) +
-      tombs.length
-    // int8 stage: codes-only scan of the probed-cell union, each hit
-    // scored by one dot against its broadcast probe (scaling by 127 or
-    // the probe's norm cannot change a per-probe ordering — skipped)
-    val codes = scanOf(s, root, "sq8codes", codesDir)._1
-      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val sqHits = codes
-      .join(broadcast(ranked), $"cell" === $"pcell")
-      .withColumn("approx", VectorFunctions.dot(
-        transform($"q", c => c.cast("double")),
-        transform($"probe_emb", x => x.cast("double"))))
-    val sqKept = if (excludeSelf) sqHits.filter($"vec_id" =!= $"probe_id")
-      else sqHits
-    // shed the probe vector before the per-probe window — the ranking
-    // exchange carries three narrow columns, never the embeddings
-    val shortlisted = sqKept
-      .select($"probe_id", $"vec_id", $"approx")
-      .withColumn("arank", row_number().over(
-        Window.partitionBy($"probe_id").orderBy($"approx".desc, $"vec_id")))
-      .filter($"arank" <= effShortlist)
-      .select($"probe_id", $"vec_id")
-    // uncompacted tail: appended after the sidecar — always candidates
-    val vectors = scan._1
-      .filter($"cell".isin(cellsNeeded.map(Int.box).toSeq: _*))
-    val tailFiles = scan._2 -- snapshot
-    val cand =
-      if (tailFiles.isEmpty) shortlisted
-      else shortlisted.union(
-        vectors.filter(inFiles(tailFiles))
-          .select($"cell", $"vec_id")
-          .join(broadcast(ranked.select($"probe_id", $"pcell")),
-            $"cell" === $"pcell")
-          .select($"probe_id", $"vec_id"))
-    // exact re-rank of shortlist ∪ tail only; the metadata predicate
-    // applies HERE — the one stage whose scan carries those columns
-    val hits = antiTombstones(s, tombs, where.fold(vectors)(vectors.filter))
-      .select($"vec_id", $"label", $"embedding")
-      .join(broadcast(cand.distinct()), Seq("vec_id"))
-      .join(broadcast(probes.select($"probe_id", $"embedding"
-        .as("probe_emb"))), Seq("probe_id"))
-      .withColumn("sim",
-        round(VectorFunctions.cosine($"embedding", $"probe_emb"), 3))
-      .filter(!isnan($"sim") && $"sim".isNotNull)
-    val kept = if (excludeSelf) hits.filter($"vec_id" =!= $"probe_id")
-      else hits
-    kept
-      .select($"probe_id", $"vec_id", $"label", $"sim")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"probe_id").orderBy($"sim".desc, $"vec_id")))
-      .filter($"rank" <= k)
-      .select($"probe_id", $"vec_id", $"label", $"sim", $"rank")
   }
 }

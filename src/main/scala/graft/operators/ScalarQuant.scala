@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scalar (int8) quantization — the MIDDLE tier of the compression
@@ -40,6 +40,21 @@ object ScalarQuant {
     * (ScalarQuantSpec pins a ≥2× margin), tiny against the corpus. */
   val Shortlist = 256
 
+  /** The int8 codes of unit vectors `u`: `q_i = round(127·u_i)`, one
+    * signed byte per dimension — the one encoding the corpus drive and
+    * the persisted SQ8 tier ([[IvfIndex.buildSq8Sidecar]]) share. */
+  private[graft] def sq8Encode(u: Column): Column =
+    transform(u, x => round(x * 127).cast("tinyint"))
+
+  /** The dot of the int8 codes `q` with a float `probe`, the codes
+    * upcast in-register. */
+  private[graft] def sq8Dot(probe: Column): Column =
+    VectorFunctions.dot(transform(col("q"), c => c.cast("double")), probe)
+
+  /** The approximate cosine of the int8 codes `q` against a unit
+    * `probe`: `<q, p>/127`. */
+  private[graft] def sq8Score(probe: Column): Column = sq8Dot(probe) / 127.0
+
   private def e(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
@@ -61,8 +76,7 @@ object ScalarQuant {
     VectorFunctions.register(s)
     import s.implicits._
     ProductQuant.withUnit(e(s, dir))
-      .withColumn("q",
-        transform($"u", x => round(x * 127).cast("tinyint")))
+      .withColumn("q", sq8Encode($"u"))
       .select($"vec_id", $"label", $"q")
   }
 
@@ -74,9 +88,7 @@ object ScalarQuant {
     val pc = array(p.map(lit): _*)
     sq8Codes(s, dir)
       .filter($"vec_id" =!= Similarity.ProbeId)
-      .withColumn("approx",
-        VectorFunctions.dot(transform($"q", c => c.cast("double")), pc)
-          / 127.0)
+      .withColumn("approx", sq8Score(pc))
       .select($"vec_id", $"label", $"approx")
       .orderBy($"approx".desc, $"vec_id")
   }

@@ -34,8 +34,11 @@ class IvfCompactionSpec extends SparkSuite {
     val idx = s"$base/index"
     IvfIndex.build(spark, sfDir, idx)
     IvfIndex.buildPqSidecar(spark, idx)
+    IvfIndex.buildSq8Sidecar(spark, idx)
     val root0 = IvfIndex.layoutRoot(spark, idx)
-    val total = spark.read.parquet(s"$root0/pqcodes-0").count()
+    val tiers = Seq(IvfIndex.Pq -> "pqcodes-0", IvfIndex.Sq8 -> "sq8codes-0")
+    val totals = tiers.map { case (tier, dir) =>
+      tier -> spark.read.parquet(s"$root0/$dir").count() }.toMap
     // scattered victims: low ids spread across cells, so several files
     // rewrite while most byte-copy
     val victims = graft.sources.Tables.load(spark, sfDir, "embeddings")
@@ -43,14 +46,18 @@ class IvfCompactionSpec extends SparkSuite {
     val victimIds = victims.collect().map(_.getLong(0)).toSet
     IvfIndex.tombstoneIds(spark, idx, victims)
     assert(IvfIndex.compactTombstones(spark, idx))
-    val (carried, fresh) = IvfIndex.lastPqCarry.get()
-    assert(fresh == 0L,
-      s"pure takedown + covering sidecar must encode nothing, encoded $fresh")
-    assert(carried == total - victimIds.size,
-      s"every surviving code must carry: $carried of ${total - victimIds.size}")
-    // the carried sidecar still serves: victims gone, results non-empty
+    // both codes tiers carry through the one carry body
     val newRoot = IvfIndex.layoutRoot(spark, idx)
-    assert(spark.read.parquet(s"$newRoot/pqcodes-0").count() == carried)
+    tiers.foreach { case (tier, dir) =>
+      val (carried, fresh) = tier.lastCarry.get()
+      val expect = totals(tier) - victimIds.size
+      assert(fresh == 0L, s"${tier.name}: pure takedown + covering " +
+        s"sidecar must encode nothing, encoded $fresh")
+      assert(carried == expect,
+        s"${tier.name}: every surviving code must carry: $carried of $expect")
+      assert(spark.read.parquet(s"$newRoot/$dir").count() == carried)
+    }
+    // the carried sidecar still serves: victims gone, results non-empty
     val probeEmb = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .orderBy($"vec_id".desc).limit(1).collect().head
       .getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray

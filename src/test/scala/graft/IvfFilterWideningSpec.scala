@@ -198,5 +198,24 @@ class IvfFilterWideningSpec extends SparkSuite {
       shortlist = 1, excludeId = Some(pid)).collect().toSeq
     assert(adc.nonEmpty && adc.head.getAs[Long]("vec_id") != twin,
       s"ADC shortlist=1 must survive a tombstoned leader: $adc")
+    // the batch compressed paths widen by the same slack: a batch of the
+    // one probe, excludeSelf, width 1, with the tombstoned twin leading
+    val probes = Seq((pid, pemb.toSeq)).toDF("probe_id", "embedding")
+    val batch: Seq[(String, Boolean,
+        () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("ADC batch", false, () => IvfIndex.probeTopKBatchAdc(spark, idx,
+        probes, k = 1, shortlist = 1, excludeSelf = true)),
+      ("SQ8 batch", true, () => IvfIndex.probeTopKSq8Batch(spark, idx,
+        probes, k = 1, shortlist = 1, excludeSelf = true)))
+    batch.foreach { case (name, exact, serve) =>
+      val got = serve().collect().toSeq
+      assert(got.nonEmpty && got.head.getAs[Long]("vec_id") != twin,
+        s"$name shortlist=1 must survive a tombstoned leader: $got")
+      if (exact)
+        assert(got.map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))) ==
+          truth.map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))),
+          s"$name shortlist=1 must equal the exact truth\n" +
+            s"got: $got\ntruth: $truth")
+    }
   }
 }
